@@ -5,10 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Synthesizes a FULL 10× replica of an sf dir — every table, with
   * foreign keys kept consistent so join/aggregate work scales the way a
-  * real 10× corpus would — for the whole-suite one-decade-up bench
-  * ([[Sf1FullProbe]]). Construction is structure-preserving, not row
-  * duplication (the [[Sf1PipelineProbe]] design, extended to the
-  * relational tables):
+  * real 10× corpus would — for a whole-suite one-decade-up bench.
+  * Construction is structure-preserving, not row duplication (per-replica
+  * key shifts and text suffixes, applied to every table):
   *
   *   - `region`/`nation`: copied unchanged (fixed-size dimensions —
   *     real TPC-H keeps them constant across scale factors);

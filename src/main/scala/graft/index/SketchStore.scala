@@ -34,8 +34,8 @@ class SketchStore(dir: Path, conf: Configuration) {
   private val deserialized = new TrieMap[(String, String), Option[Sketch]]()
   @volatile private var allLoaded = false
 
-  /** Telemetry: sketch rows materialized on the driver so far (tests and
-    * DevProfile assert partial reads). */
+  /** Telemetry: sketch rows materialized on the driver so far (tests
+    * assert partial reads). */
   val rowsRead = new LongAdder
 
   private def exists: Boolean = dir.getFileSystem(conf).exists(dir)

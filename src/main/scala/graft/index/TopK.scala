@@ -21,8 +21,8 @@ import org.apache.spark.sql.graft.{GraftFileIndex, MetadataAggregates, SparkInte
   * `orderBy(col.desc_nulls_last).limit(j)` / `asc_nulls_last` result for
   * j <= k — null keys never rank (they sort last and >= k non-null rows
   * exist whenever pruning fires). When the threshold cannot be proven
-  * (unindexed/string-above-threshold column, fewer than k guaranteed
-  * non-null values, plain unindexed frame, multi-relation plan), the
+  * (unindexed column, fewer than k guaranteed non-null values, plain
+  * unindexed frame, multi-relation plan), the
   * frame returns UNCHANGED — the optimization degrades to the plain
   * sort, never to a wrong answer.
   */
@@ -42,36 +42,47 @@ object TopK {
   def topKPruned(df: DataFrame, key: Column, k: Int,
       largest: Boolean = true): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    val (path, keyType) = resolveKey(df, key).getOrElse(return df)
-    if (!Canon.isSupported(keyType)) return df
+    val (gfi, indexedName, keyType) = indexedKey(df, key).getOrElse(return df)
+    cut(df, key, keyType, largest,
+      gfi.topKBound(indexedName, keyType, k.toLong, largest))
+  }
 
-    // exactly one leaf, and it is an indexed relation — anything else
-    // (joins, unions, plain reads) is left untouched
-    val leaves = df.queryExecution.analyzed.collectLeaves()
-    val gfi = leaves match {
-      case Seq(lr: LogicalRelation) => lr.relation match {
-        case fs: HadoopFsRelation => fs.location match {
-          case g: GraftFileIndex => g
-          case _ => return df
+  /** The index `df` reads and the ranking column's index-schema name and
+    * type. None unless the plan has exactly one leaf and it is an indexed
+    * relation (joins, unions and plain reads are left untouched), and
+    * `key` is a row-domain indexed column of a supported type —
+    * element-domain (array) fields are excluded, as their stats describe
+    * element values, not row-sortable keys. */
+  private def indexedKey(df: DataFrame, key: Column)
+      : Option[(GraftFileIndex, String, org.apache.spark.sql.types.DataType)] =
+    resolveKey(df, key).filter(pk => Canon.isSupported(pk._2)).flatMap {
+      case (path, keyType) =>
+        val index = df.queryExecution.analyzed.collectLeaves() match {
+          case Seq(lr: LogicalRelation) => lr.relation match {
+            case fs: HadoopFsRelation => fs.location match {
+              case gfi: GraftFileIndex => Some(gfi)
+              case _ => None
+            }
+            case _ => None
+          }
+          case _ => None
         }
-        case _ => return df
-      }
-      case _ => return df
+        index.flatMap(gfi => gfi.meta.indexSchema.fields
+          .find(f => f.name.equalsIgnoreCase(path) &&
+            !graft.index.IndexMetadata.isElementDomain(f))
+          .map(f => (gfi, f.name, keyType)))
     }
-    // element-domain (array) fields are excluded: their stats describe
-    // element values, not row-sortable keys
-    val indexedName = gfi.meta.indexSchema.fields
-      .find(f => f.name.equalsIgnoreCase(path) &&
-        !graft.index.IndexMetadata.isElementDomain(f))
-      .map(_.name).getOrElse(return df)
 
-    gfi.topKBound(indexedName, keyType, k.toLong, largest) match {
-      case None => df
-      case Some(canon) =>
-        val bound = SparkInternals.wrap(Literal(
-          MetadataAggregates.toCatalyst(keyType, canon), keyType))
-        if (largest) df.filter(key >= bound) else df.filter(key <= bound)
-    }
+  /** `df` cut to `key >= bound` (`largest`) or `key <= bound`; unchanged
+    * when no bound is proven. */
+  private def cut(df: DataFrame, key: Column,
+      keyType: org.apache.spark.sql.types.DataType, largest: Boolean,
+      canonBound: Option[Any]): DataFrame = canonBound match {
+    case None => df
+    case Some(canon) =>
+      val bound = SparkInternals.wrap(Literal(
+        MetadataAggregates.toCatalyst(keyType, canon), keyType))
+      if (largest) df.filter(key >= bound) else df.filter(key <= bound)
   }
 
   /** Resolve the ranking column to its INDEX-SCHEMA name: a top-level
@@ -103,35 +114,11 @@ object TopK {
   def topKPerGroupPruned(df: DataFrame, group: Column, key: Column, k: Int,
       largest: Boolean = true): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    val (path, keyType) = resolveKey(df, key).getOrElse(return df)
-    if (!Canon.isSupported(keyType)) return df
+    val (gfi, indexedName, keyType) = indexedKey(df, key).getOrElse(return df)
     val groupName = df.select(group).schema.fields.head.name
-    val leaves = df.queryExecution.analyzed.collectLeaves()
-    val gfi = leaves match {
-      case Seq(lr: LogicalRelation) => lr.relation match {
-        case fs: HadoopFsRelation => fs.location match {
-          case g: GraftFileIndex => g
-          case _ => return df
-        }
-        case _ => return df
-      }
-      case _ => return df
-    }
     if (!gfi.meta.partitionSchema.fieldNames
         .exists(_.equalsIgnoreCase(groupName))) return df
-    // element-domain (array) fields are excluded: their stats describe
-    // element values, not row-sortable keys
-    val indexedName = gfi.meta.indexSchema.fields
-      .find(f => f.name.equalsIgnoreCase(path) &&
-        !graft.index.IndexMetadata.isElementDomain(f))
-      .map(_.name).getOrElse(return df)
-    gfi.topKBoundByPartitions(indexedName, keyType, k.toLong,
-        largest) match {
-      case None => df
-      case Some(canon) =>
-        val bound = SparkInternals.wrap(Literal(
-          MetadataAggregates.toCatalyst(keyType, canon), keyType))
-        if (largest) df.filter(key >= bound) else df.filter(key <= bound)
-    }
+    cut(df, key, keyType, largest,
+      gfi.topKBoundByPartitions(indexedName, keyType, k.toLong, largest))
   }
 }

@@ -65,34 +65,7 @@ case class FileStatsRow(
     locationsJson: String,
     schemaJson: String,
     blocksJson: String,
-    rowCount: Long) {
-
-  def toEntry: FileEntry = FileEntry(
-    path, size, modificationTime,
-    IndexMetadata.blocksFromJsonString(blocksJson),
-    blockSize,
-    IndexMetadata.locationsFromJsonString(locationsJson))
-
-  def toListRow: FileListRow =
-    FileListRow(partitionIdx, path, size, modificationTime, blockSize, locationsJson)
-}
-
-/** Slim projection of [[FileStatsRow]] shipping the distributed prune's
-  * survivors back to the driver: no stats/schema blobs, only what
-  * toFileStatus needs (a Dataset exchange — Tungsten rows, no generic
-  * serializer). */
-case class FileListRow(
-    partitionIdx: Int,
-    path: String,
-    size: Long,
-    modificationTime: Long,
-    blockSize: Long,
-    locationsJson: String) {
-
-  def toEntry: FileEntry = FileEntry(
-    path, size, modificationTime, Nil, blockSize,
-    IndexMetadata.locationsFromJsonString(locationsJson))
-}
+    rowCount: Long)
 
 object IndexMetadata {
 

@@ -5,12 +5,13 @@ import java.util.concurrent.atomic.LongAdder
 import org.apache.hadoop.fs.{BlockLocation, FileStatus, LocatedFileStatus, Path}
 
 import org.apache.spark.internal.Logging
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, PartitionDirectory}
 import org.apache.spark.sql.sources.{And => SAnd, Filter}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.index.{BlockStats, FileEntry, FileStatsRow, FilterFold, IndexConf, IndexFilesTable, IndexMetadata, SketchStore}
@@ -54,10 +55,10 @@ class GraftFileIndex(
       })
     }
 
-  /** Driver-path file entries grouped by partitionIdx (cached per
-    * instance, dropped by [[refresh]]; only used below the
+  /** Driver-runner file rows grouped by partitionIdx (cached per
+    * instance, dropped by [[refresh]]; only read below the
     * distributed-pruning threshold). */
-  @volatile private var entriesByPartitionCache: (Long, Map[Int, Seq[FileEntry]]) = _
+  @volatile private var rowsByPartitionCache: (Long, Map[Int, Seq[FileRow]]) = _
 
   /** Snapshot epoch for every memo derived from the files table, bumped
     * by [[refresh]]. Guards the check-then-act race between a memo
@@ -95,17 +96,17 @@ class GraftFileIndex(
     }
   }
 
-  private def entriesByPartition: Map[Int, Seq[FileEntry]] = {
+  private def rowsByPartition: Map[Int, Seq[FileRow]] = {
     val e = snapshotEpoch.get()
-    entriesByPartitionCache match {
+    rowsByPartitionCache match {
       case (ep, c) if ep == e && c != null => c
       case _ =>
         val c = IndexFilesTable.readAll(filesDir, hadoopConf)
-          .groupBy(_.partitionIdx).view.mapValues(_.map(_.toEntry)).toMap
+          .groupBy(_.partitionIdx).view.mapValues(_.map(FileRow(_))).toMap
         // epoch-tagged install, same contract as memoized(): a stale
         // assignment that lands after refresh()'s clear carries an old
         // tag and is never served to later callers
-        if (snapshotEpoch.get() == e) entriesByPartitionCache = (e, c)
+        if (snapshotEpoch.get() == e) rowsByPartitionCache = (e, c)
         c
     }
   }
@@ -490,22 +491,13 @@ class GraftFileIndex(
       .flatMap(SparkInternals.translateFilter) ++ arrayElemFilters)
       .filter(_.references.forall(r => indexed.contains(r.toLowerCase)))
 
-    val distributed = meta.fileCount >= conf.distributedPruningThreshold
     lastPrunedDistributed = false
+    val partitions = if (allPartitionsKept) None else Some(keptPartitions.map(_._1))
     val statusByPartition: Map[Int, Seq[FileStatusWithMetadata]] = indexFilters match {
-      case Nil =>
-        survivorsUnfiltered(keptPartitions.map(_._1), allPartitionsKept, distributed)
+      case Nil => survivorsUnfiltered(partitions)
       case fs =>
-        val combined = fs.reduce(SAnd)
-        val pruned =
-          if (distributed) {
-            lastPrunedDistributed = true
-            distributedPrune(combined, keptPartitions.map(_._1).toSet, allPartitionsKept)
-          } else {
-            driverPrune(combined, keptPartitions.map(_._1))
-          }
-        pruned.map { case (idx, es) =>
-          idx -> GraftFileIndex.wrapEager(es.map(toFileStatus).toArray)
+        prune(fs.reduce(SAnd), partitions).groupBy(_._1).map { case (idx, es) =>
+          idx -> GraftFileIndex.wrapEager(es.map(e => toFileStatus(e._2)).toArray)
         }
     }
 
@@ -530,37 +522,49 @@ class GraftFileIndex(
     }
   }
 
-  /** No index filters: the listing is every file of the kept partitions,
-    * materialized straight to per-partition [[FileStatus]] arrays — the
-    * exact shape the v1 contract retains — with no per-file
-    * intermediates (no case-class rows, no FileEntry, no boxed Row
-    * fields; compact UnsafeRows dropped as each status is built, and an
-    * empty-locations fast path skipping JSON parsing). This is the one
-    * intrinsically O(files) driver cost left; every unselective
-    * InMemoryFileIndex scan pays the same.
-    *
-    * MEASURED finding (UnselectiveProbe at 999,680 files, four
-    * materialization variants): the LIVE footprint is invariant at
-    * ~630 B/file (~600 MB) — Spark's own
-    * FileStatus+Path+URI+PartitionDirectory shape owns those bytes, so
-    * only the v1 contract itself (a streamed/v2 listing) could shrink
-    * them. What the intermediates DID control is the transient
-    * allocation under the build (1.29 GB → 1.01 GB at equal
-    * wall-clock); toLocalIterator streaming would cut that to ~0.86 GB
-    * but costs +60% wall-clock (serialized per-partition fetches).
-    * Driver sizing guidance lives in the README conf section. */
-  private def survivorsUnfiltered(
-      keptIdx: Seq[Int],
-      allPartitionsKept: Boolean,
-      distributed: Boolean): Map[Int, Seq[FileStatusWithMetadata]] = {
-    if (!distributed) {
-      keptIdx.map(i =>
-        i -> GraftFileIndex.wrapEager(
-          entriesByPartition.getOrElse(i, Nil).map(toFileStatus).toArray)).toMap
+  /** The runner of every metadata computation, and the one place the
+    * distributed threshold is read. Tables below it run `onDriver` over
+    * the cached rows of `partitions` (None = all), grouped by
+    * partitionIdx; pruning's per-file passes run there as parallel
+    * streams, where the reference used per-file Futures
+    * (ParquetIndex.scala:166-178). Larger tables run `onTable` as a Spark
+    * job over the files table, restricted to `partitions` by a
+    * partitionIdx pushdown: executors fold their own slices, and only
+    * the results reach the driver. */
+  private def runner[A](partitions: Option[Seq[Int]])(
+      onDriver: Map[Int, Seq[FileRow]] => A)(
+      onTable: org.apache.spark.sql.classic.DataFrame => A): A =
+    if (meta.fileCount < conf.distributedPruningThreshold) {
+      val all = rowsByPartition
+      onDriver(partitions.fold(all)(ps => ps.flatMap(i => all.get(i).map(i -> _)).toMap))
     } else {
+      val table = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .read.parquet(filesDir.toString)
+      onTable(partitions.fold(table)(ps =>
+        table.where(org.apache.spark.sql.functions.col("partitionIdx").isin(ps: _*))))
+    }
+
+  /** No index filters: the listing is every file of the kept partitions.
+    * This is the one intrinsically O(files) driver cost left; every
+    * unselective InMemoryFileIndex scan pays the same.
+    *
+    * MEASURED finding (999,680 files, four materialization variants):
+    * the LIVE footprint of eager statuses is invariant at ~630 B/file
+    * (~600 MB) — Spark's own FileStatus+Path+URI+PartitionDirectory
+    * shape owns those bytes, so only the v1 contract itself (a
+    * streamed/v2 listing) could shrink them. What intermediates DID
+    * control is the transient allocation under the build (1.29 GB →
+    * 1.01 GB at equal wall-clock); toLocalIterator streaming would cut
+    * that to ~0.86 GB but costs +60% wall-clock (serialized
+    * per-partition fetches). Driver sizing guidance lives in the README
+    * conf section. */
+  private def survivorsUnfiltered(
+      partitions: Option[Seq[Int]]): Map[Int, Seq[FileStatusWithMetadata]] =
+    runner(partitions)(_.map { case (i, rows) =>
+      i -> GraftFileIndex.wrapEager(rows.map(r => toFileStatus(r.entry)).toArray)
+    }) { table =>
       // big table, no cacheable driver copy — stream only the slim
-      // listing columns of the kept partitions (partitionIdx pushdown +
-      // column pruning into the files table; no stats/schema blobs).
+      // listing columns of the kept partitions (no stats/schema blobs).
       //
       // The EXECUTORS pack each scan partition of the files table into
       // ONE columnar [[PackedListing]] (primitive arrays + a single
@@ -584,12 +588,8 @@ class GraftFileIndex(
       // FileStatus+Path+URI+BlockLocation) to the ~110 B/file of the
       // packed columns, and the listing allocates no per-file objects
       // at all.
-      val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      import classic.implicits._
-      var ds = classic.read.parquet(filesDir.toString)
-      if (!allPartitionsKept) ds = ds.where($"partitionIdx".isin(keptIdx: _*))
-      val proj = ds.select($"partitionIdx", $"path", $"size",
-        $"modificationTime", $"blockSize", $"locationsJson")
+      val proj = table.select("partitionIdx", "path", "size",
+        "modificationTime", "blockSize", "locationsJson")
       val packed = proj.queryExecution.toRdd.mapPartitions { it =>
         val b = new PackedListingBuilder
         while (it.hasNext) b.add(it.next())
@@ -617,7 +617,6 @@ class GraftFileIndex(
       }
       out.result()
     }
-  }
 
   /** Can this index's sketches sharpen any verdict in the filter tree?
     * Equality/IN: any sketch kind. Substring (Contains/EndsWith): ONLY
@@ -628,81 +627,34 @@ class GraftFileIndex(
       (meta.sketchKind.contains(graft.index.Sketch.Dict) &&
         FilterFold.usesSubstring(combined))
 
-  /** Driver-side two-pass fold (min/max, then pruned sketch refinement);
-    * the reference's per-file Futures (ParquetIndex.scala:166-178) become
-    * a parallel stream. */
-  private def driverPrune(
+  /** Files of `partitions` that may hold a row matching `combined`, as
+    * (partitionIdx, listing entry), through [[GraftFileIndex.pruneSlice]]:
+    * the whole kept table is one slice on the driver, and each task's
+    * files-table partition is one slice on executors, which probe the
+    * sketches of their own survivors. Only survivors reach the driver,
+    * so driver residency is O(survivors) regardless of table size. */
+  private def prune(
       combined: Filter,
-      keptIdx: Seq[Int]): Map[Int, Seq[FileEntry]] = {
-    def prune(fs: Seq[FileEntry])(mayContain: FileEntry => Boolean): Seq[FileEntry] =
-      if (fs.size < 64) fs.filter(mayContain)
-      else {
-        import scala.jdk.CollectionConverters._
-        fs.asJava.parallelStream().filter(f => mayContain(f))
-          .collect(java.util.stream.Collectors.toList[FileEntry]).asScala.toSeq
-      }
-    keptIdx.map { idx =>
-      val files = entriesByPartition.getOrElse(idx, Nil)
-      // Pass 1: min/max-only fold — no sketch IO.
-      val survivors = prune(files)(f =>
-        FilterFold.fileMayContain(combined, f.blocks, _ => None, meta.indexSchema))
-      // Pass 2: sketches refine equality/IN verdicts, loaded in ONE pruned
-      // parquet read restricted to the survivor set. Range-only queries
-      // skip sketch IO entirely.
-      val kept =
-        if (meta.sketchKind.isDefined && survivors.nonEmpty &&
-            sketchCanRefine(combined)) {
-          val store = sketchStore
-          store.ensureLoaded(survivors.map(_.path))
-          prune(survivors)(f =>
-            FilterFold.fileMayContain(
-              combined, f.blocks, col => store.sketchFor(f.path, col),
-              meta.indexSchema))
-        } else survivors
-      idx -> kept
-    }.toMap
-  }
-
-  /** The same fold as a Spark job over the files table: executors parse
-    * their slice's stats, apply min/max, then probe sketches for their own
-    * survivors (pruned `file IN` reads). Only surviving entries are
-    * collected — driver residency is O(survivors) regardless of table
-    * size. */
-  private def distributedPrune(
-      combined: Filter,
-      keptIdx: Set[Int],
-      allPartitionsKept: Boolean): Map[Int, Seq[FileEntry]] = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    import classic.implicits._
-    val schemaJson = meta.indexSchema.json
-    val useMembership = meta.sketchKind.isDefined && sketchCanRefine(combined)
-    val sketchDirStr = new Path(indexDir, graft.index.Metastore.SketchDir).toString
-    val confBc = spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
-    val filterBc = spark.sparkContext.broadcast(combined)
-    var ds = classic.read.parquet(filesDir.toString).as[FileStatsRow]
-    if (!allPartitionsKept) ds = ds.where($"partitionIdx".isin(keptIdx.toSeq: _*))
-    val survivors = ds.mapPartitions { it =>
-      val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-      val filter = filterBc.value
-      val minMax = it.filter(r => FilterFold.fileMayContain(
-        filter, IndexMetadata.blocksFromJsonString(r.blocksJson), _ => None, schema))
-      val kept =
-        if (!useMembership) minMax
-        else {
-          val surv = minMax.toVector
-          if (surv.isEmpty) Iterator.empty
-          else {
-            val store = new SketchStore(new Path(sketchDirStr), confBc.value.value)
-            store.ensureLoaded(surv.map(_.path))
-            surv.iterator.filter(r => FilterFold.fileMayContain(
-              filter, IndexMetadata.blocksFromJsonString(r.blocksJson),
-              col => store.sketchFor(r.path, col), schema))
-          }
-        }
-      // ship only the slim listing columns back to the driver
-      kept.map(_.toListRow)
-    }.collect()
-    survivors.toSeq.groupBy(_.partitionIdx).view.mapValues(_.map(_.toEntry)).toMap
+      partitions: Option[Seq[Int]]): Seq[(Int, FileEntry)] = {
+    val schema = meta.indexSchema
+    val useSketches = meta.sketchKind.isDefined && sketchCanRefine(combined)
+    runner(partitions) { byPartition =>
+      val sketches = if (useSketches) Some(() => sketchStore) else None
+      GraftFileIndex.pruneSlice(byPartition.valuesIterator.flatten.toVector,
+        combined, schema, sketches, GraftFileIndex.parallelFilter)
+        .map(r => (r.partitionIdx, r.entry))
+    } { table =>
+      lastPrunedDistributed = true
+      val sketchDir = new Path(indexDir, graft.index.Metastore.SketchDir).toString
+      val confBc = spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
+      GraftFileIndex.fileRows(table, listing = true).mapPartitions { it =>
+        val sketches =
+          if (useSketches) Some(() => new SketchStore(new Path(sketchDir), confBc.value.value))
+          else None
+        GraftFileIndex.pruneSlice(it.toVector, combined, schema, sketches, _ filter _)
+          .iterator.map(r => (r.partitionIdx, r.entry))
+      }.collect().toSeq
+    }
   }
 
   // ---- metadata-only aggregates (MetadataAggregateRule) ----------------
@@ -710,8 +662,6 @@ class GraftFileIndex(
   // iterations never recompute; same two-tier driver/Spark-job design as
   // listFiles pruning.
 
-  private val metaAggCache =
-    new scala.collection.concurrent.TrieMap[Seq[String], (Long, MetaTableAgg)]()
   private val metaAggByPartCache =
     new scala.collection.concurrent.TrieMap[Seq[String], (Long, Map[Int, MetaTableAgg])]()
   private val metaDistinctCache =
@@ -741,77 +691,27 @@ class GraftFileIndex(
     * residency is O(partitions × cols) small structs — the same order as
     * `meta.partitionValues` itself, which already lives on the driver.
     * Partitions with no files are absent (callers treat missing as the
-    * zero fold). Distributed tier: one files-table job emitting per-task
-    * partial maps, merged pairwise — no shuffle, partials are
-    * metadata-sized. */
+    * zero fold). On the files table each task folds its slice into a
+    * partial map, and the driver merges the partials as they arrive — no
+    * shuffle, partials are metadata-sized. */
   def metadataStatsByPartition(colsIn: Seq[String]): Map[Int, MetaTableAgg] = {
     val cols = colsIn.sorted
     memoized(metaAggByPartCache, cols) {
-      if (meta.fileCount < conf.distributedPruningThreshold) {
-        entriesByPartition.map { case (idx, fs) =>
-          idx -> fs.foldLeft(MetadataAggregates.zero(cols)) { (acc, f) =>
-            MetadataAggregates.foldFile(acc, f.blocks, cols)
-          }
-        }
-      } else {
-        val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        import classic.implicits._
-        val colsB = cols
-        def mergeMaps(a: Map[Int, MetaTableAgg], b: Map[Int, MetaTableAgg]) =
-          (a.keySet ++ b.keySet).iterator.map { k =>
-            k -> ((a.get(k), b.get(k)) match {
-              case (Some(x), Some(y)) => x merge y
-              case (x, y) => x.orElse(y).get
-            })
-          }.toMap
-        // only the two needed columns reach the deserializer — the
-        // files table also carries per-file schema/location blobs that
-        // would otherwise dominate a 50k-row fold
-        classic.read.parquet(filesDir.toString)
-          .select($"partitionIdx", $"blocksJson").as[(Int, String)].rdd
-          .mapPartitions { it =>
-            val m = scala.collection.mutable.HashMap.empty[Int, MetaTableAgg]
-            it.foreach { case (idx, blocksJson) =>
-              val acc = m.getOrElse(idx, MetadataAggregates.zero(colsB))
-              m(idx) = MetadataAggregates.foldFile(
-                acc, IndexMetadata.blocksFromJsonString(blocksJson), colsB)
-            }
-            Iterator.single(m.toMap)
-          }
-          .fold(Map.empty[Int, MetaTableAgg])(mergeMaps)
+      runner(None)(_.valuesIterator.flatten.foldLeft(Map.empty[Int, MetaTableAgg])(
+        GraftFileIndex.addStats(cols))) { table =>
+        GraftFileIndex.fileRows(table, listing = false).mapPartitions { it =>
+          Iterator.single(it.foldLeft(Map.empty[Int, MetaTableAgg])(GraftFileIndex.addStats(cols)))
+        }.fold(Map.empty[Int, MetaTableAgg])(GraftFileIndex.mergeStats)
       }
     }
   }
 
   /** Fold row counts / null counts / bounds for `cols` (index-schema
-    * names) over every file of the index. */
-  def metadataStats(colsIn: Seq[String]): MetaTableAgg = {
-    val cols = colsIn.sorted
-    memoized(metaAggCache, cols) {
-      if (meta.fileCount < conf.distributedPruningThreshold) {
-        entriesByPartition.valuesIterator.flatten
-          .foldLeft(MetadataAggregates.zero(cols)) { (acc, f) =>
-            MetadataAggregates.foldFile(acc, f.blocks, cols)
-          }
-      } else {
-        val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        import classic.implicits._
-        val colsB = cols
-        // column-pruned like metadataStatsByPartition: blocksJson only
-        classic.read.parquet(filesDir.toString)
-          .select($"blocksJson").as[String].rdd
-          .mapPartitions { it =>
-            var acc = MetadataAggregates.zero(colsB)
-            it.foreach { blocksJson =>
-              acc = MetadataAggregates.foldFile(
-                acc, IndexMetadata.blocksFromJsonString(blocksJson), colsB)
-            }
-            Iterator.single(acc)
-          }
-          .fold(MetadataAggregates.zero(colsB))(_ merge _)
-      }
-    }
-  }
+    * names) over every file of the index: the merge of
+    * [[metadataStatsByPartition]]'s values. */
+  def metadataStats(colsIn: Seq[String]): MetaTableAgg =
+    metadataStatsByPartition(colsIn).valuesIterator
+      .foldLeft(MetadataAggregates.zero(colsIn.sorted))(_ merge _)
 
   /** Exact distinct (non-null, canonical) values of an indexed column, if
     * the index carries an EXACT membership sketch for it (dict/bitmap —
@@ -875,118 +775,35 @@ class GraftFileIndex(
     * with. Mirrored via block maxes for `largest = false`. Blocks with
     * unknown null counts or missing bounds contribute no guarantee
     * (weaker T, never unsound); truncated string bounds stay sound here
-    * because T is used as a bound, not an answer. None = not computable
-    * (fewer than k guaranteed non-null values, or a string column above
-    * the distributed threshold) — callers skip pruning.
+    * because T is used as a bound, not an answer (a truncated lower bound
+    * still lower-bounds every value of its block). None = fewer than k
+    * guaranteed non-null values — callers skip pruning.
     *
-    * Scale: driver fold below the distributed-pruning threshold; above
-    * it, a metadata-sized sort over the files table plus the classic
-    * two-pass kth-element walk (per-partition totals collected — one
-    * Long per task — then ONE partition scanned), so the driver never
-    * holds per-file state. */
+    * Scale: on the files table, a metadata-sized distributed sort of the
+    * (bound, count) pairs plus the classic two-pass kth-element walk
+    * (per-partition totals collected — one Long per task — then ONE
+    * sorted partition walked), so the driver never holds per-file
+    * state. */
   def topKBound(colName: String, dt: org.apache.spark.sql.types.DataType,
       k: Long, largest: Boolean): Option[Any] = {
     require(k >= 1, s"k must be >= 1: $k")
-
-    // (guaranteed bound, guaranteed non-null count) per row-group
-    def blockPairs(blocks: Seq[BlockStats]): Iterator[(Any, Long)] =
-      blocks.iterator.flatMap { b =>
-        b.columns.get(colName) match {
-          case Some(cs) =>
-            val bound = if (largest) cs.min else cs.max
-            (bound, cs.nullCount) match {
-              case (Some(bd), Some(nc)) if b.rowCount - nc > 0 =>
-                Iterator.single((bd, b.rowCount - nc))
-              case _ => Iterator.empty
-            }
-          case None => Iterator.empty
-        }
+    import GraftFileIndex.{blockPairs, bestFirst, kthBound, kthWalk}
+    runner(None)(byPartition => kthBound(byPartition.valuesIterator.flatten
+      .flatMap(r => blockPairs(r.blocks, colName, largest)).toArray, k, largest)) { table =>
+      val sorted = GraftFileIndex.fileRows(table, listing = false)
+        .flatMap(r => blockPairs(r.blocks, colName, largest))
+        .sortBy(_._1)(bestFirst(largest), scala.reflect.ClassTag.Any)
+      val before = sorted.mapPartitions(it => Iterator.single(it.map(_._2).sum))
+        .collect().scanLeft(0L)(_ + _)
+      // the partition where the running count first reaches k, and what
+      // is left of k when its walk starts
+      val target = before.indexWhere(_ >= k) - 1
+      if (target < 0) None
+      else {
+        val rem = k - before(target)
+        spark.sparkContext.runJob(sorted,
+          (it: Iterator[(Any, Long)]) => kthWalk(it, rem), Seq(target)).head
       }
-
-    if (meta.fileCount < conf.distributedPruningThreshold) {
-      val pairs = entriesByPartition.valuesIterator.flatten
-        .flatMap(f => blockPairs(f.blocks)).toArray
-      val best = new Ordering[(Any, Long)] {
-        override def compare(a: (Any, Long), b: (Any, Long)): Int = {
-          val c = graft.index.Canon.compare(a._1, b._1)
-          if (largest) -c else c
-        }
-      }
-      val sorted = pairs.sorted(best)
-      var rem = k
-      var i = 0
-      var ans: Option[Any] = None
-      while (i < sorted.length && rem > 0) {
-        ans = Some(sorted(i)._1); rem -= sorted(i)._2; i += 1
-      }
-      if (rem > 0) None else ans
-    } else if (dt == org.apache.spark.sql.types.StringType) {
-      // string keys fold distributed too: the canonical String domain
-      // sorts in UTF-8 binary order (Canon.compare). Footer-TRUNCATED
-      // bounds stay sound here — a truncated lower bound still lower-
-      // bounds every value of its block (and upper bounds upper-bound),
-      // which is all the kth-walk guarantee needs.
-      distributedKthWalk[String](colName, k, largest,
-        { case s: String => s })(GraftFileIndex.Utf8Ordering, implicitly)
-    } else {
-      distributedKthWalk[Long](colName, k, largest, { case l: Long => l })(
-        Ordering.Long, implicitly)
-    }
-  }
-
-  /** The distributed kth-element walk shared by [[topKBound]]'s Long and
-    * String canonical domains: one files-table job emits (bound,
-    * nonNullCount) pairs, a distributed sort orders them, per-partition
-    * totals (one Long per task) locate the kth element's partition, and
-    * ONE partition is scanned — the driver never holds per-file state. */
-  private def distributedKthWalk[K](
-      colName: String, k: Long, largest: Boolean,
-      extract: PartialFunction[Any, K])(
-      implicit ord: Ordering[K], ct: scala.reflect.ClassTag[K]): Option[K] = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    import classic.implicits._
-    val (colB, largestB) = (colName, largest)
-    val extractB = extract
-    val sorted = classic.read.parquet(filesDir.toString).as[FileStatsRow].rdd
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          IndexMetadata.blocksFromJsonString(r.blocksJson).iterator.flatMap { b =>
-            b.columns.get(colB) match {
-              case Some(cs) =>
-                val bound = (if (largestB) cs.min else cs.max).collect(extractB)
-                (bound, cs.nullCount) match {
-                  case (Some(bd), Some(nc)) if b.rowCount - nc > 0 =>
-                    Iterator.single((bd, b.rowCount - nc))
-                  case _ => Iterator.empty
-                }
-              case None => Iterator.empty
-            }
-          }
-        }
-      }
-      .sortBy(_._1, ascending = !largestB)
-    val partTotals = sorted
-      .mapPartitionsWithIndex((i, it) => Iterator.single((i, it.map(_._2).sum)))
-      .collect().sortBy(_._1)
-    var rem = k
-    var target = -1
-    partTotals.foreach { case (i, s) =>
-      if (target < 0) { if (rem <= s) target = i else rem -= s }
-    }
-    if (target < 0) None
-    else {
-      val (remB, targetB) = (rem, target)
-      sorted.mapPartitionsWithIndex { (i, it) =>
-        if (i != targetB) Iterator.empty
-        else {
-          var need = remB
-          var ans: Option[K] = None
-          while (it.hasNext && need > 0) {
-            val (bd, c) = it.next(); ans = Some(bd); need -= c
-          }
-          Iterator.single(ans)
-        }
-      }.collect().headOption.flatten
     }
   }
 
@@ -1025,125 +842,28 @@ class GraftFileIndex(
     * than k guaranteed non-null values admits rows below any cutoff, so
     * no global cut is sound).
     *
-    * Scale: driver fold below the distributed threshold; above it one
-    * files-table job folds each partition's block multiset inside
-    * `groupByKey(partitionIdx).mapGroups` (a partition's BLOCK STATS
-    * must fit a task — metadata-sized, orders of magnitude under the
-    * data itself) and only #partitions bounds reach the driver. */
+    * Scale: on the files table, one job groups each partition's (bound,
+    * count) pairs by partitionIdx (a partition's BLOCK STATS must fit a
+    * task — metadata-sized, orders of magnitude under the data itself)
+    * and only #partitions bounds reach the driver. Every file emits its
+    * pair array, empty or not, so a partition whose files yield no usable
+    * pairs still reaches the walk (and folds to None there) instead of
+    * silently dropping out, which would make the cut unsound. */
   def topKBoundByPartitions(colName: String,
       dt: org.apache.spark.sql.types.DataType,
       k: Long, largest: Boolean): Option[Any] = {
     require(k >= 1, s"k must be >= 1: $k")
-
-    def blockPairs(blocks: Seq[BlockStats]): Iterator[(Any, Long)] =
-      blocks.iterator.flatMap { b =>
-        b.columns.get(colName) match {
-          case Some(cs) =>
-            val bound = if (largest) cs.min else cs.max
-            (bound, cs.nullCount) match {
-              case (Some(bd), Some(nc)) if b.rowCount - nc > 0 =>
-                Iterator.single((bd, b.rowCount - nc))
-              case _ => Iterator.empty
-            }
-          case None => Iterator.empty
-        }
-      }
-    def kthWalk(pairs: Array[(Any, Long)]): Option[Any] = {
-      val best = new Ordering[(Any, Long)] {
-        override def compare(a: (Any, Long), b: (Any, Long)): Int = {
-          val c = graft.index.Canon.compare(a._1, b._1)
-          if (largest) -c else c
-        }
-      }
-      val sorted = pairs.sorted(best)
-      var rem = k
-      var i = 0
-      var ans: Option[Any] = None
-      while (i < sorted.length && rem > 0) {
-        ans = Some(sorted(i)._1); rem -= sorted(i)._2; i += 1
-      }
-      if (rem > 0) None else ans
+    import GraftFileIndex.{blockPairs, kthBound, weakest}
+    val perPartition = runner(None)(_.valuesIterator.map(rows => kthBound(
+      rows.iterator.flatMap(r => blockPairs(r.blocks, colName, largest)).toArray,
+      k, largest)).toSeq) { table =>
+      GraftFileIndex.fileRows(table, listing = false)
+        .map(r => (r.partitionIdx, blockPairs(r.blocks, colName, largest).toArray))
+        .groupByKey()
+        .map { case (_, pairs) => kthBound(pairs.iterator.flatten.toArray, k, largest) }
+        .collect().toSeq
     }
-    def weakest(bounds: Seq[Option[Any]]): Option[Any] =
-      if (bounds.isEmpty || bounds.exists(_.isEmpty)) None
-      else Some(bounds.flatten.reduce { (a, b) =>
-        val c = graft.index.Canon.compare(a, b)
-        if (largest) { if (c <= 0) a else b } else { if (c >= 0) a else b }
-      })
-
-    if (meta.fileCount < conf.distributedPruningThreshold) {
-      weakest(entriesByPartition.valuesIterator.map { fs =>
-        kthWalk(fs.iterator.flatMap(f => blockPairs(f.blocks)).toArray)
-      }.toSeq)
-    } else if (dt == org.apache.spark.sql.types.StringType) {
-      val perPart = distributedGroupedFold[String](colName, k, largest,
-        { case s: String => s }, sentinel = "")(
-        GraftFileIndex.Utf8Ordering, org.apache.spark.sql.Encoders.STRING)
-      weakest(perPart.toSeq.map(_.map(_.asInstanceOf[Any])))
-    } else {
-      val perPart = distributedGroupedFold[Long](colName, k, largest,
-        { case l: Long => l }, sentinel = 0L)(
-        Ordering.Long, org.apache.spark.sql.Encoders.scalaLong)
-      weakest(perPart.toSeq.map(_.map(_.asInstanceOf[Any])))
-    }
-  }
-
-  /** The distributed grouped kth fold shared by [[topKBoundByPartitions]]'
-    * Long and String canonical domains: each partition's block multiset
-    * folds inside `groupByKey(partitionIdx).mapGroups`, and only
-    * #partitions bounds reach the driver. */
-  private def distributedGroupedFold[K](
-      colName: String, k: Long, largest: Boolean,
-      extract: PartialFunction[Any, K], sentinel: K)(
-      implicit ord: Ordering[K],
-      kEnc: org.apache.spark.sql.Encoder[K]): Array[Option[K]] = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    import classic.implicits._
-    import org.apache.spark.sql.Encoders
-    val enc = Encoders.tuple(Encoders.scalaInt, kEnc, Encoders.scalaLong)
-    val enc2 = Encoders.tuple(Encoders.scalaBoolean, kEnc)
-    val (colB, largestB, kB) = (colName, largest, k)
-    val (extractB, sentinelB, ordB) = (extract, sentinel, ord)
-    classic.read.parquet(filesDir.toString)
-      .select($"partitionIdx", $"blocksJson").as[(Int, String)]
-      .flatMap { case (idx, blocksJson) =>
-        val pairs = IndexMetadata.blocksFromJsonString(blocksJson).iterator.flatMap { b =>
-          b.columns.get(colB) match {
-            case Some(cs) =>
-              val bound = (if (largestB) cs.min else cs.max).collect(extractB)
-              (bound, cs.nullCount) match {
-                case (Some(bd), Some(nc)) if b.rowCount - nc > 0 =>
-                  Iterator.single((idx, bd, b.rowCount - nc))
-                case _ => Iterator.empty
-              }
-            case None => Iterator.empty
-          }
-        }.toSeq
-        // a file whose blocks yield no usable pairs still admits any
-        // value — emit a zero-count sentinel so its partition reaches
-        // the grouped fold (and folds to None there) instead of
-        // silently dropping out, which would make the cut unsound
-        if (pairs.isEmpty) Seq((idx, sentinelB, 0L)) else pairs
-      }(enc)
-      .groupByKey(_._1)
-      .mapGroups { (_: Int, it: Iterator[(Int, K, Long)]) =>
-        val pairs = it.filter(_._3 > 0).map(t => (t._2, t._3)).toArray
-        // explicit reverse ordering: negating a Long key overflows on
-        // Long.MinValue and would break the walked-bounds invariant
-        val sorted =
-          if (largestB) pairs.sortBy(_._1)(ordB.reverse)
-          else pairs.sortBy(_._1)(ordB)
-        var rem = kB
-        var i = 0
-        var ans: Option[K] = None
-        while (i < sorted.length && rem > 0) {
-          ans = Some(sorted(i)._1); rem -= sorted(i)._2; i += 1
-        }
-        // Option doesn't encode generically: (found, value) tuple instead
-        if (rem > 0) (false, sentinelB) else (true, ans.get)
-      }(enc2)
-      .collect()
-      .map { case (found, v) => if (found) Some(v) else None }
+    weakest(perPartition, largest)
   }
 
   private def toFileStatus(f: FileEntry): FileStatus = {
@@ -1172,8 +892,7 @@ class GraftFileIndex(
     // skips installing a fresh value — never installs a stale one.
     IndexFilesTable.invalidate(filesDir)
     snapshotEpoch.incrementAndGet()
-    entriesByPartitionCache = null
-    metaAggCache.clear()
+    rowsByPartitionCache = null
     metaAggByPartCache.clear()
     metaDistinctCache.clear()
     topKBoundCache.clear()
@@ -1191,19 +910,149 @@ class GraftFileIndex(
 }
 
 object GraftFileIndex {
-  /** UTF-8 binary order on canonical Strings — a named serializable
-    * Ordering (lambda/comparator wrappers don't survive task
-    * serialization in the distributed sort). */
-  object Utf8Ordering extends Ordering[String] {
-    override def compare(a: String, b: String): Int = graft.index.Canon.compare(a, b)
-  }
-
   /** Eager statuses (small-table cache / pruned survivors) → the
     * listing's wrapper type, same shape PartitionDirectory.apply builds. */
   private[graft] def wrapEager(files: Array[FileStatus]): Seq[FileStatusWithMetadata] =
     scala.collection.immutable.ArraySeq.unsafeWrapArray(
       files.map(FileStatusWithMetadata(_)))
+
+  /** The files table as [[FileRow]]s, parsed where the rows are read.
+    * Only `partitionIdx` and `blocksJson` are read unless `listing`,
+    * which adds the columns of the listing entry; that entry parses its
+    * block locations on first use, so only the files a computation keeps
+    * pay for them. The per-file schema JSON stays unread. */
+  private[graft] def fileRows(table: org.apache.spark.sql.classic.DataFrame,
+      listing: Boolean): RDD[FileRow] = {
+    val cols = Seq("partitionIdx", "blocksJson") ++ (if (!listing) Nil
+      else Seq("path", "size", "modificationTime", "blockSize", "locationsJson"))
+    table.select(cols.map(org.apache.spark.sql.functions.col): _*)
+      .queryExecution.toRdd.map { r =>
+        val blocks = IndexMetadata.blocksFromJsonString(r.getUTF8String(1).toString)
+        if (!listing) new FileRow(r.getInt(0), blocks, null, null)
+        else {
+          // read out of the (reused) scan row before the entry is deferred
+          val (path, size, mtime, blockSize, locations) = (r.getUTF8String(2).toString,
+            r.getLong(3), r.getLong(4), r.getLong(5), r.getUTF8String(6).toString)
+          new FileRow(r.getInt(0), blocks, path, FileEntry(path, size, mtime, Nil, blockSize,
+            IndexMetadata.locationsFromJsonString(locations)))
+        }
+      }
+  }
+
+  // ---- per-file logic of the metadata computations -------------------
+
+  /** Pruning over one slice of files: pass 1 folds `filter` over min/max
+    * alone (no sketch IO); when `sketches` is given, the survivors'
+    * sketches load in ONE pruned read and pass 2 refines their verdicts
+    * with them. `select` runs one pass over a slice. */
+  private[graft] def pruneSlice(
+      rows: Seq[FileRow], filter: Filter, schema: StructType,
+      sketches: Option[() => SketchStore],
+      select: (Seq[FileRow], FileRow => Boolean) => Seq[FileRow]): Seq[FileRow] = {
+    val survivors = select(rows, r =>
+      FilterFold.fileMayContain(filter, r.blocks, _ => None, schema))
+    sketches match {
+      case Some(open) if survivors.nonEmpty =>
+        val store = open()
+        store.ensureLoaded(survivors.map(_.path))
+        select(survivors, r => FilterFold.fileMayContain(
+          filter, r.blocks, col => store.sketchFor(r.path, col), schema))
+      case _ => survivors
+    }
+  }
+
+  /** A driver pass: a parallel stream over slices of 64 files or more. */
+  private[graft] def parallelFilter(rows: Seq[FileRow], p: FileRow => Boolean): Seq[FileRow] =
+    if (rows.size < 64) rows.filter(p)
+    else {
+      import scala.jdk.CollectionConverters._
+      rows.asJava.parallelStream().filter(r => p(r))
+        .collect(java.util.stream.Collectors.toList[FileRow]).asScala.toSeq
+    }
+
+  /** Metadata stats: fold one file's blocks into its partition's running
+    * aggregate (the zero is an empty map). */
+  private[graft] def addStats(cols: Seq[String])(
+      acc: Map[Int, MetaTableAgg], r: FileRow): Map[Int, MetaTableAgg] =
+    acc.updated(r.partitionIdx, MetadataAggregates.foldFile(
+      acc.getOrElse(r.partitionIdx, MetadataAggregates.zero(cols)), r.blocks, cols))
+
+  private[graft] def mergeStats(
+      a: Map[Int, MetaTableAgg], b: Map[Int, MetaTableAgg]): Map[Int, MetaTableAgg] =
+    b.foldLeft(a) { case (acc, (i, s)) => acc.updated(i, acc.get(i).fold(s)(_ merge s)) }
+
+  /** Top-k: (guaranteed bound, guaranteed non-null count) per row-group
+    * of one file — the block's min of `col` for `largest`, else its max —
+    * for blocks that record the bound and a null count leaving non-null
+    * values. */
+  private[graft] def blockPairs(blocks: Seq[BlockStats], col: String,
+      largest: Boolean): Iterator[(Any, Long)] =
+    blocks.iterator.flatMap { b =>
+      for {
+        cs <- b.columns.get(col)
+        bound <- if (largest) cs.min else cs.max
+        nulls <- cs.nullCount
+        if b.rowCount - nulls > 0
+      } yield (bound, b.rowCount - nulls)
+    }
+
+  /** [[graft.index.Canon.compare]] (Long, or String in UTF-8 binary
+    * order) as a named serializable Ordering for the distributed sort. */
+  private[graft] object CanonOrdering extends Ordering[Any] {
+    override def compare(a: Any, b: Any): Int = graft.index.Canon.compare(a, b)
+  }
+
+  /** Best bound first: descending for `largest`. */
+  private[graft] def bestFirst(largest: Boolean): Ordering[Any] =
+    if (largest) CanonOrdering.reverse else CanonOrdering
+
+  /** The kth walk over (bound, count) pairs in best-first order: the
+    * bound at which the running count first reaches `k`, None if it
+    * never does. */
+  private[graft] def kthWalk(sorted: Iterator[(Any, Long)], k: Long): Option[Any] = {
+    var rem = k
+    var ans: Option[Any] = None
+    while (sorted.hasNext && rem > 0) {
+      val (bound, n) = sorted.next()
+      ans = Some(bound)
+      rem -= n
+    }
+    if (rem > 0) None else ans
+  }
+
+  /** [[kthWalk]] over unsorted pairs. */
+  private[graft] def kthBound(pairs: Array[(Any, Long)], k: Long,
+      largest: Boolean): Option[Any] =
+    kthWalk(pairs.sortBy(_._1)(bestFirst(largest)).iterator, k)
+
+  /** The least favorable of per-partition bounds; None unless every
+    * partition proves one. */
+  private[graft] def weakest(bounds: Seq[Option[Any]], largest: Boolean): Option[Any] =
+    if (bounds.isEmpty || bounds.exists(_.isEmpty)) None
+    else Some(bounds.flatten.max(bestFirst(largest)))
 }
+
+/** One indexed file as every metadata computation reads it: its
+  * partition and parsed row-group stats and, where the listing columns
+  * were read, its path and `entry`, the listing entry a kept file's
+  * FileStatus is built from (both null otherwise). `listing` is
+  * evaluated on the first read of `entry`. */
+private[graft] final class FileRow(
+    val partitionIdx: Int, val blocks: Seq[BlockStats], val path: String,
+    listing: => FileEntry) {
+  lazy val entry: FileEntry = listing
+}
+
+private[graft] object FileRow {
+  /** A cached driver row over a row of the shared files-table cache: the
+    * listing entry is parsed on first use, after which the row holds the
+    * entry alone (scalac drops a field read only by a lazy initializer). */
+  def apply(r: FileStatsRow): FileRow =
+    new FileRow(r.partitionIdx, IndexMetadata.blocksFromJsonString(r.blocksJson), r.path,
+      FileEntry(r.path, r.size, r.modificationTime, Nil, r.blockSize,
+        IndexMetadata.locationsFromJsonString(r.locationsJson)))
+}
+
 
 /** A [[FileStatus]] that DEFERS Path construction: at 10^6 files the
   * eager Path (and its internal URI — several string copies of the full

@@ -1549,6 +1549,83 @@ class IndexEndToEndSpec extends AnyFunSuite with BeforeAndAfterAll {
       "option() must thread the threshold into listFiles")
   }
 
+  test("driver and distributed runners agree value by value") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.graft.GraftFileIndex
+    import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+    // three partitions of three overlapping files each; `s` has nulls
+    def writeParts(p: String): Unit =
+      for (part <- 0 until 3; f <- 0 until 3) {
+        val base = (part * 3 + f) * 50L
+        spark.range(base, base + 60).select(
+            col("id").as("k"),
+            when(col("id") % 13 === 0, lit(null).cast("string")).otherwise(
+              concat(lit("s"), lpad((col("id") * 7 % 500).cast("string"), 3, "0"))).as("s"),
+            (col("id") / 4.0 - 20).as("d"))
+          .coalesce(1).write.mode("append").parquet(s"$p/part=$part")
+      }
+    // a file whose indexed columns are all null yields no usable top-k
+    // pairs: alone in its partition it must make the grouped bound None
+    def writeNullFile(dir: String): Unit =
+      spark.range(0, 5).select(lit(null).cast("long").as("k"),
+          lit(null).cast("string").as("s"), lit(null).cast("double").as("d"))
+        .coalesce(1).write.mode("append").parquet(dir)
+    val bloomPath = s"$work/runner_parity_bloom"
+    writeParts(bloomPath)
+    writeNullFile(s"$bloomPath/part=3")
+    val dictPath = s"$work/runner_parity_dict"
+    writeParts(dictPath)
+    writeNullFile(s"$dictPath/part=0")
+    spark.index.create.mode("overwrite").indexBy("k", "s", "d").parquet(bloomPath)
+    spark.index.create.mode("overwrite").option(IndexConf.FilterType, Sketch.Dict)
+      .indexBy("k", "s", "d").parquet(dictPath)
+
+    def onDriver(p: String) = spark.index.parquet(p)
+    def onTable(p: String) =
+      spark.index.option(IndexConf.DistributedPruningThreshold, "1").parquet(p)
+    def listed(df: DataFrame): (Set[String], Boolean) = {
+      val scan = df.queryExecution.executedPlan.collectFirst {
+        case s: FileSourceScanExec => s
+      }.get
+      val gfi = scan.relation.location.asInstanceOf[GraftFileIndex]
+      val files = gfi.listFiles(scan.partitionFilters, scan.dataFilters)
+        .flatMap(_.files.map(_.getPath.toString)).toSet
+      (files, gfi.lastPrunedDistributed)
+    }
+    def index(df: DataFrame): GraftFileIndex = df.queryExecution.executedPlan.collectFirst {
+      case s: FileSourceScanExec => s.relation.location.asInstanceOf[GraftFileIndex]
+    }.get
+    val filters: Seq[Column] = Seq(
+      col("k") === 170L, col("k").isin(5L, 170L, 333L), col("k") > 300L,
+      col("d") < -15.0, col("s") === "s077", col("s").contains("123"))
+
+    for (p <- Seq(bloomPath, dictPath)) {
+      filters.foreach { f =>
+        val (driverFiles, driverOnTable) = listed(onDriver(p).filter(f))
+        val (tableFiles, tableOnTable) = listed(onTable(p).filter(f))
+        assert(!driverOnTable && tableOnTable, s"$p $f: runner not switched")
+        assert(driverFiles == tableFiles, s"$p $f: listings differ")
+      }
+      val (d, t) = (index(onDriver(p)), index(onTable(p)))
+      val cols = Seq("k", "s", "d")
+      assert(d.metadataStats(cols) == t.metadataStats(cols), p)
+      assert(d.metadataStatsByPartition(cols) == t.metadataStatsByPartition(cols), p)
+      for ((c, dt) <- Seq("k" -> LongType, "s" -> StringType, "d" -> DoubleType);
+           largest <- Seq(true, false); k <- Seq(1L, 7L, 100L, 10000L)) {
+        val what = s"$p $c largest=$largest k=$k"
+        assert(d.topKBound(c, dt, k, largest) == t.topKBound(c, dt, k, largest), what)
+        assert(d.topKBoundByPartitions(c, dt, k, largest) ==
+          t.topKBoundByPartitions(c, dt, k, largest), what)
+      }
+      assert(t.topKBound("s", StringType, 7L, largest = true).isDefined, p)
+    }
+    val (bloomTable, dictTable) = (index(onTable(bloomPath)), index(onTable(dictPath)))
+    assert(bloomTable.topKBoundByPartitions("k", LongType, 7L, largest = true).isEmpty,
+      "a partition of pair-less files proves no bound")
+    assert(dictTable.topKBoundByPartitions("k", LongType, 7L, largest = true).isDefined,
+      "a pair-less file beside files with bounds leaves its partition's bound")
+  }
+
   test("catalog: non-parquet provider rejected; dual dataspace independent") {
     import spark.implicits._
     // JSON-provider catalog table cannot be indexed (reference

@@ -170,6 +170,27 @@ class MockFsRefreshSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.read.parquet(t2).filter(col("n_nationkey") === key).count())
   }
 
+  test("one listing opens the sketch table once, however many partitions survive min/max") {
+    // every file spans [0, 10000], so min/max keeps all six files of the
+    // three partitions and only the bloom sketches can cut the lookup
+    val t3 = s"mockfs://$work/sketch_part"
+    for (p <- 0 until 3; f <- 0 until 2) {
+      val base = (p * 2 + f) * 100L
+      spark.range(base + 1, base + 100).union(spark.range(0, 1))
+        .union(spark.range(10000, 10001)).toDF("k")
+        .coalesce(1).write.mode("append").parquet(s"$t3/p=$p")
+    }
+    val o3 = Map(IndexConf.MetastoreLocation -> s"mockfs://$work/metastore3")
+    spark.index.create.mode("overwrite").options(o3).indexBy("k").parquet(t3)
+    val lookup = spark.index.options(o3).parquet(t3).filter(col("k") === 150L)
+    CountingMockFileSystem.reset()
+    assert(lookup.count() == 1L)
+    val sketchOpens = CountingMockFileSystem.drain()
+      .filter(_.endsWith(s"/${Metastore.SketchDir}"))
+    assert(sketchOpens.size == 1,
+      s"min/max survivors in 3 partitions must load their sketches in one read, got $sketchOpens")
+  }
+
   override def afterAll(): Unit = {
     spark.stop()
     super.afterAll()
