@@ -213,21 +213,26 @@ class Prune:
 
     def topk(self, df, key_col, k, largest=True):
         """Prune an indexed frame to rows that can appear in its top-k by
-        key_col (largest=False for bottom-k); degrades to the unchanged
-        frame when no bound is provable."""
+        key_col (largest=False for bottom-k). The frame comes back
+        unchanged, and so does the plain answer, when no bound is
+        provable: an unindexed column, fewer than k non-null values, or a
+        frame that is filtered or computes the key column."""
         return self._df(self._japi.topKPruned(df._jdf, key_col, k, largest))
 
     def topk_per_group(self, df, group_col, key_col, k, largest=True):
         """Prune an indexed frame to rows that can appear in ANY group's
-        top-k by key_col — group_col must be a partition column of the
-        index (degrades to the unchanged frame otherwise)."""
+        top-k by key_col. group_col must be a partition column of the
+        index; otherwise, or on a filtered or computed frame as for topk,
+        the frame comes back unchanged."""
         return self._df(self._japi.topKPerGroupPruned(
             df._jdf, group_col, key_col, k, largest))
 
     def semi_join(self, fact, dim, fact_key_col, dim_key_col,
                   max_keys=10000):
         """Inner equi-join where the dim's (<= max_keys) keys become an
-        IN-list the index prunes fact files with."""
+        IN-list the index prunes fact files with. A dim that is not
+        deterministic (rand(), a subquery, limit, sample) gets the plain,
+        unpruned join."""
         return self._df(self._japi.semiJoinPruned(
             fact._jdf, dim._jdf, fact_key_col, dim_key_col, max_keys))
 
@@ -235,7 +240,8 @@ class Prune:
                    expected_keys=0, fpp=0.03):
         """Inner equi-join with a dim-key bloom probed map-side plus the
         dim [min,max] range pushed into the index's file pruning — the
-        any-size-dim sibling of semi_join."""
+        any-size-dim sibling of semi_join. A dim that is not
+        deterministic gets the plain, unpruned join, as in semi_join."""
         return self._df(self._japi.bloomJoinPruned(
             fact._jdf, dim._jdf, fact_key_col, dim_key_col,
             expected_keys, fpp))

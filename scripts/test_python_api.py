@@ -10,7 +10,8 @@ import tempfile
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "python"))
 
-from pyspark.sql import SparkSession  # noqa: E402
+from pyspark.sql import SparkSession, Window  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 
 JAR = os.path.join(os.path.dirname(__file__), "..",
                    "target", "scala-2.13", "parquetindexspark_2.13-0.1.0.jar")
@@ -101,12 +102,41 @@ def main():
     assert ctx.prune.bloom_join(
         ctx.index.parquet(table), dim, "l_orderkey", "k").count() == n_key
 
+    # each wrapper against the plain query, row for row
+    def rows(df):
+        return sorted(map(str, df.collect()))
+
+    top_k = 5
+    assert rows(ctx.prune.topk(fact, "l_orderkey", top_k, largest=False)
+                .orderBy("l_orderkey", "l_linenumber").limit(top_k)) == \
+        rows(plain_df.orderBy("l_orderkey", "l_linenumber").limit(top_k))
+    parted = f"{work}/lineitem_by_flag"
+    (spark.read.parquet(table).repartitionByRange(4, "l_returnflag", "l_orderkey")
+     .write.partitionBy("l_returnflag").parquet(parted))
+    ctx.index.create.mode("overwrite").indexBy("l_orderkey").parquet(parted)
+
+    def per_group_top(df):
+        w = Window.partitionBy("l_returnflag").orderBy(
+            F.col("l_orderkey").desc(), "l_linenumber")
+        return rows(df.withColumn("rn", F.row_number().over(w))
+                    .filter(f"rn <= {top_k}")
+                    .select("l_returnflag", "rn", "l_orderkey", "l_linenumber"))
+    assert per_group_top(ctx.prune.topk_per_group(
+        ctx.index.parquet(parted), "l_returnflag", "l_orderkey", top_k)) == \
+        per_group_top(spark.read.parquet(parted))
+    ctx.index.delete.parquet(parted)
+    keys = spark.createDataFrame([(key,), (key + 1,), (key + 2,)], ["k"])
+    want_join = rows(plain_df.join(keys, plain_df.l_orderkey == keys.k))
+    assert rows(ctx.prune.semi_join(
+        ctx.index.parquet(table), keys, "l_orderkey", "k")) == want_join
+    assert rows(ctx.prune.bloom_join(
+        ctx.index.parquet(table), keys, "l_orderkey", "k")) == want_join
+
     ctx.index.delete.parquet(table)
     assert not ctx.index.exists.parquet(table), "index should be gone"
 
     # ---- extended Canon domain through the Python surface: DOUBLE and
     # NESTED leaf columns index and prune like any other type ----
-    from pyspark.sql import functions as F
     fp_table = f"{work}/fp_table"
     (spark.range(0, 800)
         .select("id", (F.col("id") * 2.5).alias("price"),

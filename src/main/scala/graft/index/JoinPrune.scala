@@ -1,7 +1,9 @@
 package graft.index
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.graft.JoinPruneRule
+import org.apache.spark.sql.graft.SparkInternals.{unwrap, wrap}
 
 /** Semi-join reduction through the index ("dynamic FILE pruning" for
   * ordinary columns): Spark's DPP prunes partition DIRECTORIES when a
@@ -21,6 +23,14 @@ import org.apache.spark.sql.functions._
   * star-join shape: a thousand-key dim against a million-file fact turns
   * into a thousand-entry IN probe against per-file sketches, reading the
   * handful of files that matter.
+  *
+  * These calls are the explicit form of
+  * [[org.apache.spark.sql.graft.JoinPruneRule]] and run its code: its dim
+  * gate ([[org.apache.spark.sql.graft.JoinPruneRule.probeableDim]]) and
+  * its probe tiers. A dim the gate rejects — streaming, nondeterministic
+  * (`rand()`, a subquery) or with a limit/offset/tail/sample, whose row
+  * set can differ between the probe and the join — gets the plain,
+  * unpruned join.
   */
 object JoinPrune {
 
@@ -30,9 +40,8 @@ object JoinPrune {
     *                DataFrames also work, degrading to a row-level
     *                pushed filter without the file cut
     * @param dim     build side; evaluated TWICE (key probe + the join
-    *                itself), so it must be deterministic — a sampled or
-    *                otherwise nondeterministic dim could yield probe keys
-    *                that miss join-time rows and silently drop matches
+    *                itself) — a dim that is not deterministic gets the
+    *                plain join (see the object doc)
     * @param factKey fact join column (the indexed one)
     * @param dimKey  dim join column
     * @param maxKeys driver cap on collected distinct keys; above it the
@@ -45,28 +54,28 @@ object JoinPrune {
       dimKey: Column,
       maxKeys: Int = 10000): DataFrame = {
     require(maxKeys >= 1, s"maxKeys must be >= 1: $maxKeys")
-    val keys = dim.select(dimKey.as("__k")).filter(col("__k").isNotNull)
-      .distinct().limit(maxKeys + 1).collect().map(_.get(0)).toSeq
-    if (keys.length > maxKeys) fact.join(dim, factKey === dimKey)
-    else fact.filter(factKey.isin(keys: _*)).join(dim, factKey === dimKey)
+    val probe =
+      if (!JoinPruneRule.probeableDim(dim.queryExecution.analyzed)) None
+      else JoinPruneRule.inListProbe(dim.select(dimKey), unwrap(factKey), maxKeys)
+    joinUnder(fact, probe, dim, factKey, dimKey)
   }
 
   /** [[semiJoinPruned]]'s big-dim sibling: runtime join pruning that
     * never collects the dim's keys to the driver, so it has no key-count
     * cap. Two sound cuts before the join runs:
     *
-    *   1. FILE-level: the dim's `[min, max]` key range (a 2-value
-    *      aggregate, collectable at any dim size) becomes a
+    *   1. FILE-level: the dim's `[min, max]` key range (one aggregate,
+    *      collectable at any dim size) becomes a
     *      `factKey BETWEEN mn AND mx` predicate — pushed into the scan,
     *      where a [[org.apache.spark.sql.graft.GraftFileIndex]] prunes
     *      whole files by their min/max stats (plain relations still get
     *      parquet row-group skipping);
     *   2. ROW-level: a bloom filter of the dim's keys, built
-    *      distributed (`treeAggregate` of per-partition partials) and
-    *      shipped once per executor as a broadcast variable, gates rows
-    *      map-side via the codegen'd [[graft.functions.InBloom]] probe —
-    *      the fact side shuffles only rows that MIGHT join (fpp-bounded
-    *      excess), instead of everything in range.
+    *      distributed and shipped once per executor as a broadcast
+    *      variable, gates rows map-side via the codegen'd
+    *      [[graft.functions.InBloom]] probe — the fact side shuffles only
+    *      rows that MIGHT join (fpp-bounded excess), instead of
+    *      everything in range.
     *
     * Both cuts are semantics-free for an inner equi-join: out-of-range
     * keys cannot match, blooms have no false negatives, and null keys
@@ -76,14 +85,14 @@ object JoinPrune {
     * the win is shuffle-volume ∝ selectivity, and with an indexed fact
     * the range cut happens before files are even opened.
     *
-    * The dim is evaluated three times (range, bloom, join) — it must be
-    * deterministic, same as [[semiJoinPruned]].
+    * The dim is evaluated three times (range, bloom, join); a dim that is
+    * not deterministic gets the plain join, as in [[semiJoinPruned]].
     *
     * @param expectedKeys bloom sizing (capacity, not a cap — above it
     *                     the fpp degrades gracefully, never correctness);
-    *                     0 (default) sizes from a `count()` of the dim's
-    *                     keys, so a 100-row dim doesn't pay a megabyte
-    *                     filter and a 100M-row dim doesn't saturate one
+    *                     0 (default) sizes from the dim's key count, so a
+    *                     100-row dim doesn't pay a megabyte filter and a
+    *                     100M-row dim doesn't saturate one
     * @param fpp          target false-positive rate at `expectedKeys`
     */
   def bloomJoinPruned(
@@ -93,46 +102,20 @@ object JoinPrune {
       dimKey: Column,
       expectedKeys: Long = 0L,
       fpp: Double = 0.03): DataFrame = {
-    import org.apache.spark.sql.types._
-    import org.apache.spark.util.sketch.BloomFilter
     require(expectedKeys >= 0, s"expectedKeys must be >= 0: $expectedKeys")
     require(fpp > 0 && fpp < 1, s"fpp must be in (0, 1): $fpp")
-    val keyed = dim.select(dimKey.as("__k")).filter(col("__k").isNotNull)
-    val dt = keyed.schema.fields.head.dataType
-    require(Seq(ByteType, ShortType, IntegerType, LongType, StringType).contains(dt),
+    val keys = dim.select(dimKey)
+    val dt = keys.schema.head.dataType
+    require(JoinPruneRule.bloomEligible(dt),
       s"bloomJoinPruned supports integral and string keys, got $dt")
-
-    // file cut: 2-value aggregate, any dim size
-    val bounds = keyed.agg(min(col("__k")), max(col("__k"))).head
-    if (bounds.isNullAt(0)) {
-      // dim has no non-null keys: inner join is empty; keep the join
-      // shape (schema, laziness) but read nothing
-      return fact.filter(lit(false)).join(dim, factKey === dimKey)
-    }
-    val (mn, mx) = (bounds.get(0), bounds.get(1))
-
-    // row cut: distributed bloom build — per-partition partials merged
-    // pairwise, only sketch bytes cross to the driver
-    val capacity =
-      if (expectedKeys > 0) expectedKeys else math.max(keyed.count(), 64L)
-    val bf = keyed.rdd.treeAggregate(
-      BloomFilter.create(capacity, fpp))(
-      seqOp = (f, row) => {
-        row.get(0) match {
-          case s: String => f.putBinary(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          case n: java.lang.Number => f.putLong(n.longValue())
-          case other => throw new IllegalArgumentException(s"unsupported key $other")
-        }
-        f
-      },
-      combOp = (a, b) => { a.mergeInPlace(b); a })
-    val bc = fact.sparkSession.sparkContext.broadcast(bf)
-    val probe = org.apache.spark.sql.graft.SparkInternals.wrap(
-      graft.functions.InBloom(
-        org.apache.spark.sql.graft.SparkInternals.unwrap(factKey), bc))
-
-    fact
-      .filter(factKey >= lit(mn) && factKey <= lit(mx) && probe)
-      .join(dim, factKey === dimKey)
+    val probe =
+      if (!JoinPruneRule.probeableDim(dim.queryExecution.analyzed)) None
+      else Some(JoinPruneRule.rangeBloomProbe(keys, unwrap(factKey), expectedKeys, fpp))
+    joinUnder(fact, probe, dim, factKey, dimKey)
   }
+
+  /** The inner join of `fact`, cut by `probe` when there is one, and `dim`. */
+  private def joinUnder(fact: DataFrame, probe: Option[Expression], dim: DataFrame,
+      factKey: Column, dimKey: Column): DataFrame =
+    probe.fold(fact)(p => fact.filter(wrap(p))).join(dim, factKey === dimKey)
 }

@@ -766,7 +766,7 @@ class GraftFileIndex(
   }
 
   /** Canonical threshold for index-backed TOP-K pruning
-    * ([[graft.index.TopK.topKPruned]]). With `largest = true`, finds T =
+    * ([[TopKRewriteRule.boundPredicate]]). With `largest = true`, finds T =
     * the kth best LOWER bound over the per-block multiset
     * {min_b × nonNull_b}: at least k non-null values of `colName` are
     * >= T, so `colName >= T` provably preserves any
@@ -783,54 +783,37 @@ class GraftFileIndex(
     * (bound, count) pairs plus the classic two-pass kth-element walk
     * (per-partition totals collected — one Long per task — then ONE
     * sorted partition walked), so the driver never holds per-file
-    * state. */
+    * state. Memoized per snapshot (see [[refresh]]): fixed-point
+    * iterations, the explicit API and repeated queries pay the fold once. */
   def topKBound(colName: String, dt: org.apache.spark.sql.types.DataType,
       k: Long, largest: Boolean): Option[Any] = {
     require(k >= 1, s"k must be >= 1: $k")
     import GraftFileIndex.{blockPairs, bestFirst, kthBound, kthWalk}
-    runner(None)(byPartition => kthBound(byPartition.valuesIterator.flatten
-      .flatMap(r => blockPairs(r.blocks, colName, largest)).toArray, k, largest)) { table =>
-      val sorted = GraftFileIndex.fileRows(table, listing = false)
-        .flatMap(r => blockPairs(r.blocks, colName, largest))
-        .sortBy(_._1)(bestFirst(largest), scala.reflect.ClassTag.Any)
-      val before = sorted.mapPartitions(it => Iterator.single(it.map(_._2).sum))
-        .collect().scanLeft(0L)(_ + _)
-      // the partition where the running count first reaches k, and what
-      // is left of k when its walk starts
-      val target = before.indexWhere(_ >= k) - 1
-      if (target < 0) None
-      else {
-        val rem = k - before(target)
-        spark.sparkContext.runJob(sorted,
-          (it: Iterator[(Any, Long)]) => kthWalk(it, rem), Seq(target)).head
+    memoized(topKBoundCache, (colName, k, largest)) {
+      runner(None)(byPartition => kthBound(byPartition.valuesIterator.flatten
+        .flatMap(r => blockPairs(r.blocks, colName, largest)).toArray, k, largest)) { table =>
+        val sorted = GraftFileIndex.fileRows(table, listing = false)
+          .flatMap(r => blockPairs(r.blocks, colName, largest))
+          .sortBy(_._1)(bestFirst(largest), scala.reflect.ClassTag.Any)
+        val before = sorted.mapPartitions(it => Iterator.single(it.map(_._2).sum))
+          .collect().scanLeft(0L)(_ + _)
+        // the partition where the running count first reaches k, and what
+        // is left of k when its walk starts
+        val target = before.indexWhere(_ >= k) - 1
+        if (target < 0) None
+        else {
+          val rem = k - before(target)
+          spark.sparkContext.runJob(sorted,
+            (it: Iterator[(Any, Long)]) => kthWalk(it, rem), Seq(target)).head
+        }
       }
     }
   }
 
-  /** Per-index memo of [[topKBound]] results: the optimizer's
-    * fixed-point iterations (TopKRewriteRule) and repeated queries over
-    * one live index must not redo the fold — metadata is an immutable
-    * snapshot, and [[refresh]] drops the memos when that snapshot is
-    * replaced (a stale kth bound would inject a `key >= T` cut proven
-    * on files the refresh removed, silently dropping new top-k rows). */
   private val topKBoundCache =
     new scala.collection.concurrent.TrieMap[(String, Long, Boolean), (Long, Option[Any])]()
-
-  def topKBoundCached(colName: String, dt: org.apache.spark.sql.types.DataType,
-      k: Long, largest: Boolean): Option[Any] =
-    memoized(topKBoundCache, (colName, k, largest)) {
-      topKBound(colName, dt, k, largest)
-    }
-
   private val topKGroupBoundCache =
     new scala.collection.concurrent.TrieMap[(String, Long, Boolean), (Long, Option[Any])]()
-
-  def topKBoundByPartitionsCached(colName: String,
-      dt: org.apache.spark.sql.types.DataType,
-      k: Long, largest: Boolean): Option[Any] =
-    memoized(topKGroupBoundCache, (colName, k, largest)) {
-      topKBoundByPartitions(colName, dt, k, largest)
-    }
 
   /** The GROUPED sibling of [[topKBound]]: the WEAKEST per-partition
     * TOP-K bound — T = the least favorable (min for `largest = true`)
@@ -840,7 +823,7 @@ class GraftFileIndex(
     * plain range predicate [[listFiles]] prunes files with. None unless
     * EVERY partition that has files proves a bound (a group with fewer
     * than k guaranteed non-null values admits rows below any cutoff, so
-    * no global cut is sound).
+    * no global cut is sound). Memoized like [[topKBound]].
     *
     * Scale: on the files table, one job groups each partition's (bound,
     * count) pairs by partitionIdx (a partition's BLOCK STATS must fit a
@@ -854,16 +837,18 @@ class GraftFileIndex(
       k: Long, largest: Boolean): Option[Any] = {
     require(k >= 1, s"k must be >= 1: $k")
     import GraftFileIndex.{blockPairs, kthBound, weakest}
-    val perPartition = runner(None)(_.valuesIterator.map(rows => kthBound(
-      rows.iterator.flatMap(r => blockPairs(r.blocks, colName, largest)).toArray,
-      k, largest)).toSeq) { table =>
-      GraftFileIndex.fileRows(table, listing = false)
-        .map(r => (r.partitionIdx, blockPairs(r.blocks, colName, largest).toArray))
-        .groupByKey()
-        .map { case (_, pairs) => kthBound(pairs.iterator.flatten.toArray, k, largest) }
-        .collect().toSeq
+    memoized(topKGroupBoundCache, (colName, k, largest)) {
+      val perPartition = runner(None)(_.valuesIterator.map(rows => kthBound(
+        rows.iterator.flatMap(r => blockPairs(r.blocks, colName, largest)).toArray,
+        k, largest)).toSeq) { table =>
+        GraftFileIndex.fileRows(table, listing = false)
+          .map(r => (r.partitionIdx, blockPairs(r.blocks, colName, largest).toArray))
+          .groupByKey()
+          .map { case (_, pairs) => kthBound(pairs.iterator.flatten.toArray, k, largest) }
+          .collect().toSeq
+      }
+      weakest(perPartition, largest)
     }
-    weakest(perPartition, largest)
   }
 
   private def toFileStatus(f: FileEntry): FileStatus = {

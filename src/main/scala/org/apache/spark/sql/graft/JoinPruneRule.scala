@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, EqualNullSafe, EqualTo, Expression, ExprId, GreaterThanOrEqual, In, InSet, LessThanOrEqual, Literal, NamedExpression, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, Join, LocalLimit, LocalRelation, LogicalPlan, Offset, Project, Sample, Tail}
@@ -15,8 +15,9 @@ import graft.index.IndexConf
   *
   * {{{ fact.join(dim.filter(...), fact("k") === dim("k")) }}}
   *
-  * over an indexed fact, and this rule injects the same sound probe the
-  * explicit API calls build — turning a join key that is NOT a partition
+  * over an indexed fact, and this rule injects the probe the explicit API
+  * calls build too (the companion's gate and tiers are the one
+  * implementation of both) — turning a join key that is NOT a partition
   * column (the shape DPP cannot cover) into per-file sketch pruning:
   *
   *   - small dim (distinct keys under the cap): the keys become a static
@@ -41,16 +42,11 @@ import graft.index.IndexConf
   *     keys never match, and the injected `IN`/range/bloom drops nulls
   *     the join would drop anyway; null-safe `<=>` is NOT eligible and
   *     never matches here);
-  *   - the dim subplan must be deterministic and non-streaming — it is
-  *     evaluated again at probe time, and a nondeterministic dim could
-  *     yield probe keys that miss join-time rows. Expression-level
-  *     nondeterminism (`rand()`) is caught per expression; row-SET
-  *     nondeterminism is operator-level and invisible to
-  *     `Expression.deterministic`, so any `Limit`/`Offset`/`Tail`/
-  *     `Sample` in the dim bails outright — a `limit(n)` above a shuffle
-  *     is not guaranteed to re-yield the same n rows when the join
-  *     re-executes the dim, and an IN-list collected from the probe's
-  *     row set would then silently drop join rows;
+  *   - the dim subplan must pass [[JoinPruneRule.probeableDim]]: it is
+  *     evaluated again at probe time, so it must be non-streaming and
+  *     free of nondeterministic or subquery expressions and of
+  *     `Limit`/`Offset`/`Tail`/`Sample` (row-set nondeterminism), or the
+  *     probe's keys could miss join-time rows;
   *   - the dim must look selective: a Filter/LocalRelation somewhere in
   *     it, or leaf-scan bytes under
   *     [[IndexConf.joinPruneMaxDimBytes]] — an unfiltered full-table dim
@@ -196,45 +192,24 @@ class JoinPruneRule(spark: SparkSession) extends Rule[LogicalPlan]
     // the user's own equivalent cut)
     if (alreadyProbed(factPlan, relAttr.exprId, rootAttr.exprId, restPath)) return None
     // dim side: safe and worthwhile to evaluate at optimize time
-    if (dimPlan.isStreaming) return None
-    // nondeterministic dims could yield probe keys that miss join-time
-    // rows; PlanExpression.deterministic does not inspect its inner plan,
-    // so subquery-bearing dims bail outright
-    if (dimPlan.exists(_.expressions.exists(e => e.exists(x =>
-      !x.deterministic ||
-        x.isInstanceOf[org.apache.spark.sql.catalyst.expressions.PlanExpression[_]])))) {
-      return None
-    }
-    // row-SET nondeterminism is operator-level (every expression inside
-    // is deterministic, yet the operator's OUTPUT row set depends on
-    // arrival order): limit/offset/tail over an unordered exchange and
-    // sample (seeded per partition, order-sensitive within one) can all
-    // re-yield a DIFFERENT key set when the join re-executes the dim
-    // than the one the probe collected — the injected IN would then
-    // silently drop join rows
-    if (dimPlan.exists {
-      case _: GlobalLimit | _: LocalLimit | _: Offset | _: Tail | _: Sample => true
-      case _ => false
-    }) return None
+    if (!probeableDim(dimPlan)) return None
     if (!selective(dimPlan, conf.joinPruneMaxDimBytes)) return None
-    val dt = factKey.dataType
-    if (!inEligible(dt)) return None
+    if (!inEligible(factKey.dataType)) return None
 
     val negKey = memoKey(dimPlan, dimKey, conf)
     if (negativeMemo.containsKey(negKey)) return None
 
-    val pred = probe(dimPlan, dimKey, dt, conf).getOrElse {
-      negativeMemo.put(negKey, java.lang.Boolean.TRUE)
-      trimMemo()
-      return None
-    }
-    // rebind the probe's placeholder to the key AS THE RELATION SEES IT:
-    // the relation attribute itself, or the struct chain rebuilt over it.
+    // the probe is built over the key AS THE RELATION SEES IT: the
+    // relation attribute itself, or the struct chain rebuilt over it.
     // transformUp, NOT transformDown: the replacement chain CONTAINS an
     // AttributeReference, which a top-down rewrite would re-match inside
     // its own replacement forever
     val relKey = factKey.transformUp { case _: AttributeReference => relAttr }
-    val bound = pred.transformUp { case _: AttributeReference => relKey }
+    val bound = probe(dimPlan, dimKey, relKey, conf).getOrElse {
+      negativeMemo.put(negKey, java.lang.Boolean.TRUE)
+      trimMemo()
+      return None
+    }
     logInfo(s"graft join prune: injected $bound above ${gfi.rootPaths.headOption.getOrElse("")}")
     // transformUp: a transformDown would recurse into the replacement's
     // children and re-match the same relation forever
@@ -244,63 +219,24 @@ class JoinPruneRule(spark: SparkSession) extends Rule[LogicalPlan]
   }
 
   /** Execute the dim's key column at optimize time (guarded against
-    * re-entering this rule) and build the probe predicate over a
-    * placeholder attribute the caller rebinds to the relation output.
-    * None = past the cap with bloom off / unsupported bloom key. */
+    * re-entering this rule): the IN tier under the key cap, then the
+    * range+bloom tier when [[IndexConf.joinPruneBloom]] allows it. None =
+    * past the cap with bloom off / bloom-ineligible key. */
   private def probe(
       dimPlan: LogicalPlan,
       dimKey: AttributeReference,
-      dt: DataType,
+      key: Expression,
       conf: IndexConf): Option[Expression] = {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val maxKeys = conf.joinPruneMaxKeys
     inProbe.set(true)
     try {
-      val keyed = org.apache.spark.sql.classic.Dataset
+      val keys = org.apache.spark.sql.classic.Dataset
         .ofRows(classic, Project(Seq(dimKey.asInstanceOf[NamedExpression]), dimPlan))
-        .toDF("__k")
-        .filter(org.apache.spark.sql.functions.col("__k").isNotNull)
-      val keys = keyed.distinct().limit(maxKeys + 1).collect().map(_.get(0)).toSeq
-      if (keys.isEmpty) {
-        // no non-null dim keys: no fact row can match (for outer joins
-        // the non-preserved fact side then contributes nothing). An
-        // EMPTY IN is the strongest pushable form of that fact — it
-        // translates to a source filter the index folds to ZERO files
-        // (unlike a raw `false` literal, which is not source-pushable and
-        // would leave the full listing intact when this rule runs in the
-        // late user-optimizer batch); in the extension path the operator
-        // batch additionally collapses it to an empty relation
-        Some(In(dimKey, Nil))
-      } else if (keys.length <= maxKeys) {
-        Some(In(dimKey, keys.map(Literal.create(_, dt))))
-      } else if (conf.joinPruneBloom && bloomEligible(dt)) {
-        // one aggregate pass carries bounds AND the bloom-sizing count —
-        // the bloom tier costs two dim passes beyond the distinct probe
-        // (this agg + the treeAggregate build), not three
-        val bounds = keyed.agg(
-          org.apache.spark.sql.functions.min("__k"),
-          org.apache.spark.sql.functions.max("__k"),
-          org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1))).head
-        val capacity = math.max(bounds.getLong(2), 64L)
-        val bf = keyed.rdd.treeAggregate(
-          org.apache.spark.util.sketch.BloomFilter.create(capacity, 0.03))(
-          seqOp = (f, row) => {
-            row.get(0) match {
-              case s: String =>
-                f.putBinary(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              case n: java.lang.Number => f.putLong(n.longValue())
-              case other => throw new IllegalArgumentException(s"unsupported key $other")
-            }
-            f
-          },
-          combOp = (a, b) => { a.mergeInPlace(b); a })
-        val bc = spark.sparkContext.broadcast(bf)
-        Some(And(
-          And(GreaterThanOrEqual(dimKey, Literal.create(bounds.get(0), dt)),
-            LessThanOrEqual(dimKey, Literal.create(bounds.get(1), dt))),
-          graft.functions.InBloom(dimKey, bc)))
-      } else None
+      inListProbe(keys, key, conf.joinPruneMaxKeys).orElse {
+        if (conf.joinPruneBloom && bloomEligible(key.dataType)) {
+          Some(rangeBloomProbe(keys, key, expectedKeys = 0L, fpp = 0.03))
+        } else None
+      }
     } finally inProbe.set(false)
   }
 
@@ -406,12 +342,6 @@ class JoinPruneRule(spark: SparkSession) extends Rule[LogicalPlan]
     case _ => false
   }
 
-  /** [[graft.functions.InBloom]]'s key domain. */
-  private def bloomEligible(dt: DataType): Boolean = dt match {
-    case ByteType | ShortType | IntegerType | LongType | StringType => true
-    case _ => false
-  }
-
   /** Decompose an attribute-or-struct-leaf key into (root attribute,
     * leaf segments) — structurally, so attribute names containing
     * literal dots never corrupt the path. Nil segments = a bare key. */
@@ -466,4 +396,86 @@ object JoinPruneRule {
     * cap, bloom flag) — see [[JoinPruneRule.memoKey]]. */
   private val negativeMemo =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+
+  /** The dim gate, shared by the rule and the explicit
+    * `graft.index.JoinPrune` API: a probe evaluates the dim once for its
+    * keys and the join evaluates it again, so both passes must yield the
+    * same rows. Streaming dims bail. Expression-level nondeterminism
+    * (`rand()`) is caught per expression; `PlanExpression.deterministic`
+    * does not inspect its inner plan, so subquery-bearing dims bail
+    * outright. Row-SET nondeterminism is operator-level and invisible to
+    * `Expression.deterministic`: limit/offset/tail over an unordered
+    * exchange and sample (seeded per partition, order-sensitive within
+    * one) can re-yield a DIFFERENT key set when the join re-executes the
+    * dim than the one the probe collected — an IN of the probe's keys
+    * would then silently drop join rows. */
+  def probeableDim(dim: LogicalPlan): Boolean =
+    !dim.isStreaming && !dim.exists { node =>
+      node.expressions.exists(_.exists(x => !x.deterministic ||
+        x.isInstanceOf[org.apache.spark.sql.catalyst.expressions.PlanExpression[_]])) ||
+        (node match {
+          case _: GlobalLimit | _: LocalLimit | _: Offset | _: Tail | _: Sample => true
+          case _ => false
+        })
+    }
+
+  /** The IN tier: the distinct non-null values of `keys` (a one-column
+    * frame of dim join keys) as `key IN (...)`, or None past `maxKeys`.
+    * The cap probe is `limit(maxKeys + 1)`, so the dim is never collected
+    * unboundedly. No non-null dim keys means no fact row can match: an
+    * EMPTY IN is the strongest pushable form of that fact — it translates
+    * to a source filter the index folds to ZERO files (unlike a raw
+    * `false` literal, which is not source-pushable and would leave the
+    * full listing intact when the rule runs in the late user-optimizer
+    * batch). */
+  def inListProbe(keys: DataFrame, key: Expression, maxKeys: Int): Option[Expression] = {
+    val dt = keys.schema.head.dataType
+    val found = nonNull(keys).distinct().limit(maxKeys + 1).collect().map(_.get(0))
+    if (found.length > maxKeys) None
+    else Some(In(key, found.toSeq.map(Literal.create(_, dt))))
+  }
+
+  /** The range+bloom tier, for dims of any size: the dim's `[min, max]`
+    * key range (one aggregate, which also counts the keys) prunes files,
+    * and a bloom of the keys built distributed (`treeAggregate` of
+    * per-partition partials, only sketch bytes reach the driver) and
+    * broadcast once gates rows map-side via the codegen'd
+    * [[graft.functions.InBloom]] probe. `expectedKeys` sizes the bloom
+    * (0 = the key count, at least 64) at false-positive rate `fpp`. No
+    * non-null keys gives the empty IN of [[inListProbe]]. */
+  def rangeBloomProbe(keys: DataFrame, key: Expression, expectedKeys: Long,
+      fpp: Double): Expression = {
+    import org.apache.spark.sql.functions.{col, count, lit, max, min}
+    val dt = keys.schema.head.dataType
+    val keyed = nonNull(keys)
+    val agg = keyed.agg(min(col("__k")), max(col("__k")), count(lit(1))).head
+    if (agg.getLong(2) == 0L) return In(key, Nil)
+    val capacity = if (expectedKeys > 0) expectedKeys else math.max(agg.getLong(2), 64L)
+    val bf = keyed.rdd.treeAggregate(
+      org.apache.spark.util.sketch.BloomFilter.create(capacity, fpp))(
+      seqOp = (f, row) => {
+        row.get(0) match {
+          case s: String =>
+            f.putBinary(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          case n: java.lang.Number => f.putLong(n.longValue())
+          case other => throw new IllegalArgumentException(s"unsupported key $other")
+        }
+        f
+      },
+      combOp = (a, b) => { a.mergeInPlace(b); a })
+    val bc = keys.sparkSession.sparkContext.broadcast(bf)
+    And(
+      And(GreaterThanOrEqual(key, Literal.create(agg.get(0), dt)),
+        LessThanOrEqual(key, Literal.create(agg.get(1), dt))),
+      graft.functions.InBloom(key, bc))
+  }
+
+  /** [[graft.functions.InBloom]]'s key domain. */
+  def bloomEligible(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | StringType => true
+    case _ => false
+  }
+
+  private def nonNull(keys: DataFrame): DataFrame =
+    keys.toDF("__k").filter(org.apache.spark.sql.functions.col("__k").isNotNull)
 }

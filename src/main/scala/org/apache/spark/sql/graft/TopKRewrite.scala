@@ -31,8 +31,9 @@ import graft.index.IndexConf
   *     free: a row below T on the first key is beaten by >= k rows
   *     regardless of ties);
   *   - between Sort and the relation: only attribute-only Projects —
-  *     a user Filter invalidates the bound (the k proven rows might not
-  *     survive it), so filtered sorts always bail;
+  *     a Filter invalidates the bound (the k proven rows might not
+  *     survive it) and a computed Project changes what the key means, so
+  *     filtered or computed inputs always bail;
   *   - nulls: `key >= T` drops null keys, which is exact for the default
   *     DESC NULLS LAST / ASC-with-NULLS-LAST orders (the bound exists
   *     only when >= k NON-NULL values rank above it); a NULLS FIRST
@@ -40,17 +41,17 @@ import graft.index.IndexConf
   *     non-null survivors are a superset of the non-null top, so the
   *     lexicographic top-k is preserved either way;
   *   - the bound itself is None (fewer than k provable non-null values,
-  *     unindexed key, string key above the distributed threshold) —
-  *     degrade to the plain sort, never a wrong answer.
+  *     unindexed key) — degrade to the plain sort, never a wrong answer.
   *
-  * Idempotency under the optimizer's fixed point: the injected filter is
-  * recognized on re-entry (same memoized bound → semantically equal
-  * predicate directly under the Sort) and skipped; any OTHER filter in
-  * that position bails as a user filter. Bound computation memoizes on
-  * the [[GraftFileIndex]] instance, so fixed-point iterations and
-  * repeated queries over a live index pay the fold once.
+  * Idempotency under the optimizer's fixed point is structural: the
+  * injected filter sits between the Sort and the relation, so a re-entry
+  * bails at the filter gate. The gates, the memoized bound and the
+  * predicate live in [[TopKRewriteRule.boundPredicate]], which the
+  * explicit `graft.index.TopK` API calls too.
   */
 class TopKRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
+
+  import TopKRewriteRule.boundPredicate
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!IndexConf(spark).topKRewrite) return plan
@@ -73,10 +74,74 @@ class TopKRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * column pruning inserts between LocalLimit and Sort (a count() over
     * the limit leaves an EMPTY Project there). */
   private def rewriteUnder(k: Int, p: LogicalPlan): Option[LogicalPlan] = p match {
-    case s: Sort if s.global && s.order.nonEmpty => rewrite(k, s)
+    case s: Sort if s.global && s.order.nonEmpty =>
+      boundPredicate(s.child, s.order.head, k).map { pred =>
+        logInfo(s"graft top-k rewrite: injected $pred under sort for limit $k")
+        s.copy(child = Filter(pred, s.child))
+      }
     case pr: Project if pr.projectList.forall(_.isInstanceOf[AttributeReference]) =>
       rewriteUnder(k, pr.child).map(c => pr.copy(child = c))
     case _ => None
+  }
+
+  /** The grouped rewrite over Spark's own WindowGroupLimit lowering.
+    * row_number and rank exclude a row with >= k strictly-better
+    * predecessors; dense_rank does NOT (k better rows can share one
+    * rank), so it bails. */
+  private def rewriteGroupLimit(wgl: WindowGroupLimit): Option[WindowGroupLimit] = {
+    wgl.rankLikeFunction match {
+      case _: RowNumber | _: Rank =>
+      case _ => return None
+    }
+    val order = wgl.orderSpec.headOption.getOrElse(return None)
+    boundPredicate(wgl.child, order, wgl.limit, wgl.partitionSpec).map { pred =>
+      logInfo(s"graft grouped top-k rewrite: injected $pred under " +
+        s"window-group-limit ${wgl.limit}")
+      wgl.copy(child = Filter(pred, wgl.child))
+    }
+  }
+}
+
+object TopKRewriteRule {
+
+  /** The top-k cut for `order`'s first key over `child`: the predicate to
+    * put directly above `child` so that every `ORDER BY order LIMIT j`
+    * (j <= k) answer — per group when `partitionSpec` is non-empty — is
+    * preserved, or None when no cut is provable. Shared by the rule's two
+    * shapes and the explicit `graft.index.TopK` API.
+    *
+    * Gates (any miss is None): `child` is a [[GraftFileIndex]] relation
+    * under attribute-only Projects (a Filter or computed column bails);
+    * the key is that relation's attribute by exprId, or a struct-leaf
+    * chain over one, and names a row-domain index field (element-domain
+    * array stats describe element values, not row-sortable keys); each
+    * partition expression is a bare PARTITION column of the index, so
+    * each window group is a union of index partitions and the weakest
+    * per-partition kth bound preserves every group's top-k (a row below
+    * it is beaten by >= k non-null rows of its own index partition, all
+    * inside its group). An empty spec is the global shape. */
+  def boundPredicate(child: LogicalPlan, order: SortOrder, k: Long,
+      partitionSpec: Seq[Expression] = Nil): Option[Expression] = {
+    val (baseAttr, path) = MetadataAggregates.dottedPath(order.child).getOrElse(return None)
+    val (lr, gfi) = relOf(child).getOrElse(return None)
+    if (!lr.output.exists(_.exprId == baseAttr.exprId)) return None
+    val indexedName = gfi.meta.indexSchema.fields
+      .find(f => f.name.equalsIgnoreCase(path) &&
+        !graft.index.IndexMetadata.isElementDomain(f))
+      .map(_.name).getOrElse(return None)
+    val partNames = gfi.meta.partitionSchema.fieldNames
+    val partsArePartitionCols = partitionSpec.forall {
+      case a: AttributeReference => lr.output.exists(_.exprId == a.exprId) &&
+        partNames.exists(_.equalsIgnoreCase(a.name))
+      case _ => false
+    }
+    val dt = order.child.dataType
+    val largest = order.direction == Descending
+    val bound =
+      if (partitionSpec.isEmpty) gfi.topKBound(indexedName, dt, k, largest)
+      else if (partsArePartitionCols) gfi.topKBoundByPartitions(indexedName, dt, k, largest)
+      else None
+    bound.map(boundPred(order.child, order, _))
   }
 
   /** The indexed relation under attribute-only projections (column
@@ -95,15 +160,6 @@ class TopKRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => None
     }
 
-  /** An already-injected bound sits directly under the node: split it off
-    * for the semantic-equality re-entry check; any other filter there
-    * invalidates the bound (the k proven rows might not survive it). */
-  private def splitOwnFilter(p: LogicalPlan): (LogicalPlan, Option[Expression]) =
-    p match {
-      case f: Filter => (f.child, Some(f.condition))
-      case other => (other, None)
-    }
-
   /** The injected predicate for a proven canonical bound. NULLS FIRST
     * ranks nulls into the top-k — keep them all via the IS NULL arm; the
     * bound only cuts non-null rows that >= k non-null rows provably beat.
@@ -117,80 +173,5 @@ class TopKRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       if (order.direction == Descending) GreaterThanOrEqual(keyExpr, lit)
       else LessThanOrEqual(keyExpr, lit)
     if (order.nullOrdering == NullsFirst) Or(cmp, IsNull(keyExpr)) else cmp
-  }
-
-  private def rewrite(k: Int, s: Sort): Option[Sort] = {
-    val firstOrder = s.order.head
-    val (baseAttr, path) = MetadataAggregates.dottedPath(firstOrder.child)
-      .getOrElse(return None)
-    val (childPlan, existing) = splitOwnFilter(s.child)
-    val (lr, gfi) = relOf(childPlan).getOrElse(return None)
-    if (!lr.output.exists(_.exprId == baseAttr.exprId)) return None
-    // element-domain (array) index fields never supply a row-sort bound
-    val indexedName = gfi.meta.indexSchema.fields
-      .find(f => f.name.equalsIgnoreCase(path) &&
-        !graft.index.IndexMetadata.isElementDomain(f))
-      .map(_.name).getOrElse(return None)
-    val largest = firstOrder.direction == Descending
-    val bound = gfi.topKBoundCached(
-        indexedName, firstOrder.child.dataType, k.toLong, largest)
-      .getOrElse(return None)
-    val pred = boundPred(firstOrder.child, firstOrder, bound)
-    existing match {
-      case Some(cond) if cond.semanticEquals(pred) => None // already rewritten
-      case Some(_) => None
-      case None =>
-        logInfo(s"graft top-k rewrite: injected $pred under sort for limit $k")
-        Some(s.copy(child = Filter(pred, childPlan)))
-    }
-  }
-
-  /** The grouped rewrite over Spark's own WindowGroupLimit lowering.
-    * Soundness: each window group must be a UNION of index partitions
-    * (every partition expr a bare index PARTITION column), so the
-    * weakest per-partition kth bound T preserves every group's top-k — a
-    * row below T is beaten by >= k non-null rows of its OWN index
-    * partition, all inside its group. row_number and rank exclude a row
-    * with >= k strictly-better predecessors; dense_rank does NOT (k
-    * better rows can share one rank), so it bails. An EMPTY partition
-    * spec is the global shape — served by the ungrouped bound. */
-  private def rewriteGroupLimit(wgl: WindowGroupLimit): Option[WindowGroupLimit] = {
-    wgl.rankLikeFunction match {
-      case _: RowNumber | _: Rank =>
-      case _ => return None
-    }
-    val firstOrder = wgl.orderSpec.headOption.getOrElse(return None)
-    val (baseAttr, path) = MetadataAggregates.dottedPath(firstOrder.child)
-      .getOrElse(return None)
-    val (childPlan, existing) = splitOwnFilter(wgl.child)
-    val (lr, gfi) = relOf(childPlan).getOrElse(return None)
-    if (!lr.output.exists(_.exprId == baseAttr.exprId)) return None
-    // element-domain (array) index fields never supply a row-sort bound
-    val indexedName = gfi.meta.indexSchema.fields
-      .find(f => f.name.equalsIgnoreCase(path) &&
-        !graft.index.IndexMetadata.isElementDomain(f))
-      .map(_.name).getOrElse(return None)
-    val partNames = gfi.meta.partitionSchema.fieldNames
-    val partsArePartitionCols = wgl.partitionSpec.forall {
-      case a: AttributeReference => lr.output.exists(_.exprId == a.exprId) &&
-        partNames.exists(_.equalsIgnoreCase(a.name))
-      case _ => false
-    }
-    val largest = firstOrder.direction == Descending
-    val bound = (if (wgl.partitionSpec.isEmpty) {
-      gfi.topKBoundCached(indexedName, firstOrder.child.dataType, wgl.limit.toLong, largest)
-    } else if (partsArePartitionCols) {
-      gfi.topKBoundByPartitionsCached(
-        indexedName, firstOrder.child.dataType, wgl.limit.toLong, largest)
-    } else None).getOrElse(return None)
-    val pred = boundPred(firstOrder.child, firstOrder, bound)
-    existing match {
-      case Some(cond) if cond.semanticEquals(pred) => None
-      case Some(_) => None
-      case None =>
-        logInfo(s"graft grouped top-k rewrite: injected $pred under " +
-          s"window-group-limit ${wgl.limit}")
-        Some(wgl.copy(child = Filter(pred, childPlan)))
-    }
   }
 }

@@ -475,6 +475,20 @@ class IndexEndToEndSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (ascListed, ascTotal) = cutOf(cBot)
     assert(ascListed < ascTotal,
       s"expected file cut on clustered layout (asc): $ascListed/$ascTotal")
+    // a filtered frame, or a computed column shadowing the indexed name:
+    // the table-wide bound says nothing about their rows, so the frame
+    // comes back unchanged and the answer equals the plain query
+    val low = col("l_orderkey") < cPlain.agg(max("l_orderkey")).head.getLong(0) / 2
+    def shadowed(df: DataFrame) =
+      df.select(col("l_linenumber"), (-col("l_orderkey")).as("l_orderkey"))
+    for (desc <- Seq(true, false)) {
+      assert(topRows(graft.index.TopK.topKPruned(cFact.filter(low), col("l_orderkey"), 50,
+          largest = desc), desc, 50) == topRows(cPlain.filter(low), desc, 50),
+        s"filtered frame (desc=$desc)")
+      assert(topRows(graft.index.TopK.topKPruned(shadowed(cFact), col("l_orderkey"), 50,
+          largest = desc), desc, 50) == topRows(shadowed(cPlain), desc, 50),
+        s"shadowing alias (desc=$desc)")
+    }
     // j < k stays exact (the documented contract)
     assert(topRows(prunedTop, desc = true, 7) == topRows(plain, desc = true, 7))
     // k > guaranteed non-null rows: threshold unprovable, frame unchanged
@@ -701,6 +715,17 @@ class IndexEndToEndSpec extends AnyFunSuite with BeforeAndAfterAll {
       fact, col("o_year"), col("o_custkey"), total.toInt + 1).count() == total)
     assert(graft.index.TopK.topKPerGroupPruned(
       plain, col("o_year"), col("o_custkey"), 10).count() == total)
+    // a filtered frame, or a computed column shadowing the indexed name:
+    // unchanged, so every group's answer equals the plain query
+    val low = col("o_custkey") < plain.agg(max("o_custkey").cast("long")).head.getLong(0) / 8
+    assert(top(graft.index.TopK.topKPerGroupPruned(
+      fact.filter(low), col("o_year"), col("o_custkey"), 10), 10) ==
+      top(plain.filter(low), 10), "filtered frame")
+    def shadowed(df: DataFrame) = df.select(col("o_year"), col("o_orderkey"),
+      (-col("o_custkey")).as("o_custkey"))
+    assert(top(graft.index.TopK.topKPerGroupPruned(
+      shadowed(fact), col("o_year"), col("o_custkey"), 10), 10) ==
+      top(shadowed(plain), 10), "shadowing alias")
     // distributed tier: per-partition folds run as a files-table job
     // (threshold forced under the file count) — same values, same cut
     val factDist = spark.index

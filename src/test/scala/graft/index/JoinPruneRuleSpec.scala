@@ -315,6 +315,20 @@ class JoinPruneRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     val samp = fact.join(dim.sample(0.5, 42L).filter($"dk" === 3), $"k" === $"dk")
     assert(probeConjuncts(samp).isEmpty, "sample dim must bail (order-sensitive row set)")
     samp.collect()
+    // the explicit API runs the same dim gate: a limit, sample or rand()
+    // dim gets the plain join, with no IN or bloom probe of its own
+    val unsafeDims = Seq(
+      "limit" -> dim.filter($"dk" <= 30).limit(5),
+      "sample" -> dim.sample(0.5, 42L).filter($"dk" <= 30),
+      "rand" -> dim.filter(rand(7L) < 0.5 && $"dk" <= 30))
+    for ((what, d) <- unsafeDims) {
+      val semi = graft.index.JoinPrune.semiJoinPruned(fact, d, $"k", $"dk")
+      assert(probeConjuncts(semi).isEmpty, s"semiJoinPruned, $what dim: ${probeConjuncts(semi)}")
+      val bloom = graft.index.JoinPrune.bloomJoinPruned(fact, d, $"k", $"dk")
+      assert(probeConjuncts(bloom).isEmpty, s"bloomJoinPruned, $what dim: ${probeConjuncts(bloom)}")
+    }
+    assert(graft.index.JoinPrune.semiJoinPruned(
+      fact, dim.filter($"dk" <= 30).limit(5), $"k", $"dk").count() == 5000L)
   }
 
   test("a literal equality on the key suppresses probing (OptimizeIn's one-element form)") {

@@ -71,7 +71,7 @@ class MemoConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
         val rnd = new scala.util.Random(h)
         while (!stop.get()) rnd.nextInt(3) match {
           case 0 => gfi.metadataStats(Seq("v"))
-          case 1 => gfi.topKBoundCached("v", LongType, 1L, largest = true)
+          case 1 => gfi.topKBound("v", LongType, 1L, largest = true)
           case _ => gfi.listFiles(Nil, Nil)
         }
       }, s"memo-hammer-$h")
@@ -94,7 +94,7 @@ class MemoConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
             val rows = gfi.metadataStats(Seq("v")).rows
             assert(rows == expectRows,
               s"post-refresh reader $r of iteration $i saw $rows rows, want $expectRows")
-            val bound = gfi.topKBoundCached("v", LongType, 1L, largest = true)
+            val bound = gfi.topKBound("v", LongType, 1L, largest = true)
             assert(bound == expectBound,
               s"post-refresh reader $r of iteration $i saw kth bound $bound, want $expectBound")
           }, s"fresh-reader-$i-$r")
