@@ -146,15 +146,23 @@ object IndexedDataSource {
     require(allFiles.nonEmpty || partDirs.nonEmpty,
       s"no $src files under ${roots.mkString(", ")}")
 
-    // First-file schema is enough to validate the indexBy() columns (the
-    // reference also infers the index schema from the first footer); the
+    // First-file schema is usually enough to validate the indexBy()
+    // columns (the reference also infers the index schema from the first
+    // footer); only when the first listed file of a heterogeneous table
+    // lacks one does validation read the merged schema of all files. The
     // persisted data schema is merged across ALL files after the footer
     // job below, so heterogeneous tables keep every column.
     val firstSchema: StructType =
       if (allFiles.isEmpty) StructType(Nil)
       else Sources.read(spark, src, Seq(allFiles.head.getPath.toString)).schema
 
-    val indexSchema = resolveIndexSchema(firstSchema, partitionSchema, columns, indexAll)
+    val indexSchema =
+      try resolveIndexSchema(firstSchema, partitionSchema, columns, indexAll)
+      catch {
+        case _: IllegalArgumentException if allFiles.size > 1 =>
+          resolveIndexSchema(Sources.read(spark, src, allFiles.map(_.getPath.toString)).schema,
+            partitionSchema, columns, indexAll)
+      }
 
     // Same sibling lock refresh holds: a create (overwrite deletes the
     // index dir) cannot interleave with a live refresh of the same index.
@@ -197,7 +205,8 @@ object IndexedDataSource {
       // (ParquetIndexReadSupport.scala:64-73).
       if (conf.minMaxFallback && indexSchema.nonEmpty && refs.nonEmpty) {
         StatisticsBuilder.fullScanMinMaxFallback(
-          spark, new Path(indexDir, Metastore.FilesDir), indexSchema, source = src)
+          spark, new Path(indexDir, Metastore.FilesDir), indexSchema, source = src,
+          dataSchema = summary.dataSchema)
       }
 
       // Seed the dir-mtime manifest for incremental refresh listing
@@ -255,7 +264,8 @@ object IndexedDataSource {
         StatisticsBuilder.buildSketches(
           spark, allFiles.map(_.getPath.toString), indexSchema, kind,
           expectedItems = math.max(4096L, summary.maxFileRows),
-          new Path(indexDir, Metastore.SketchDir), source = src)
+          new Path(indexDir, Metastore.SketchDir), source = src,
+          dataSchema = summary.dataSchema)
       }
 
       metastore.writeMetadata(indexDir, IndexMetadata(
@@ -436,23 +446,43 @@ object IndexedDataSource {
     * lost files. The reference rejects SaveMode.Append outright
     * (ParquetMetastoreSupport.scala:104-107) — but at 100 TB a full
     * rebuild because one day of files landed is not an option, so
-    * refresh re-indexes ONLY the delta:
+    * refresh re-indexes ONLY the delta. The current listing is diffed
+    * against the `files` table on (path, size, modificationTime): a
+    * rewritten file (same path, new size/mtime) counts as removed +
+    * added. Two tiers, split at the pruning threshold
+    * (`spark.sql.index.pruning.distributedThreshold`) on the indexed
+    * file count:
     *
-    *   - the current listing is diffed against the `files` table on
-    *     (path, size, modificationTime) — a distributed anti-join; only
-    *     the changed-file handles ever sit on the driver;
-    *   - new/rewritten files get footer stats + sketches through the
-    *     same jobs as create, APPENDED to the two parquet tables;
-    *   - removed/rewritten files' stale rows are dropped by a
-    *     semi-join rewrite of the files table (metadata-sized) and, only
-    *     when removals exist, of the sketch table;
-    *   - partition dirs keep their original indexes (metadata partition
-    *     list is append-only), so existing rows stay valid.
+    *   - below it, everything the refresh decides runs on the driver,
+    *     over rows that are driver-sized anyway: Spark's InMemoryFileIndex
+    *     lists the table, the old rows are read once (parquet-mr, past
+    *     the reader cache) and diffed in a hash set, the footer job runs
+    *     over the added files only and its rows are collected, the
+    *     min/max fallback patches those rows in memory (its scan runs
+    *     only when a file needs it), and the new metadata is summarized
+    *     from kept + added rows. Spark jobs: the footer job, the sketch
+    *     filter, the delta sketch build, and the fallback scan if any;
+    *   - at/above it, the listing is a distributed level-walk and the diff
+    *     a full-outer join that collects only the added refs, so driver
+    *     residency stays O(dirs + partitions + delta); stale rows drop by
+    *     a semi-join, the footer job writes from executors, and removals
+    *     re-summarize the settled table.
     *
-    * The `_SUCCESS` marker is removed for the duration of the update and
-    * restored after the new metadata is written: a crash mid-refresh
-    * fails subsequent loads ("create it first") instead of serving a
-    * torn index — the same guarantee create() gives.
+    * Partition dirs keep their original indexes (the metadata partition
+    * list is append-only), so kept rows stay valid.
+    *
+    * Write, then swap. Under the index's sibling maintenance lock, every
+    * write goes to staging dirs first: `files_tmp` holds the whole new
+    * files table when files were removed (sorted by partitionIdx, path),
+    * else the delta's part file; `sketches_tmp` likewise holds the live
+    * old sketch rows (removals only) plus the delta's sketches. Only then
+    * is `_SUCCESS` removed, the staged tables moved into place (a
+    * delete + rename, or a part-file move for an append), the metadata
+    * written and `_SUCCESS` restored. A refresh that fails before the
+    * swap — an unreadable added file failing the footer job, say —
+    * leaves the index loadable and unchanged, and a rerun converges. A
+    * crash inside the swap window fails subsequent loads ("create it
+    * first") instead of serving a torn index; re-create to recover.
     *
     * Limitation (shared with Spark's own file-listing caches): a file
     * rewritten IN PLACE with both size and mtime preserved (`cp -p` over
@@ -475,16 +505,21 @@ object IndexedDataSource {
       paths: Seq[String],
       dataspace: String,
       options: Map[String, String]): RefreshStats = {
-    import org.apache.spark.sql.functions.col
-
     val conf = IndexConf(spark, options)
     val metastore = new Metastore(spark, conf)
     val roots = resolveTableRoots(spark, paths)
     val (indexDir, meta) = metastore.load(dataspace, roots)
-    val metaRoots = meta.rootPathStrings.map(new Path(_))
     val fs = metastore.fs
-    val filesDir = new Path(indexDir, Metastore.FilesDir)
-    val sketchDir = new Path(indexDir, Metastore.SketchDir)
+    val dirs = RefreshDirs(indexDir)
+
+    // Single-writer enforcement: the diff, the staged writes and the swap
+    // run under the index's SIBLING maintenance lock (shared with
+    // create/delete, which remove the index dir itself) — a concurrent
+    // run fails fast instead of interleaving table rewrites; a crashed
+    // run's lock lease-expires.
+    graft.ops.MaintenanceLock.withSiblingLock(fs, indexDir) {
+    // staging of a run that died before its own cleanup
+    Seq(dirs.filesTmp, dirs.sketchTmp).foreach(d => if (fs.exists(d)) fs.delete(d, true))
 
     // Stable partition indexing: existing entries keep their position,
     // newly appeared partition dirs append. Entries whose partition
@@ -492,201 +527,258 @@ object IndexedDataSource {
     val partValues = scala.collection.mutable.ArrayBuffer(meta.partitionValues: _*)
     val idxByValues = scala.collection.mutable.HashMap(
       meta.partitionValues.zipWithIndex: _*)
-
-    import spark.implicits._
-    val keyCols = Seq("path", "size", "modificationTime")
-    val oldKeys = spark.read.parquet(filesDir.toString)
-      .select(col("path"), col("size"), col("modificationTime"))
-    val listingTmp = new Path(indexDir, Metastore.FilesDir + "_listing_tmp")
-
-    // Diff on (path, size, modificationTime): a rewritten file (same
-    // path, new size/mtime) counts as removed + added. TWO listing tiers,
-    // same threshold as pruning:
-    //   - below it, Spark's InMemoryFileIndex (driver residency O(total
-    //     files), block locations kept);
-    //   - at/above it, a DISTRIBUTED level-walk — executors list their
-    //     directory slices and write file rows straight to a scratch
-    //     parquet table, the driver holds only the directory frontier
-    //     (O(dirs)) and the diff collects only ADDED refs, so driver
-    //     residency is O(delta) however many files the table holds.
-    val distributedListing = meta.fileCount >= conf.distributedPruningThreshold
-    val (currentKeys, addedRefs, removedCount, removedBytes, commitManifest):
-        (org.apache.spark.sql.DataFrame, Seq[(Int, StatisticsBuilder.FileRef)],
-         Long, Long, () => Unit) =
-      if (!distributedListing) {
-        val (partitionSchema, partDirs) = SparkInternals.discoverTable(spark, metaRoots)
-        require(org.apache.spark.sql.types.DataType.equalsIgnoreNullability(
-            partitionSchema, meta.partitionSchema),
-          s"partition schema changed (${meta.partitionSchema.simpleString} -> " +
-            s"${partitionSchema.simpleString}); rebuild the index with create.mode(\"overwrite\")")
-        val current: Seq[(Int, StatisticsBuilder.FileRef)] = partDirs.flatMap { case (values, files) =>
-          val vStr: Seq[Option[String]] = partitionSchema.fields.zipWithIndex.toSeq.map {
-            case (f, i) => IndexMetadata.castToString(f.dataType, values.get(i, f.dataType))
-          }
-          val idx = idxByValues.getOrElseUpdate(vStr, { partValues += vStr; partValues.size - 1 })
-          files.filter(_.getLen > 0).map { f =>
-            val locs = SparkInternals.blockLocations(f)
-            idx -> StatisticsBuilder.FileRef(
-              f.getPath.toString, f.getLen, f.getModificationTime,
-              blockSize = if (f.getBlockSize > 0) f.getBlockSize else FileEntry.DefaultBlockSize,
-              locationsJson = IndexMetadata.locationsToJsonString(locs),
-              hosts = locs.flatMap(_.hosts).distinct)
-          }
-        }
-        val ck = current.map { case (_, r) => (r.path, r.size, r.modificationTime) }
-          .toDF("path", "size", "modificationTime")
-        val added = ck.join(oldKeys, keyCols, "left_anti")
-          .select("path").as[String].collect().toSet
-        val rem = oldKeys.join(ck, keyCols, "left_anti")
-          .agg(org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)),
-            org.apache.spark.sql.functions.sum(col("size"))).head
-        val removed = rem.getLong(0)
-        val removedB = if (rem.isNullAt(1)) 0L else rem.getLong(1)
-        // the driver tier does not maintain the dir manifest — drop any
-        // stale one so a later distributed refresh can't trust it
-        val dropManifest: () => Unit = () => {
-          try {
-            val dp = new Path(indexDir, Metastore.DirsDir)
-            if (fs.exists(dp)) { fs.delete(dp, true); () }
-          } catch { case _: Exception => () }
-        }
-        (ck, current.filter { case (_, r) => added.contains(r.path) },
-          removed, removedB, dropManifest)
-      } else {
-        distributedListingDiff(
-          spark, metaRoots, meta, oldKeys, keyCols, listingTmp, partValues,
-          idxByValues, indexDir, conf)
-      }
-    val addedPaths = addedRefs.map(_._2.path).toSet
-
-    if (addedRefs.isEmpty && removedCount == 0) {
-      // nothing to mutate: still persist the refreshed manifest so dirs
-      // captured inside the mtime-slack window stop re-listing forever
-      commitManifest()
-      if (fs.exists(listingTmp)) fs.delete(listingTmp, true)
-      return RefreshStats(0L, 0L)
-    }
-
-    // Single-writer enforcement: the whole mutation (files-table rewrite,
-    // sketch append, metadata + _SUCCESS) runs under the index's SIBLING
-    // maintenance lock (shared with create/delete, which remove the index
-    // dir itself) — a concurrent run fails fast instead of interleaving
-    // table rewrites; a crashed run's lock lease-expires.
-    graft.ops.MaintenanceLock.withSiblingLock(fs, indexDir) {
-
-    Metastore.cacheInvalidate(indexDir.toString)
-    SketchStore.invalidate(sketchDir)
-    IndexFilesTable.invalidate(filesDir)
-    fs.delete(new Path(indexDir, Metastore.SuccessFile), false)
-
-    // 1. Drop stale file rows (semi-join against the live listing keys,
-    //    rewritten via tmp dir + rename — the table is metadata-sized).
-    if (removedCount > 0) {
-      val keep = spark.read.parquet(filesDir.toString)
-        .join(currentKeys, keyCols, "left_semi")
-      val tmp = new Path(indexDir, Metastore.FilesDir + "_tmp")
-      keep.sort(col("partitionIdx"), col("path"))
-        .write.mode("overwrite").parquet(tmp.toString)
-      fs.delete(filesDir, true)
-      fs.rename(tmp, filesDir)
-    }
-
-    // 2. Footer job over the added files only, appended to the files
-    //    table. The summary is DELTA-scoped and composed with the
-    //    previous metadata incrementally (count/bytes arithmetic, schema
-    //    widened by the delta) — a 1-file append must never re-aggregate
-    //    the whole 10^6-row files table (the schemaJson blob column made
-    //    that the refresh floor). Exact by induction from create, which
-    //    summarizes the full table.
     val numParts =
       if (conf.numPartitions > 0) conf.numPartitions
       else math.min(spark.sparkContext.defaultParallelism * 3,
         spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
-    val delta =
-      if (addedRefs.nonEmpty) {
-        val s = StatisticsBuilder.writeFileStats(
-          spark, addedRefs, meta.indexSchema, numParts, filesDir, mode = "append",
-          source = meta.source, summarizeDelta = true)
-        // Detection only fires on statless rows, which after an append can
-        // only be the delta — scope the blocksJson parse to it too.
-        if (conf.minMaxFallback && meta.indexSchema.nonEmpty) {
-          StatisticsBuilder.fullScanMinMaxFallback(
-            spark, filesDir, meta.indexSchema, source = meta.source,
-            onlyPaths = Some(addedRefs.map(_._2.path)))
+    val metaRoots = meta.rootPathStrings.map(new Path(_))
+
+    try {
+      val (staged, commitManifest) =
+        if (meta.fileCount < conf.distributedPruningThreshold) {
+          // the driver tier does not maintain the dir manifest — drop any
+          // stale one so a later distributed refresh can't trust it
+          val dropManifest: () => Unit = () => {
+            try {
+              val dp = new Path(indexDir, Metastore.DirsDir)
+              if (fs.exists(dp)) { fs.delete(dp, true); () }
+            } catch { case _: Exception => () }
+          }
+          (stageOnDriver(spark, conf, meta, metaRoots, dirs, partValues, idxByValues, numParts),
+            dropManifest)
+        } else {
+          val oldKeys = spark.read.schema(IndexFilesTable.Schema).parquet(dirs.files.toString)
+            .select("path", "size", "modificationTime")
+          val (currentKeys, addedRefs, removedCount, writeManifest) = distributedListingDiff(
+            spark, metaRoots, meta, oldKeys, RefreshKey, dirs.listingTmp, partValues,
+            idxByValues, indexDir, conf)
+          (stageDistributed(spark, conf, meta, dirs, currentKeys, addedRefs, removedCount,
+            numParts), writeManifest)
         }
-        s
-      } else StatisticsBuilder.FileStatsSummary(None, 0L, 0L, 0L)
-    // Append-only refreshes compose the metadata incrementally (schema
-    // only ever widens — exact, since nothing was removed). When
-    // removals exist, the delta composition would DRIFT monotonically
-    // (a removed file's last-of-a-kind columns would linger in
-    // dataSchema forever), so re-aggregate the settled files table —
-    // removals already forced its full rewrite above, so the
-    // re-aggregation is not the refresh floor.
-    val (newFileCount, newTotalBytes, newDataSchema) =
-      if (removedCount > 0) {
-        // the table already holds (kept + appended delta) rows here, so
-        // the summary IS the final metadata — no arithmetic composition
-        val full = StatisticsBuilder.summarizeFilesTable(spark, filesDir)
+
+      staged match {
+        // nothing to mutate: still persist the refreshed manifest so dirs
+        // captured inside the mtime-slack window stop re-listing forever
+        case None =>
+          commitManifest()
+          RefreshStats(0L, 0L)
+        case Some(st) =>
+          // the swap: the only window in which the index is unloadable
+          Metastore.cacheInvalidate(indexDir.toString)
+          SketchStore.invalidate(dirs.sketches)
+          IndexFilesTable.invalidate(dirs.files)
+          fs.delete(new Path(indexDir, Metastore.SuccessFile), false)
+          install(fs, dirs.filesTmp, dirs.files, st.replace)
+          install(fs, dirs.sketchTmp, dirs.sketches, st.replace)
+          metastore.writeMetadata(indexDir, meta.copy(
+            dataSchema = st.dataSchema,
+            partitionValues = partValues.toSeq,
+            fileCount = st.fileCount,
+            totalBytes = st.totalBytes))
+          commitManifest()
+          fs.create(new Path(indexDir, Metastore.SuccessFile), true).close()
+          RefreshStats(st.added, st.removed)
+      }
+    } finally {
+      // staging left by a failure before the swap, and the distributed
+      // listing's scratch table (read lazily until the staged writes end)
+      Seq(dirs.filesTmp, dirs.sketchTmp, dirs.listingTmp)
+        .foreach(d => if (fs.exists(d)) fs.delete(d, true))
+    }
+    } // MaintenanceLock.withSiblingLock
+  }
+
+  /** The diff key of a file: a rewrite changes size or mtime. */
+  private val RefreshKey = Seq("path", "size", "modificationTime")
+
+  /** The tables a refresh touches and the staging dirs it writes first. */
+  private case class RefreshDirs(indexDir: Path) {
+    val files = new Path(indexDir, Metastore.FilesDir)
+    val sketches = new Path(indexDir, Metastore.SketchDir)
+    val filesTmp = new Path(indexDir, Metastore.FilesDir + "_tmp")
+    val sketchTmp = new Path(indexDir, Metastore.SketchDir + "_tmp")
+    val listingTmp = new Path(indexDir, Metastore.FilesDir + "_listing_tmp")
+  }
+
+  /** A refresh written to the staging dirs, with the metadata it commits.
+    * `replace`: the staged tables are whole (files were removed); else
+    * they hold only the delta's part files. */
+  private case class Staged(added: Long, removed: Long, replace: Boolean,
+      fileCount: Long, totalBytes: Long, dataSchema: StructType)
+
+  /** Driver tier of [[refreshIndex]]: listing, diff, fallback and summary
+    * on the driver; Spark runs the footer job over the added files, the
+    * sketch filter and the delta sketch build. None = nothing changed. */
+  private def stageOnDriver(
+      spark: SparkSession,
+      conf: IndexConf,
+      meta: IndexMetadata,
+      roots: Seq[Path],
+      dirs: RefreshDirs,
+      partValues: scala.collection.mutable.ArrayBuffer[Seq[Option[String]]],
+      idxByValues: scala.collection.mutable.HashMap[Seq[Option[String]], Int],
+      numParts: Int): Option[Staged] = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val (partitionSchema, partDirs) = SparkInternals.discoverTable(spark, roots)
+    // a table whose files are all gone lists no partitions to infer from
+    val emptied = partDirs.forall(_._2.isEmpty)
+    require(emptied || org.apache.spark.sql.types.DataType.equalsIgnoreNullability(
+        partitionSchema, meta.partitionSchema),
+      s"partition schema changed (${meta.partitionSchema.simpleString} -> " +
+        s"${partitionSchema.simpleString}); rebuild the index with create.mode(\"overwrite\")")
+    val current: Seq[(Int, StatisticsBuilder.FileRef)] =
+      if (emptied) Nil
+      else partDirs.flatMap { case (values, files) =>
+        val vStr: Seq[Option[String]] = partitionSchema.fields.zipWithIndex.toSeq.map {
+          case (f, i) => IndexMetadata.castToString(f.dataType, values.get(i, f.dataType))
+        }
+        val idx = idxByValues.getOrElseUpdate(vStr, { partValues += vStr; partValues.size - 1 })
+        files.filter(_.getLen > 0).map { f =>
+          val locs = SparkInternals.blockLocations(f)
+          idx -> StatisticsBuilder.FileRef(
+            f.getPath.toString, f.getLen, f.getModificationTime,
+            blockSize = if (f.getBlockSize > 0) f.getBlockSize else FileEntry.DefaultBlockSize,
+            locationsJson = IndexMetadata.locationsToJsonString(locs),
+            hosts = locs.flatMap(_.hosts).distinct)
+        }
+      }
+    val old = IndexFilesTable.readUncached(dirs.files, hconf)
+    val liveKeys = current.iterator.map { case (_, r) => (r.path, r.size, r.modificationTime) }.toSet
+    val oldKeys = old.iterator.map(r => (r.path, r.size, r.modificationTime)).toSet
+    val (kept, removed) = old.partition(r => liveKeys((r.path, r.size, r.modificationTime)))
+    val added = current.filterNot { case (_, r) => oldKeys((r.path, r.size, r.modificationTime)) }
+    if (added.isEmpty && removed.isEmpty) return None
+
+    val footers = StatisticsBuilder.collectFileStats(
+      spark, added, meta.indexSchema, numParts, meta.source)
+    val deltaSummary = StatisticsBuilder.summarizeRows(footers)
+    val delta =
+      if (conf.minMaxFallback && meta.indexSchema.nonEmpty) {
+        StatisticsBuilder.patchMinMax(
+          spark, footers, meta.indexSchema, meta.source, deltaSummary.dataSchema)
+      } else footers
+    val rows = kept ++ delta
+    val summary = StatisticsBuilder.summarizeRows(rows)
+
+    val replace = removed.nonEmpty
+    IndexFilesTable.write(dirs.filesTmp,
+      (if (replace) rows else delta).sortWith { (a, b) =>
+        a.partitionIdx < b.partitionIdx ||
+          (a.partitionIdx == b.partitionIdx && Canon.compare(a.path, b.path) < 0)
+      }, hconf)
+    meta.sketchKind.foreach { kind =>
+      val fs = dirs.sketches.getFileSystem(hconf)
+      if (replace && fs.exists(dirs.sketches)) {
+        StatisticsBuilder.filterSketches(spark, dirs.sketches,
+          kept.iterator.map(r => SketchStore.normalizePath(r.path)).toSet, dirs.sketchTmp)
+      }
+      // sketch sizing covers the files being sketched — the ADDED ones
+      StatisticsBuilder.buildSketches(
+        spark, delta.map(_.path), meta.indexSchema, kind,
+        expectedItems = math.max(4096L, deltaSummary.maxFileRows),
+        dirs.sketchTmp, mode = "append", source = meta.source, dataSchema = deltaSummary.dataSchema)
+    }
+    Some(Staged(added.size.toLong, removed.size.toLong, replace, summary.fileCount,
+      summary.totalBytes, summary.dataSchema.getOrElse(meta.dataSchema)))
+  }
+
+  /** Distributed tier of [[refreshIndex]], after the distributed diff: the
+    * stale-row semi-join, the footer job and the summaries run as Spark
+    * jobs over the files table. None = nothing changed. */
+  private def stageDistributed(
+      spark: SparkSession,
+      conf: IndexConf,
+      meta: IndexMetadata,
+      dirs: RefreshDirs,
+      currentKeys: DataFrame,
+      addedRefs: Seq[(Int, StatisticsBuilder.FileRef)],
+      removedCount: Long,
+      numParts: Int): Option[Staged] = {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    if (addedRefs.isEmpty && removedCount == 0) return None
+    val replace = removedCount > 0
+    val readFiles = () => spark.read.schema(IndexFilesTable.Schema).parquet(dirs.files.toString)
+
+    // 1. Kept rows (semi-join against the live listing keys), then the
+    //    footer job over the added files only, appended beside them.
+    if (replace) {
+      readFiles().join(currentKeys, RefreshKey, "left_semi")
+        .sort(col("partitionIdx"), col("path"))
+        .write.mode("overwrite").parquet(dirs.filesTmp.toString)
+    }
+    val delta = StatisticsBuilder.writeFileStats(
+      spark, addedRefs, meta.indexSchema, numParts, dirs.filesTmp, mode = "append",
+      source = meta.source, summarizeDelta = true)
+    // Detection only fires on statless rows, which can only be the delta —
+    // scope the blocksJson parse to it too.
+    if (addedRefs.nonEmpty && conf.minMaxFallback && meta.indexSchema.nonEmpty) {
+      StatisticsBuilder.fullScanMinMaxFallback(
+        spark, dirs.filesTmp, meta.indexSchema, source = meta.source,
+        onlyPaths = Some(addedRefs.map(_._2.path)), dataSchema = delta.dataSchema)
+    }
+    // 2. Metadata. Append-only refreshes compose it incrementally (schema
+    //    only ever widens — exact, since nothing was removed; a 1-file
+    //    append must never re-aggregate the whole 10^6-row files table).
+    //    With removals the composition would DRIFT (a removed file's
+    //    last-of-a-kind columns would linger in dataSchema forever), so
+    //    the staged table, whole by now, is re-aggregated.
+    val (fileCount, totalBytes, dataSchema) =
+      if (replace) {
+        val full = StatisticsBuilder.summarizeFilesTable(spark, dirs.filesTmp)
         (full.fileCount, full.totalBytes, full.dataSchema.getOrElse(meta.dataSchema))
       } else {
-        (meta.fileCount + delta.fileCount,
-          meta.totalBytes + delta.totalBytes,
-          delta.dataSchema
-            .map(d => org.apache.spark.sql.graft.SparkInternals.mergeSchemas(meta.dataSchema, d))
+        (meta.fileCount + delta.fileCount, meta.totalBytes + delta.totalBytes,
+          delta.dataSchema.map(SparkInternals.mergeSchemas(meta.dataSchema, _))
             .getOrElse(meta.dataSchema))
       }
 
-    // 3. Sketches: drop stale rows first (only when removals exist —
-    //    semi-join against the settled files table, fully distributed),
-    //    then append sketches for the added files. Rows of RE-SKETCHED
-    //    paths are anti-joined out too: a file rewritten at the same
-    //    path (removed + added by the diff) is live again by now, so the
+    // 3. Sketches: the live old rows (removals only — semi-join against the
+    //    staged files table), then the added files' sketches. Rows of
+    //    RE-SKETCHED paths are anti-joined out too: a file rewritten at
+    //    the same path (removed + added by the diff) is live again, so the
     //    semi-join alone would keep its stale row next to the fresh
-    //    append — a duplicate (file, column) key whose stale sketch
-    //    could win a probe and mis-prune the rewritten content.
+    //    append — a duplicate (file, column) key whose stale sketch could
+    //    win a probe and mis-prune the rewritten content.
     meta.sketchKind.foreach { kind =>
-      if (removedCount > 0 && fs.exists(sketchDir)) {
+      val fs = dirs.sketches.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (replace && fs.exists(dirs.sketches)) {
         val normPath = (c: org.apache.spark.sql.Column) => graft.functions.exprs.normalize_path(c)
-        val liveKeys = spark.read.parquet(filesDir.toString)
+        val liveKeys = spark.read.schema(IndexFilesTable.Schema).parquet(dirs.filesTmp.toString)
           .select(normPath(col("path")).as("file"))
-        val addedKeys = addedPaths.toSeq.map(SketchStore.normalizePath)
-          .toDF("file")
-        val keep = spark.read.parquet(sketchDir.toString)
+        val addedKeys = addedRefs.map(r => SketchStore.normalizePath(r._2.path)).toDF("file")
+        spark.read.schema(SketchStore.Schema).parquet(dirs.sketches.toString)
           .join(liveKeys, Seq("file"), "left_semi")
           .join(addedKeys, Seq("file"), "left_anti")
-        val tmp = new Path(indexDir, Metastore.SketchDir + "_tmp")
-        keep.sort(col("file"), col("column"))
-          .write.mode("overwrite").parquet(tmp.toString)
-        fs.delete(sketchDir, true)
-        fs.rename(tmp, sketchDir)
+          .sort(col("file"), col("column"))
+          .write.mode("overwrite").parquet(dirs.sketchTmp.toString)
       }
-      if (addedRefs.nonEmpty) {
-        // sketch sizing needs to cover the files being sketched — the
-        // ADDED ones — so the delta max is the right bound
-        StatisticsBuilder.buildSketches(
-          spark, addedRefs.map(_._2.path), meta.indexSchema, kind,
-          expectedItems = math.max(4096L, delta.maxFileRows),
-          sketchDir, mode = "append", source = meta.source)
+      // sketch sizing covers the files being sketched — the ADDED ones
+      StatisticsBuilder.buildSketches(
+        spark, addedRefs.map(_._2.path), meta.indexSchema, kind,
+        expectedItems = math.max(4096L, delta.maxFileRows),
+        dirs.sketchTmp, mode = "append", source = meta.source, dataSchema = delta.dataSchema)
+    }
+    Some(Staged(addedRefs.map(_._2.path).distinct.size.toLong, removedCount, replace,
+      fileCount, totalBytes, dataSchema))
+  }
+
+  /** Move a staged table into place: the whole dir when `replace` (or
+    * when there is no live table yet), else its part files join the live
+    * ones. A table that was not staged is left as it is. */
+  private def install(
+      fs: org.apache.hadoop.fs.FileSystem, staged: Path, live: Path, replace: Boolean): Unit =
+    if (fs.exists(staged)) {
+      if (replace || !fs.exists(live)) {
+        if (fs.exists(live)) fs.delete(live, true)
+        fs.rename(staged, live)
+      } else {
+        fs.listStatus(staged).map(_.getPath)
+          .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+          .foreach(p => fs.rename(p, new Path(live, p.getName)))
+        fs.delete(staged, true)
       }
     }
-
-    metastore.writeMetadata(indexDir, meta.copy(
-      dataSchema = newDataSchema,
-      partitionValues = partValues.toSeq,
-      fileCount = newFileCount,
-      totalBytes = newTotalBytes))
-    commitManifest()
-    fs.create(new Path(indexDir, Metastore.SuccessFile), true).close()
-    val stats = RefreshStats(addedPaths.size.toLong, removedCount)
-
-    // the distributed listing's scratch table (read lazily by the stale-
-    // row semi-join above) is only droppable once the mutation settled
-    if (fs.exists(listingTmp)) fs.delete(listingTmp, true)
-    stats
-    } // MaintenanceLock.withLock
-  }
 
   /** The distributed listing + diff tier of [[refreshIndex]]: a level-walk
     * over the table's directory tree — each level is one Spark job whose
@@ -700,8 +792,8 @@ object IndexedDataSource {
     * block-location hints are not fetched for added files (one extra RPC
     * per file — the footer job re-derives locality from the read itself).
     * Returns (currentKeys frame backed by the scratch table, added refs,
-    * removed count); the caller drops the scratch table after the
-    * mutation settles. */
+    * removed count, manifest writer); the caller drops the scratch table
+    * after the staged writes. */
   private def distributedListingDiff(
       spark: SparkSession,
       roots: Seq[Path],
@@ -714,7 +806,7 @@ object IndexedDataSource {
       indexDir: Path,
       conf: IndexConf)
       : (org.apache.spark.sql.DataFrame, Seq[(Int, StatisticsBuilder.FileRef)],
-         Long, Long, () => Unit) = {
+         Long, () => Unit) = {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val hconf = spark.sparkContext.hadoopConfiguration
@@ -751,8 +843,8 @@ object IndexedDataSource {
       if (!useManifest || conf.refreshFullWalk) Map.empty
       else try {
         if (!ifs.exists(dirsPath)) Map.empty
-        else spark.read.parquet(dirsPath.toString)
-          .select(col("dir"), col("mtime"), col("capturedAt")).collect()
+        else spark.read.schema("dir STRING, mtime BIGINT, capturedAt BIGINT")
+          .parquet(dirsPath.toString).collect()
           .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
       } catch { case _: Exception => Map.empty }
     // a manifest that tracks nothing beyond the roots (flat layouts)
@@ -915,7 +1007,9 @@ object IndexedDataSource {
     // a name/depth mismatch = the partition layout changed -> fail fast
     val fieldNames = meta.partitionSchema.fieldNames.toSeq
     val fieldTypeJson = meta.partitionSchema.fields.map(_.dataType.json).toSeq
-    val rawListing = spark.read.parquet(listingTmp.toString)
+    val rawListing = spark.read
+      .schema("path STRING, size BIGINT, modificationTime BIGINT, blockSize BIGINT")
+      .parquet(listingTmp.toString)
     // each file parses relative to ITS root (prefix match is unambiguous:
     // resolveTableRoots rejects nested roots); a root that is itself a
     // data FILE matches by equality and parses as depth-0 (unpartitioned)
@@ -952,9 +1046,9 @@ object IndexedDataSource {
       }
 
     // ONE full-outer pass computes both sides of the diff: added rows
-    // are collected (O(delta)), the removed side is reduced to
-    // (count, bytes) INSIDE the same action via Observation — no second
-    // O(all files) anti-join, no second read of the scratch table.
+    // are collected (O(delta)), the removed side is reduced to its count
+    // INSIDE the same action via Observation — no second O(all files)
+    // anti-join, no second read of the scratch table.
     val obs = org.apache.spark.sql.Observation(
       "graft-refresh-diff-" + java.util.UUID.randomUUID())
     val joined = listing.withColumn("__live", lit(1))
@@ -962,15 +1056,11 @@ object IndexedDataSource {
     val addedRows = joined
       .observe(obs,
         org.apache.spark.sql.functions.sum(org.apache.spark.sql.functions
-          .when(col("__live").isNull, lit(1L)).otherwise(lit(0L))).as("rc"),
-        org.apache.spark.sql.functions.sum(org.apache.spark.sql.functions
-          .when(col("__live").isNull, col("size")).otherwise(lit(0L))).as("rb"))
+          .when(col("__live").isNull, lit(1L)).otherwise(lit(0L))).as("rc"))
       .filter(col("__known").isNull)
       .collect()
     val metrics = obs.get
     val removedCount = Option(metrics.getOrElse("rc", null))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    val removedBytes = Option(metrics.getOrElse("rb", null))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
 
     // new partition dirs append (sorted for determinism) — derived from
@@ -1021,7 +1111,7 @@ object IndexedDataSource {
       case Some(uk) => uk.unionAll(listing.select(keyCols.map(col): _*))
       case None => listing.select(keyCols.map(col): _*)
     }
-    (currentKeys, addedRefs, removedCount, removedBytes, manifestWriter)
+    (currentKeys, addedRefs, removedCount, manifestWriter)
   }
 
   def existsIndex(spark: SparkSession, path: String, dataspace: String): Boolean =

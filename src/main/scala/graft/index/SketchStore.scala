@@ -100,6 +100,14 @@ class SketchStore(dir: Path, conf: Configuration) {
 }
 
 object SketchStore {
+
+  /** The table's Spark schema, pinned on every Spark read of it. */
+  val Schema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq("file", "column", "kind").map(StructField(_, StringType)) :+
+      StructField("data", BinaryType))
+  }
+
   private val cache = new TrieMap[String, SketchStore]()
 
   /** input_file_name() yields `file:///x` while FileStatus paths render as

@@ -92,22 +92,16 @@ object StatisticsBuilder {
       totalBytes: Long,
       maxFileRows: Long)
 
-  /** The footer job: read per-row-group statistics for `indexSchema`
-    * columns plus each file's schema, and write the per-file rows
-    * STRAIGHT from the executors to the `files` parquet table —
-    * per-file stats never materialize on the driver, so index builds
-    * scale to millions of files. Tasks prefer the hosts holding the
-    * most bytes of their slice. Returns the merged data schema + counts. */
-  def writeFileStats(
+  /** The footer job's rows: per-row-group statistics for `indexSchema`
+    * columns plus each file's schema, one [[FileStatsRow]] per ref, read
+    * on executors. Tasks prefer the hosts holding the most bytes of their
+    * slice. */
+  private def footerRows(
       spark: SparkSession,
       refs: Seq[(Int, FileRef)],
       indexSchema: StructType,
       numPartitions: Int,
-      filesDir: Path,
-      mode: String = "overwrite",
-      source: String = Sources.Parquet,
-      summarizeDelta: Boolean = false): FileStatsSummary = {
-    if (refs.isEmpty) return FileStatsSummary(None, 0L, 0L, 0L)
+      source: String): org.apache.spark.rdd.RDD[FileStatsRow] = {
     val src = Sources.normalize(source)
     val confBc = spark.sparkContext.broadcast(
       new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
@@ -121,7 +115,7 @@ object StatisticsBuilder {
         val top = byHost.toSeq.sortBy(-_._2).take(3).map(_._1)
         (g, top)
       }
-    val rows = spark.sparkContext
+    spark.sparkContext
       .makeRDD(grouped)
       .flatMap { group =>
         val types = fields.map { case (n, dj, dom, base, rest) =>
@@ -135,7 +129,23 @@ object StatisticsBuilder {
             IndexMetadata.blocksToJsonString(footer.blocks), footer.rowCount)
         }
       }
-    val frame = spark.createDataFrame(rows)
+  }
+
+  /** The footer job, with its rows written STRAIGHT from the executors to
+    * the `files` parquet table — per-file stats never materialize on the
+    * driver, so index builds scale to millions of files. Returns the
+    * merged data schema + counts. */
+  def writeFileStats(
+      spark: SparkSession,
+      refs: Seq[(Int, FileRef)],
+      indexSchema: StructType,
+      numPartitions: Int,
+      filesDir: Path,
+      mode: String = "overwrite",
+      source: String = Sources.Parquet,
+      summarizeDelta: Boolean = false): FileStatsSummary = {
+    if (refs.isEmpty) return FileStatsSummary(None, 0L, 0L, 0L)
+    val frame = spark.createDataFrame(footerRows(spark, refs, indexSchema, numPartitions, source))
     if (!summarizeDelta) {
       frame.sortWithinPartitions("partitionIdx", "path")
         .write.mode(mode).parquet(filesDir.toString)
@@ -160,6 +170,17 @@ object StatisticsBuilder {
     }
   }
 
+  /** The footer job with its rows collected: for a delta below the
+    * distributed threshold, which the driver holds anyway. */
+  def collectFileStats(
+      spark: SparkSession,
+      refs: Seq[(Int, FileRef)],
+      indexSchema: StructType,
+      numPartitions: Int,
+      source: String): Seq[FileStatsRow] =
+    if (refs.isEmpty) Nil
+    else footerRows(spark, refs, indexSchema, numPartitions, source).collect().toSeq
+
   /** Does the frame resolve `name` — as a top-level column, or (for a
     * dotted index path) through nested struct resolution? Guards the
     * add-missing-as-null folds: a flat `withColumn("a.b", null)` would
@@ -171,7 +192,7 @@ object StatisticsBuilder {
   /** Summary + schema merge over the whole files table (columnar reads of
     * three small columns; distinct schemas are few even at 1M files). */
   def summarizeFilesTable(spark: SparkSession, filesDir: Path): FileStatsSummary =
-    summarizeFrame(spark.read.parquet(filesDir.toString))
+    summarizeFrame(spark.read.schema(IndexFilesTable.Schema).parquet(filesDir.toString))
 
   /** The same summary over an arbitrary FileStatsRow frame (the whole
     * table at create, the delta slice at refresh). */
@@ -182,14 +203,31 @@ object StatisticsBuilder {
       .agg(min(col("path")).as("firstPath"))
       .orderBy(col("firstPath"))
       .collect().map(_.getString(0))
-    val merged = schemaJsons
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-      .reduceOption(SparkInternals.mergeSchemas)
     // sum/max are NULL over an empty table (all files removed) — degrade to 0.
-    FileStatsSummary(merged, agg.getLong(0),
+    FileStatsSummary(mergeSchemaJsons(schemaJsons.toSeq), agg.getLong(0),
       if (agg.isNullAt(1)) 0L else agg.getLong(1),
       if (agg.isNullAt(2)) 0L else agg.getLong(2))
   }
+
+  /** The same summary over rows the driver holds: the distinct schemas
+    * merge in the order of their first path (Spark's string order), as
+    * in [[summarizeFrame]]. */
+  def summarizeRows(rows: Seq[FileStatsRow]): FileStatsSummary = {
+    val firstPath = scala.collection.mutable.HashMap.empty[String, String]
+    rows.foreach { r =>
+      if (firstPath.get(r.schemaJson).forall(Canon.compare(r.path, _) < 0)) {
+        firstPath(r.schemaJson) = r.path
+      }
+    }
+    val schemaJsons = firstPath.toSeq.sortWith((a, b) => Canon.compare(a._2, b._2) < 0).map(_._1)
+    FileStatsSummary(mergeSchemaJsons(schemaJsons), rows.size.toLong,
+      rows.iterator.map(_.size).sum,
+      if (rows.isEmpty) 0L else rows.iterator.map(_.rowCount).max)
+  }
+
+  private def mergeSchemaJsons(jsons: Seq[String]): Option[StructType] =
+    jsons.map(j => DataType.fromJson(j).asInstanceOf[StructType])
+      .reduceOption(SparkInternals.mergeSchemas)
 
   /** Executor-side: one footer read → schema + BlockStats per row group. */
   private def readFooterBlocks(
@@ -526,21 +564,25 @@ object StatisticsBuilder {
     * ALL stats from a full data scan, ParquetIndexReadSupport.scala:64-73;
     * we scan only the affected files and columns).
     *
-    * Three distributed steps, all metadata-sized except the scan:
+    * Three steps, all metadata-sized except the scan:
     *   1. detect (file, column) pairs where some block has non-null rows
-    *      but no min/max — a Dataset pass over the files table (only the
-    *      affected paths are collected, the same order of driver memory
-    *      as the file listing create() already holds);
+    *      but no min/max ([[affectedFile]]) — only the affected paths
+    *      reach the driver, the same order of driver memory as the file
+    *      listing create() already holds;
     *   2. one DataFrame aggregation over ONLY those files/columns:
     *      groupBy(input_file_name) → min/max per column (map-side
-    *      partials, one tiny row per file crosses the shuffle);
-    *   3. join the per-file bounds back onto the files table and rewrite
-    *      it via tmp + rename (same protocol refresh uses).
+    *      partials, one tiny row per affected file is collected);
+    *   3. patch the affected rows with their file's bounds
+    *      ([[patchBlocks]]).
     *
     * The patched bounds are per-FILE, applied to each non-all-null block:
     * looser than true per-block bounds but sound (every block's values
     * lie within its file's range). Blocks known all-null keep min/max =
     * None — that's a STRONGER pruning fact than any range.
+    *
+    * This entry point runs over the files table: detection is a Dataset
+    * pass, and the patched table is rewritten via tmp + rename.
+    * [[patchMinMax]] runs the same steps over rows the driver holds.
     *
     * @return number of files whose stats were patched */
   def fullScanMinMaxFallback(
@@ -548,17 +590,13 @@ object StatisticsBuilder {
       filesDir: Path,
       indexSchema: StructType,
       source: String = Sources.Parquet,
-      onlyPaths: Option[Seq[String]] = None): Long = {
+      onlyPaths: Option[Seq[String]] = None,
+      dataSchema: Option[StructType] = None): Long = {
     import spark.implicits._
-    if (indexSchema.isEmpty) return 0L
-    // element-domain (array) fields are excluded: min(arrayCol) is the
-    // wrong domain (lexicographic array order, not element bounds); a
-    // stat-less array column simply stays may-contain, with the dict /
-    // bloom sketch still answering array_contains membership
-    val indexedNames = indexSchema.fields
-      .filterNot(IndexMetadata.isElementDomain).map(_.name)
-    if (indexedNames.isEmpty) return 0L
-    val allRows = spark.read.parquet(filesDir.toString).as[FileStatsRow]
+    val names = fallbackColumns(indexSchema)
+    if (names.isEmpty) return 0L
+    val allRows = spark.read.schema(IndexFilesTable.Schema).parquet(filesDir.toString)
+      .as[FileStatsRow]
     // refresh knows only the DELTA can be statless — an isin on the
     // sorted path column pushes into the parquet scan and skips every
     // pre-existing row group, so detection never parses the whole
@@ -569,79 +607,17 @@ object StatisticsBuilder {
         allRows.filter(col("path").isin(ps: _*)).as[FileStatsRow]
       case _ => allRows
     }
-
-    // 1. detection — executor-side JSON parse, only hits come back
-    val affected: Array[(String, Seq[String])] = files.flatMap { r =>
-      val blocks = IndexMetadata.blocksFromJsonString(r.blocksJson)
-      val cols = indexedNames.filter { name =>
-        blocks.exists { b =>
-          b.rowCount > 0 && b.columns.get(name).exists(st =>
-            st.min.isEmpty && !st.knownAllNull(b.rowCount))
-        }
-      }
-      if (cols.isEmpty) Nil else Seq((r.path, cols.toSeq))
-    }.collect()
+    val affected = files.flatMap(r => affectedFile(r, names)).collect().toSeq
     if (affected.isEmpty) return 0L
 
-    val colNames: Seq[String] = affected.flatMap(_._2).distinct.toSeq
-    val colTypes: Map[String, String] =
-      indexSchema.fields.map(f => f.name -> f.dataType.json).toMap
-    val paths = affected.map(_._1).toSeq
-
-    // 2. per-file bounds — one scan of the affected files, pruned to the
-    //    affected columns (ReadSchema carries only those + file name)
-    val read = Sources.read(spark, source, paths)
-    val withCols = colNames.foldLeft(read) { (d, c) =>
-      if (hasColumn(d, c)) d
-      else d.withColumn(c, lit(null).cast(DataType.fromJson(colTypes(c))))
+    // the rewrite covers the WHOLE table (allRows, never the onlyPaths
+    // slice — replacing the table with just the delta would drop every
+    // pre-existing row); only the affected rows change
+    val bounds = spark.sparkContext.broadcast(
+      scanBounds(spark, affected, indexSchema, source, dataSchema))
+    val patched = allRows.map { r =>
+      bounds.value.get(SketchStore.normalizePath(r.path)).fold(r)(patchBlocks(r, _))
     }
-    val normPath = (c: org.apache.spark.sql.Column) => graft.functions.exprs.normalize_path(c)
-    val aggs = colNames.flatMap(c =>
-      Seq(min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c")))
-    val perFile = withCols
-      .select((colNames.map(col) :+ normPath(input_file_name()).as("__file")): _*)
-      .groupBy(col("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-
-    // 3. join + patch + rewrite (tmp + rename, as refresh does). The
-    //    rewrite covers the WHOLE table (allRows, never the onlyPaths
-    //    slice — replacing the table with just the delta would drop
-    //    every pre-existing row); only the affected rows change.
-    val colNamesB = colNames
-    val colTypesB = colTypes
-    val patched = allRows.toDF()
-      .join(perFile, normPath(col("path")) === col("__file"), "left")
-      .map { row =>
-        val base = FileStatsRow(
-          row.getAs[Int]("partitionIdx"), row.getAs[String]("path"),
-          row.getAs[Long]("size"), row.getAs[Long]("modificationTime"),
-          row.getAs[Long]("blockSize"), row.getAs[String]("locationsJson"),
-          row.getAs[String]("schemaJson"), row.getAs[String]("blocksJson"),
-          row.getAs[Long]("rowCount"))
-        if (row.getAs[String]("__file") == null) base
-        else {
-          val types = colTypesB.map { case (n, j) => n -> DataType.fromJson(j) }
-          val blocks = IndexMetadata.blocksFromJsonString(base.blocksJson)
-          val newBlocks = blocks.map { b =>
-            val newCols = b.columns.map { case (name, st) =>
-              val patchable = colNamesB.contains(name) && b.rowCount > 0 &&
-                st.min.isEmpty && !st.knownAllNull(b.rowCount)
-              if (!patchable) name -> st
-              else {
-                val mn = Option(row.getAs[Any](s"__min_$name"))
-                  .flatMap(v => Canon.fromExternal(types(name), v))
-                val mx = Option(row.getAs[Any](s"__max_$name"))
-                  .flatMap(v => Canon.fromExternal(types(name), v))
-                if (mn.isDefined && mx.isDefined)
-                  name -> ColumnStats(mn, mx, st.nullCount)
-                else name -> st
-              }
-            }
-            BlockStats(b.rowCount, newCols)
-          }
-          base.copy(blocksJson = IndexMetadata.blocksToJsonString(newBlocks))
-        }
-      }
     val fs = filesDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(filesDir.getParent, filesDir.getName + "_mmtmp")
     patched.toDF().sort(col("partitionIdx"), col("path"))
@@ -652,9 +628,99 @@ object StatisticsBuilder {
     affected.length.toLong
   }
 
+  /** [[fullScanMinMaxFallback]] over rows the driver holds (a refresh
+    * delta below the distributed threshold): detection runs in memory,
+    * and the scan runs only when some file is affected. `dataSchema`
+    * is the rows' merged schema, so the scan infers nothing. */
+  def patchMinMax(
+      spark: SparkSession,
+      rows: Seq[FileStatsRow],
+      indexSchema: StructType,
+      source: String,
+      dataSchema: Option[StructType]): Seq[FileStatsRow] = {
+    val names = fallbackColumns(indexSchema)
+    val affected = rows.flatMap(affectedFile(_, names))
+    if (affected.isEmpty) rows
+    else {
+      val bounds = scanBounds(spark, affected, indexSchema, source, dataSchema)
+      rows.map(r => bounds.get(SketchStore.normalizePath(r.path)).fold(r)(patchBlocks(r, _)))
+    }
+  }
+
+  /** The fallback's candidate columns. Element-domain (array) fields are
+    * excluded: min(arrayCol) is the wrong domain (lexicographic array
+    * order, not element bounds); a stat-less array column simply stays
+    * may-contain, with the dict / bloom sketch still answering
+    * array_contains membership. */
+  private def fallbackColumns(indexSchema: StructType): Seq[String] =
+    indexSchema.fields.toSeq.filterNot(IndexMetadata.isElementDomain).map(_.name)
+
+  /** Is `st` in a block of `rowCount` rows a hole the fallback patches:
+    * non-null rows but no min/max? */
+  private def statless(st: ColumnStats, rowCount: Long): Boolean =
+    rowCount > 0 && st.min.isEmpty && !st.knownAllNull(rowCount)
+
+  /** (path, columns of `names` with a statless block) of an affected row. */
+  private def affectedFile(r: FileStatsRow, names: Seq[String]): Option[(String, Seq[String])] = {
+    val blocks = IndexMetadata.blocksFromJsonString(r.blocksJson)
+    val cols = names.filter(n => blocks.exists(b => b.columns.get(n).exists(statless(_, b.rowCount))))
+    if (cols.isEmpty) None else Some((r.path, cols))
+  }
+
+  /** Per-file canonical (min, max) of the affected columns, keyed by
+    * normalized path — one scan of the affected files, pruned to the
+    * affected columns (ReadSchema carries only those + file name). A
+    * column whose bounds stay unknown (all null, or no canonical form) is
+    * absent from its file's map. */
+  private def scanBounds(
+      spark: SparkSession,
+      affected: Seq[(String, Seq[String])],
+      indexSchema: StructType,
+      source: String,
+      dataSchema: Option[StructType]): Map[String, Map[String, (Any, Any)]] = {
+    val colNames = affected.flatMap(_._2).distinct
+    val types = indexSchema.fields.map(f => f.name -> f.dataType).toMap
+    val read = Sources.read(spark, source, affected.map(_._1), dataSchema)
+    val withCols = colNames.foldLeft(read) { (d, c) =>
+      if (hasColumn(d, c)) d else d.withColumn(c, lit(null).cast(types(c)))
+    }
+    val normPath = (c: org.apache.spark.sql.Column) => graft.functions.exprs.normalize_path(c)
+    val aggs = colNames.flatMap(c => Seq(min(col(c)), max(col(c))))
+    withCols
+      .select((colNames.map(col) :+ normPath(input_file_name()).as("__file")): _*)
+      .groupBy(col("__file"))
+      .agg(aggs.head, aggs.tail: _*)
+      .collect()
+      .map { row =>
+        row.getString(0) -> colNames.zipWithIndex.flatMap { case (c, i) =>
+          for {
+            mn <- Option(row.get(1 + 2 * i)).flatMap(Canon.fromExternal(types(c), _))
+            mx <- Option(row.get(2 + 2 * i)).flatMap(Canon.fromExternal(types(c), _))
+          } yield c -> (mn, mx)
+        }.toMap
+      }.toMap
+  }
+
+  /** `r` with every statless block of a column in `bounds` given the
+    * file's (min, max). */
+  private def patchBlocks(r: FileStatsRow, bounds: Map[String, (Any, Any)]): FileStatsRow = {
+    val blocks = IndexMetadata.blocksFromJsonString(r.blocksJson).map { b =>
+      BlockStats(b.rowCount, b.columns.map { case (name, st) =>
+        bounds.get(name) match {
+          case Some((mn, mx)) if statless(st, b.rowCount) =>
+            name -> ColumnStats(Some(mn), Some(mx), st.nullCount)
+          case _ => name -> st
+        }
+      })
+    }
+    r.copy(blocksJson = IndexMetadata.blocksToJsonString(blocks))
+  }
+
   /** Build per-(file × column) membership sketches with a single
     * DataFrame aggregation and write them as a parquet table
-    * (file, column, kind, data) under `sketchDir`. */
+    * (file, column, kind, data) under `sketchDir`. `dataSchema` is the
+    * files' merged footer schema when the caller has it; without it the
+    * read infers one. */
   def buildSketches(
       spark: SparkSession,
       filePaths: Seq[String],
@@ -663,11 +729,12 @@ object StatisticsBuilder {
       expectedItems: Long,
       sketchDir: Path,
       mode: String = "overwrite",
-      source: String = Sources.Parquet): Unit = {
+      source: String = Sources.Parquet,
+      dataSchema: Option[StructType] = None): Unit = {
     if (filePaths.isEmpty || indexSchema.isEmpty) return
-    // mergeSchema: an indexed column absent from some files must read as
-    // null there (heterogeneous tables), not fail schema inference
-    val read = Sources.read(spark, source, filePaths)
+    // a merged schema: an indexed column absent from some files must read
+    // as null there (heterogeneous tables), not fail to resolve
+    val read = Sources.read(spark, source, filePaths, dataSchema)
     // An indexed column absent from EVERY file in this batch (incremental
     // refresh over a homogeneous delta) must still aggregate — as all-null,
     // yielding an empty sketch (sound: the files really contain no values).
@@ -715,6 +782,32 @@ object StatisticsBuilder {
     // per-row-group `file IN` pushdown needs.)
     long.sort(col("file"), col("column"))
       .write.mode(mode).parquet(sketchDir.toString)
+  }
+
+  /** Write to `out` the rows of the sketch table in `sketchDir` whose
+    * file is in `keep` (normalized paths). A filter only: one task per
+    * part file and no shuffle or sort, so each output part keeps its
+    * input's file order, which the query-time `file IN` pushdown relies
+    * on. */
+  def filterSketches(spark: SparkSession, sketchDir: Path, keep: Set[String], out: Path): Unit = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val parts = sketchDir.getFileSystem(hconf).listStatus(sketchDir).toSeq
+      .map(_.getPath)
+      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+      .map(_.toString).sorted
+    val keepBc = spark.sparkContext.broadcast(keep)
+    val confBc = spark.sparkContext.broadcast(new SerializableConfiguration(hconf))
+    val rows = spark.sparkContext.parallelize(parts, math.max(1, parts.size)).flatMap { part =>
+      val reader = org.apache.parquet.hadoop.ParquetReader
+        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), new Path(part))
+        .withConf(confBc.value.value).build()
+      org.apache.spark.TaskContext.get().addTaskCompletionListener[Unit](_ => reader.close())
+      Iterator.continually(reader.read()).takeWhile(_ != null)
+        .filter(g => keepBc.value.contains(g.getString("file", 0)))
+        .map(g => org.apache.spark.sql.Row(g.getString("file", 0), g.getString("column", 0),
+          g.getString("kind", 0), g.getBinary("data", 0).getBytes))
+    }
+    spark.createDataFrame(rows, SketchStore.Schema).write.mode("overwrite").parquet(out.toString)
   }
 }
 

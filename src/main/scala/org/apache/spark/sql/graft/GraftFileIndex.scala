@@ -539,7 +539,7 @@ class GraftFileIndex(
       onDriver(partitions.fold(all)(ps => ps.flatMap(i => all.get(i).map(i -> _)).toMap))
     } else {
       val table = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .read.parquet(filesDir.toString)
+        .read.schema(IndexFilesTable.Schema).parquet(filesDir.toString)
       onTable(partitions.fold(table)(ps =>
         table.where(org.apache.spark.sql.functions.col("partitionIdx").isin(ps: _*))))
     }
@@ -731,7 +731,7 @@ class GraftFileIndex(
       } else {
         val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
         import classic.implicits._
-        val partials = classic.read.parquet(sketchPath.toString)
+        val partials = classic.read.schema(SketchStore.Schema).parquet(sketchPath.toString)
           .where($"column" === colName)
           .select($"kind", $"data").as[(String, Array[Byte])]
           .rdd.mapPartitions { it =>

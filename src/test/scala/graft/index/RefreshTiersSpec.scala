@@ -1,0 +1,315 @@
+package graft.index
+
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.index.implicits._
+
+/** Refresh on both tiers — the driver tier below
+  * `spark.sql.index.pruning.distributedThreshold` and the distributed tier
+  * at threshold 1:
+  *   - after every step of a table's history, the refreshed index equals
+  *     a fresh create over the same data (files-table rows with
+  *     partitionIdx mapped to partition values, sketch rows, file count,
+  *     bytes, data schema);
+  *   - a refresh that fails before its swap leaves the index loadable and
+  *     unchanged, and a rerun converges;
+  *   - the driver tier's Spark job count stays pinned. */
+class RefreshTiersSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private val work = Files.createTempDirectory("graft-refresh-tiers").toString
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .appName("graft-refresh-tiers-spec")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config(IndexConf.MetastoreLocation, s"$work/metastore")
+    .getOrCreate()
+
+  private val IndexCols = Seq("k", "s", "x", "ts")
+  private val Fresh = "fresh"
+  private val Tiers = Seq(
+    "driver" -> Map.empty[String, String],
+    "distributed" -> Map(IndexConf.DistributedPruningThreshold -> "1"))
+
+  /** Append one parquet file of keys [from, from + n) to `dir`: columns k,
+    * s, ts, plus x unless `withX` is off and y when `withY` is on; ts
+    * written as INT96 (no footer min/max) when `int96`, else as
+    * TIMESTAMP_MICROS (footer min/max). */
+  private def writeFile(dir: String, from: Long, n: Long, withX: Boolean = true,
+      withY: Boolean = false, int96: Boolean = false): Unit = {
+    val base = spark.range(from, from + n).select(
+      col("id").as("k"), concat(lit("s"), col("id") % 13).as("s"),
+      timestamp_seconds(col("id") + 1600000000L).as("ts"))
+    val withCols = Seq(
+      Some(col("k")), Some(col("s")), Some(col("ts")),
+      if (withX) Some((col("k") * 3).as("x")) else None,
+      if (withY) Some((col("k") + 7).as("y")) else None).flatten
+    spark.conf.set("spark.sql.parquet.outputTimestampType",
+      if (int96) "INT96" else "TIMESTAMP_MICROS")
+    try base.select(withCols: _*).coalesce(1).write.mode("append").parquet(dir)
+    finally spark.conf.unset("spark.sql.parquet.outputTimestampType")
+  }
+
+  private def dataFiles(dir: String): Seq[java.io.File] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+      .sortBy(_.getName)
+
+  private def allDataFiles(table: String): Seq[java.io.File] =
+    Option(new java.io.File(table).listFiles()).toSeq.flatten
+      .filter(_.isDirectory).flatMap(d => dataFiles(d.getPath)).sortBy(_.getPath)
+
+  /** Delete a data file and its checksum side file. */
+  private def remove(f: java.io.File): Unit = {
+    assert(f.delete())
+    new java.io.File(f.getParent, s".${f.getName}.crc").delete()
+    ()
+  }
+
+  /** What a refreshed index and a fresh create must agree on. */
+  private case class Snapshot(
+      files: Seq[(Seq[Option[String]], FileStatsRow)],
+      sketches: Seq[(String, String, String, Seq[Byte])],
+      fileCount: Long,
+      totalBytes: Long,
+      dataSchema: StructType)
+
+  private def indexDir(dataspace: String, table: String): Path =
+    Metastore(spark).location(dataspace, IndexedDataSource.resolveTableRoots(spark, Seq(table)))
+
+  private def snapshot(dataspace: String, table: String): Snapshot = {
+    val (dir, meta) = Metastore(spark).load(
+      dataspace, IndexedDataSource.resolveTableRoots(spark, Seq(table)))
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val files = IndexFilesTable.readUncached(new Path(dir, Metastore.FilesDir), hconf)
+      .map(r => (meta.partitionValues(r.partitionIdx), r.copy(partitionIdx = -1)))
+      .sortBy(_._2.path)
+    val sketchDir = new Path(dir, Metastore.SketchDir)
+    val sketches =
+      if (!sketchDir.getFileSystem(hconf).exists(sketchDir)) Nil
+      else spark.read.schema(SketchStore.Schema).parquet(sketchDir.toString).collect().toSeq
+        .map(r => (r.getString(0), r.getString(1), r.getString(2),
+          r.getAs[Array[Byte]](3).toSeq))
+        .sortBy(r => (r._1, r._2))
+    Snapshot(files, sketches, meta.fileCount, meta.totalBytes, meta.dataSchema)
+  }
+
+  private def create(dataspace: String, table: String): Unit =
+    IndexedDataSource.createIndex(spark, Seq(table), dataspace, SaveMode.Overwrite,
+      IndexCols, indexAll = false, Map.empty, Sources.Parquet)
+
+  private def refresh(table: String, opts: Map[String, String]) =
+    IndexedDataSource.refreshIndex(spark, Seq(table), Metastore.Dataspace, opts)
+
+  /** The refreshed index equals a fresh create over the same data. The
+    * distributed listing does not fetch block locations (see
+    * `distributedListingDiff`), so on that tier the two listing hints are
+    * left out; and its append-only metadata widens the old schema with
+    * the delta's, which can order the fields differently from create's
+    * first-path merge, so there the schemas compare field by field. */
+  private def assertMatchesCreate(table: String, tier: String, step: String): Snapshot = {
+    create(Fresh, table)
+    val got = snapshot(Metastore.Dataspace, table)
+    val want = snapshot(Fresh, table)
+    val hints = (s: Snapshot) =>
+      if (tier == "driver") s.files
+      else s.files.map { case (pv, r) => (pv, r.copy(blockSize = 0L, locationsJson = "")) }
+    assert(hints(got) == hints(want), s"$tier/$step: files-table rows differ")
+    assert(got.sketches == want.sketches, s"$tier/$step: sketch rows differ")
+    assert((got.fileCount, got.totalBytes) == (want.fileCount, want.totalBytes),
+      s"$tier/$step: counts differ")
+    if (tier == "driver") {
+      assert(got.dataSchema == want.dataSchema, s"$tier/$step: data schema differs")
+    } else {
+      assert(got.dataSchema.fields.sortBy(_.name).toSeq == want.dataSchema.fields.sortBy(_.name).toSeq,
+        s"$tier/$step: data schema differs")
+    }
+    assert(!Files.list(java.nio.file.Paths.get(indexDir(Metastore.Dataspace, table).toUri))
+      .anyMatch(_.getFileName.toString.endsWith("_tmp")), s"$tier/$step: staging left behind")
+    got
+  }
+
+  private def sameRows(indexed: DataFrame, plain: DataFrame): Unit = {
+    val a = indexed.collect().map(_.toString).sorted
+    val b = plain.collect().map(_.toString).sorted
+    assert(a.sameElements(b), s"indexed ${a.length} rows vs plain ${b.length}")
+  }
+
+  for ((tier, opts) <- Tiers) {
+    test(s"$tier tier: refresh equals a fresh create after every step of a history") {
+      val t = s"$work/history_$tier"
+      writeFile(s"$t/p=0", 0, 200)
+      writeFile(s"$t/p=0", 200, 200)
+      writeFile(s"$t/p=1", 400, 200)
+      writeFile(s"$t/p=1", 600, 200)
+      create(Metastore.Dataspace, t)
+      def step(name: String, added: Long, removed: Long): Snapshot = {
+        val st = refresh(t, opts)
+        assert(st == IndexedDataSource.RefreshStats(added, removed), s"$tier/$name: $st")
+        val snap = assertMatchesCreate(t, tier, name)
+        sameRows(spark.index.parquet(t),
+          spark.read.option("mergeSchema", "true").parquet(t))
+        snap
+      }
+
+      // append-only, into an existing and a new partition
+      writeFile(s"$t/p=1", 800, 200)
+      writeFile(s"$t/p=2", 1000, 200)
+      step("append", 2, 0)
+
+      // removal
+      remove(dataFiles(s"$t/p=0").head)
+      step("removal", 0, 1)
+
+      // rewrite in place: same path, new content and mtime
+      val victim = dataFiles(s"$t/p=1").head
+      val scratch = s"$work/rewrite_$tier"
+      writeFile(scratch, 5000, 150)
+      val fresh = dataFiles(scratch).head
+      Files.copy(fresh.toPath, victim.toPath, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      Files.copy(new java.io.File(scratch, s".${fresh.getName}.crc").toPath,
+        new java.io.File(victim.getParent, s".${victim.getName}.crc").toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      assert(victim.setLastModified(victim.lastModified() + 60000L))
+      step("rewrite", 1, 1)
+
+      // heterogeneous append: the new file lacks the indexed column x
+      writeFile(s"$t/p=2", 1200, 100, withX = false)
+      step("no-x append", 1, 0)
+
+      // the only file carrying y comes and goes: dataSchema must shrink
+      writeFile(s"$t/p=2", 1300, 100, withY = true)
+      assert(step("y append", 1, 0).dataSchema.fieldNames.contains("y"))
+      remove(dataFiles(s"$t/p=2").find(f =>
+        spark.read.parquet(f.getPath).columns.contains("y")).get)
+      assert(!step("y removal", 0, 1).dataSchema.fieldNames.contains("y"))
+
+      // an INT96 delta: its ts bounds come from the fallback scan
+      writeFile(s"$t/p=1", 1400, 100, int96 = true)
+      val snap = step("int96 append", 1, 0)
+      assert(snap.files.forall { case (_, r) =>
+        IndexMetadata.blocksFromJsonString(r.blocksJson)
+          .forall(_.columns.get("ts").forall(_.min.isDefined))
+      }, s"$tier: a ts block kept no bounds")
+
+      // every file removed: an empty index that still loads and answers
+      val before = allDataFiles(t).size.toLong
+      allDataFiles(t).foreach(remove)
+      assert(refresh(t, opts) == IndexedDataSource.RefreshStats(0L, before))
+      val empty = snapshot(Metastore.Dataspace, t)
+      assert(empty.files.isEmpty && empty.sketches.isEmpty)
+      assert((empty.fileCount, empty.totalBytes) == (0L, 0L))
+      assert(spark.index.parquet(t).where(col("k") === 5L).count() == 0L)
+    }
+
+    test(s"$tier tier: a refresh failing before its swap leaves the index as it was") {
+      val t = s"$work/failing_$tier"
+      (0 until 4).foreach(i => writeFile(s"$t/p=0", i * 100L, 100))
+      create(Metastore.Dataspace, t)
+      val q = (df: DataFrame) => df.where(col("k") === 150L || col("s") === "s3")
+      val answer = q(spark.index.parquet(t)).collect().map(_.toString).sorted
+      val before = snapshot(Metastore.Dataspace, t)
+
+      // a good file and a truncated one land together
+      writeFile(s"$t/p=0", 1000, 100)
+      val good = dataFiles(s"$t/p=0").last
+      val bad = new java.io.File(s"$t/p=0", "part-truncated.parquet")
+      val bytes = Files.readAllBytes(good.toPath)
+      Files.write(bad.toPath, java.util.Arrays.copyOf(bytes, bytes.length / 2))
+      intercept[Exception](refresh(t, opts))
+
+      assert(spark.index.exists.parquet(t))
+      assert(q(spark.index.parquet(t)).collect().map(_.toString).sorted.sameElements(answer))
+      assert(snapshot(Metastore.Dataspace, t) == before, "the failed refresh changed the index")
+
+      remove(bad)
+      assert(refresh(t, opts) == IndexedDataSource.RefreshStats(1L, 0L))
+      assertMatchesCreate(t, tier, "rerun")
+      sameRows(q(spark.index.parquet(t)), q(spark.read.parquet(t)))
+    }
+  }
+
+  /** Spark jobs started, and Spark writes into a `files*` dir, by `body`. */
+  private def counted(body: => Unit): (Int, Int) = {
+    val jobs = new AtomicInteger(0)
+    val filesWrites = new AtomicInteger(0)
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    val writeListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        qe.executedPlan.foreach {
+          case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _)
+              if c.outputPath.getName.startsWith(Metastore.FilesDir) =>
+            filesWrites.incrementAndGet(); ()
+          case _ =>
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    TestListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(writeListener)
+    try {
+      body
+      TestListenerBus.drain(spark.sparkContext)
+    } finally {
+      spark.sparkContext.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(writeListener)
+    }
+    (jobs.get, filesWrites.get)
+  }
+
+  test("driver tier: a 4-in/4-out refresh with bloom sketches runs at most 8 Spark jobs") {
+    val t = s"$work/jobs"
+    (0 until 8).foreach(i => writeFile(s"$t/p=${i / 4}", i * 100L, 100))
+    create(Metastore.Dataspace, t)
+    val filesDir = new java.io.File(indexDir(Metastore.Dataspace, t).toUri.getPath, Metastore.FilesDir)
+    def parts = dataFiles(filesDir.getPath).size
+
+    // 4 files land in a new partition, the 4 of the first one go
+    (0 until 4).foreach(i => writeFile(s"$t/p=2", 1000 + i * 100L, 100))
+    dataFiles(s"$t/p=0").foreach(remove)
+    var stats: IndexedDataSource.RefreshStats = null
+    val (cycleJobs, cycleWrites) = counted { stats = spark.index.refresh.parquet(t) }
+    assert(stats == IndexedDataSource.RefreshStats(4L, 4L))
+    assert(cycleJobs <= 8, s"refresh ran $cycleJobs Spark jobs")
+    assert(cycleWrites == 0, "the driver tier writes the files table without Spark")
+    assert(parts == 1, "a refresh with removals writes the files table as one part file")
+
+    // an INT96 delta adds the patch scan's jobs and nothing else: the same
+    // append with footer stats, then with INT96 timestamps
+    (0 until 4).foreach(i => writeFile(s"$t/p=3", 2000 + i * 100L, 100))
+    val (plainJobs, plainWrites) = counted { spark.index.refresh.parquet(t) }
+    assert(parts == 2, "an append adds one part file")
+    (0 until 4).foreach(i => writeFile(s"$t/p=4", 3000 + i * 100L, 100, int96 = true))
+    val (int96Jobs, int96Writes) = counted { spark.index.refresh.parquet(t) }
+    assert(parts == 3, "an INT96 append adds one part file, not a rewrite")
+    assert(plainWrites == 0 && int96Writes == 0)
+    // the patch scan is one aggregation query: a shuffle-map job and a result job
+    assert(int96Jobs - plainJobs >= 1 && int96Jobs - plainJobs <= 2,
+      s"INT96 delta ran $int96Jobs jobs, the plain one $plainJobs")
+    sameRows(spark.index.parquet(t).where(col("ts") > timestamp_seconds(lit(1600003350L))),
+      spark.read.parquet(t).where(col("ts") > timestamp_seconds(lit(1600003350L))))
+  }
+
+  override def afterAll(): Unit = {
+    spark.stop()
+    super.afterAll()
+  }
+}
