@@ -497,8 +497,8 @@ private[graft] trait SparkEntryFixtures {
   /** INT96-timestamp orders copy — the legacy-writer fixture: written
     * with outputTimestampType=INT96, whose footers carry NO usable
     * timestamp statistics, so RANGE pruning on o_ordertime exists only
-    * because create's full-scan min/max fallback patched the files table
-    * (StatisticsBuilder.fullScanMinMaxFallback; reference covers the same
+    * because create's stats pass patched the footer holes with each
+    * file's data bounds (StatisticsBuilder; reference covers the same
     * case via its full-scan stats, ParquetIndexReadSupport.scala:64-73).
     * Range-clustered so the pruning is observable; create-once. */
   private[graft] def indexedOrdersInt96(s: SparkSession, dir: String): DataFrame =

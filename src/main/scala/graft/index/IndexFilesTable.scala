@@ -4,20 +4,25 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.{Group, GroupWriter}
 import org.apache.parquet.example.data.simple.SimpleGroup
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.api.{ReadSupport, WriteSupport}
+import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.parquet.schema.MessageTypeParser
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.io.OutputFile
+import org.apache.parquet.io.api.RecordConsumer
+import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.types.StructType
 
 /** Driver-side access to the `files` parquet table (one [[FileStatsRow]]
-  * per data file, written by [[StatisticsBuilder.writeFileStats]], or by
-  * [[write]] when a refresh below the distributed threshold builds the
-  * rows on the driver).
+  * per data file, written from the stats pass by
+  * [[StatisticsBuilder.writeFileStats]], or by [[write]] when a refresh
+  * below the distributed threshold collects the rows on the driver).
   *
   * Small tables (below the distributed-pruning threshold) are read once
   * per index directory into a process-wide cache and folded on the
@@ -53,28 +58,44 @@ object IndexFilesTable {
   private val cache = new TrieMap[String, Seq[FileStatsRow]]()
 
   private def scan[A](dir: Path, conf: Configuration)(row: FileStatsRow => A): Seq[A] = {
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) Nil
-    else {
-      val out = Seq.newBuilder[A]
-      val reader = ParquetReader.builder(new GroupReadSupport(), dir).withConf(conf).build()
+    val out = Seq.newBuilder[A]
+    readGroups(dir, conf) { g =>
+      out += row(FileStatsRow(
+        partitionIdx = g.getInteger("partitionIdx", 0),
+        path = g.getString("path", 0),
+        size = g.getLong("size", 0),
+        modificationTime = g.getLong("modificationTime", 0),
+        blockSize = g.getLong("blockSize", 0),
+        locationsJson = g.getString("locationsJson", 0),
+        schemaJson = g.getString("schemaJson", 0),
+        blocksJson = g.getString("blocksJson", 0),
+        rowCount = g.getLong("rowCount", 0)))
+    }
+    out.result()
+  }
+
+  /** Every record of the parquet file or table dir `path` (its visible
+    * part files, by name; nothing if it does not exist), as a Group, to
+    * `f`; `filter` prunes row groups and records. Each file opens as an
+    * InputFile under `conf`: the Path-based reader builder parses a fresh
+    * Hadoop Configuration per call, about 10 ms each. */
+  private[index] def readGroups(path: Path, conf: Configuration,
+      filter: FilterCompat.Filter = FilterCompat.NOOP)(f: Group => Unit): Unit = {
+    val fs = path.getFileSystem(conf)
+    val files =
+      if (!fs.exists(path)) Nil
+      else if (!fs.getFileStatus(path).isDirectory) Seq(path)
+      else fs.listStatus(path).toSeq.map(_.getPath)
+        .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+        .sortBy(_.getName)
+    files.foreach { p =>
+      val reader = new ParquetReader.Builder[Group](HadoopInputFile.fromPath(p, conf)) {
+        override protected def getReadSupport(): ReadSupport[Group] = new GroupReadSupport()
+      }.withFilter(filter).build()
       try {
         var g = reader.read()
-        while (g != null) {
-          out += row(FileStatsRow(
-            partitionIdx = g.getInteger("partitionIdx", 0),
-            path = g.getString("path", 0),
-            size = g.getLong("size", 0),
-            modificationTime = g.getLong("modificationTime", 0),
-            blockSize = g.getLong("blockSize", 0),
-            locationsJson = g.getString("locationsJson", 0),
-            schemaJson = g.getString("schemaJson", 0),
-            blocksJson = g.getString("blocksJson", 0),
-            rowCount = g.getLong("rowCount", 0)))
-          g = reader.read()
-        }
+        while (g != null) { f(g); g = reader.read() }
       } finally reader.close()
-      out.result()
     }
   }
 
@@ -102,12 +123,8 @@ object IndexFilesTable {
     * the footer), without a Spark job. */
   def write(dir: Path, rows: Seq[FileStatsRow], conf: Configuration): Unit = {
     val file = new Path(dir, s"part-00000-${java.util.UUID.randomUUID()}-c000.snappy.parquet")
-    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(file, conf))
-      .withType(parquetSchema)
-      .withConf(conf)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .withExtraMetaData(java.util.Map.of("org.apache.spark.sql.parquet.row.metadata", Schema.json))
-      .build()
+    val writer = groupWriter(file, parquetSchema,
+      java.util.Map.of("org.apache.spark.sql.parquet.row.metadata", Schema.json), conf)
     try rows.foreach { r =>
       val g = new SimpleGroup(parquetSchema)
       g.add("partitionIdx", r.partitionIdx)
@@ -121,6 +138,31 @@ object IndexFilesTable {
       g.add("rowCount", r.rowCount)
       writer.write(g)
     } finally writer.close()
+  }
+
+  /** A snappy parquet writer of `schema` Groups to `file`, with
+    * `metadata` as the footer's key-value entries and, as in the files
+    * Spark writes, no parquet-mr `writer.model.name` entry. */
+  private[index] def groupWriter(file: Path, schema: MessageType,
+      metadata: java.util.Map[String, String], conf: Configuration): ParquetWriter[Group] =
+    new GroupWriterBuilder(HadoopOutputFile.fromPath(file, conf), schema)
+      .withConf(conf)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withExtraMetaData(metadata)
+      .build()
+
+  private final class GroupWriterBuilder(file: OutputFile, schema: MessageType)
+      extends ParquetWriter.Builder[Group, GroupWriterBuilder](file) {
+    override protected def self(): GroupWriterBuilder = this
+    override protected def getWriteSupport(conf: Configuration): WriteSupport[Group] =
+      new WriteSupport[Group] {
+        private var writer: GroupWriter = _
+        override def init(conf: Configuration): WriteSupport.WriteContext =
+          new WriteSupport.WriteContext(schema, new java.util.HashMap[String, String]())
+        override def prepareForWrite(consumer: RecordConsumer): Unit =
+          writer = new GroupWriter(consumer, schema)
+        override def write(g: Group): Unit = writer.write(g)
+      }
   }
 
   def invalidate(dir: Path): Unit = { cache.remove(dir.toString); () }

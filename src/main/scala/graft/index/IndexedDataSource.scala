@@ -10,8 +10,8 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * path or catalog table. The reference's IndexedDataSource.scala +
   * ParquetMetastoreSupport.scala re-expressed Spark-first:
   *   - file listing + partition discovery via InMemoryFileIndex;
-  *   - min/max/null statistics from footers (metadata-only job);
-  *   - sketches via one DataFrame aggregation;
+  *   - footer statistics, sketches and the min/max fallback from one
+  *     executor pass per data file ([[StatisticsBuilder]]);
   *   - pruning lives in [[GraftFileIndex.listFiles]] (no planner strategy).
   */
 object IndexedDataSource {
@@ -156,19 +156,21 @@ object IndexedDataSource {
       if (allFiles.isEmpty) StructType(Nil)
       else Sources.read(spark, src, Seq(allFiles.head.getPath.toString)).schema
 
-    val indexSchema =
-      try resolveIndexSchema(firstSchema, partitionSchema, columns, indexAll)
+    // the pass reads the indexed columns with the types of the schema
+    // they were resolved against
+    val (indexSchema, readSchema) =
+      try (resolveIndexSchema(firstSchema, partitionSchema, columns, indexAll), firstSchema)
       catch {
         case _: IllegalArgumentException if allFiles.size > 1 =>
-          resolveIndexSchema(Sources.read(spark, src, allFiles.map(_.getPath.toString)).schema,
-            partitionSchema, columns, indexAll)
+          val merged = Sources.read(spark, src, allFiles.map(_.getPath.toString)).schema
+          (resolveIndexSchema(merged, partitionSchema, columns, indexAll), merged)
       }
 
     // Same sibling lock refresh holds: a create (overwrite deletes the
     // index dir) cannot interleave with a live refresh of the same index.
     graft.ops.MaintenanceLock.withSiblingLock(
         metastore.fs, metastore.location(dataspace, roots)) {
-    metastore.create(dataspace, roots, mode) { indexDir =>
+    metastore.create(dataspace, roots, mode) { indexDir => underJobTag(spark) {
       SketchStore.invalidate(new Path(indexDir, Metastore.SketchDir))
       IndexFilesTable.invalidate(new Path(indexDir, Metastore.FilesDir))
       val numParts =
@@ -190,24 +192,28 @@ object IndexedDataSource {
           }
         }
 
-      // footer job writes the per-file stats table executor-side and
-      // returns only the merged schema + counts (driver never holds
-      // per-file stats — scales to millions of files)
-      val summary = StatisticsBuilder.writeFileStats(
-        spark, refs, indexSchema, numParts, new Path(indexDir, Metastore.FilesDir),
-        source = src)
+      // One pass over every file: footer stats, one sketch per (file,
+      // column) sized by that file's rows, and range stats from the data
+      // for footer holes (INT96 timestamps, non-round-tripping truncated
+      // binary bounds, ORC NTZ timestamps — the reference's legacy-table
+      // coverage, ParquetIndexReadSupport.scala:64-73). Both tables are
+      // written from the executors; the driver gets only the merged
+      // schema and counts, so builds scale to millions of files.
+      val sketchKind = if (conf.filterEnabled && indexSchema.nonEmpty) Some(conf.filterType) else None
+      val summary =
+        if (refs.isEmpty) StatisticsBuilder.FileStatsSummary(None, 0L, 0L)
+        else StatisticsBuilder.withPass(spark, refs, indexSchema, readSchema, sketchKind,
+            conf.minMaxFallback, numParts, src) { pass =>
+          val (summary, sketchBytes) = StatisticsBuilder.summarize(pass)
+          StatisticsBuilder.writeFileStats(
+            spark, pass, new Path(indexDir, Metastore.FilesDir), "overwrite")
+          if (sketchKind.isDefined) {
+            StatisticsBuilder.writeSketches(spark, pass, new Path(indexDir, Metastore.SketchDir),
+              StatisticsBuilder.sketchParts(spark, sketchBytes))
+          }
+          summary
+        }
       val dataSchema = summary.dataSchema.getOrElse(firstSchema)
-
-      // Columns whose footers carried no usable min/max (INT96 timestamps,
-      // non-round-tripping truncated binary bounds, ORC NTZ timestamps)
-      // get RANGE stats from a full scan of only the affected files —
-      // restoring the reference's legacy-table coverage
-      // (ParquetIndexReadSupport.scala:64-73).
-      if (conf.minMaxFallback && indexSchema.nonEmpty && refs.nonEmpty) {
-        StatisticsBuilder.fullScanMinMaxFallback(
-          spark, new Path(indexDir, Metastore.FilesDir), indexSchema, source = src,
-          dataSchema = summary.dataSchema)
-      }
 
       // Seed the dir-mtime manifest for incremental refresh listing
       // (only worth maintaining at distributed-listing scale): every
@@ -255,19 +261,6 @@ object IndexedDataSource {
           .parquet(new Path(indexDir, Metastore.DirsDir).toString)
       }
 
-      val sketchKind = if (conf.filterEnabled && indexSchema.nonEmpty) Some(conf.filterType) else None
-      sketchKind.foreach { kind =>
-        // Sketches cover a whole file, so size blooms by the largest
-        // per-file row SUM, not the largest single row group — a
-        // multi-row-group file would otherwise get an undersized bloom
-        // (sound, but higher FPP → weaker pruning).
-        StatisticsBuilder.buildSketches(
-          spark, allFiles.map(_.getPath.toString), indexSchema, kind,
-          expectedItems = math.max(4096L, summary.maxFileRows),
-          new Path(indexDir, Metastore.SketchDir), source = src,
-          dataSchema = summary.dataSchema)
-      }
-
       metastore.writeMetadata(indexDir, IndexMetadata(
         // the LOWEST version describing this schema, so indexes without
         // new-domain fields stay readable by older binaries
@@ -286,7 +279,7 @@ object IndexedDataSource {
         },
         fileCount = summary.fileCount,
         totalBytes = summary.totalBytes))
-    }
+    } } // underJobTag, metastore.create
     } // withSiblingLock
   }
 
@@ -456,16 +449,17 @@ object IndexedDataSource {
     *   - below it, everything the refresh decides runs on the driver,
     *     over rows that are driver-sized anyway: Spark's InMemoryFileIndex
     *     lists the table, the old rows are read once (parquet-mr, past
-    *     the reader cache) and diffed in a hash set, the footer job runs
-    *     over the added files only and its rows are collected, the
-    *     min/max fallback patches those rows in memory (its scan runs
-    *     only when a file needs it), and the new metadata is summarized
-    *     from kept + added rows. Spark jobs: the footer job, the sketch
-    *     filter, the delta sketch build, and the fallback scan if any;
+    *     the reader cache) and diffed in a hash set, the stats pass runs
+    *     over the added files only (footers, sketches and the min/max
+    *     fallback from one read of each file) and its file rows are collected,
+    *     and the new metadata is summarized from kept + added rows.
+    *     Removed paths leave the sketch table by whole part files (see
+    *     [[StatisticsBuilder.stageSketchRemovals]]). Spark jobs: the pass,
+    *     and the write of the delta's sketches as one part file;
     *   - at/above it, the listing is a distributed level-walk and the diff
     *     a full-outer join that collects only the added refs, so driver
     *     residency stays O(dirs + partitions + delta); stale rows drop by
-    *     a semi-join, the footer job writes from executors, and removals
+    *     a semi-join, the pass writes from executors, and removals
     *     re-summarize the settled table.
     *
     * Partition dirs keep their original indexes (the metadata partition
@@ -474,13 +468,16 @@ object IndexedDataSource {
     * Write, then swap. Under the index's sibling maintenance lock, every
     * write goes to staging dirs first: `files_tmp` holds the whole new
     * files table when files were removed (sorted by partitionIdx, path),
-    * else the delta's part file; `sketches_tmp` likewise holds the live
-    * old sketch rows (removals only) plus the delta's sketches. Only then
-    * is `_SUCCESS` removed, the staged tables moved into place (a
-    * delete + rename, or a part-file move for an append), the metadata
-    * written and `_SUCCESS` restored. A refresh that fails before the
-    * swap — an unreadable added file failing the footer job, say —
-    * leaves the index loadable and unchanged, and a rerun converges. A
+    * else the delta's part file; `sketches_tmp` holds the delta's
+    * sketches, plus the live old rows (the distributed tier, removals
+    * only) or the filtered copies of part files mixing live and removed
+    * paths (the driver tier). Only then is `_SUCCESS` removed, the staged
+    * tables moved into place (a delete + rename, or a part-file move that
+    * first deletes the replaced parts), the metadata written and
+    * `_SUCCESS` restored. A refresh that fails before the swap — an
+    * unreadable added file failing the pass, say — cancels its Spark
+    * jobs, waits for their tasks to end, deletes the staging and leaves
+    * the index loadable and unchanged; a rerun converges. A
     * crash inside the swap window fails subsequent loads ("create it
     * first") instead of serving a torn index; re-create to recover.
     *
@@ -533,7 +530,7 @@ object IndexedDataSource {
         spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
     val metaRoots = meta.rootPathStrings.map(new Path(_))
 
-    try {
+    try underJobTag(spark) {
       val (staged, commitManifest) =
         if (meta.fileCount < conf.distributedPruningThreshold) {
           // the driver tier does not maintain the dir manifest — drop any
@@ -569,7 +566,8 @@ object IndexedDataSource {
           IndexFilesTable.invalidate(dirs.files)
           fs.delete(new Path(indexDir, Metastore.SuccessFile), false)
           install(fs, dirs.filesTmp, dirs.files, st.replace)
-          install(fs, dirs.sketchTmp, dirs.sketches, st.replace)
+          install(fs, dirs.sketchTmp, dirs.sketches, st.replace && st.sketchDrop.isEmpty,
+            st.sketchDrop.getOrElse(Nil))
           metastore.writeMetadata(indexDir, meta.copy(
             dataSchema = st.dataSchema,
             partitionValues = partValues.toSeq,
@@ -602,13 +600,16 @@ object IndexedDataSource {
 
   /** A refresh written to the staging dirs, with the metadata it commits.
     * `replace`: the staged tables are whole (files were removed); else
-    * they hold only the delta's part files. */
+    * they hold only the delta's part files. `sketchDrop`: the sketch
+    * table is staged by part files instead — these live parts go, the
+    * staged ones join the rest. */
   private case class Staged(added: Long, removed: Long, replace: Boolean,
-      fileCount: Long, totalBytes: Long, dataSchema: StructType)
+      fileCount: Long, totalBytes: Long, dataSchema: StructType,
+      sketchDrop: Option[Seq[String]] = None)
 
-  /** Driver tier of [[refreshIndex]]: listing, diff, fallback and summary
-    * on the driver; Spark runs the footer job over the added files, the
-    * sketch filter and the delta sketch build. None = nothing changed. */
+  /** Driver tier of [[refreshIndex]]: listing, diff and summary on the
+    * driver; Spark runs the pass over the added files and writes their
+    * sketches. None = nothing changed. */
   private def stageOnDriver(
       spark: SparkSession,
       conf: IndexConf,
@@ -649,14 +650,18 @@ object IndexedDataSource {
     val added = current.filterNot { case (_, r) => oldKeys((r.path, r.size, r.modificationTime)) }
     if (added.isEmpty && removed.isEmpty) return None
 
-    val footers = StatisticsBuilder.collectFileStats(
-      spark, added, meta.indexSchema, numParts, meta.source)
-    val deltaSummary = StatisticsBuilder.summarizeRows(footers)
     val delta =
-      if (conf.minMaxFallback && meta.indexSchema.nonEmpty) {
-        StatisticsBuilder.patchMinMax(
-          spark, footers, meta.indexSchema, meta.source, deltaSummary.dataSchema)
-      } else footers
+      if (added.isEmpty) Nil
+      else StatisticsBuilder.withPass(spark, added, meta.indexSchema, meta.dataSchema,
+          meta.sketchKind, conf.minMaxFallback, numParts, meta.source) { pass =>
+        val rows = pass.map(_._1).collect().toSeq
+        if (meta.sketchKind.isDefined) StatisticsBuilder.writeSketches(spark, pass, dirs.sketchTmp, 1)
+        rows
+      }
+    // a path rewritten in place is in `removed` too, so its old sketch
+    // rows go with the part files they sit in
+    val sketchDrop = StatisticsBuilder.stageSketchRemovals(dirs.sketches,
+      removed.iterator.map(r => SketchStore.normalizePath(r.path)).toSet, dirs.sketchTmp, hconf)
     val rows = kept ++ delta
     val summary = StatisticsBuilder.summarizeRows(rows)
 
@@ -666,25 +671,13 @@ object IndexedDataSource {
         a.partitionIdx < b.partitionIdx ||
           (a.partitionIdx == b.partitionIdx && Canon.compare(a.path, b.path) < 0)
       }, hconf)
-    meta.sketchKind.foreach { kind =>
-      val fs = dirs.sketches.getFileSystem(hconf)
-      if (replace && fs.exists(dirs.sketches)) {
-        StatisticsBuilder.filterSketches(spark, dirs.sketches,
-          kept.iterator.map(r => SketchStore.normalizePath(r.path)).toSet, dirs.sketchTmp)
-      }
-      // sketch sizing covers the files being sketched — the ADDED ones
-      StatisticsBuilder.buildSketches(
-        spark, delta.map(_.path), meta.indexSchema, kind,
-        expectedItems = math.max(4096L, deltaSummary.maxFileRows),
-        dirs.sketchTmp, mode = "append", source = meta.source, dataSchema = deltaSummary.dataSchema)
-    }
     Some(Staged(added.size.toLong, removed.size.toLong, replace, summary.fileCount,
-      summary.totalBytes, summary.dataSchema.getOrElse(meta.dataSchema)))
+      summary.totalBytes, summary.dataSchema.getOrElse(meta.dataSchema), Some(sketchDrop)))
   }
 
   /** Distributed tier of [[refreshIndex]], after the distributed diff: the
-    * stale-row semi-join, the footer job and the summaries run as Spark
-    * jobs over the files table. None = nothing changed. */
+    * stale-row semi-joins, the pass and the summaries run as Spark jobs
+    * over the index tables. None = nothing changed. */
   private def stageDistributed(
       spark: SparkSession,
       conf: IndexConf,
@@ -695,29 +688,42 @@ object IndexedDataSource {
       removedCount: Long,
       numParts: Int): Option[Staged] = {
     import org.apache.spark.sql.functions.col
-    import spark.implicits._
     if (addedRefs.isEmpty && removedCount == 0) return None
     val replace = removedCount > 0
-    val readFiles = () => spark.read.schema(IndexFilesTable.Schema).parquet(dirs.files.toString)
+    val fs = dirs.sketches.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    // 1. Kept rows (semi-join against the live listing keys), then the
-    //    footer job over the added files only, appended beside them.
+    // 1. Kept rows (semi-join against the live listing keys), then their
+    //    sketch rows (semi-join against the kept paths). A path rewritten
+    //    in place has a new key, so neither its old row nor its old
+    //    sketches survive.
     if (replace) {
-      readFiles().join(currentKeys, RefreshKey, "left_semi")
+      spark.read.schema(IndexFilesTable.Schema).parquet(dirs.files.toString)
+        .join(currentKeys, RefreshKey, "left_semi")
         .sort(col("partitionIdx"), col("path"))
         .write.mode("overwrite").parquet(dirs.filesTmp.toString)
+      if (meta.sketchKind.isDefined && fs.exists(dirs.sketches)) {
+        val keptKeys = spark.read.schema(IndexFilesTable.Schema).parquet(dirs.filesTmp.toString)
+          .select(graft.functions.exprs.normalize_path(col("path")).as("file"))
+        spark.read.schema(SketchStore.Schema).parquet(dirs.sketches.toString)
+          .join(keptKeys, Seq("file"), "left_semi")
+          .sort(col("file"), col("column"))
+          .write.mode("overwrite").parquet(dirs.sketchTmp.toString)
+      }
     }
-    val delta = StatisticsBuilder.writeFileStats(
-      spark, addedRefs, meta.indexSchema, numParts, dirs.filesTmp, mode = "append",
-      source = meta.source, summarizeDelta = true)
-    // Detection only fires on statless rows, which can only be the delta —
-    // scope the blocksJson parse to it too.
-    if (addedRefs.nonEmpty && conf.minMaxFallback && meta.indexSchema.nonEmpty) {
-      StatisticsBuilder.fullScanMinMaxFallback(
-        spark, dirs.filesTmp, meta.indexSchema, source = meta.source,
-        onlyPaths = Some(addedRefs.map(_._2.path)), dataSchema = delta.dataSchema)
-    }
-    // 2. Metadata. Append-only refreshes compose it incrementally (schema
+    // 2. The pass over the added files, appended beside them.
+    val delta =
+      if (addedRefs.isEmpty) StatisticsBuilder.FileStatsSummary(None, 0L, 0L)
+      else StatisticsBuilder.withPass(spark, addedRefs, meta.indexSchema, meta.dataSchema,
+          meta.sketchKind, conf.minMaxFallback, numParts, meta.source) { pass =>
+        StatisticsBuilder.writeFileStats(spark, pass, dirs.filesTmp, "append")
+        val (summary, sketchBytes) = StatisticsBuilder.summarize(pass)
+        if (meta.sketchKind.isDefined) {
+          StatisticsBuilder.writeSketches(spark, pass, dirs.sketchTmp,
+            StatisticsBuilder.sketchParts(spark, sketchBytes))
+        }
+        summary
+      }
+    // 3. Metadata. Append-only refreshes compose it incrementally (schema
     //    only ever widens — exact, since nothing was removed; a 1-file
     //    append must never re-aggregate the whole 10^6-row files table).
     //    With removals the composition would DRIFT (a removed file's
@@ -732,53 +738,56 @@ object IndexedDataSource {
           delta.dataSchema.map(SparkInternals.mergeSchemas(meta.dataSchema, _))
             .getOrElse(meta.dataSchema))
       }
-
-    // 3. Sketches: the live old rows (removals only — semi-join against the
-    //    staged files table), then the added files' sketches. Rows of
-    //    RE-SKETCHED paths are anti-joined out too: a file rewritten at
-    //    the same path (removed + added by the diff) is live again, so the
-    //    semi-join alone would keep its stale row next to the fresh
-    //    append — a duplicate (file, column) key whose stale sketch could
-    //    win a probe and mis-prune the rewritten content.
-    meta.sketchKind.foreach { kind =>
-      val fs = dirs.sketches.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (replace && fs.exists(dirs.sketches)) {
-        val normPath = (c: org.apache.spark.sql.Column) => graft.functions.exprs.normalize_path(c)
-        val liveKeys = spark.read.schema(IndexFilesTable.Schema).parquet(dirs.filesTmp.toString)
-          .select(normPath(col("path")).as("file"))
-        val addedKeys = addedRefs.map(r => SketchStore.normalizePath(r._2.path)).toDF("file")
-        spark.read.schema(SketchStore.Schema).parquet(dirs.sketches.toString)
-          .join(liveKeys, Seq("file"), "left_semi")
-          .join(addedKeys, Seq("file"), "left_anti")
-          .sort(col("file"), col("column"))
-          .write.mode("overwrite").parquet(dirs.sketchTmp.toString)
-      }
-      // sketch sizing covers the files being sketched — the ADDED ones
-      StatisticsBuilder.buildSketches(
-        spark, addedRefs.map(_._2.path), meta.indexSchema, kind,
-        expectedItems = math.max(4096L, delta.maxFileRows),
-        dirs.sketchTmp, mode = "append", source = meta.source, dataSchema = delta.dataSchema)
-    }
     Some(Staged(addedRefs.map(_._2.path).distinct.size.toLong, removedCount, replace,
       fileCount, totalBytes, dataSchema))
   }
 
   /** Move a staged table into place: the whole dir when `replace` (or
-    * when there is no live table yet), else its part files join the live
-    * ones. A table that was not staged is left as it is. */
-  private def install(
-      fs: org.apache.hadoop.fs.FileSystem, staged: Path, live: Path, replace: Boolean): Unit =
-    if (fs.exists(staged)) {
-      if (replace || !fs.exists(live)) {
+    * when there is no live table yet); else the live part files named in
+    * `drop` are deleted and the staged part files join the rest. A table
+    * that was not staged keeps its live parts, less those in `drop`. */
+  private def install(fs: org.apache.hadoop.fs.FileSystem, staged: Path, live: Path,
+      replace: Boolean, drop: Seq[String] = Nil): Unit =
+    if (replace || !fs.exists(live)) {
+      if (fs.exists(staged)) {
         if (fs.exists(live)) fs.delete(live, true)
         fs.rename(staged, live)
-      } else {
+      }
+    } else {
+      drop.foreach(n => fs.delete(new Path(live, n), false))
+      if (fs.exists(staged)) {
         fs.listStatus(staged).map(_.getPath)
           .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
           .foreach(p => fs.rename(p, new Path(live, p.getName)))
         fs.delete(staged, true)
       }
     }
+
+  /** Runs `body` with its Spark jobs under a job tag of their own (a tag
+    * leaves any job group of the caller in place). If `body` throws, the
+    * tagged jobs are cancelled and this waits (up to a minute) until
+    * every task they started has ended, so no late task of an aborted
+    * write recreates a staging dir after the caller's cleanup. */
+  private def underJobTag[T](spark: SparkSession)(body: => T): T = {
+    val sc = spark.sparkContext
+    val tag = s"graft-index-${java.util.UUID.randomUUID()}"
+    sc.addJobTag(tag)
+    try body
+    catch {
+      case e: Throwable =>
+        sc.cancelJobsWithTag(tag)
+        val tracker = sc.statusTracker
+        val deadline = System.nanoTime() + 60L * 1000L * 1000L * 1000L
+        def running = tracker.getJobIdsForTag(tag).exists { id =>
+          tracker.getJobInfo(id).exists { j =>
+            j.status == org.apache.spark.JobExecutionStatus.RUNNING ||
+              j.stageIds.exists(st => tracker.getStageInfo(st).exists(_.numActiveTasks > 0))
+          }
+        }
+        while (running && System.nanoTime() < deadline) Thread.sleep(10)
+        throw e
+    } finally sc.removeJobTag(tag)
+  }
 
   /** The distributed listing + diff tier of [[refreshIndex]]: a level-walk
     * over the table's directory tree — each level is one Spark job whose

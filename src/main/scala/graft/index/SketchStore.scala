@@ -8,16 +8,20 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.MessageTypeParser
 
-/** Driver-side access to the per-(file × column) sketch table written by
-  * [[StatisticsBuilder.buildSketches]].
+import org.apache.spark.sql.types.StructType
+
+/** Driver-side access to the per-(file × column) sketch table written
+  * from the stats pass ([[StatisticsBuilder.writeSketches]]).
   *
-  * Scale design (the round-1 verdict's #1 scale-killer, now removed): the
-  * sketch table is sorted by file path at write time, and reads are
-  * pruned with a parquet `file IN (...)` predicate — min/max pruning runs
+  * Scale design (the round-1 verdict's #1 scale-killer, now removed):
+  * each part file of the sketch table is sorted by (file, column), and
+  * the pass's slices cover disjoint path ranges, so a part's row groups
+  * span narrow path ranges; reads are pruned with a parquet
+  * `file IN (...)` predicate — min/max pruning runs
   * first, so only the sketch bytes of SURVIVING files are ever pulled to
   * the driver (row-group stats + dictionary filtering skip the rest).
   * Loaded sketches deserialize lazily per (file, column) on first probe
@@ -48,28 +52,21 @@ class SketchStore(dir: Path, conf: Configuration) {
       files.foreach(_.foreach(loadedFiles.put(_, true)))
       return
     }
-    val builder = ParquetReader.builder(new GroupReadSupport(), dir).withConf(conf)
-    val withFilter = missing match {
+    val filter = missing match {
       case Some(fs) =>
         val javaSet = new java.util.HashSet[Binary](fs.size * 2)
         fs.foreach(f => javaSet.add(Binary.fromString(f)))
-        builder.withFilter(FilterCompat.get(
-          FilterApi.in(FilterApi.binaryColumn("file"), javaSet)))
-      case None => builder
+        FilterCompat.get(FilterApi.in(FilterApi.binaryColumn("file"), javaSet))
+      case None => FilterCompat.NOOP
     }
-    val reader = withFilter.build()
-    try {
-      var g = reader.read()
-      while (g != null) {
-        val file = SketchStore.normalizePath(g.getString("file", 0))
-        val column = g.getString("column", 0)
-        val kind = g.getString("kind", 0)
-        val data = g.getBinary("data", 0).getBytes
-        bytesByKey.put((file, column), (kind, data))
-        rowsRead.add(1L)
-        g = reader.read()
-      }
-    } finally reader.close()
+    IndexFilesTable.readGroups(dir, conf, filter) { g =>
+      val file = SketchStore.normalizePath(g.getString("file", 0))
+      val column = g.getString("column", 0)
+      val kind = g.getString("kind", 0)
+      val data = g.getBinary("data", 0).getBytes
+      bytesByKey.put((file, column), (kind, data))
+      rowsRead.add(1L)
+    }
     missing match {
       case Some(fs) => fs.foreach(loadedFiles.put(_, true))
       case None => allLoaded = true
@@ -102,10 +99,43 @@ class SketchStore(dir: Path, conf: Configuration) {
 object SketchStore {
 
   /** The table's Spark schema, pinned on every Spark read of it. */
-  val Schema: org.apache.spark.sql.types.StructType = {
+  val Schema: StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq("file", "column", "kind").map(StructField(_, StringType)) :+
       StructField("data", BinaryType))
+  }
+
+  /** The parquet schema Spark's writer gives the stats pass's sketch rows
+    * (`file` is never null), and the Spark schema its footer records. */
+  private lazy val partSchema = MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  required binary file (STRING);
+      |  optional binary column (STRING);
+      |  optional binary kind (STRING);
+      |  optional binary data;
+      |}""".stripMargin)
+  private lazy val rowMetadata = java.util.Map.of(
+    "org.apache.spark.version", org.apache.spark.SPARK_VERSION,
+    "org.apache.spark.sql.parquet.row.metadata",
+    StructType(Schema.fields.updated(0, Schema.fields(0).copy(nullable = false))).json)
+
+  /** Writes the rows `rows` puts, in their order, as the one part file
+    * `file`, in the layout Spark's writer gives them (snappy, Spark schema
+    * in the footer). Returns the number of rows. */
+  def writePart(file: Path, conf: Configuration)(
+      rows: (StatisticsBuilder.SketchRow => Unit) => Unit): Long = {
+    var n = 0L
+    val writer = IndexFilesTable.groupWriter(file, partSchema, rowMetadata, conf)
+    try rows { case (f, c, k, d) =>
+      val g = new SimpleGroup(partSchema)
+      g.add("file", f)
+      g.add("column", c)
+      g.add("kind", k)
+      g.add("data", Binary.fromConstantByteArray(d))
+      writer.write(g)
+      n += 1
+    } finally writer.close()
+    n
   }
 
   private val cache = new TrieMap[String, SketchStore]()

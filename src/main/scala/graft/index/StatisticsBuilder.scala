@@ -2,35 +2,47 @@ package graft.index
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType}
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
+import org.apache.spark.{TaskContext, TaskKilledException}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
+import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.SparkInternals
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.SerializableConfiguration
 
-/** Distributed index-statistics collection (replaces the reference's
-  * ParquetStatisticsRDD full-data scan — SURVEY.md §7.1 deltas #2/#3):
-  *
-  *   1. min/max/null per row group come from Parquet footers only — a
-  *      metadata-read job over the file list (no data pass);
-  *   2. membership sketches (when enabled) are built with ONE declarative
-  *      DataFrame aggregation: scan indexed columns, group by
-  *      input_file_name(), aggregate with [[SketchAgg]] — map-side partial
-  *      sketches, tiny shuffle (one serialized sketch per file × column).
-  *
-  * Both steps scale with the cluster: footers job = one cheap task per file
-  * slice; sketch job = a normal whole-stage-codegen parquet scan.
+/** Index-statistics collection: ONE executor pass per data file, as the
+  * reference's ParquetStatisticsRDD reads each file's footer and data in
+  * one task (SURVEY.md §3.1 step 5, reference ParquetStatisticsRDD.scala:
+  * 123-276). A task owns whole files; for each it
+  *   1. reads the footer: the file's schema plus min/max/null per row
+  *      group (footers replace the reference's full-data min/max scan,
+  *      SURVEY.md §7.1 deltas #2/#3);
+  *   2. reads, through Spark's own file reader, only the columns it
+  *      needs: the sketch columns, plus the fallback columns when the
+  *      footer left holes in this file (INT96 timestamps and the like);
+  *   3. builds one membership sketch per indexed column and patches the
+  *      holes with the file's own data bounds.
+  * The pass is persisted for one index operation: create and the
+  * distributed refresh write the files table from it, the driver-tier
+  * refresh collects its file rows, and the sketch rows are written from
+  * the same cache, with no shuffle.
   */
 object StatisticsBuilder {
 
@@ -38,15 +50,15 @@ object StatisticsBuilder {
     * (`created_by`)? Only NaN-POISONING writers qualify: parquet-mr's
     * sticky Math.min/max fold turns both bounds to NaN the moment a NaN
     * value arrives, so a surviving non-NaN bound pair proves the chunk
-    * holds no NaN (FpNanFooterSpec pins that behavior against the
-    * bundled writer). Spec-recommended NaN-SKIPPING writers
+    * holds no NaN (MetadataAggSpec's FP footer test pins that behavior
+    * against the bundled writer). Spec-recommended NaN-SKIPPING writers
     * (arrow/parquet-cpp) and unknown writers leave no trace of NaN
     * presence — their bounds exclude a value Spark orders ABOVE max, so
-    * they degrade to the full-scan fallback instead. */
+    * they degrade to the min/max fallback instead. */
   def fpFooterTrusted(createdBy: Option[String]): Boolean =
     createdBy.exists(_.startsWith("parquet-mr"))
 
-  /** Serializable file handle shipped to the footer job. `hosts` carries
+  /** Serializable file handle shipped to the pass. `hosts` carries
     * the file's block hosts for task locality (reference
     * ParquetStatisticsRDD.getPreferredLocations, :100-121). */
   case class FileRef(
@@ -63,7 +75,7 @@ object StatisticsBuilder {
     def rowCount: Long = blocks.map(_.rowCount).sum
   }
 
-  /** One indexed field as shipped to the footer-reading executors:
+  /** One indexed field as shipped to the pass's executors:
     * `(name, dataTypeJson, dom, base, rest)` where dom is
     * [[IndexMetadata.domainOf]]'s code, `base` the dotted path of the
     * COLLECTION column for member domains (= name for plain
@@ -84,145 +96,358 @@ object StatisticsBuilder {
     (f.name, f.dataType.json, dom, base, rest)
   }
 
-  /** Driver-side summary of the footer job (everything metadata.json
-    * needs; per-file rows live only in the written files table). */
-  case class FileStatsSummary(
-      dataSchema: Option[StructType],
-      fileCount: Long,
-      totalBytes: Long,
-      maxFileRows: Long)
+  /** Driver-side summary of indexed files: everything metadata.json needs
+    * beyond the files table. */
+  case class FileStatsSummary(dataSchema: Option[StructType], fileCount: Long, totalBytes: Long)
 
-  /** The footer job's rows: per-row-group statistics for `indexSchema`
-    * columns plus each file's schema, one [[FileStatsRow]] per ref, read
-    * on executors. Tasks prefer the hosts holding the most bytes of their
-    * slice. */
-  private def footerRows(
+  /** One row of the sketch table: (normalized file, column, kind, data). */
+  type SketchRow = (String, String, String, Array[Byte])
+
+  /** What the pass emits per data file: its files-table row, footer holes
+    * patched, and its sketch rows. */
+  type PassRow = (FileStatsRow, Array[SketchRow])
+
+  /** Runs `body` over the pass for `refs` (nonempty), persisted while
+    * `body` runs. `schema` is the table's merged schema as the caller
+    * knows it (the index metadata's, or at create the schema the index
+    * columns were resolved against); if an indexed column the pass reads
+    * does not resolve in it, the files' own merged schema is inferred
+    * instead. `sketchKind` None builds no sketches; `fallback` patches
+    * footer holes from the data. */
+  def withPass[T](
       spark: SparkSession,
       refs: Seq[(Int, FileRef)],
       indexSchema: StructType,
+      schema: StructType,
+      sketchKind: Option[String],
+      fallback: Boolean,
       numPartitions: Int,
-      source: String): org.apache.spark.rdd.RDD[FileStatsRow] = {
-    val src = Sources.normalize(source)
-    val confBc = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
-    val fields = indexSchema.fields.map(domainSpec)
-    val slices = math.max(1, math.min(numPartitions, refs.size))
-    val perSlice = (refs.size + slices - 1) / slices
-    val grouped: Seq[(Seq[(Int, FileRef)], Seq[String])] =
-      refs.grouped(perSlice).toSeq.map { g =>
-        val byHost = g.flatMap { case (_, r) => r.hosts.map(_ -> r.size) }
-          .groupBy(_._1).view.mapValues(_.map(_._2).sum)
-        val top = byHost.toSeq.sortBy(-_._2).take(3).map(_._1)
-        (g, top)
-      }
-    spark.sparkContext
-      .makeRDD(grouped)
-      .flatMap { group =>
-        val types = fields.map { case (n, dj, dom, base, rest) =>
-          (n, DataType.fromJson(dj), dom, base, rest) }
-        group.iterator.map { case (partitionIdx, ref) =>
-          val footer =
-            if (src == Sources.Orc) readOrcBlocks(ref.path, types, confBc.value.value)
-            else readFooterBlocks(ref.path, types, confBc.value.value)
-          FileStatsRow(partitionIdx, ref.path, ref.size, ref.modificationTime,
-            ref.blockSize, ref.locationsJson, footer.schemaJson,
-            IndexMetadata.blocksToJsonString(footer.blocks), footer.rowCount)
-        }
-      }
+      source: String)(body: RDD[PassRow] => T): T = {
+    val rdd = pass(spark, refs, indexSchema, schema, sketchKind, fallback, numPartitions,
+      Sources.normalize(source)).persist(StorageLevel.MEMORY_AND_DISK)
+    try body(rdd)
+    finally { rdd.unpersist(); () }
   }
 
-  /** The footer job, with its rows written STRAIGHT from the executors to
-    * the `files` parquet table — per-file stats never materialize on the
-    * driver, so index builds scale to millions of files. Returns the
-    * merged data schema + counts. */
-  def writeFileStats(
+  /** The pass. Slices are cut from the refs sorted by normalized path, so
+    * each task's output covers a disjoint file range; tasks prefer the
+    * hosts holding the most bytes of their slice (reference
+    * ParquetStatisticsRDD.getPreferredLocations, :100-121). The column
+    * inputs are resolved and bound once, here: a dotted struct leaf, an
+    * array (its elements), an array-of-struct leaf (the leaf of every
+    * element), a map (its keys) or `map_values` of a map; a column the
+    * schema lacks reads as null, so its sketch is empty. Two readers are
+    * built: the sketch columns alone, and the sketch columns plus every
+    * fallback column, for files whose footers have holes. */
+  private def pass(
       spark: SparkSession,
       refs: Seq[(Int, FileRef)],
       indexSchema: StructType,
+      known: StructType,
+      sketchKind: Option[String],
+      fallback: Boolean,
       numPartitions: Int,
-      filesDir: Path,
-      mode: String = "overwrite",
-      source: String = Sources.Parquet,
-      summarizeDelta: Boolean = false): FileStatsSummary = {
-    if (refs.isEmpty) return FileStatsSummary(None, 0L, 0L, 0L)
-    val frame = spark.createDataFrame(footerRows(spark, refs, indexSchema, numPartitions, source))
-    if (!summarizeDelta) {
-      frame.sortWithinPartitions("partitionIdx", "path")
-        .write.mode(mode).parquet(filesDir.toString)
-      summarizeFilesTable(spark, filesDir)
-    } else {
-      // delta-scoped summary: counts/schema over THESE refs only, so a
-      // refresh never re-aggregates the whole table (O(all files), with
-      // the schemaJson blob column read row by row) for a small append —
-      // the caller composes the global summary incrementally from the
-      // previous metadata. Persist so the footer job runs once (the
-      // summary aggregation would otherwise recompute the RDD and read
-      // every delta footer a second time).
-      frame.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        frame.sortWithinPartitions("partitionIdx", "path")
-          .write.mode(mode).parquet(filesDir.toString)
-        summarizeFrame(frame)
-      } finally {
-        frame.unpersist()
-        ()
+      src: String): RDD[PassRow] = {
+    // by name, so each file's sketch rows come out in (file, column) order
+    val sketchFields =
+      if (sketchKind.isEmpty) Nil
+      else indexSchema.fields.toSeq.sortWith((a, b) => Canon.compare(a.name, b.name) < 0)
+    // element-domain fields are no fallback columns: min(arrayCol) is the
+    // wrong domain (lexicographic array order, not element bounds); a
+    // statless array column stays may-contain, with the sketch still
+    // answering membership
+    val fallbackFields =
+      if (fallback) indexSchema.fields.toSeq.filterNot(IndexMetadata.isElementDomain) else Nil
+    val column = (f: StructField) =>
+      if (IndexMetadata.isMapValue(f)) IndexMetadata.mapValueBase(f.name) else f.name
+    val (schema, frame) = {
+      val knownFrame = SparkInternals.emptyFrame(spark, known)
+      if ((sketchFields ++ fallbackFields).forall(f => hasColumn(knownFrame, column(f)))) {
+        (known, knownFrame)
+      } else {
+        val inferred = Sources.read(spark, src, refs.map(_._2.path)).schema
+        (inferred, SparkInternals.emptyFrame(spark, inferred))
+      }
+    }
+    val input = (f: StructField) =>
+      if (!hasColumn(frame, column(f))) {
+        lit(null).cast(if (IndexMetadata.isMapValue(f)) ArrayType(f.dataType) else f.dataType)
+      } else if (IndexMetadata.isMapValue(f)) map_values(col(column(f)))
+      else col(f.name)
+    val sketchCols = sketchFields.map(input)
+    val (sketchSchema, sketchExprs) = SparkInternals.bindColumns(frame, sketchCols)
+    val (fullSchema, fullExprs) =
+      SparkInternals.bindColumns(frame, sketchCols ++ fallbackFields.map(input))
+    val sketchRead = if (sketchFields.isEmpty) None
+      else Some((SparkInternals.fileReader(spark, src, schema, sketchSchema), sketchExprs.toArray))
+    val fullRead = if (fallbackFields.isEmpty) None
+      else Some((SparkInternals.fileReader(spark, src, schema, fullSchema), fullExprs.toArray))
+    val kinds = sketchFields.map(f => f.name -> Sketch.resolveKind(sketchKind.get, f.dataType)).toArray
+    val holeCols = fallbackFields.map(f => f.name -> f.dataType).toArray
+    val fields = indexSchema.fields.map(domainSpec)
+    val confBc = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+
+    val keyed = refs.map(r => SketchStore.normalizePath(r._2.path) -> r)
+      .sortWith((a, b) => Canon.compare(a._1, b._1) < 0)
+    val slices = math.max(1, math.min(numPartitions, keyed.size))
+    val perSlice = (keyed.size + slices - 1) / slices
+    val grouped = keyed.grouped(perSlice).toSeq.map { g =>
+      val byHost = g.flatMap { case (_, (_, r)) => r.hosts.map(_ -> r.size) }
+        .groupBy(_._1).view.mapValues(_.map(_._2).sum)
+      (g, byHost.toSeq.sortBy(-_._2).take(3).map(_._1))
+    }
+    spark.sparkContext.makeRDD(grouped).flatMap { group =>
+      val types = fields.map { case (n, dj, dom, base, rest) =>
+        (n, DataType.fromJson(dj), dom, base, rest) }
+      val conf = confBc.value.value
+      group.iterator.map { case (file, (partitionIdx, ref)) =>
+        // a cancelled task stops between files
+        if (TaskContext.get().isInterrupted()) throw new TaskKilledException("cancelled")
+        val footer =
+          if (src == Sources.Orc) readOrcBlocks(ref.path, types, conf)
+          else readFooterBlocks(ref.path, types, conf)
+        val holes = holeCols.indices.filter { j =>
+          footer.blocks.exists(b => b.columns.get(holeCols(j)._1).exists(statless(_, b.rowCount)))
+        }.toArray
+        // one sketch per column, sized by the file's own row count
+        val sketches = kinds.map { case (_, kind) => Sketch.create(kind, math.max(4096L, footer.rowCount)) }
+        val read = if (holes.isEmpty) sketchRead else fullRead
+        val bounds = read.filter(_ => footer.rowCount > 0).fold(Map.empty[String, (Any, Any)]) {
+          case (open, exprs) => scan(open(ref.path, ref.size, ref.modificationTime), exprs,
+            sketches, holes.map(j => (holeCols(j), kinds.length + j)))
+        }
+        val row = FileStatsRow(partitionIdx, ref.path, ref.size, ref.modificationTime,
+          ref.blockSize, ref.locationsJson, footer.schemaJson,
+          IndexMetadata.blocksToJsonString(patchBlocks(footer.blocks, bounds)), footer.rowCount)
+        // a file without rows gets no sketch rows: its zero blocks already prune
+        val sketchRows =
+          if (footer.rowCount == 0) Array.empty[SketchRow]
+          else kinds.zip(sketches).map { case ((name, kind), s) => (file, name, kind, s.serialize()) }
+        (row, sketchRows)
       }
     }
   }
 
-  /** The footer job with its rows collected: for a delta below the
-    * distributed threshold, which the driver holds anyway. */
-  def collectFileStats(
-      spark: SparkSession,
-      refs: Seq[(Int, FileRef)],
-      indexSchema: StructType,
-      numPartitions: Int,
-      source: String): Seq[FileStatsRow] =
-    if (refs.isEmpty) Nil
-    else footerRows(spark, refs, indexSchema, numPartitions, source).collect().toSeq
+  /** One file's rows through the bound inputs: the first `sketches.length`
+    * expressions feed the sketches; each hole `((name, indexType), i)`
+    * takes the bounds of expression i under Spark's ordering for its type,
+    * as the `min`/`max` aggregates would. Returns the canonical (min, max)
+    * per hole column whose bounds exist (not all null, and canonical). */
+  private def scan(
+      rows: Iterator[InternalRow],
+      exprs: Array[Expression],
+      sketches: Array[Sketch],
+      holes: Array[((String, DataType), Int)]): Map[String, (Any, Any)] = {
+    val types = exprs.map(_.dataType)
+    val lo = new Array[Any](holes.length)
+    val hi = new Array[Any](holes.length)
+    val ords = holes.map { case (_, i) => PhysicalDataType.ordering(types(i)) }
+    rows.foreach { row =>
+      var i = 0
+      while (i < sketches.length) {
+        val v = exprs(i).eval(row)
+        if (v != null) put(sketches(i), types(i), v)
+        i += 1
+      }
+      var h = 0
+      while (h < holes.length) {
+        val v = exprs(holes(h)._2).eval(row)
+        if (v != null) {
+          if (lo(h) == null || ords(h).lt(v, lo(h))) lo(h) = InternalRow.copyValue(v)
+          if (hi(h) == null || ords(h).gt(v, hi(h))) hi(h) = InternalRow.copyValue(v)
+        }
+        h += 1
+      }
+    }
+    holes.indices.flatMap { h =>
+      val ((name, indexType), i) = holes(h)
+      val canon = (v: Any) => Option(v).flatMap(x =>
+        Canon.fromExternal(indexType, CatalystTypeConverters.convertToScala(x, types(i))))
+      for (mn <- canon(lo(h)); mx <- canon(hi(h))) yield name -> (mn, mx)
+    }.toMap
+  }
+
+  /** Adds a non-null input value of type `dt` to its file's sketch. */
+  private def put(sketch: Sketch, dt: DataType, v: Any): Unit = dt match {
+    // element-domain sketch: every non-null element of the array joins
+    // the file's membership set (array_contains pruning)
+    case ArrayType(et, _) => putMembers(sketch, v.asInstanceOf[ArrayData], et)
+    // key-domain sketch: every key of the map joins the file's membership
+    // set (map_contains_key pruning). SQL map keys are never null, but
+    // foreign-written files (ORC permits it) can carry one — skipped like
+    // a null element rather than poisoning the sketch
+    case MapType(kt, _, _) => putMembers(sketch, v.asInstanceOf[MapData].keyArray(), kt)
+    case _ => sketch.put(Canon.fromCatalyst(dt, v))
+  }
+
+  private def putMembers(sketch: Sketch, arr: ArrayData, et: DataType): Unit = {
+    var i = 0
+    val n = arr.numElements()
+    while (i < n) {
+      if (!arr.isNullAt(i)) sketch.put(Canon.fromCatalyst(et, arr.get(i, et)))
+      i += 1
+    }
+  }
+
+  /** Writes the pass's file rows to the files table in `dir`, each part
+    * sorted by (partitionIdx, path). */
+  def writeFileStats(spark: SparkSession, pass: RDD[PassRow], dir: Path, mode: String): Unit =
+    spark.createDataFrame(pass.map(_._1)).sortWithinPartitions("partitionIdx", "path")
+      .write.mode(mode).parquet(dir.toString)
+
+  /** Appends the pass's sketch rows to the sketch table in `dir` as
+    * `parts` part files, each sorted by (file, column) — the order the
+    * query-time `file IN` pushdown skips row groups by. The pass emits its
+    * rows in that order and its slices cover disjoint path ranges, so
+    * neighbours merge without a shuffle or a sort. Each task writes its
+    * part (none for no rows) under a hidden name and renames it into
+    * place, so a failed or repeated attempt never leaves a visible partial
+    * part. */
+  def writeSketches(spark: SparkSession, pass: RDD[PassRow], dir: Path, parts: Int): Unit = {
+    val confBc = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+    val (target, run) = (dir.toString, java.util.UUID.randomUUID().toString)
+    spark.sparkContext.runJob(pass.flatMap(_._2.iterator).coalesce(parts),
+      (ctx: TaskContext, rows: Iterator[SketchRow]) => {
+        if (rows.hasNext) {
+          val conf = confBc.value.value
+          val name = f"part-${ctx.partitionId}%05d-$run-c000.snappy.parquet"
+          val tmp = new Path(target, s".$name.${ctx.attemptNumber}")
+          val fs = tmp.getFileSystem(conf)
+          try {
+            val n = SketchStore.writePart(tmp, conf)(rows.foreach)
+            SparkInternals.recordWrite(fs.getFileStatus(tmp).getLen, n)
+            if (!fs.rename(tmp, new Path(target, name))) fs.delete(tmp, false)
+          } catch { case e: Throwable => fs.delete(tmp, false); throw e }
+        }
+        ()
+      })
+  }
+
+  /** Part files for `bytes` of sketches: as many as AQE coalesces a
+    * shuffle of that size to. */
+  def sketchParts(spark: SparkSession, bytes: Long): Int = {
+    val target = math.max(1L, SparkInternals.coalesceTargetBytes(spark, bytes))
+    math.max(1L, (bytes + target - 1) / target).toInt
+  }
+
+  /** Stages the removal of `removed` (normalized paths) from the sketch
+    * table in `dir`, part by part, on the driver: a part holding none of
+    * them stays untouched; a part holding only removed paths is dead; a
+    * mixed part is streamed through a filter into `stage`, under its own
+    * name. A part whose row groups' `file` bounds hold no removed path is
+    * untouched from its footer alone; any other part has its `file`
+    * column read to decide. Returns the names of the parts the swap
+    * deletes (dead and mixed). */
+  def stageSketchRemovals(dir: Path, removed: Set[String], stage: Path, conf: Configuration): Seq[String] = {
+    val fs = dir.getFileSystem(conf)
+    if (removed.isEmpty || !fs.exists(dir)) return Nil
+    val sorted = removed.toArray.sortWith(Canon.compare(_, _) < 0)
+    // does some removed path lie in [lo, hi]?
+    val within = (lo: String, hi: String) => {
+      var (a, b) = (0, sorted.length)
+      while (a < b) {
+        val m = (a + b) >>> 1
+        if (Canon.compare(sorted(m), lo) < 0) a = m + 1 else b = m
+      }
+      a < sorted.length && Canon.compare(sorted(a), hi) <= 0
+    }
+    fs.listStatus(dir).toSeq.map(_.getPath)
+      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+      .sortBy(_.getName)
+      .filter { part =>
+        val footer = {
+          val r = openParquet(part, conf)
+          try r.getFooter finally r.close()
+        }
+        val mayHold = footer.getBlocks.asScala.exists { b =>
+          b.getColumns.asScala.find(_.getPath.toDotString == "file").map(_.getStatistics) match {
+            case Some(st) if st != null && st.hasNonNullValue =>
+              within(st.genericGetMin.asInstanceOf[Binary].toStringUsingUTF8,
+                st.genericGetMax.asInstanceOf[Binary].toStringUsingUTF8)
+            case _ => b.getRowCount > 0
+          }
+        }
+        val files = scala.collection.mutable.HashSet.empty[String]
+        if (mayHold) {
+          val schema = footer.getFileMetaData.getSchema
+          val fileOnly = new Configuration(conf)
+          fileOnly.set(ReadSupport.PARQUET_READ_SCHEMA, new MessageType(schema.getName,
+            java.util.List.of(schema.getType(schema.getFieldIndex("file")))).toString)
+          IndexFilesTable.readGroups(part, fileOnly)(g => files += g.getString("file", 0))
+        }
+        val hit = files.count(removed)
+        if (hit > 0 && hit < files.size) {
+          SketchStore.writePart(new Path(stage, part.getName), conf) { put =>
+            IndexFilesTable.readGroups(part, conf) { g =>
+              val file = g.getString("file", 0)
+              if (!removed(file)) put((file, g.getString("column", 0), g.getString("kind", 0),
+                g.getBinary("data", 0).getBytes))
+            }
+          }
+        }
+        hit > 0
+      }
+      .map(_.getName)
+  }
+
+  /** A parquet-mr reader of `path` under `conf`. (The one-argument
+    * `ParquetFileReader.open` builds and parses a fresh Hadoop
+    * Configuration per call, about 10 ms each.) */
+  private def openParquet(path: Path, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+      HadoopReadOptions.builder(conf, path).build())
 
   /** Does the frame resolve `name` — as a top-level column, or (for a
-    * dotted index path) through nested struct resolution? Guards the
-    * add-missing-as-null folds: a flat `withColumn("a.b", null)` would
-    * SHADOW a real nested a.b. */
+    * dotted index path) through nested struct resolution? */
   private def hasColumn(d: DataFrame, name: String): Boolean =
     d.columns.exists(_.equalsIgnoreCase(name)) ||
       (name.contains(".") && scala.util.Try(d(name)).isSuccess)
 
   /** Summary + schema merge over the whole files table (columnar reads of
     * three small columns; distinct schemas are few even at 1M files). */
-  def summarizeFilesTable(spark: SparkSession, filesDir: Path): FileStatsSummary =
-    summarizeFrame(spark.read.schema(IndexFilesTable.Schema).parquet(filesDir.toString))
-
-  /** The same summary over an arbitrary FileStatsRow frame (the whole
-    * table at create, the delta slice at refresh). */
-  def summarizeFrame(back: org.apache.spark.sql.DataFrame): FileStatsSummary = {
-    val agg = back.agg(
-      count(lit(1)), sum(col("size")), max(col("rowCount"))).head
+  def summarizeFilesTable(spark: SparkSession, filesDir: Path): FileStatsSummary = {
+    val back = spark.read.schema(IndexFilesTable.Schema).parquet(filesDir.toString)
+    val agg = back.agg(count(lit(1)), sum(col("size"))).head
     val schemaJsons = back.groupBy(col("schemaJson"))
       .agg(min(col("path")).as("firstPath"))
       .orderBy(col("firstPath"))
       .collect().map(_.getString(0))
-    // sum/max are NULL over an empty table (all files removed) — degrade to 0.
+    // sum is NULL over an empty table (all files removed) — degrade to 0
     FileStatsSummary(mergeSchemaJsons(schemaJsons.toSeq), agg.getLong(0),
-      if (agg.isNullAt(1)) 0L else agg.getLong(1),
-      if (agg.isNullAt(2)) 0L else agg.getLong(2))
+      if (agg.isNullAt(1)) 0L else agg.getLong(1))
   }
 
-  /** The same summary over rows the driver holds: the distinct schemas
-    * merge in the order of their first path (Spark's string order), as
-    * in [[summarizeFrame]]. */
-  def summarizeRows(rows: Seq[FileStatsRow]): FileStatsSummary = {
-    val firstPath = scala.collection.mutable.HashMap.empty[String, String]
-    rows.foreach { r =>
-      if (firstPath.get(r.schemaJson).forall(Canon.compare(r.path, _) < 0)) {
-        firstPath(r.schemaJson) = r.path
-      }
+  /** Counts, bytes, sketch bytes and the first path of each distinct
+    * schema over some file rows: folded per slice, then merged. */
+  private case class Partial(files: Long, bytes: Long, sketchBytes: Long,
+      firstPath: Map[String, String]) {
+    def merge(o: Partial): Partial = Partial(files + o.files, bytes + o.bytes,
+      sketchBytes + o.sketchBytes, o.firstPath.foldLeft(firstPath) { case (m, (s, p)) =>
+        if (m.get(s).forall(Canon.compare(p, _) < 0)) m.updated(s, p) else m
+      })
+    /** The distinct schemas merge in the order of their first path
+      * (Spark's string order), as in [[summarizeFilesTable]]. */
+    def summary: FileStatsSummary = FileStatsSummary(
+      mergeSchemaJsons(firstPath.toSeq.sortWith((a, b) => Canon.compare(a._2, b._2) < 0).map(_._1)),
+      files, bytes)
+  }
+
+  private def partial(rows: Iterator[PassRow]): Partial =
+    rows.foldLeft(Partial(0L, 0L, 0L, Map.empty)) { case (acc, (r, sketches)) =>
+      acc.merge(Partial(1L, r.size, sketches.iterator.map(_._4.length.toLong).sum,
+        Map(r.schemaJson -> r.path)))
     }
-    val schemaJsons = firstPath.toSeq.sortWith((a, b) => Canon.compare(a._2, b._2) < 0).map(_._1)
-    FileStatsSummary(mergeSchemaJsons(schemaJsons), rows.size.toLong,
-      rows.iterator.map(_.size).sum,
-      if (rows.isEmpty) 0L else rows.iterator.map(_.rowCount).max)
+
+  /** The same summary over rows the driver holds. */
+  def summarizeRows(rows: Seq[FileStatsRow]): FileStatsSummary =
+    partial(rows.iterator.map(_ -> Array.empty[SketchRow])).summary
+
+  /** The pass's summary and its sketch bytes: one job over the cache. */
+  def summarize(pass: RDD[PassRow]): (FileStatsSummary, Long) = {
+    val p = pass.mapPartitions(it => Iterator.single(partial(it))).collect().reduce(_ merge _)
+    (p.summary, p.sketchBytes)
   }
 
   private def mergeSchemaJsons(jsons: Seq[String]): Option[StructType] =
@@ -234,7 +459,7 @@ object StatisticsBuilder {
       path: String,
       indexed: Array[(String, DataType, Int, String, String)],
       conf: org.apache.hadoop.conf.Configuration): FileFooter = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf))
+    val reader = openParquet(new Path(path), conf)
     try {
       val fileMeta = reader.getFooter.getFileMetaData
       val schema = SparkInternals.footerSparkSchema(
@@ -243,12 +468,12 @@ object StatisticsBuilder {
       // FP footer bounds are trusted only from NaN-POISONING writers
       // (parquet-mr's sticky Math.min/max fold turns min/max to NaN the
       // moment a NaN arrives, so surviving non-NaN bounds PROVE NaN
-      // absence — pinned empirically by FpNanFooterSpec against the
+      // absence — pinned empirically by MetadataAggSpec's FP footer test against the
       // bundled writer). Spec-recommended NaN-SKIPPING writers
       // (arrow/parquet-cpp) leave no trace of NaN presence: their max
       // excludes a value Spark orders ABOVE it, unsound both for
       // max-side pruning and for metadata-only answers — those degrade
-      // to None and the full-scan fallback computes exact NaN-aware
+      // to None and the min/max fallback computes exact NaN-aware
       // bounds from data, the same contract ORC FP always uses.
       val fpNanPoisoning = StatisticsBuilder.fpFooterTrusted(
         Option(fileMeta.getCreatedBy))
@@ -338,7 +563,7 @@ object StatisticsBuilder {
         // int-backed decimal stats are the unscaled values — exactly the
         // canonical domain, provided the footer's scale matches the
         // column's. Binary/fixed-len decimals degrade to None (the
-        // full-scan fallback patches them from data).
+        // min/max fallback patches them from data).
         decScale.filter(_ == dec.scale).map { _ =>
           (st.genericGetMin.asInstanceOf[Number].longValue,
             st.genericGetMax.asInstanceOf[Number].longValue)
@@ -354,7 +579,7 @@ object StatisticsBuilder {
         // NaN is present — so a NaN-free bound pair from such a writer
         // PROVES NaN absence (exact attained values, sound for answers
         // AND for max-side pruning under Spark's NaN-largest order).
-        // Poisoned stats degrade to unknown and the full-scan fallback
+        // Poisoned stats degrade to unknown and the min/max fallback
         // supplies exact NaN-aware bounds. Non-poisoning writers never
         // reach here (fpNanPoisoning gate — see readFooterBlocks).
         val mn = st.genericGetMin.asInstanceOf[java.lang.Double].doubleValue
@@ -503,7 +728,7 @@ object StatisticsBuilder {
           }
         } else {
           // explicit all-unknown entries (not an empty map) so the
-          // full-scan min/max fallback recognizes and patches them
+          // min/max fallback recognizes and patches them
           val unknown = indexed.map { case (n, _, _, _, _) => n -> ColumnStats(None, None, None) }.toMap
           stripes.map(si => BlockStats(si.getNumberOfRows, unknown))
         }
@@ -513,7 +738,7 @@ object StatisticsBuilder {
 
   /** ORC column statistics → canonical ColumnStats (same degradation
     * contract as [[chunkStats]]: anything not provably sound → None,
-    * which the fold treats as may-contain and the full-scan fallback
+    * which the fold treats as may-contain and the min/max fallback
     * patches). Timestamp bounds are millisecond-granular in ORC, so the
     * max is widened to the end of its millisecond — loose by <1ms, sound.
     * Truncated string bounds (lowerBound/upperBound) are sound by
@@ -545,10 +770,10 @@ object StatisticsBuilder {
       // Double/Float: ORC's stats writer silently SKIPS NaN (primitive
       // comparisons never update min/max on NaN), so a NaN-bearing stripe
       // would carry bounds that exclude a value Spark orders ABOVE them —
-      // unsound for max-side pruning. Degrade to None; the full-scan
+      // unsound for max-side pruning. Degrade to None; the min/max
       // fallback computes exact NaN-aware bounds from the data.
       // TimestampNTZ: ORC's local-vs-UTC accessor semantics differ across
-      // writers — degrade to None; the full-scan fallback supplies bounds.
+      // writers — degrade to None; the min/max fallback supplies bounds.
       case _ => None
     }
     minmax match {
@@ -557,154 +782,22 @@ object StatisticsBuilder {
     }
   }
 
-  /** Full-scan min/max fallback for indexed columns whose footers carried
-    * no usable statistics — INT96 timestamps from legacy (pre-Spark-3)
-    * writers in particular, plus truncated binary bounds that don't
-    * round-trip through UTF-8 (the reference covers these by computing
-    * ALL stats from a full data scan, ParquetIndexReadSupport.scala:64-73;
-    * we scan only the affected files and columns).
-    *
-    * Three steps, all metadata-sized except the scan:
-    *   1. detect (file, column) pairs where some block has non-null rows
-    *      but no min/max ([[affectedFile]]) — only the affected paths
-    *      reach the driver, the same order of driver memory as the file
-    *      listing create() already holds;
-    *   2. one DataFrame aggregation over ONLY those files/columns:
-    *      groupBy(input_file_name) → min/max per column (map-side
-    *      partials, one tiny row per affected file is collected);
-    *   3. patch the affected rows with their file's bounds
-    *      ([[patchBlocks]]).
-    *
-    * The patched bounds are per-FILE, applied to each non-all-null block:
-    * looser than true per-block bounds but sound (every block's values
-    * lie within its file's range). Blocks known all-null keep min/max =
-    * None — that's a STRONGER pruning fact than any range.
-    *
-    * This entry point runs over the files table: detection is a Dataset
-    * pass, and the patched table is rewritten via tmp + rename.
-    * [[patchMinMax]] runs the same steps over rows the driver holds.
-    *
-    * @return number of files whose stats were patched */
-  def fullScanMinMaxFallback(
-      spark: SparkSession,
-      filesDir: Path,
-      indexSchema: StructType,
-      source: String = Sources.Parquet,
-      onlyPaths: Option[Seq[String]] = None,
-      dataSchema: Option[StructType] = None): Long = {
-    import spark.implicits._
-    val names = fallbackColumns(indexSchema)
-    if (names.isEmpty) return 0L
-    val allRows = spark.read.schema(IndexFilesTable.Schema).parquet(filesDir.toString)
-      .as[FileStatsRow]
-    // refresh knows only the DELTA can be statless — an isin on the
-    // sorted path column pushes into the parquet scan and skips every
-    // pre-existing row group, so detection never parses the whole
-    // table's blocksJson for a small append (the 10^6-file refresh
-    // floor). Large deltas fall back to the full detection scan.
-    val files = onlyPaths match {
-      case Some(ps) if ps.nonEmpty && ps.size <= 10000 =>
-        allRows.filter(col("path").isin(ps: _*)).as[FileStatsRow]
-      case _ => allRows
-    }
-    val affected = files.flatMap(r => affectedFile(r, names)).collect().toSeq
-    if (affected.isEmpty) return 0L
-
-    // the rewrite covers the WHOLE table (allRows, never the onlyPaths
-    // slice — replacing the table with just the delta would drop every
-    // pre-existing row); only the affected rows change
-    val bounds = spark.sparkContext.broadcast(
-      scanBounds(spark, affected, indexSchema, source, dataSchema))
-    val patched = allRows.map { r =>
-      bounds.value.get(SketchStore.normalizePath(r.path)).fold(r)(patchBlocks(r, _))
-    }
-    val fs = filesDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(filesDir.getParent, filesDir.getName + "_mmtmp")
-    patched.toDF().sort(col("partitionIdx"), col("path"))
-      .write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(filesDir, true)
-    fs.rename(tmp, filesDir)
-    IndexFilesTable.invalidate(filesDir)
-    affected.length.toLong
-  }
-
-  /** [[fullScanMinMaxFallback]] over rows the driver holds (a refresh
-    * delta below the distributed threshold): detection runs in memory,
-    * and the scan runs only when some file is affected. `dataSchema`
-    * is the rows' merged schema, so the scan infers nothing. */
-  def patchMinMax(
-      spark: SparkSession,
-      rows: Seq[FileStatsRow],
-      indexSchema: StructType,
-      source: String,
-      dataSchema: Option[StructType]): Seq[FileStatsRow] = {
-    val names = fallbackColumns(indexSchema)
-    val affected = rows.flatMap(affectedFile(_, names))
-    if (affected.isEmpty) rows
-    else {
-      val bounds = scanBounds(spark, affected, indexSchema, source, dataSchema)
-      rows.map(r => bounds.get(SketchStore.normalizePath(r.path)).fold(r)(patchBlocks(r, _)))
-    }
-  }
-
-  /** The fallback's candidate columns. Element-domain (array) fields are
-    * excluded: min(arrayCol) is the wrong domain (lexicographic array
-    * order, not element bounds); a stat-less array column simply stays
-    * may-contain, with the dict / bloom sketch still answering
-    * array_contains membership. */
-  private def fallbackColumns(indexSchema: StructType): Seq[String] =
-    indexSchema.fields.toSeq.filterNot(IndexMetadata.isElementDomain).map(_.name)
-
   /** Is `st` in a block of `rowCount` rows a hole the fallback patches:
-    * non-null rows but no min/max? */
+    * non-null rows but no min/max? Footers leave such holes for INT96
+    * timestamps from legacy writers, truncated binary bounds that do not
+    * round-trip through UTF-8, FP bounds from untrusted writers and some
+    * ORC types (the reference covers these by computing ALL stats from a
+    * full data scan, ParquetIndexReadSupport.scala:64-73). */
   private def statless(st: ColumnStats, rowCount: Long): Boolean =
     rowCount > 0 && st.min.isEmpty && !st.knownAllNull(rowCount)
 
-  /** (path, columns of `names` with a statless block) of an affected row. */
-  private def affectedFile(r: FileStatsRow, names: Seq[String]): Option[(String, Seq[String])] = {
-    val blocks = IndexMetadata.blocksFromJsonString(r.blocksJson)
-    val cols = names.filter(n => blocks.exists(b => b.columns.get(n).exists(statless(_, b.rowCount))))
-    if (cols.isEmpty) None else Some((r.path, cols))
-  }
-
-  /** Per-file canonical (min, max) of the affected columns, keyed by
-    * normalized path — one scan of the affected files, pruned to the
-    * affected columns (ReadSchema carries only those + file name). A
-    * column whose bounds stay unknown (all null, or no canonical form) is
-    * absent from its file's map. */
-  private def scanBounds(
-      spark: SparkSession,
-      affected: Seq[(String, Seq[String])],
-      indexSchema: StructType,
-      source: String,
-      dataSchema: Option[StructType]): Map[String, Map[String, (Any, Any)]] = {
-    val colNames = affected.flatMap(_._2).distinct
-    val types = indexSchema.fields.map(f => f.name -> f.dataType).toMap
-    val read = Sources.read(spark, source, affected.map(_._1), dataSchema)
-    val withCols = colNames.foldLeft(read) { (d, c) =>
-      if (hasColumn(d, c)) d else d.withColumn(c, lit(null).cast(types(c)))
-    }
-    val normPath = (c: org.apache.spark.sql.Column) => graft.functions.exprs.normalize_path(c)
-    val aggs = colNames.flatMap(c => Seq(min(col(c)), max(col(c))))
-    withCols
-      .select((colNames.map(col) :+ normPath(input_file_name()).as("__file")): _*)
-      .groupBy(col("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map { row =>
-        row.getString(0) -> colNames.zipWithIndex.flatMap { case (c, i) =>
-          for {
-            mn <- Option(row.get(1 + 2 * i)).flatMap(Canon.fromExternal(types(c), _))
-            mx <- Option(row.get(2 + 2 * i)).flatMap(Canon.fromExternal(types(c), _))
-          } yield c -> (mn, mx)
-        }.toMap
-      }.toMap
-  }
-
-  /** `r` with every statless block of a column in `bounds` given the
-    * file's (min, max). */
-  private def patchBlocks(r: FileStatsRow, bounds: Map[String, (Any, Any)]): FileStatsRow = {
-    val blocks = IndexMetadata.blocksFromJsonString(r.blocksJson).map { b =>
+  /** `blocks` with every hole of a column in `bounds` given the file's
+    * (min, max): looser than true per-block bounds but sound, since every
+    * block's values lie within its file's range. Blocks known all-null
+    * keep min/max = None — a stronger pruning fact than any range. */
+  private def patchBlocks(blocks: Seq[BlockStats], bounds: Map[String, (Any, Any)]): Seq[BlockStats] =
+    if (bounds.isEmpty) blocks
+    else blocks.map { b =>
       BlockStats(b.rowCount, b.columns.map { case (name, st) =>
         bounds.get(name) match {
           case Some((mn, mx)) if statless(st, b.rowCount) =>
@@ -713,166 +806,4 @@ object StatisticsBuilder {
         }
       })
     }
-    r.copy(blocksJson = IndexMetadata.blocksToJsonString(blocks))
-  }
-
-  /** Build per-(file × column) membership sketches with a single
-    * DataFrame aggregation and write them as a parquet table
-    * (file, column, kind, data) under `sketchDir`. `dataSchema` is the
-    * files' merged footer schema when the caller has it; without it the
-    * read infers one. */
-  def buildSketches(
-      spark: SparkSession,
-      filePaths: Seq[String],
-      indexSchema: StructType,
-      confKind: String,
-      expectedItems: Long,
-      sketchDir: Path,
-      mode: String = "overwrite",
-      source: String = Sources.Parquet,
-      dataSchema: Option[StructType] = None): Unit = {
-    if (filePaths.isEmpty || indexSchema.isEmpty) return
-    // a merged schema: an indexed column absent from some files must read
-    // as null there (heterogeneous tables), not fail to resolve
-    val read = Sources.read(spark, source, filePaths, dataSchema)
-    // An indexed column absent from EVERY file in this batch (incremental
-    // refresh over a homogeneous delta) must still aggregate — as all-null,
-    // yielding an empty sketch (sound: the files really contain no values).
-    val df = indexSchema.fields.foldLeft(read) { (d, f) =>
-      if (IndexMetadata.isMapValue(f) || hasColumn(d, f.name)) d
-      else d.withColumn(f.name, lit(null).cast(f.dataType))
-    }
-    val aggs = indexSchema.fields.map { f =>
-      val kind = Sketch.resolveKind(confKind, f.dataType)
-      // map VALUE domains sketch map_values(mapCol) — there is no data
-      // column named `m#value`; a batch missing the map column entirely
-      // aggregates an all-null array (empty sketch, sound)
-      val input: org.apache.spark.sql.Column =
-        if (!IndexMetadata.isMapValue(f)) col(f.name)
-        else {
-          // presence checked against the ORIGINAL read: the fold above may
-          // have stubbed the missing map column as a null KEY-typed scalar
-          // (for the sibling key-domain field), which map_values can't take
-          val base = IndexMetadata.mapValueBase(f.name)
-          if (hasColumn(read, base)) map_values(col(base))
-          else lit(null).cast(ArrayType(f.dataType))
-        }
-      SparkInternals.wrap(
-        SketchAgg(SparkInternals.unwrap(input), kind, expectedItems)
-          .toAggregateExpression()).as(f.name)
-    }
-    // Key rows by the NORMALIZED path (same normalization the read side
-    // uses) so query-time `file IN (...)` pushdown filters on exact
-    // stored values.
-    val normPath = (c: org.apache.spark.sql.Column) => graft.functions.exprs.normalize_path(c)
-    val wide = df
-      .select((col("*") +: Seq(normPath(input_file_name()).as("__file"))): _*)
-      .groupBy(col("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-    val stackArgs = indexSchema.fields.map { f =>
-      val kind = Sketch.resolveKind(confKind, f.dataType)
-      s"'${f.name}', '$kind', `${f.name}`"
-    }.mkString(", ")
-    val long = wide.selectExpr(
-      "__file as file",
-      s"stack(${indexSchema.size}, $stackArgs) as (column, kind, data)")
-    // Sort by file so row-group min/max + dictionary stats make the
-    // query-time pruned read skip everything outside the survivor set.
-    // (Appended part files are each sorted internally, which is what the
-    // per-row-group `file IN` pushdown needs.)
-    long.sort(col("file"), col("column"))
-      .write.mode(mode).parquet(sketchDir.toString)
-  }
-
-  /** Write to `out` the rows of the sketch table in `sketchDir` whose
-    * file is in `keep` (normalized paths). A filter only: one task per
-    * part file and no shuffle or sort, so each output part keeps its
-    * input's file order, which the query-time `file IN` pushdown relies
-    * on. */
-  def filterSketches(spark: SparkSession, sketchDir: Path, keep: Set[String], out: Path): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val parts = sketchDir.getFileSystem(hconf).listStatus(sketchDir).toSeq
-      .map(_.getPath)
-      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
-      .map(_.toString).sorted
-    val keepBc = spark.sparkContext.broadcast(keep)
-    val confBc = spark.sparkContext.broadcast(new SerializableConfiguration(hconf))
-    val rows = spark.sparkContext.parallelize(parts, math.max(1, parts.size)).flatMap { part =>
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), new Path(part))
-        .withConf(confBc.value.value).build()
-      org.apache.spark.TaskContext.get().addTaskCompletionListener[Unit](_ => reader.close())
-      Iterator.continually(reader.read()).takeWhile(_ != null)
-        .filter(g => keepBc.value.contains(g.getString("file", 0)))
-        .map(g => org.apache.spark.sql.Row(g.getString("file", 0), g.getString("column", 0),
-          g.getString("kind", 0), g.getBinary("data", 0).getBytes))
-    }
-    spark.createDataFrame(rows, SketchStore.Schema).write.mode("overwrite").parquet(out.toString)
-  }
-}
-
-/** Mergeable sketch-building aggregate: a native Catalyst
-  * TypedImperativeAggregate so sketch construction runs inside Spark's
-  * aggregation machinery (partial aggregation map-side; only serialized
-  * sketches cross the shuffle). Replaces the reference's executor-side
-  * imperative loop in ParquetStatisticsRDD.scala:213-241. */
-case class SketchAgg(
-    child: Expression,
-    kind: String,
-    expectedItems: Long,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Sketch] {
-
-  override def children: Seq[Expression] = child :: Nil
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_sketch_agg"
-
-  override def createAggregationBuffer(): Sketch = Sketch.create(kind, expectedItems)
-
-  override def update(buffer: Sketch, input: InternalRow): Sketch = {
-    val v = child.eval(input)
-    if (v != null) child.dataType match {
-      // element-domain sketch: every non-null element of the array joins
-      // the file's membership set (array_contains pruning)
-      case org.apache.spark.sql.types.ArrayType(et, _) =>
-        val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-        var i = 0
-        val n = arr.numElements()
-        while (i < n) {
-          if (!arr.isNullAt(i)) buffer.put(Canon.fromCatalyst(et, arr.get(i, et)))
-          i += 1
-        }
-      // key-domain sketch: every key of the map joins the file's
-      // membership set (map_contains_key pruning). SQL map keys are
-      // never null, but foreign-written files (ORC permits it) can
-      // carry one — guard like the array branch rather than NPE/poison
-      // the sketch with an unboxed phantom key
-      case org.apache.spark.sql.types.MapType(kt, _, _) =>
-        val keys = v.asInstanceOf[org.apache.spark.sql.catalyst.util.MapData].keyArray()
-        var i = 0
-        val n = keys.numElements()
-        while (i < n) {
-          if (!keys.isNullAt(i)) buffer.put(Canon.fromCatalyst(kt, keys.get(i, kt)))
-          i += 1
-        }
-      case dt => buffer.put(Canon.fromCatalyst(dt, v))
-    }
-    buffer
-  }
-
-  override def merge(buffer: Sketch, other: Sketch): Sketch = buffer.merge(other)
-
-  override def eval(buffer: Sketch): Any = buffer.serialize()
-
-  override def serialize(buffer: Sketch): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): Sketch = Sketch.deserialize(kind, bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): SketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): SketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): SketchAgg =
-    copy(child = newChildren.head)
 }

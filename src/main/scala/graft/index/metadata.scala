@@ -374,13 +374,9 @@ object Sources {
     s
   }
 
-  /** Multi-file read of data files in `source` format: under `schema`
-    * when the caller already merged the files' footer schemas, else with
-    * a schema-merging inference job. */
+  /** Multi-file read of data files in `source` format, with a
+    * schema-merging inference job. */
   def read(spark: org.apache.spark.sql.SparkSession, source: String,
-      paths: Seq[String],
-      schema: Option[StructType] = None): org.apache.spark.sql.DataFrame = {
-    val reader = spark.read.format(normalize(source))
-    schema.fold(reader.option("mergeSchema", "true"))(reader.schema).load(paths: _*)
-  }
+      paths: Seq[String]): org.apache.spark.sql.DataFrame =
+    spark.read.format(normalize(source)).option("mergeSchema", "true").load(paths: _*)
 }

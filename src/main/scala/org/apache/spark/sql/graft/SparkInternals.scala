@@ -14,7 +14,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, Expression, Predicate}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, FileIndex, HadoopFsRelation, InMemoryFileIndex, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, FileFormat, FileIndex, HadoopFsRelation, InMemoryFileIndex, PartitionDirectory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.StructType
@@ -165,6 +165,76 @@ object SparkInternals {
         new org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter()
           .convert(msg))
   }
+
+  /** Spark's own reader of whole data files in `source` format ("parquet"
+    * | "orc"), built on the driver and run on executors: (path, size,
+    * mtime) => rows of `requiredSchema`. `dataSchema` is the table's
+    * merged schema; a required column a file lacks reads as null. */
+  def fileReader(
+      spark: SparkSession,
+      source: String,
+      dataSchema: StructType,
+      requiredSchema: StructType): (String, Long, Long) => Iterator[InternalRow] = {
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val format: FileFormat = source match {
+      case "orc" => new org.apache.spark.sql.execution.datasources.orc.OrcFileFormat()
+      case _ => new ParquetFileFormat()
+    }
+    val read = format.buildReaderWithPartitionValues(classic, dataSchema.asNullable,
+      StructType(Nil), requiredSchema.asNullable, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), classic.sessionState.newHadoopConf())
+    (path, size, mtime) => read(PartitionedFile(InternalRow.empty,
+      org.apache.spark.paths.SparkPath.fromPathString(path), 0L, size, Array.empty[String],
+      mtime, size, Map.empty))
+  }
+
+  /** A frame of no rows over `schema` (all fields nullable), for
+    * resolving columns against it without a job. */
+  def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+        DataTypeUtils.toAttributes(schema.asNullable)))
+
+  /** `cols` resolved against `frame` and bound to the fields they read:
+    * returns those fields, in the frame's order, and the bound
+    * expressions, evaluable over rows of them. */
+  def bindColumns(frame: DataFrame, cols: Seq[Column]): (StructType, Seq[Expression]) = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSeq, BindReferences}
+    val exprs = frame.select(cols: _*).queryExecution.analyzed.expressions.map {
+      case Alias(c, _) => c
+      case e => e
+    }
+    val used = exprs.flatMap(_.references).map(_.exprId).toSet
+    val required = frame.queryExecution.analyzed.output.filter(a => used(a.exprId))
+    (DataTypeUtils.fromAttributes(required),
+      exprs.map(BindReferences.bindReference(_, AttributeSeq(required))))
+  }
+
+  /** The partition size AQE coalesces `total` bytes of shuffle output
+    * toward (ShufflePartitionsUtil.coalescePartitions): the advisory
+    * size, or under `parallelismFirst` (the default) each minimum
+    * partition's share if smaller, and never below the minimum size. */
+  def coalesceTargetBytes(spark: SparkSession, total: Long): Long = {
+    import org.apache.spark.sql.internal.SQLConf
+    val conf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+    val minPartitions =
+      if (!conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST)) 1
+      else conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_NUM)
+        .getOrElse(spark.sparkContext.defaultParallelism)
+    math.max(conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE),
+      math.min(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES),
+        (total + minPartitions - 1) / minPartitions))
+  }
+
+  /** Counts a file the running task wrote outside Spark's writers in the
+    * task's output metrics, as Spark's own writers count theirs. */
+  def recordWrite(bytes: Long, records: Long): Unit =
+    Option(org.apache.spark.TaskContext.get()).foreach { ctx =>
+      val m = ctx.taskMetrics().outputMetrics
+      m.setBytesWritten(m.bytesWritten + bytes)
+      m.setRecordsWritten(m.recordsWritten + records)
+    }
 
   /** Resolve a catalog table to (provider, location path). */
   def catalogTableInfo(spark: SparkSession, tableName: String): (String, Path) = {

@@ -1870,8 +1870,8 @@ class IndexEndToEndSpec extends AnyFunSuite with BeforeAndAfterAll {
     // promise): ~50k files index through executor-side footer jobs, the
     // prune takes the Spark-job fold (threshold is below the file count),
     // the driver lists only the surviving paths, and refresh stays a
-    // 1-file delta. (fullScanMinMaxFallback is a no-op here: every file
-    // carries footer stats, so its statless-row detection finds nothing.)
+    // 1-file delta. (The min/max fallback is a no-op here: every file
+    // carries footer stats, so the pass finds no holes to patch.)
     val saved = spark.conf.getOption(IndexConf.MetastoreLocation)
     try {
       val df = graft.SparkEntry.indexed50kFiles(spark, "/root/testdata/sf0.001")

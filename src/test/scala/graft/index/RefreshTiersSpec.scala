@@ -26,8 +26,9 @@ import graft.index.implicits._
   *     partitionIdx mapped to partition values, sketch rows, file count,
   *     bytes, data schema);
   *   - a refresh that fails before its swap leaves the index loadable and
-  *     unchanged, and a rerun converges;
-  *   - the driver tier's Spark job count stays pinned. */
+  *     unchanged, leaves no staging behind, and a rerun converges;
+  *   - the driver tier's Spark job counts and its part-level sketch
+  *     removals stay pinned. */
 class RefreshTiersSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val work = Files.createTempDirectory("graft-refresh-tiers").toString
@@ -233,6 +234,12 @@ class RefreshTiersSpec extends AnyFunSuite with BeforeAndAfterAll {
       val bytes = Files.readAllBytes(good.toPath)
       Files.write(bad.toPath, java.util.Arrays.copyOf(bytes, bytes.length / 2))
       intercept[Exception](refresh(t, opts))
+      // no task of the aborted jobs outlives the cleanup
+      TestListenerBus.drain(spark.sparkContext)
+      val dir = indexDir(Metastore.Dataspace, t)
+      Seq(Metastore.FilesDir, Metastore.SketchDir).foreach { d =>
+        assert(!new java.io.File(dir.toUri.getPath, d + "_tmp").exists(), s"$tier: ${d}_tmp left behind")
+      }
 
       assert(spark.index.exists.parquet(t))
       assert(q(spark.index.parquet(t)).collect().map(_.toString).sorted.sameElements(answer))
@@ -275,37 +282,93 @@ class RefreshTiersSpec extends AnyFunSuite with BeforeAndAfterAll {
     (jobs.get, filesWrites.get)
   }
 
-  test("driver tier: a 4-in/4-out refresh with bloom sketches runs at most 8 Spark jobs") {
+  test("create and driver-tier refreshes run their pinned Spark job counts") {
     val t = s"$work/jobs"
     (0 until 8).foreach(i => writeFile(s"$t/p=${i / 4}", i * 100L, 100))
-    create(Metastore.Dataspace, t)
+    // schema inference of the first file, the pass (with the summary),
+    // the files-table write and the sketch write
+    val (createJobs, _) = counted(create(Metastore.Dataspace, t))
+    assert(createJobs == 4, s"create ran $createJobs Spark jobs")
     val filesDir = new java.io.File(indexDir(Metastore.Dataspace, t).toUri.getPath, Metastore.FilesDir)
     def parts = dataFiles(filesDir.getPath).size
 
-    // 4 files land in a new partition, the 4 of the first one go
+    // 4 files land in a new partition, the 4 of the first one go: the
+    // pass and the delta's sketch write
     (0 until 4).foreach(i => writeFile(s"$t/p=2", 1000 + i * 100L, 100))
     dataFiles(s"$t/p=0").foreach(remove)
     var stats: IndexedDataSource.RefreshStats = null
     val (cycleJobs, cycleWrites) = counted { stats = spark.index.refresh.parquet(t) }
     assert(stats == IndexedDataSource.RefreshStats(4L, 4L))
-    assert(cycleJobs <= 8, s"refresh ran $cycleJobs Spark jobs")
+    assert(cycleJobs <= 2, s"refresh ran $cycleJobs Spark jobs")
     assert(cycleWrites == 0, "the driver tier writes the files table without Spark")
     assert(parts == 1, "a refresh with removals writes the files table as one part file")
 
-    // an INT96 delta adds the patch scan's jobs and nothing else: the same
-    // append with footer stats, then with INT96 timestamps
+    // an append, then the same append with INT96 timestamps: the
+    // fallback's bounds come from the same pass, so the job counts match
     (0 until 4).foreach(i => writeFile(s"$t/p=3", 2000 + i * 100L, 100))
     val (plainJobs, plainWrites) = counted { spark.index.refresh.parquet(t) }
+    assert(plainJobs <= 2, s"an append ran $plainJobs Spark jobs")
     assert(parts == 2, "an append adds one part file")
     (0 until 4).foreach(i => writeFile(s"$t/p=4", 3000 + i * 100L, 100, int96 = true))
     val (int96Jobs, int96Writes) = counted { spark.index.refresh.parquet(t) }
     assert(parts == 3, "an INT96 append adds one part file, not a rewrite")
     assert(plainWrites == 0 && int96Writes == 0)
-    // the patch scan is one aggregation query: a shuffle-map job and a result job
-    assert(int96Jobs - plainJobs >= 1 && int96Jobs - plainJobs <= 2,
-      s"INT96 delta ran $int96Jobs jobs, the plain one $plainJobs")
+    assert(int96Jobs == plainJobs, s"INT96 delta ran $int96Jobs jobs, the plain one $plainJobs")
     sameRows(spark.index.parquet(t).where(col("ts") > timestamp_seconds(lit(1600003350L))),
       spark.read.parquet(t).where(col("ts") > timestamp_seconds(lit(1600003350L))))
+  }
+
+  test("driver tier: removals drop dead sketch parts and keep untouched ones") {
+    val t = s"$work/sketch_parts"
+    (0 until 8).foreach(i => writeFile(s"$t/p=${i / 4}", i * 100L, 100))
+    create(Metastore.Dataspace, t)
+    // one sketch part per refresh: p=2, p=3, p=4
+    (2 to 4).foreach { p =>
+      (0 until 4).foreach(i => writeFile(s"$t/p=$p", p * 1000L + i * 100L, 100))
+      assert(refresh(t, Map.empty) == IndexedDataSource.RefreshStats(4L, 0L))
+    }
+    val sketchDir = new java.io.File(indexDir(Metastore.Dataspace, t).toUri.getPath, Metastore.SketchDir)
+    def sketchParts: Map[String, Long] =
+      dataFiles(sketchDir.getPath).map(f => f.getName -> f.lastModified()).toMap
+    def partFiles(part: String): Set[String] =
+      spark.read.schema(SketchStore.Schema).parquet(new java.io.File(sketchDir, part).getPath)
+        .select("file").collect().map(_.getString(0)).toSet
+    val before = sketchParts
+    assert(before.size == 4, s"expected the create part and three delta parts: $before")
+    val byPartition = before.keys.map(p => p -> partFiles(p)).toMap
+    def partOf(partition: Int): String =
+      byPartition.collectFirst { case (n, fs) if fs.forall(_.contains(s"/p=$partition/")) &&
+        fs.exists(_.contains(s"/p=$partition/")) => n }.get
+    val (dead, mixedByRewrite, untouched) = (partOf(2), partOf(3), partOf(4))
+    val createPart = (before.keySet - dead - mixedByRewrite - untouched).head
+
+    // every file of p=2 goes (a dead part), one of p=0 goes (the create
+    // part is mixed) and one of p=3 is rewritten in place (its part is
+    // mixed, and the new sketch lands in the delta part)
+    dataFiles(s"$t/p=2").foreach(remove)
+    val gone = dataFiles(s"$t/p=0").head
+    remove(gone)
+    val victim = dataFiles(s"$t/p=3").head
+    val scratch = s"$work/sketch_parts_rewrite"
+    writeFile(scratch, 9000, 150)
+    Files.copy(dataFiles(scratch).head.toPath, victim.toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    new java.io.File(victim.getParent, s".${victim.getName}.crc").delete()
+    assert(victim.setLastModified(victim.lastModified() + 60000L))
+    assert(refresh(t, Map.empty) == IndexedDataSource.RefreshStats(1L, 6L))
+
+    val after = sketchParts
+    assert(after.get(untouched).contains(before(untouched)), "an untouched part was rewritten")
+    assert(!after.contains(dead), "a dead part survived")
+    assert(after.contains(createPart) && after.contains(mixedByRewrite))
+    assert(after.size == 4, s"expected the two filtered parts, the untouched one and the delta: $after")
+    val norm = (f: java.io.File) => SketchStore.normalizePath(f.getPath)
+    val rows = spark.read.schema(SketchStore.Schema).parquet(sketchDir.getPath)
+      .select("file", "column").collect().map(r => (r.getString(0), r.getString(1)))
+    assert(rows.length == rows.distinct.length, "a (file, column) sketch row is duplicated")
+    assert(rows.map(_._1).toSet == allDataFiles(t).map(norm).toSet)
+    assert(!rows.exists(_._1 == norm(gone)))
+    assertMatchesCreate(t, "driver", "part-level removal")
   }
 
   override def afterAll(): Unit = {
