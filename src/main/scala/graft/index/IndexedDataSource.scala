@@ -148,13 +148,14 @@ object IndexedDataSource {
 
     // First-file schema is usually enough to validate the indexBy()
     // columns (the reference also infers the index schema from the first
-    // footer); only when the first listed file of a heterogeneous table
-    // lacks one does validation read the merged schema of all files. The
-    // persisted data schema is merged across ALL files after the footer
-    // job below, so heterogeneous tables keep every column.
+    // footer), read from that footer on the driver; only when the first
+    // listed file of a heterogeneous table lacks one does validation read
+    // the merged schema of all files. The persisted data schema is merged
+    // across ALL files after the pass below, so heterogeneous tables keep
+    // every column.
     val firstSchema: StructType =
       if (allFiles.isEmpty) StructType(Nil)
-      else Sources.read(spark, src, Seq(allFiles.head.getPath.toString)).schema
+      else SparkInternals.fileSchema(spark, src, allFiles.head)
 
     // the pass reads the indexed columns with the types of the schema
     // they were resolved against
@@ -196,19 +197,19 @@ object IndexedDataSource {
       // column) sized by that file's rows, and range stats from the data
       // for footer holes (INT96 timestamps, non-round-tripping truncated
       // binary bounds, ORC NTZ timestamps — the reference's legacy-table
-      // coverage, ParquetIndexReadSupport.scala:64-73). Both tables are
-      // written from the executors; the driver gets only the merged
-      // schema and counts, so builds scale to millions of files.
+      // coverage, ParquetIndexReadSupport.scala:64-73). Above one scan
+      // task of files, both tables are written from the executors and the
+      // driver gets only the merged schema and counts, so builds scale to
+      // millions of files.
       val sketchKind = if (conf.filterEnabled && indexSchema.nonEmpty) Some(conf.filterType) else None
       val summary =
         if (refs.isEmpty) StatisticsBuilder.FileStatsSummary(None, 0L, 0L)
         else StatisticsBuilder.withPass(spark, refs, indexSchema, readSchema, sketchKind,
             conf.minMaxFallback, numParts, src) { pass =>
-          val (summary, sketchBytes) = StatisticsBuilder.summarize(pass)
-          StatisticsBuilder.writeFileStats(
-            spark, pass, new Path(indexDir, Metastore.FilesDir), "overwrite")
+          val (summary, sketchBytes) = pass.summarize
+          pass.writeFileStats(new Path(indexDir, Metastore.FilesDir), "overwrite")
           if (sketchKind.isDefined) {
-            StatisticsBuilder.writeSketches(spark, pass, new Path(indexDir, Metastore.SketchDir),
+            pass.writeSketches(new Path(indexDir, Metastore.SketchDir),
               StatisticsBuilder.sketchParts(spark, sketchBytes))
           }
           summary
@@ -454,8 +455,10 @@ object IndexedDataSource {
     *     fallback from one read of each file) and its file rows are collected,
     *     and the new metadata is summarized from kept + added rows.
     *     Removed paths leave the sketch table by whole part files (see
-    *     [[StatisticsBuilder.stageSketchRemovals]]). Spark jobs: the pass,
-    *     and the write of the delta's sketches as one part file;
+    *     [[StatisticsBuilder.stageSketchRemovals]]). The delta's sketches
+    *     are written as one part file. A delta that fits one scan task
+    *     (see [[StatisticsBuilder.withPass]]) has its pass run on the
+    *     driver too, so such a refresh starts no Spark job;
     *   - at/above it, the listing is a distributed level-walk and the diff
     *     a full-outer join that collects only the added refs, so driver
     *     residency stays O(dirs + partitions + delta); stale rows drop by
@@ -608,8 +611,9 @@ object IndexedDataSource {
       sketchDrop: Option[Seq[String]] = None)
 
   /** Driver tier of [[refreshIndex]]: listing, diff and summary on the
-    * driver; Spark runs the pass over the added files and writes their
-    * sketches. None = nothing changed. */
+    * driver, then the pass over the added files and the write of their
+    * sketches, on whichever runner the pass picks. None = nothing
+    * changed. */
   private def stageOnDriver(
       spark: SparkSession,
       conf: IndexConf,
@@ -654,9 +658,8 @@ object IndexedDataSource {
       if (added.isEmpty) Nil
       else StatisticsBuilder.withPass(spark, added, meta.indexSchema, meta.dataSchema,
           meta.sketchKind, conf.minMaxFallback, numParts, meta.source) { pass =>
-        val rows = pass.map(_._1).collect().toSeq
-        if (meta.sketchKind.isDefined) StatisticsBuilder.writeSketches(spark, pass, dirs.sketchTmp, 1)
-        rows
+        if (meta.sketchKind.isDefined) pass.writeSketches(dirs.sketchTmp, 1)
+        pass.rows
       }
     // a path rewritten in place is in `removed` too, so its old sketch
     // rows go with the part files they sit in
@@ -667,10 +670,7 @@ object IndexedDataSource {
 
     val replace = removed.nonEmpty
     IndexFilesTable.write(dirs.filesTmp,
-      (if (replace) rows else delta).sortWith { (a, b) =>
-        a.partitionIdx < b.partitionIdx ||
-          (a.partitionIdx == b.partitionIdx && Canon.compare(a.path, b.path) < 0)
-      }, hconf)
+      (if (replace) rows else delta).sortWith(StatisticsBuilder.filesOrder), hconf)
     Some(Staged(added.size.toLong, removed.size.toLong, replace, summary.fileCount,
       summary.totalBytes, summary.dataSchema.getOrElse(meta.dataSchema), Some(sketchDrop)))
   }
@@ -715,11 +715,10 @@ object IndexedDataSource {
       if (addedRefs.isEmpty) StatisticsBuilder.FileStatsSummary(None, 0L, 0L)
       else StatisticsBuilder.withPass(spark, addedRefs, meta.indexSchema, meta.dataSchema,
           meta.sketchKind, conf.minMaxFallback, numParts, meta.source) { pass =>
-        StatisticsBuilder.writeFileStats(spark, pass, dirs.filesTmp, "append")
-        val (summary, sketchBytes) = StatisticsBuilder.summarize(pass)
+        pass.writeFileStats(dirs.filesTmp, "append")
+        val (summary, sketchBytes) = pass.summarize
         if (meta.sketchKind.isDefined) {
-          StatisticsBuilder.writeSketches(spark, pass, dirs.sketchTmp,
-            StatisticsBuilder.sketchParts(spark, sketchBytes))
+          pass.writeSketches(dirs.sketchTmp, StatisticsBuilder.sketchParts(spark, sketchBytes))
         }
         summary
       }

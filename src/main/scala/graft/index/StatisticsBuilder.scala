@@ -15,6 +15,7 @@ import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
 import org.apache.spark.{TaskContext, TaskKilledException}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -27,10 +28,10 @@ import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.SerializableConfiguration
 
-/** Index-statistics collection: ONE executor pass per data file, as the
+/** Index-statistics collection: ONE pass per data file, as the
   * reference's ParquetStatisticsRDD reads each file's footer and data in
   * one task (SURVEY.md §3.1 step 5, reference ParquetStatisticsRDD.scala:
-  * 123-276). A task owns whole files; for each it
+  * 123-276). A slice of the pass owns whole files; for each it
   *   1. reads the footer: the file's schema plus min/max/null per row
   *      group (footers replace the reference's full-data min/max scan,
   *      SURVEY.md §7.1 deltas #2/#3);
@@ -39,10 +40,11 @@ import org.apache.spark.util.SerializableConfiguration
   *      footer left holes in this file (INT96 timestamps and the like);
   *   3. builds one membership sketch per indexed column and patches the
   *      holes with the file's own data bounds.
-  * The pass is persisted for one index operation: create and the
-  * distributed refresh write the files table from it, the driver-tier
-  * refresh collects its file rows, and the sketch rows are written from
-  * the same cache, with no shuffle.
+  * The slices run on the driver when the files fit one scan task, else
+  * as a Spark job (see [[withPass]]). The pass's output serves one index
+  * operation: create and the distributed refresh write the files table
+  * from it, the driver-tier refresh takes its file rows, and the sketch
+  * rows are written from the same output, with no shuffle.
   */
 object StatisticsBuilder {
 
@@ -75,7 +77,7 @@ object StatisticsBuilder {
     def rowCount: Long = blocks.map(_.rowCount).sum
   }
 
-  /** One indexed field as shipped to the pass's executors:
+  /** One indexed field as shipped to the pass's slices:
     * `(name, dataTypeJson, dom, base, rest)` where dom is
     * [[IndexMetadata.domainOf]]'s code, `base` the dotted path of the
     * COLLECTION column for member domains (= name for plain
@@ -107,13 +109,40 @@ object StatisticsBuilder {
     * patched, and its sketch rows. */
   type PassRow = (FileStatsRow, Array[SketchRow])
 
-  /** Runs `body` over the pass for `refs` (nonempty), persisted while
-    * `body` runs. `schema` is the table's merged schema as the caller
-    * knows it (the index metadata's, or at create the schema the index
-    * columns were resolved against); if an indexed column the pass reads
-    * does not resolve in it, the files' own merged schema is inferred
-    * instead. `sketchKind` None builds no sketches; `fallback` patches
-    * footer holes from the data. */
+  /** The pass's output for one index operation, wherever it ran: what
+    * create and both refresh tiers take from it. */
+  sealed trait Pass {
+    /** The files-table rows, in slice order. */
+    def rows: Seq[FileStatsRow]
+    /** The summary of the files and their sketch bytes. */
+    def summarize: (FileStatsSummary, Long)
+    /** Writes the files-table rows to `dir` ("overwrite" or "append"),
+      * one part per slice, each sorted by (partitionIdx, path). */
+    def writeFileStats(dir: Path, mode: String): Unit
+    /** Appends the sketch rows to the sketch table in `dir` as `parts`
+      * part files, each sorted by (file, column) — the order the
+      * query-time `file IN` pushdown skips row groups by. The pass emits
+      * its rows in that order and its slices cover disjoint path ranges,
+      * so neighbouring slices merge without a shuffle or a sort, as RDD
+      * `coalesce` groups them. */
+    def writeSketches(dir: Path, parts: Int): Unit
+  }
+
+  /** Runs `body` over the pass for `refs` (nonempty). `schema` is the
+    * table's merged schema as the caller knows it (the index metadata's,
+    * or at create the schema the index columns were resolved against); if
+    * an indexed column the pass reads does not resolve in it, the files'
+    * own merged schema is inferred instead. `sketchKind` None builds no
+    * sketches; `fallback` patches footer holes from the data.
+    *
+    * The runner is chosen here, by Spark's own scan-packing rule: when
+    * the files fit one scan task (each costs its size plus
+    * `spark.sql.files.openCostInBytes`, a task takes up to
+    * `spark.sql.files.maxPartitionBytes`: at most 31 files at the
+    * defaults) the slices run on the driver, on at most as many threads
+    * as it has cores, and the rows stay there, so the operation starts no
+    * Spark job; otherwise the pass is a Spark job, persisted while `body`
+    * runs. Either way each file goes through the same [[PerFile]]. */
   def withPass[T](
       spark: SparkSession,
       refs: Seq[(Int, FileRef)],
@@ -122,112 +151,252 @@ object StatisticsBuilder {
       sketchKind: Option[String],
       fallback: Boolean,
       numPartitions: Int,
-      source: String)(body: RDD[PassRow] => T): T = {
-    val rdd = pass(spark, refs, indexSchema, schema, sketchKind, fallback, numPartitions,
-      Sources.normalize(source)).persist(StorageLevel.MEMORY_AND_DISK)
-    try body(rdd)
-    finally { rdd.unpersist(); () }
+      source: String)(body: Pass => T): T = {
+    val perFile = PerFile(spark, refs, indexSchema, schema, sketchKind, fallback,
+      Sources.normalize(source))
+    val slices = slice(refs, numPartitions)
+    if (SparkInternals.fitsOneScanTask(spark, refs.map(_._2.size))) {
+      val conf = spark.sparkContext.hadoopConfiguration
+      body(new DriverPass(onDriver(slices.map(_._1), perFile, conf), conf))
+    } else {
+      val confBc = spark.sparkContext.broadcast(
+        new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+      val rdd = spark.sparkContext.makeRDD(slices).flatMap { group =>
+        val (conf, ctx) = (confBc.value.value, TaskContext.get())
+        group.iterator.map { case (file, (idx, ref)) =>
+          // a cancelled task stops between files
+          if (ctx.isInterrupted()) throw new TaskKilledException("cancelled")
+          perFile(file, idx, ref, conf)
+        }
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+      try body(new SparkPass(spark, rdd, confBc))
+      finally { rdd.unpersist(); () }
+    }
   }
 
-  /** The pass. Slices are cut from the refs sorted by normalized path, so
-    * each task's output covers a disjoint file range; tasks prefer the
-    * hosts holding the most bytes of their slice (reference
-    * ParquetStatisticsRDD.getPreferredLocations, :100-121). The column
-    * inputs are resolved and bound once, here: a dotted struct leaf, an
-    * array (its elements), an array-of-struct leaf (the leaf of every
-    * element), a map (its keys) or `map_values` of a map; a column the
-    * schema lacks reads as null, so its sketch is empty. Two readers are
-    * built: the sketch columns alone, and the sketch columns plus every
-    * fallback column, for files whose footers have holes. */
-  private def pass(
-      spark: SparkSession,
-      refs: Seq[(Int, FileRef)],
-      indexSchema: StructType,
-      known: StructType,
-      sketchKind: Option[String],
-      fallback: Boolean,
-      numPartitions: Int,
-      src: String): RDD[PassRow] = {
-    // by name, so each file's sketch rows come out in (file, column) order
-    val sketchFields =
-      if (sketchKind.isEmpty) Nil
-      else indexSchema.fields.toSeq.sortWith((a, b) => Canon.compare(a.name, b.name) < 0)
-    // element-domain fields are no fallback columns: min(arrayCol) is the
-    // wrong domain (lexicographic array order, not element bounds); a
-    // statless array column stays may-contain, with the sketch still
-    // answering membership
-    val fallbackFields =
-      if (fallback) indexSchema.fields.toSeq.filterNot(IndexMetadata.isElementDomain) else Nil
-    val column = (f: StructField) =>
-      if (IndexMetadata.isMapValue(f)) IndexMetadata.mapValueBase(f.name) else f.name
-    val (schema, frame) = {
-      val knownFrame = SparkInternals.emptyFrame(spark, known)
-      if ((sketchFields ++ fallbackFields).forall(f => hasColumn(knownFrame, column(f)))) {
-        (known, knownFrame)
-      } else {
-        val inferred = Sources.read(spark, src, refs.map(_._2.path)).schema
-        (inferred, SparkInternals.emptyFrame(spark, inferred))
-      }
-    }
-    val input = (f: StructField) =>
-      if (!hasColumn(frame, column(f))) {
-        lit(null).cast(if (IndexMetadata.isMapValue(f)) ArrayType(f.dataType) else f.dataType)
-      } else if (IndexMetadata.isMapValue(f)) map_values(col(column(f)))
-      else col(f.name)
-    val sketchCols = sketchFields.map(input)
-    val (sketchSchema, sketchExprs) = SparkInternals.bindColumns(frame, sketchCols)
-    val (fullSchema, fullExprs) =
-      SparkInternals.bindColumns(frame, sketchCols ++ fallbackFields.map(input))
-    val sketchRead = if (sketchFields.isEmpty) None
-      else Some((SparkInternals.fileReader(spark, src, schema, sketchSchema), sketchExprs.toArray))
-    val fullRead = if (fallbackFields.isEmpty) None
-      else Some((SparkInternals.fileReader(spark, src, schema, fullSchema), fullExprs.toArray))
-    val kinds = sketchFields.map(f => f.name -> Sketch.resolveKind(sketchKind.get, f.dataType)).toArray
-    val holeCols = fallbackFields.map(f => f.name -> f.dataType).toArray
-    val fields = indexSchema.fields.map(domainSpec)
-    val confBc = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
-
+  /** The refs keyed by normalized path, sorted by it and cut into at most
+    * `numPartitions` slices, so each slice's output covers a disjoint file
+    * range; each slice prefers the hosts holding the most bytes of it
+    * (reference ParquetStatisticsRDD.getPreferredLocations, :100-121). */
+  private def slice(refs: Seq[(Int, FileRef)], numPartitions: Int)
+      : Seq[(Seq[(String, (Int, FileRef))], Seq[String])] = {
     val keyed = refs.map(r => SketchStore.normalizePath(r._2.path) -> r)
       .sortWith((a, b) => Canon.compare(a._1, b._1) < 0)
     val slices = math.max(1, math.min(numPartitions, keyed.size))
     val perSlice = (keyed.size + slices - 1) / slices
-    val grouped = keyed.grouped(perSlice).toSeq.map { g =>
+    keyed.grouped(perSlice).toSeq.map { g =>
       val byHost = g.flatMap { case (_, (_, r)) => r.hosts.map(_ -> r.size) }
         .groupBy(_._1).view.mapValues(_.map(_._2).sum)
       (g, byHost.toSeq.sortBy(-_._2).take(3).map(_._1))
     }
-    spark.sparkContext.makeRDD(grouped).flatMap { group =>
-      val types = fields.map { case (n, dj, dom, base, rest) =>
-        (n, DataType.fromJson(dj), dom, base, rest) }
-      val conf = confBc.value.value
-      group.iterator.map { case (file, (partitionIdx, ref)) =>
-        // a cancelled task stops between files
-        if (TaskContext.get().isInterrupted()) throw new TaskKilledException("cancelled")
-        val footer =
-          if (src == Sources.Orc) readOrcBlocks(ref.path, types, conf)
-          else readFooterBlocks(ref.path, types, conf)
-        val holes = holeCols.indices.filter { j =>
-          footer.blocks.exists(b => b.columns.get(holeCols(j)._1).exists(statless(_, b.rowCount)))
-        }.toArray
-        // one sketch per column, sized by the file's own row count
-        val sketches = kinds.map { case (_, kind) => Sketch.create(kind, math.max(4096L, footer.rowCount)) }
-        val read = if (holes.isEmpty) sketchRead else fullRead
-        val bounds = read.filter(_ => footer.rowCount > 0).fold(Map.empty[String, (Any, Any)]) {
-          case (open, exprs) => scan(open(ref.path, ref.size, ref.modificationTime), exprs,
+  }
+
+  /** The slices on the driver: one thread per slice, at most as many as
+    * the driver has cores. The first failing slice fails the pass; the
+    * others are interrupted, which each checks between files, and waited
+    * for. */
+  private def onDriver(slices: Seq[Seq[(String, (Int, FileRef))]], perFile: PerFile,
+      conf: Configuration): Seq[Seq[PassRow]] = {
+    import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
+    val pool = Executors.newFixedThreadPool(
+      math.min(slices.size, Runtime.getRuntime.availableProcessors))
+    try {
+      val done = new ExecutorCompletionService[Seq[PassRow]](pool)
+      val futures = slices.map { group =>
+        done.submit(() => group.map { case (file, (idx, ref)) =>
+          if (Thread.interrupted()) throw new InterruptedException("cancelled")
+          SparkInternals.asTask(perFile(file, idx, ref, conf))
+        })
+      }
+      try {
+        futures.foreach(_ => done.take().get())
+        futures.map(_.get())
+      } catch { case e: ExecutionException => throw e.getCause }
+    } finally {
+      pool.shutdownNow()
+      pool.awaitTermination(1, TimeUnit.MINUTES)
+      ()
+    }
+  }
+
+  /** One data file's [[PassRow]]: a serializable function, built once on
+    * the driver, that reads the file's footer, finds the fallback columns
+    * with holes (same [[statless]] rule), reads through Spark's own
+    * `FileFormat.buildReaderWithPartitionValues` (Parquet and ORC,
+    * `returning_batch=false`, the merged schema) the sketch columns plus,
+    * for a file with holes, the fallback columns, builds one sketch per
+    * sketch column sized `max(4096, rows)` and patches the holes with the
+    * file's own bounds. */
+  private final class PerFile(
+      src: String,
+      fields: Array[(String, String, Int, String, String)],
+      kinds: Array[(String, String)],
+      holeCols: Array[(String, DataType)],
+      read: Option[((String, Long, Long) => Iterator[InternalRow], Array[Expression])])
+      extends Serializable {
+
+    @transient private lazy val types = fields.map { case (n, dj, dom, base, rest) =>
+      (n, DataType.fromJson(dj), dom, base, rest) }
+
+    def apply(file: String, partitionIdx: Int, ref: FileRef, conf: Configuration): PassRow = {
+      val footer =
+        if (src == Sources.Orc) readOrcBlocks(ref.path, types, conf)
+        else readFooterBlocks(ref.path, types, conf)
+      val holes = holeCols.indices.filter { j =>
+        footer.blocks.exists(b => b.columns.get(holeCols(j)._1).exists(statless(_, b.rowCount)))
+      }.toArray
+      // one sketch per column, sized by the file's own row count
+      val sketches =
+        kinds.map { case (_, kind) => Sketch.create(kind, math.max(4096L, footer.rowCount)) }
+      val bounds = read.filter(_ => footer.rowCount > 0 && (kinds.nonEmpty || holes.nonEmpty))
+        .fold(Map.empty[String, (Any, Any)]) { case (open, exprs) =>
+          scan(open(ref.path, ref.size, ref.modificationTime), exprs,
             sketches, holes.map(j => (holeCols(j), kinds.length + j)))
         }
-        val row = FileStatsRow(partitionIdx, ref.path, ref.size, ref.modificationTime,
-          ref.blockSize, ref.locationsJson, footer.schemaJson,
-          IndexMetadata.blocksToJsonString(patchBlocks(footer.blocks, bounds)), footer.rowCount)
-        // a file without rows gets no sketch rows: its zero blocks already prune
-        val sketchRows =
-          if (footer.rowCount == 0) Array.empty[SketchRow]
-          else kinds.zip(sketches).map { case ((name, kind), s) => (file, name, kind, s.serialize()) }
-        (row, sketchRows)
+      val row = FileStatsRow(partitionIdx, ref.path, ref.size, ref.modificationTime,
+        ref.blockSize, ref.locationsJson, footer.schemaJson,
+        IndexMetadata.blocksToJsonString(patchBlocks(footer.blocks, bounds)), footer.rowCount)
+      // a file without rows gets no sketch rows: its zero blocks already prune
+      val sketchRows =
+        if (footer.rowCount == 0) Array.empty[SketchRow]
+        else kinds.zip(sketches).map { case ((name, kind), s) => (file, name, kind, s.serialize()) }
+      (row, sketchRows)
+    }
+  }
+
+  private object PerFile {
+    /** Resolves and binds the column inputs once: a dotted struct leaf, an
+      * array (its elements), an array-of-struct leaf (the leaf of every
+      * element), a map (its keys) or `map_values` of a map; a column the
+      * schema lacks reads as null, so its sketch is empty. One reader is
+      * built, over the sketch columns and every fallback column: with
+      * sketches on, the fallback columns are among the sketch columns. */
+    def apply(
+        spark: SparkSession,
+        refs: Seq[(Int, FileRef)],
+        indexSchema: StructType,
+        known: StructType,
+        sketchKind: Option[String],
+        fallback: Boolean,
+        src: String): PerFile = {
+      // by name, so each file's sketch rows come out in (file, column) order
+      val sketchFields =
+        if (sketchKind.isEmpty) Nil
+        else indexSchema.fields.toSeq.sortWith((a, b) => Canon.compare(a.name, b.name) < 0)
+      // element-domain fields are no fallback columns: min(arrayCol) is the
+      // wrong domain (lexicographic array order, not element bounds); a
+      // statless array column stays may-contain, with the sketch still
+      // answering membership
+      val fallbackFields =
+        if (fallback) indexSchema.fields.toSeq.filterNot(IndexMetadata.isElementDomain) else Nil
+      val column = (f: StructField) =>
+        if (IndexMetadata.isMapValue(f)) IndexMetadata.mapValueBase(f.name) else f.name
+      val (schema, frame) = {
+        val knownFrame = SparkInternals.emptyFrame(spark, known)
+        if ((sketchFields ++ fallbackFields).forall(f => hasColumn(knownFrame, column(f)))) {
+          (known, knownFrame)
+        } else {
+          val inferred = Sources.read(spark, src, refs.map(_._2.path)).schema
+          (inferred, SparkInternals.emptyFrame(spark, inferred))
+        }
+      }
+      val input = (f: StructField) =>
+        if (!hasColumn(frame, column(f))) {
+          lit(null).cast(if (IndexMetadata.isMapValue(f)) ArrayType(f.dataType) else f.dataType)
+        } else if (IndexMetadata.isMapValue(f)) map_values(col(column(f)))
+        else col(f.name)
+      val read = if (sketchFields.isEmpty && fallbackFields.isEmpty) None else {
+        val (required, exprs) =
+          SparkInternals.bindColumns(frame, (sketchFields ++ fallbackFields).map(input))
+        Some((SparkInternals.fileReader(spark, src, schema, required), exprs.toArray))
+      }
+      new PerFile(src, indexSchema.fields.map(domainSpec),
+        sketchFields.map(f => f.name -> Sketch.resolveKind(sketchKind.get, f.dataType)).toArray,
+        fallbackFields.map(f => f.name -> f.dataType).toArray, read)
+    }
+  }
+
+  /** A pass run on the driver: its rows per slice, and the conf it
+    * writes with. */
+  private final class DriverPass(slices: Seq[Seq[PassRow]], conf: Configuration) extends Pass {
+    def rows: Seq[FileStatsRow] = slices.flatten.map(_._1)
+
+    def summarize: (FileStatsSummary, Long) = {
+      val p = partial(slices.iterator.flatten)
+      (p.summary, p.sketchBytes)
+    }
+
+    def writeFileStats(dir: Path, mode: String): Unit = {
+      require(mode == "overwrite" || mode == "append", s"unknown write mode $mode")
+      val fs = dir.getFileSystem(conf)
+      if (mode == "overwrite" && fs.exists(dir)) fs.delete(dir, true)
+      slices.filter(_.nonEmpty).foreach { s =>
+        IndexFilesTable.write(dir, s.map(_._1).sortWith(filesOrder), conf)
+      }
+    }
+
+    def writeSketches(dir: Path, parts: Int): Unit = {
+      val run = java.util.UUID.randomUUID().toString
+      val k = math.max(1, math.min(parts, slices.size))
+      (0 until k).foreach { i =>
+        val group = slices.slice(i * slices.size / k, (i + 1) * slices.size / k)
+        val rows = group.iterator.flatMap(_.iterator.flatMap(_._2.iterator))
+        if (rows.hasNext) writeSketchPart(dir, i, run, 0, conf, rows)
       }
     }
   }
+
+  /** A pass run as a Spark job: its persisted RDD, one partition per
+    * slice, and the conf broadcast its tasks read files with. */
+  private final class SparkPass(spark: SparkSession, pass: RDD[PassRow],
+      confBc: Broadcast[SerializableConfiguration]) extends Pass {
+
+    def rows: Seq[FileStatsRow] = pass.map(_._1).collect().toSeq
+
+    def summarize: (FileStatsSummary, Long) = {
+      val p = pass.mapPartitions(it => Iterator.single(partial(it))).collect().reduce(_ merge _)
+      (p.summary, p.sketchBytes)
+    }
+
+    def writeFileStats(dir: Path, mode: String): Unit =
+      spark.createDataFrame(pass.map(_._1)).sortWithinPartitions("partitionIdx", "path")
+        .write.mode(mode).parquet(dir.toString)
+
+    def writeSketches(dir: Path, parts: Int): Unit = {
+      val (bc, target, run) = (confBc, dir, java.util.UUID.randomUUID().toString)
+      spark.sparkContext.runJob(pass.flatMap(_._2.iterator).coalesce(parts),
+        (ctx: TaskContext, rows: Iterator[SketchRow]) => {
+          if (rows.hasNext) {
+            val (bytes, n) = writeSketchPart(target, ctx.partitionId, run, ctx.attemptNumber,
+              bc.value.value, rows)
+            SparkInternals.recordWrite(bytes, n)
+          }
+          ()
+        })
+      ()
+    }
+  }
+
+  /** Writes sketch part `index` of write `run` into `dir` under a hidden
+    * name and renames it into place, so a failed or repeated attempt
+    * never leaves a visible partial part. Returns its bytes and rows. */
+  private def writeSketchPart(dir: Path, index: Int, run: String, attempt: Int,
+      conf: Configuration, rows: Iterator[SketchRow]): (Long, Long) = {
+    val name = f"part-$index%05d-$run-c000.snappy.parquet"
+    val tmp = new Path(dir, s".$name.$attempt")
+    val fs = tmp.getFileSystem(conf)
+    try {
+      val n = SketchStore.writePart(tmp, conf)(rows.foreach)
+      val bytes = fs.getFileStatus(tmp).getLen
+      if (!fs.rename(tmp, new Path(dir, name))) fs.delete(tmp, false)
+      (bytes, n)
+    } catch { case e: Throwable => fs.delete(tmp, false); throw e }
+  }
+
+  /** The files table's order within a part: (partitionIdx, path). */
+  def filesOrder(a: FileStatsRow, b: FileStatsRow): Boolean =
+    a.partitionIdx < b.partitionIdx ||
+      (a.partitionIdx == b.partitionIdx && Canon.compare(a.path, b.path) < 0)
 
   /** One file's rows through the bound inputs: the first `sketches.length`
     * expressions feed the sketches; each hole `((name, indexType), i)`
@@ -288,41 +457,6 @@ object StatisticsBuilder {
       if (!arr.isNullAt(i)) sketch.put(Canon.fromCatalyst(et, arr.get(i, et)))
       i += 1
     }
-  }
-
-  /** Writes the pass's file rows to the files table in `dir`, each part
-    * sorted by (partitionIdx, path). */
-  def writeFileStats(spark: SparkSession, pass: RDD[PassRow], dir: Path, mode: String): Unit =
-    spark.createDataFrame(pass.map(_._1)).sortWithinPartitions("partitionIdx", "path")
-      .write.mode(mode).parquet(dir.toString)
-
-  /** Appends the pass's sketch rows to the sketch table in `dir` as
-    * `parts` part files, each sorted by (file, column) — the order the
-    * query-time `file IN` pushdown skips row groups by. The pass emits its
-    * rows in that order and its slices cover disjoint path ranges, so
-    * neighbours merge without a shuffle or a sort. Each task writes its
-    * part (none for no rows) under a hidden name and renames it into
-    * place, so a failed or repeated attempt never leaves a visible partial
-    * part. */
-  def writeSketches(spark: SparkSession, pass: RDD[PassRow], dir: Path, parts: Int): Unit = {
-    val confBc = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
-    val (target, run) = (dir.toString, java.util.UUID.randomUUID().toString)
-    spark.sparkContext.runJob(pass.flatMap(_._2.iterator).coalesce(parts),
-      (ctx: TaskContext, rows: Iterator[SketchRow]) => {
-        if (rows.hasNext) {
-          val conf = confBc.value.value
-          val name = f"part-${ctx.partitionId}%05d-$run-c000.snappy.parquet"
-          val tmp = new Path(target, s".$name.${ctx.attemptNumber}")
-          val fs = tmp.getFileSystem(conf)
-          try {
-            val n = SketchStore.writePart(tmp, conf)(rows.foreach)
-            SparkInternals.recordWrite(fs.getFileStatus(tmp).getLen, n)
-            if (!fs.rename(tmp, new Path(target, name))) fs.delete(tmp, false)
-          } catch { case e: Throwable => fs.delete(tmp, false); throw e }
-        }
-        ()
-      })
   }
 
   /** Part files for `bytes` of sketches: as many as AQE coalesces a
@@ -443,12 +577,6 @@ object StatisticsBuilder {
   /** The same summary over rows the driver holds. */
   def summarizeRows(rows: Seq[FileStatsRow]): FileStatsSummary =
     partial(rows.iterator.map(_ -> Array.empty[SketchRow])).summary
-
-  /** The pass's summary and its sketch bytes: one job over the cache. */
-  def summarize(pass: RDD[PassRow]): (FileStatsSummary, Long) = {
-    val p = pass.mapPartitions(it => Iterator.single(partial(it))).collect().reduce(_ merge _)
-    (p.summary, p.sketchBytes)
-  }
 
   private def mergeSchemaJsons(jsons: Seq[String]): Option[StructType] =
     jsons.map(j => DataType.fromJson(j).asInstanceOf[StructType])

@@ -188,6 +188,66 @@ object SparkInternals {
       mtime, size, Map.empty))
   }
 
+  /** Would Spark's file scan give files of `sizes` to one task? Each
+    * file costs its size plus `spark.sql.files.openCostInBytes`, and a
+    * task takes up to `spark.sql.files.maxPartitionBytes` (the bound
+    * `FilePartition` packs scan tasks to). */
+  def fitsOneScanTask(spark: SparkSession, sizes: Seq[Long]): Boolean = {
+    val conf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+    sizes.iterator.map(_ + conf.filesOpenCostInBytes).sum <= conf.filesMaxPartitionBytes
+  }
+
+  /** Runs `body` on this thread as a task runs it: under a TaskContext of
+    * its own, completed when `body` ends. Spark's file readers close
+    * their files from completion listeners, so a reader left open by a
+    * failing `body` is closed too. For executor work done on the driver.
+    * The context's attempt id is the block manager's id for work outside
+    * tasks (`BlockInfo.NON_TASK_WRITER`, private to Spark's storage
+    * package), so the block locks `body` takes (a broadcast read, say) are
+    * held and released as on any driver thread. */
+  def asTask[T](body: => T): T = {
+    val ctx = new org.apache.spark.TaskContextImpl(0, 0, 0,
+      -1024L, 0, 1, null, new java.util.Properties,
+      null, org.apache.spark.executor.TaskMetrics.empty, 1, Map.empty)
+    org.apache.spark.TaskContext.setTaskContext(ctx)
+    try {
+      val out =
+        try body
+        catch {
+          case e: Throwable =>
+            try ctx.markTaskCompleted(Some(e)) catch { case c: Throwable => e.addSuppressed(c) }
+            throw e
+        }
+      ctx.markTaskCompleted(None)
+      out
+    } finally org.apache.spark.TaskContext.unset()
+  }
+
+  /** The schema Spark infers for the one data file `file` of `source`
+    * format ("parquet" | "orc"), without a job: its footer, read on the
+    * driver and converted under the session's settings, as Spark's
+    * inference does for a file it does not merge. Empty for an ORC file
+    * without columns. */
+  def fileSchema(spark: SparkSession, source: String, file: FileStatus): StructType = {
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val schema = source match {
+      case "orc" =>
+        org.apache.spark.sql.execution.datasources.orc.OrcUtils
+          .readSchema(classic, Seq(file), Map.empty[String, String])
+      case _ =>
+        val input = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+          file, classic.sessionState.newHadoopConf())
+        val footer = org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+          .readFooter(input,
+            org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        Some(ParquetFileFormat.readSchemaFromFooter(
+          new org.apache.parquet.hadoop.Footer(file.getPath, footer),
+          new org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter(
+            classic.sessionState.conf)))
+    }
+    schema.getOrElse(StructType(Nil)).asNullable
+  }
+
   /** A frame of no rows over `schema` (all fields nullable), for
     * resolving columns against it without a job. */
   def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =

@@ -26,8 +26,10 @@ import graft.index.implicits._
   *     partitionIdx mapped to partition values, sketch rows, file count,
   *     bytes, data schema);
   *   - a refresh that fails before its swap leaves the index loadable and
-  *     unchanged, leaves no staging behind, and a rerun converges;
-  *   - the driver tier's Spark job counts and its part-level sketch
+  *     unchanged, leaves no staging behind, and a rerun converges, with
+  *     the stats pass on either of its runners ([[PassRunners]]);
+  *   - a small create and the driver tier's small refreshes start no Spark
+  *     job, a delta past one scan task does, and its part-level sketch
   *     removals stay pinned. */
 class RefreshTiersSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -48,12 +50,12 @@ class RefreshTiersSpec extends AnyFunSuite with BeforeAndAfterAll {
     "driver" -> Map.empty[String, String],
     "distributed" -> Map(IndexConf.DistributedPruningThreshold -> "1"))
 
-  /** Append one parquet file of keys [from, from + n) to `dir`: columns k,
+  /** Append `files` parquet files of keys [from, from + n) to `dir`: columns k,
     * s, ts, plus x unless `withX` is off and y when `withY` is on; ts
     * written as INT96 (no footer min/max) when `int96`, else as
     * TIMESTAMP_MICROS (footer min/max). */
   private def writeFile(dir: String, from: Long, n: Long, withX: Boolean = true,
-      withY: Boolean = false, int96: Boolean = false): Unit = {
+      withY: Boolean = false, int96: Boolean = false, files: Int = 1): Unit = {
     val base = spark.range(from, from + n).select(
       col("id").as("k"), concat(lit("s"), col("id") % 13).as("s"),
       timestamp_seconds(col("id") + 1600000000L).as("ts"))
@@ -63,7 +65,8 @@ class RefreshTiersSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (withY) Some((col("k") + 7).as("y")) else None).flatten
     spark.conf.set("spark.sql.parquet.outputTimestampType",
       if (int96) "INT96" else "TIMESTAMP_MICROS")
-    try base.select(withCols: _*).coalesce(1).write.mode("append").parquet(dir)
+    val df = base.select(withCols: _*)
+    try (if (files == 1) df.coalesce(1) else df.repartition(files)).write.mode("append").parquet(dir)
     finally spark.conf.unset("spark.sql.parquet.outputTimestampType")
   }
 
@@ -219,36 +222,42 @@ class RefreshTiersSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(spark.index.parquet(t).where(col("k") === 5L).count() == 0L)
     }
 
-    test(s"$tier tier: a refresh failing before its swap leaves the index as it was") {
-      val t = s"$work/failing_$tier"
-      (0 until 4).foreach(i => writeFile(s"$t/p=0", i * 100L, 100))
-      create(Metastore.Dataspace, t)
-      val q = (df: DataFrame) => df.where(col("k") === 150L || col("s") === "s3")
-      val answer = q(spark.index.parquet(t)).collect().map(_.toString).sorted
-      val before = snapshot(Metastore.Dataspace, t)
+  }
 
-      // a good file and a truncated one land together
-      writeFile(s"$t/p=0", 1000, 100)
-      val good = dataFiles(s"$t/p=0").last
-      val bad = new java.io.File(s"$t/p=0", "part-truncated.parquet")
-      val bytes = Files.readAllBytes(good.toPath)
-      Files.write(bad.toPath, java.util.Arrays.copyOf(bytes, bytes.length / 2))
-      intercept[Exception](refresh(t, opts))
-      // no task of the aborted jobs outlives the cleanup
-      TestListenerBus.drain(spark.sparkContext)
-      val dir = indexDir(Metastore.Dataspace, t)
-      Seq(Metastore.FilesDir, Metastore.SketchDir).foreach { d =>
-        assert(!new java.io.File(dir.toUri.getPath, d + "_tmp").exists(), s"$tier: ${d}_tmp left behind")
+  for ((tier, opts) <- Tiers; runner <- PassRunners.All) {
+    test(PassRunners.named(
+        s"$tier tier: a refresh failing before its swap leaves the index as it was", runner)) {
+      PassRunners.on(spark, runner) {
+        val t = s"$work/failing_${tier}_$runner"
+        (0 until 4).foreach(i => writeFile(s"$t/p=0", i * 100L, 100))
+        create(Metastore.Dataspace, t)
+        val q = (df: DataFrame) => df.where(col("k") === 150L || col("s") === "s3")
+        val answer = q(spark.index.parquet(t)).collect().map(_.toString).sorted
+        val before = snapshot(Metastore.Dataspace, t)
+
+        // a good file and a truncated one land together
+        writeFile(s"$t/p=0", 1000, 100)
+        val good = dataFiles(s"$t/p=0").last
+        val bad = new java.io.File(s"$t/p=0", "part-truncated.parquet")
+        val bytes = Files.readAllBytes(good.toPath)
+        Files.write(bad.toPath, java.util.Arrays.copyOf(bytes, bytes.length / 2))
+        intercept[Exception](refresh(t, opts))
+        // no task of the aborted jobs outlives the cleanup
+        TestListenerBus.drain(spark.sparkContext)
+        val dir = indexDir(Metastore.Dataspace, t)
+        Seq(Metastore.FilesDir, Metastore.SketchDir).foreach { d =>
+          assert(!new java.io.File(dir.toUri.getPath, d + "_tmp").exists(), s"$tier: ${d}_tmp left behind")
+        }
+
+        assert(spark.index.exists.parquet(t))
+        assert(q(spark.index.parquet(t)).collect().map(_.toString).sorted.sameElements(answer))
+        assert(snapshot(Metastore.Dataspace, t) == before, "the failed refresh changed the index")
+
+        remove(bad)
+        assert(refresh(t, opts) == IndexedDataSource.RefreshStats(1L, 0L))
+        assertMatchesCreate(t, tier, "rerun")
+        sameRows(q(spark.index.parquet(t)), q(spark.read.parquet(t)))
       }
-
-      assert(spark.index.exists.parquet(t))
-      assert(q(spark.index.parquet(t)).collect().map(_.toString).sorted.sameElements(answer))
-      assert(snapshot(Metastore.Dataspace, t) == before, "the failed refresh changed the index")
-
-      remove(bad)
-      assert(refresh(t, opts) == IndexedDataSource.RefreshStats(1L, 0L))
-      assertMatchesCreate(t, tier, "rerun")
-      sameRows(q(spark.index.parquet(t)), q(spark.read.parquet(t)))
     }
   }
 
@@ -285,21 +294,19 @@ class RefreshTiersSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("create and driver-tier refreshes run their pinned Spark job counts") {
     val t = s"$work/jobs"
     (0 until 8).foreach(i => writeFile(s"$t/p=${i / 4}", i * 100L, 100))
-    // schema inference of the first file, the pass (with the summary),
-    // the files-table write and the sketch write
+    // the first footer's schema, the pass and both writes on the driver
     val (createJobs, _) = counted(create(Metastore.Dataspace, t))
-    assert(createJobs == 4, s"create ran $createJobs Spark jobs")
+    assert(createJobs == 0, s"create ran $createJobs Spark jobs")
     val filesDir = new java.io.File(indexDir(Metastore.Dataspace, t).toUri.getPath, Metastore.FilesDir)
     def parts = dataFiles(filesDir.getPath).size
 
-    // 4 files land in a new partition, the 4 of the first one go: the
-    // pass and the delta's sketch write
+    // 4 files land in a new partition, the 4 of the first one go
     (0 until 4).foreach(i => writeFile(s"$t/p=2", 1000 + i * 100L, 100))
     dataFiles(s"$t/p=0").foreach(remove)
     var stats: IndexedDataSource.RefreshStats = null
     val (cycleJobs, cycleWrites) = counted { stats = spark.index.refresh.parquet(t) }
     assert(stats == IndexedDataSource.RefreshStats(4L, 4L))
-    assert(cycleJobs <= 2, s"refresh ran $cycleJobs Spark jobs")
+    assert(cycleJobs == 0, s"refresh ran $cycleJobs Spark jobs")
     assert(cycleWrites == 0, "the driver tier writes the files table without Spark")
     assert(parts == 1, "a refresh with removals writes the files table as one part file")
 
@@ -307,7 +314,7 @@ class RefreshTiersSpec extends AnyFunSuite with BeforeAndAfterAll {
     // fallback's bounds come from the same pass, so the job counts match
     (0 until 4).foreach(i => writeFile(s"$t/p=3", 2000 + i * 100L, 100))
     val (plainJobs, plainWrites) = counted { spark.index.refresh.parquet(t) }
-    assert(plainJobs <= 2, s"an append ran $plainJobs Spark jobs")
+    assert(plainJobs == 0, s"an append ran $plainJobs Spark jobs")
     assert(parts == 2, "an append adds one part file")
     (0 until 4).foreach(i => writeFile(s"$t/p=4", 3000 + i * 100L, 100, int96 = true))
     val (int96Jobs, int96Writes) = counted { spark.index.refresh.parquet(t) }
@@ -316,6 +323,27 @@ class RefreshTiersSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(int96Jobs == plainJobs, s"INT96 delta ran $int96Jobs jobs, the plain one $plainJobs")
     sameRows(spark.index.parquet(t).where(col("ts") > timestamp_seconds(lit(1600003350L))),
       spark.read.parquet(t).where(col("ts") > timestamp_seconds(lit(1600003350L))))
+  }
+
+  test("a delta past one scan task runs the pass as Spark jobs and equals a fresh create") {
+    val t = s"$work/scan_task"
+    (0 until 4).foreach(i => writeFile(s"$t/p=0", i * 100L, 100))
+    create(Metastore.Dataspace, t)
+    // at the default sizes (a 4 MB open cost per file, 128 MB per task)
+    // 31 small files fit one scan task and 32 do not
+    writeFile(s"$t/p=1", 1000, 620, files = 31)
+    val (fitting, _) = counted {
+      assert(refresh(t, Map.empty) == IndexedDataSource.RefreshStats(31L, 0L))
+    }
+    assert(fitting == 0, s"a 31-file delta ran $fitting Spark jobs")
+    writeFile(s"$t/p=2", 2000, 640, files = 32)
+    val (past, _) = counted {
+      assert(refresh(t, Map.empty) == IndexedDataSource.RefreshStats(32L, 0L))
+    }
+    assert(past > 0, "a 32-file delta ran no Spark job")
+    assertMatchesCreate(t, "driver", "past one scan task")
+    sameRows(spark.index.parquet(t).where(col("k") === 2100L),
+      spark.read.parquet(t).where(col("k") === 2100L))
   }
 
   test("driver tier: removals drop dead sketch parts and keep untouched ones") {

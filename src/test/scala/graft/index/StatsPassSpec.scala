@@ -12,13 +12,16 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.index.implicits._
 
 /** The stats pass (`StatisticsBuilder.withPass`) against rebuilds made
-  * here from `spark.read` of each file:
+  * here from `spark.read` of each file, on both of its runners
+  * ([[PassRunners]]):
   *   - its sketch rows equal sketches built with `Sketch.create(kind,
   *     max(4096, rows))`, `put` and `Canon.fromCatalyst`, for every sketch
   *     kind and every column domain, after create and after a refresh;
   *   - the bounds it patches into footer holes equal Spark's `min`/`max`
   *     of each file, canonicalized, after create and after a refresh on
-  *     both tiers. */
+  *     both tiers;
+  *   - both runners write identical files-table and sketch rows, for
+  *     Parquet and ORC. */
 class StatsPassSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val work = Files.createTempDirectory("graft-stats-pass").toString
@@ -118,41 +121,42 @@ class StatsPassSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getAs[Array[Byte]](3).toSeq))
   }
 
-  for (kind <- Seq(Sketch.Bloom, Sketch.Dict)) {
-    test(s"$kind sketches of every domain equal sketches built from each file") {
-      // a space in the table path: the sketch key is the listing's path
-      val t = s"$work/sketch $kind"
-      writeNested(t, 0, 300, withMap = true)
-      writeNested(t, 300, 200, withMap = false) // lacks the indexed map
-      val opts = Map(IndexConf.FilterType -> kind)
-      create(Metastore.Dataspace, t, SketchCols, opts)
-      def check(step: String): Unit = {
-        val (_, meta) = indexOf(Metastore.Dataspace, t)
-        assert(meta.indexSchema.fieldNames.toSeq ==
-          Seq("k", "s", "st.a", "arr", "ev.t", "m", IndexMetadata.mapValueFieldName("m")))
-        val want = dataFiles(t).flatMap(expectedSketches(_, kind, meta)).sortBy(r => (r._1, r._2))
-        val got = sketchRows(Metastore.Dataspace, t).sortBy(r => (r._1, r._2))
-        assert(got.map(r => (r._1, r._2, r._3)) == want.map(r => (r._1, r._2, r._3)), s"$kind/$step")
-        got.zip(want).foreach { case (g, w) =>
-          assert(g._4 == w._4, s"$kind/$step: sketch data of ${g._1} ${g._2} differs")
+  for (kind <- Seq(Sketch.Bloom, Sketch.Dict); runner <- PassRunners.All) {
+    test(PassRunners.named(s"$kind sketches of every domain equal sketches built from each file",
+        runner)) { PassRunners.on(spark, runner) {
+        // a space in the table path: the sketch key is the listing's path
+        val t = s"$work/sketch $kind $runner"
+        writeNested(t, 0, 300, withMap = true)
+        writeNested(t, 300, 200, withMap = false) // lacks the indexed map
+        val opts = Map(IndexConf.FilterType -> kind)
+        create(Metastore.Dataspace, t, SketchCols, opts)
+        def check(step: String): Unit = {
+          val (_, meta) = indexOf(Metastore.Dataspace, t)
+          assert(meta.indexSchema.fieldNames.toSeq ==
+            Seq("k", "s", "st.a", "arr", "ev.t", "m", IndexMetadata.mapValueFieldName("m")))
+          val want = dataFiles(t).flatMap(expectedSketches(_, kind, meta)).sortBy(r => (r._1, r._2))
+          val got = sketchRows(Metastore.Dataspace, t).sortBy(r => (r._1, r._2))
+          assert(got.map(r => (r._1, r._2, r._3)) == want.map(r => (r._1, r._2, r._3)), s"$kind/$step")
+          got.zip(want).foreach { case (g, w) =>
+            assert(g._4 == w._4, s"$kind/$step: sketch data of ${g._1} ${g._2} differs")
+          }
         }
-      }
-      check("create")
-      // sketched together, a file above 4096 rows and a small one each
-      // get a sketch sized by their own row count
-      writeNested(t, 1000, 5000, withMap = true)
-      writeNested(t, 7000, 100, withMap = true)
-      assert(IndexedDataSource.refreshIndex(spark, t, Metastore.Dataspace, opts) ==
-        IndexedDataSource.RefreshStats(2L, 0L))
-      check("refresh")
-      // and the index answers through those sketches
-      val plain = spark.read.option("mergeSchema", "true").parquet(t)
-      Seq(col("s") === "s5", array_contains(col("arr"), 301L), col("st.a") === 2107L,
-          exists(col("ev"), e => e("t") === "t3"), map_contains_key(col("m"), "k4"))
-        .foreach { p =>
-          assert(spark.index.parquet(t).where(p).count() == plain.where(p).count(), s"$kind: $p")
-        }
-    }
+        check("create")
+        // sketched together, a file above 4096 rows and a small one each
+        // get a sketch sized by their own row count
+        writeNested(t, 1000, 5000, withMap = true)
+        writeNested(t, 7000, 100, withMap = true)
+        assert(IndexedDataSource.refreshIndex(spark, t, Metastore.Dataspace, opts) ==
+          IndexedDataSource.RefreshStats(2L, 0L))
+        check("refresh")
+        // and the index answers through those sketches
+        val plain = spark.read.option("mergeSchema", "true").parquet(t)
+        Seq(col("s") === "s5", array_contains(col("arr"), 301L), col("st.a") === 2107L,
+            exists(col("ev"), e => e("t") === "t3"), map_contains_key(col("m"), "k4"))
+          .foreach { p =>
+            assert(spark.index.parquet(t).where(p).count() == plain.where(p).count(), s"$kind: $p")
+          }
+    } }
   }
 
   // ---- the min/max fallback ----
@@ -218,32 +222,94 @@ class StatsPassSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("footer holes get each file's own data bounds, after create and refresh on both tiers") {
-    // NaN is Spark's largest double and -0.0 equals 0.0
-    val nanAndZeros = Seq(1.5, -0.0, Double.NaN, 0.0, -2.0)
-    val zeros = Seq(-0.0, 0.0, 3.0)
-    for ((tier, opts) <- Tiers) {
-      val t = s"$work/fallback_$tier"
-      writeFallback(t, 0, Seq(2.0, -1.0), int96 = false, untrusted = false)
-      writeFallback(t, 100, nanAndZeros, int96 = true, untrusted = true)
-      create(Metastore.Dataspace, t, FallbackCols, Map.empty)
-      assertBounds(Metastore.Dataspace, t, s"$tier/create")
-      writeFallback(t, 200, zeros, int96 = true, untrusted = true)
-      writeFallback(t, 300, Nil, int96 = false, untrusted = false) // lacks d
-      assert(IndexedDataSource.refreshIndex(spark, t, Metastore.Dataspace, opts) ==
-        IndexedDataSource.RefreshStats(2L, 0L))
-      assertBounds(Metastore.Dataspace, t, s"$tier/refresh")
-      create("fresh", t, FallbackCols, Map.empty)
-      assertBounds("fresh", t, s"$tier/create over all")
-      // the holes were real: the untrusted and INT96 files have no footer bounds
-      val (_, meta) = indexOf("fresh", t)
-      val raw = StatisticsBuilder.withPass(spark, dataFiles(t).map(p => 0 -> StatisticsBuilder.FileRef(
-          p, new java.io.File(new Path(p).toUri.getPath).length(), 0L)), meta.indexSchema,
-          meta.dataSchema, None, fallback = false, 1, Sources.Parquet)(_.map(_._1).collect())
-      assert(raw.count(r => IndexMetadata.blocksFromJsonString(r.blocksJson)
-        .exists(_.columns.get("ts").exists(_.min.isEmpty))) == 2, s"$tier: INT96 holes")
-      assert(raw.count(r => IndexMetadata.blocksFromJsonString(r.blocksJson)
-        .exists(_.columns.get("d").exists(_.min.isEmpty))) == 2, s"$tier: untrusted FP holes")
+  for (runner <- PassRunners.All) test(PassRunners.named("footer holes get each file's own " +
+      "data bounds, after create and refresh on both tiers", runner)) {
+    PassRunners.on(spark, runner) {
+      // NaN is Spark's largest double and -0.0 equals 0.0
+      val nanAndZeros = Seq(1.5, -0.0, Double.NaN, 0.0, -2.0)
+      val zeros = Seq(-0.0, 0.0, 3.0)
+      for ((tier, opts) <- Tiers) {
+        val t = s"$work/fallback_${tier}_$runner"
+        writeFallback(t, 0, Seq(2.0, -1.0), int96 = false, untrusted = false)
+        writeFallback(t, 100, nanAndZeros, int96 = true, untrusted = true)
+        create(Metastore.Dataspace, t, FallbackCols, Map.empty)
+        assertBounds(Metastore.Dataspace, t, s"$tier/create")
+        writeFallback(t, 200, zeros, int96 = true, untrusted = true)
+        writeFallback(t, 300, Nil, int96 = false, untrusted = false) // lacks d
+        assert(IndexedDataSource.refreshIndex(spark, t, Metastore.Dataspace, opts) ==
+          IndexedDataSource.RefreshStats(2L, 0L))
+        assertBounds(Metastore.Dataspace, t, s"$tier/refresh")
+        create("fresh", t, FallbackCols, Map.empty)
+        assertBounds("fresh", t, s"$tier/create over all")
+        // the holes were real: the untrusted and INT96 files have no footer bounds
+        val (_, meta) = indexOf("fresh", t)
+        val raw = StatisticsBuilder.withPass(spark, dataFiles(t).map(p => 0 -> StatisticsBuilder.FileRef(
+            p, new java.io.File(new Path(p).toUri.getPath).length(), 0L)), meta.indexSchema,
+            meta.dataSchema, None, fallback = false, 1, Sources.Parquet)(_.rows)
+        assert(raw.count(r => IndexMetadata.blocksFromJsonString(r.blocksJson)
+          .exists(_.columns.get("ts").exists(_.min.isEmpty))) == 2, s"$tier: INT96 holes")
+        assert(raw.count(r => IndexMetadata.blocksFromJsonString(r.blocksJson)
+          .exists(_.columns.get("d").exists(_.min.isEmpty))) == 2, s"$tier: untrusted FP holes")
+      }
+    }
+  }
+
+  // ---- the runners ----
+
+  /** The index's files-table rows (by path) and sketch rows (by file,
+    * column). */
+  private def indexRows(dataspace: String, table: String)
+      : (Seq[FileStatsRow], Seq[(String, String, String, Seq[Byte])]) = {
+    val (dir, _) = indexOf(dataspace, table)
+    (IndexFilesTable.readUncached(new Path(dir, Metastore.FilesDir),
+      spark.sparkContext.hadoopConfiguration).sortBy(_.path),
+      sketchRows(dataspace, table).sortBy(r => (r._1, r._2)))
+  }
+
+  test("both runners write identical files-table and sketch rows, Parquet and ORC") {
+    val nested = s"$work/runners_nested"
+    writeNested(nested, 0, 300, withMap = true)
+    writeNested(nested, 300, 5000, withMap = false)
+    val holes = s"$work/runners_holes"
+    writeFallback(holes, 0, Seq(2.0, -1.0), int96 = false, untrusted = false)
+    writeFallback(holes, 100, Seq(1.5, -0.0, Double.NaN), int96 = true, untrusted = true)
+    writeFallback(holes, 200, Nil, int96 = false, untrusted = false)
+    // ORC leaves holes for doubles and timestamp_ntz; its arrays and maps
+    // are element and key domains
+    val orc = s"$work/runners_orc"
+    Seq(0L -> 200L, 200L -> 50L).foreach { case (from, n) =>
+      val id = col("id")
+      spark.range(from, from + n).select((id % 100).cast("int").as("k"),
+        concat(lit("s"), id % 7).as("s"), when(id % 9 === 0, lit(Double.NaN))
+          .otherwise(id / 3.0).as("d"),
+        timestamp_seconds(id + 1600000000L).cast("timestamp_ntz").as("ntz"),
+        array(id, id * 2).as("arr"), map(concat(lit("k"), id % 5), id).as("m"))
+        .coalesce(1).write.mode("append").orc(orc)
+    }
+    val tables = Seq(
+      (nested, Sources.Parquet, SketchCols, Map(IndexConf.FilterType -> Sketch.Dict)),
+      (holes, Sources.Parquet, FallbackCols, Map.empty[String, String]),
+      (orc, Sources.Orc, Seq("k", "s", "d", "ntz", "arr", "m"), Map.empty[String, String]))
+    for ((t, src, cols, opts) <- tables) {
+      val jobs = PassRunners.All.map { runner =>
+        runner -> PassRunners.on(spark, runner)(PassRunners.jobs(spark)(
+          IndexedDataSource.createIndex(spark, Seq(t), runner, SaveMode.Overwrite, cols,
+            indexAll = false, opts, src)))
+      }.toMap
+      assert(jobs("driver") == 0, s"$t: the driver runner started ${jobs("driver")} jobs")
+      assert(jobs("spark") > 0, s"$t: the Spark runner started no job")
+      val (driverFiles, driverSketches) = indexRows("driver", t)
+      val (sparkFiles, sparkSketches) = indexRows("spark", t)
+      assert(driverFiles.nonEmpty && driverFiles == sparkFiles, s"$t: files-table rows differ")
+      assert(driverSketches.nonEmpty && driverSketches == sparkSketches, s"$t: sketch rows differ")
+      // create validates its columns against the first file's footer, read
+      // on the driver: the schema Spark infers for that file
+      val first = new Path(if (src == Sources.Orc) {
+        new java.io.File(orc).listFiles().filter(_.getName.endsWith(".orc")).map(_.getPath).min
+      } else dataFiles(t).head)
+      val status = first.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(first)
+      assert(org.apache.spark.sql.graft.SparkInternals.fileSchema(spark, src, status) ==
+        Sources.read(spark, src, Seq(first.toString)).schema, s"$t: first-file schema")
     }
   }
 
