@@ -150,9 +150,10 @@ object IndexedDataSource {
     // columns (the reference also infers the index schema from the first
     // footer), read from that footer on the driver; only when the first
     // listed file of a heterogeneous table lacks one does validation read
-    // the merged schema of all files. The persisted data schema is merged
-    // across ALL files after the pass below, so heterogeneous tables keep
-    // every column.
+    // the merged schema of all files (their footers on the driver when
+    // they fit one scan task, as the pass below does). The persisted data
+    // schema is merged across ALL files after that pass, so heterogeneous
+    // tables keep every column.
     val firstSchema: StructType =
       if (allFiles.isEmpty) StructType(Nil)
       else SparkInternals.fileSchema(spark, src, allFiles.head)
@@ -163,7 +164,7 @@ object IndexedDataSource {
       try (resolveIndexSchema(firstSchema, partitionSchema, columns, indexAll), firstSchema)
       catch {
         case _: IllegalArgumentException if allFiles.size > 1 =>
-          val merged = Sources.read(spark, src, allFiles.map(_.getPath.toString)).schema
+          val merged = SparkInternals.filesSchema(spark, src, allFiles)
           (resolveIndexSchema(merged, partitionSchema, columns, indexAll), merged)
       }
 

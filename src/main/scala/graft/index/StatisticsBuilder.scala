@@ -3,7 +3,7 @@ package graft.index
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.api.ReadSupport
@@ -132,8 +132,9 @@ object StatisticsBuilder {
     * table's merged schema as the caller knows it (the index metadata's,
     * or at create the schema the index columns were resolved against); if
     * an indexed column the pass reads does not resolve in it, the files'
-    * own merged schema is inferred instead. `sketchKind` None builds no
-    * sketches; `fallback` patches footer holes from the data.
+    * own merged schema is inferred instead (on the driver when they fit
+    * one scan task). `sketchKind` None builds no sketches; `fallback`
+    * patches footer holes from the data.
     *
     * The runner is chosen here, by Spark's own scan-packing rule: when
     * the files fit one scan task (each costs its size plus
@@ -296,7 +297,9 @@ object StatisticsBuilder {
         if ((sketchFields ++ fallbackFields).forall(f => hasColumn(knownFrame, column(f)))) {
           (known, knownFrame)
         } else {
-          val inferred = Sources.read(spark, src, refs.map(_._2.path)).schema
+          val inferred = SparkInternals.filesSchema(spark, src, refs.map { case (_, r) =>
+            new FileStatus(r.size, false, 1, r.blockSize, r.modificationTime, new Path(r.path))
+          })
           (inferred, SparkInternals.emptyFrame(spark, inferred))
         }
       }

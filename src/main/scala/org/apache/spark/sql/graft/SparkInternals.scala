@@ -248,6 +248,17 @@ object SparkInternals {
     schema.getOrElse(StructType(Nil)).asNullable
   }
 
+  /** The merged schema of `files` (nonempty) of `source` format, as
+    * `Sources.read` infers it: for files that fit one scan task, each
+    * file's [[fileSchema]] read on the driver and merged in order, without
+    * a job; otherwise Spark's own inference, a job. */
+  def filesSchema(spark: SparkSession, source: String, files: Seq[FileStatus]): StructType =
+    if (fitsOneScanTask(spark, files.map(_.getLen))) {
+      val caseSensitive = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sessionState.conf.caseSensitiveAnalysis
+      files.map(fileSchema(spark, source, _)).reduce(_.merge(_, caseSensitive))
+    } else graft.index.Sources.read(spark, source, files.map(_.getPath.toString)).schema
+
   /** A frame of no rows over `schema` (all fields nullable), for
     * resolving columns against it without a job. */
   def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =

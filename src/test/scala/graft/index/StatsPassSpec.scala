@@ -21,7 +21,8 @@ import graft.index.implicits._
   *     of each file, canonicalized, after create and after a refresh on
   *     both tiers;
   *   - both runners write identical files-table and sketch rows, for
-  *     Parquet and ORC. */
+  *     Parquet and ORC;
+  *   - a few files' merged schema is read on the driver without a job. */
 class StatsPassSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val work = Files.createTempDirectory("graft-stats-pass").toString
@@ -310,6 +311,28 @@ class StatsPassSpec extends AnyFunSuite with BeforeAndAfterAll {
       val status = first.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(first)
       assert(org.apache.spark.sql.graft.SparkInternals.fileSchema(spark, src, status) ==
         Sources.read(spark, src, Seq(first.toString)).schema, s"$t: first-file schema")
+    }
+  }
+
+  test("a few files' merged schema is read on the driver, as Spark infers it") {
+    // create falls back to it when the first listed file lacks an indexed
+    // column, which listing order decides
+    val t = s"$work/merged_schema"
+    writeNested(t, 0, 300, withMap = true)
+    writeNested(t, 300, 200, withMap = false)
+    val files = dataFiles(t).map { p =>
+      val path = new Path(p)
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(path)
+    }
+    val want = Sources.read(spark, Sources.Parquet, files.map(_.getPath.toString)).schema
+    assert(want.fieldNames.contains("m"))
+    for (runner <- PassRunners.All; order <- Seq(files, files.reverse)) {
+      var got = StructType(Nil)
+      val jobs = PassRunners.on(spark, runner)(PassRunners.jobs(spark) {
+        got = org.apache.spark.sql.graft.SparkInternals.filesSchema(spark, Sources.Parquet, order)
+      })
+      assert((jobs == 0) == (runner == "driver"), s"$runner started $jobs jobs")
+      assert(got.fields.sortBy(_.name).toSeq == want.fields.sortBy(_.name).toSeq, runner)
     }
   }
 
