@@ -20,9 +20,11 @@ import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.types.StructType
 
 /** Driver-side access to the `files` parquet table (one [[FileStatsRow]]
-  * per data file, written from the stats pass by
-  * [[StatisticsBuilder.writeFileStats]], or by [[write]] when a refresh
-  * below the distributed threshold collects the rows on the driver).
+  * per data file, written by the stats pass's `writeFileStats`, through
+  * [[write]] when the pass runs on the driver, together with the kept
+  * rows when a refresh below the distributed threshold rewrites the
+  * table; a refresh there that only removes files writes the kept rows
+  * with [[write]] alone).
   *
   * Small tables (below the distributed-pruning threshold) are read once
   * per index directory into a process-wide cache and folded on the

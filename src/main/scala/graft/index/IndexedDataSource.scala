@@ -1,8 +1,9 @@
 package graft.index
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graft.{GraftFileIndex, SparkInternals}
 import org.apache.spark.sql.types.{StructField, StructType}
 
@@ -99,8 +100,13 @@ object IndexedDataSource {
     roots
   }
 
-  /** Build and persist the index (reference flow §3.1). `options` are
-    * per-call `spark.sql.index.*` overrides from the fluent API. */
+  /** Build and persist the index (reference flow §3.1): a refresh of an
+    * empty index. After validation, the driver tier of [[refreshIndex]]
+    * stages every listed file as added (one stats pass, which writes the
+    * files and sketch tables from wherever it runs, so no O(files) rows
+    * reach the driver) and its swap commits them, under `_SUCCESS`.
+    * `options` are per-call `spark.sql.index.*` overrides from the fluent
+    * API. */
   def createIndex(
       spark: SparkSession,
       path: String,
@@ -141,7 +147,7 @@ object IndexedDataSource {
     // `capturedAt > mtime + slack` skip proof, so the first refresh
     // re-lists them and picks the file up.
     val seedCaptureMs = System.currentTimeMillis()
-    val (partitionSchema, partDirs) = SparkInternals.discoverTable(spark, roots)
+    val listing @ (partitionSchema, partDirs) = SparkInternals.discoverTable(spark, roots)
     val allFiles = partDirs.flatMap(_._2).filter(_.getLen > 0)
     require(allFiles.nonEmpty || partDirs.nonEmpty,
       s"no $src files under ${roots.mkString(", ")}")
@@ -151,15 +157,15 @@ object IndexedDataSource {
     // footer), read from that footer on the driver; only when the first
     // listed file of a heterogeneous table lacks one does validation read
     // the merged schema of all files (their footers on the driver when
-    // they fit one scan task, as the pass below does). The persisted data
-    // schema is merged across ALL files after that pass, so heterogeneous
+    // they fit one scan task, as the pass does). The persisted data
+    // schema is merged across ALL files by the pass, so heterogeneous
     // tables keep every column.
     val firstSchema: StructType =
       if (allFiles.isEmpty) StructType(Nil)
       else SparkInternals.fileSchema(spark, src, allFiles.head)
 
     // the pass reads the indexed columns with the types of the schema
-    // they were resolved against
+    // they were resolved against: the empty index's data schema
     val (indexSchema, readSchema) =
       try (resolveIndexSchema(firstSchema, partitionSchema, columns, indexAll), firstSchema)
       catch {
@@ -167,122 +173,69 @@ object IndexedDataSource {
           val merged = SparkInternals.filesSchema(spark, src, allFiles)
           (resolveIndexSchema(merged, partitionSchema, columns, indexAll), merged)
       }
+    val empty = IndexMetadata(
+      // the LOWEST version describing this schema, so indexes without
+      // new-domain fields stay readable by older binaries
+      version = IndexMetadata.versionFor(indexSchema, roots.size > 1),
+      tablePath = roots.head.toString,
+      tablePaths = if (roots.size > 1) roots.map(_.toString) else Nil,
+      dataSchema = readSchema,
+      indexSchema = indexSchema,
+      partitionSchema = partitionSchema,
+      sketchKind = if (conf.filterEnabled && indexSchema.nonEmpty) Some(conf.filterType) else None,
+      source = src,
+      partitionValues = Nil,
+      fileCount = 0L,
+      totalBytes = 0L)
 
     // Same sibling lock refresh holds: a create (overwrite deletes the
     // index dir) cannot interleave with a live refresh of the same index.
     graft.ops.MaintenanceLock.withSiblingLock(
         metastore.fs, metastore.location(dataspace, roots)) {
     metastore.create(dataspace, roots, mode) { indexDir => underJobTag(spark) {
-      SketchStore.invalidate(new Path(indexDir, Metastore.SketchDir))
-      IndexFilesTable.invalidate(new Path(indexDir, Metastore.FilesDir))
-      val numParts =
-        if (conf.numPartitions > 0) conf.numPartitions
-        else math.min(spark.sparkContext.defaultParallelism * 3,
-          spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
+      val dirs = RefreshDirs(indexDir)
+      commit(metastore, dirs, empty, stageOnDriver(spark, conf, empty, dirs, listing))
+      seedManifest(spark, conf, indexDir, roots, allFiles, seedCaptureMs)
+    } }
+    } // withSiblingLock
+  }
 
-      // (partitionIdx, ref) pairs; block hosts preserved for task
-      // locality and for locality-aware scans at query time
-      val refs: Seq[(Int, StatisticsBuilder.FileRef)] =
-        partDirs.zipWithIndex.flatMap { case ((_, files), idx) =>
-          files.filter(_.getLen > 0).map { f =>
-            val locs = SparkInternals.blockLocations(f)
-            idx -> StatisticsBuilder.FileRef(
-              f.getPath.toString, f.getLen, f.getModificationTime,
-              blockSize = if (f.getBlockSize > 0) f.getBlockSize else FileEntry.DefaultBlockSize,
-              locationsJson = IndexMetadata.locationsToJsonString(locs),
-              hosts = locs.flatMap(_.hosts).distinct)
-          }
+  /** Seeds the dir-mtime manifest for incremental refresh listing (only
+    * worth maintaining at distributed-listing scale): every ancestor dir
+    * of every file, with its CURRENT mtime. The capture time is taken
+    * BEFORE the listing started (see [[createIndex]]), so any dir written
+    * during the whole listing-to-probe window fails the refresh skip
+    * proof and re-lists. */
+  private def seedManifest(spark: SparkSession, conf: IndexConf, indexDir: Path,
+      roots: Seq[Path], files: Seq[FileStatus], capturedAt: Long): Unit = {
+    val rootStrs = roots.map(_.toString)
+    if (manifestEnabled(conf, rootStrs) && files.size >= conf.distributedPruningThreshold) {
+      val dirSet = scala.collection.mutable.HashSet.empty[String]
+      rootStrs.foreach(dirSet += _)
+      files.foreach { f =>
+        var p = f.getPath.getParent
+        while (p != null && !dirSet.contains(p.toString) &&
+            rootStrs.exists(rt => p.toString == rt || p.toString.startsWith(rt + "/"))) {
+          dirSet += p.toString
+          p = p.getParent
         }
-
-      // One pass over every file: footer stats, one sketch per (file,
-      // column) sized by that file's rows, and range stats from the data
-      // for footer holes (INT96 timestamps, non-round-tripping truncated
-      // binary bounds, ORC NTZ timestamps — the reference's legacy-table
-      // coverage, ParquetIndexReadSupport.scala:64-73). Above one scan
-      // task of files, both tables are written from the executors and the
-      // driver gets only the merged schema and counts, so builds scale to
-      // millions of files.
-      val sketchKind = if (conf.filterEnabled && indexSchema.nonEmpty) Some(conf.filterType) else None
-      val summary =
-        if (refs.isEmpty) StatisticsBuilder.FileStatsSummary(None, 0L, 0L)
-        else StatisticsBuilder.withPass(spark, refs, indexSchema, readSchema, sketchKind,
-            conf.minMaxFallback, numParts, src) { pass =>
-          val (summary, sketchBytes) = pass.summarize
-          pass.writeFileStats(new Path(indexDir, Metastore.FilesDir), "overwrite")
-          if (sketchKind.isDefined) {
-            pass.writeSketches(new Path(indexDir, Metastore.SketchDir),
-              StatisticsBuilder.sketchParts(spark, sketchBytes))
-          }
-          summary
-        }
-      val dataSchema = summary.dataSchema.getOrElse(firstSchema)
-
-      // Seed the dir-mtime manifest for incremental refresh listing
-      // (only worth maintaining at distributed-listing scale): every
-      // ancestor dir of every file, with its CURRENT mtime. The capture
-      // time is `seedCaptureMs`, taken BEFORE the listing started (see
-      // above), so any dir written during the whole listing-to-probe
-      // window fails the refresh skip proof and re-lists.
-      val rootStrsM = roots.map(_.toString)
-      val manifestDirSet: Option[Seq[String]] =
-        if (!manifestEnabled(conf, rootStrsM) ||
-            refs.size < conf.distributedPruningThreshold) None
-        else {
-          val dirSet = scala.collection.mutable.HashSet.empty[String]
-          rootStrsM.foreach(dirSet += _)
-          refs.foreach { case (_, r) =>
-            var p = new Path(r.path).getParent
-            while (p != null && !dirSet.contains(p.toString) &&
-                rootStrsM.exists(rt =>
-                  p.toString == rt || p.toString.startsWith(rt + "/"))) {
-              dirSet += p.toString
-              p = p.getParent
-            }
-          }
-          // a roots-only manifest (flat layout) can never skip a dir
-          if (dirSet.size <= rootStrsM.size) None else Some(dirSet.toSeq)
-        }
-      manifestDirSet.foreach { dirsFound =>
-        val nowMs = seedCaptureMs
-        val dl = dirsFound.sorted
-        val slices = math.max(1,
-          math.min(spark.sparkContext.defaultParallelism * 2, dl.size))
-        val confBcM = spark.sparkContext.broadcast(
+      }
+      // a roots-only manifest (flat layout) can never skip a dir
+      if (dirSet.size > rootStrs.size) {
+        val dl = dirSet.toSeq.sorted
+        val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism * 2, dl.size))
+        val confBc = spark.sparkContext.broadcast(
           new org.apache.spark.util.SerializableConfiguration(
             spark.sparkContext.hadoopConfiguration))
         val probed = spark.sparkContext.parallelize(dl, slices).flatMap { d =>
           try {
-            val st = new Path(d).getFileSystem(confBcM.value.value)
-              .getFileStatus(new Path(d))
-            Iterator.single((d, st.getModificationTime, nowMs))
+            val st = new Path(d).getFileSystem(confBc.value.value).getFileStatus(new Path(d))
+            Iterator.single((d, st.getModificationTime, capturedAt))
           } catch { case _: java.io.IOException => Iterator.empty }
         }.collect() // O(dirs) — same class as the refresh walk's frontier
-        import spark.implicits._
-        probed.toSeq.toDF("dir", "mtime", "capturedAt")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(new Path(indexDir, Metastore.DirsDir).toString)
+        writeManifest(spark, indexDir, probed.toSeq, rootStrs.size)
       }
-
-      metastore.writeMetadata(indexDir, IndexMetadata(
-        // the LOWEST version describing this schema, so indexes without
-        // new-domain fields stay readable by older binaries
-        version = IndexMetadata.versionFor(indexSchema, roots.size > 1),
-        tablePath = roots.head.toString,
-        tablePaths = if (roots.size > 1) roots.map(_.toString) else Nil,
-        dataSchema = dataSchema,
-        indexSchema = indexSchema,
-        partitionSchema = partitionSchema,
-        sketchKind = sketchKind,
-        source = src,
-        partitionValues = partDirs.map { case (values, _) =>
-          partitionSchema.fields.zipWithIndex.toSeq.map { case (f, i) =>
-            IndexMetadata.castToString(f.dataType, values.get(i, f.dataType))
-          }
-        },
-        fileCount = summary.fileCount,
-        totalBytes = summary.totalBytes))
-    } } // underJobTag, metastore.create
-    } // withSiblingLock
+    }
   }
 
   /** Validate/choose indexed columns (reference ParquetSchemaUtils.scala:
@@ -451,20 +404,23 @@ object IndexedDataSource {
     *   - below it, everything the refresh decides runs on the driver,
     *     over rows that are driver-sized anyway: Spark's InMemoryFileIndex
     *     lists the table, the old rows are read once (parquet-mr, past
-    *     the reader cache) and diffed in a hash set, the stats pass runs
-    *     over the added files only (footers, sketches and the min/max
-    *     fallback from one read of each file) and its file rows are collected,
-    *     and the new metadata is summarized from kept + added rows.
-    *     Removed paths leave the sketch table by whole part files (see
-    *     [[StatisticsBuilder.stageSketchRemovals]]). The delta's sketches
-    *     are written as one part file. A delta that fits one scan task
-    *     (see [[StatisticsBuilder.withPass]]) has its pass run on the
-    *     driver too, so such a refresh starts no Spark job;
+    *     the reader cache) and diffed in a hash set, and the new metadata
+    *     is summarized from the kept rows and the pass's summary. Removed
+    *     paths leave the sketch table by whole part files (see
+    *     [[StatisticsBuilder.stageSketchRemovals]]), and the files table
+    *     is rewritten as one part. A delta that fits one scan task (see
+    *     [[StatisticsBuilder.withPass]]) has its pass run on the driver
+    *     too, so such a refresh starts no Spark job. [[createIndex]] is
+    *     this tier run against an empty index;
     *   - at/above it, the listing is a distributed level-walk and the diff
     *     a full-outer join that collects only the added refs, so driver
     *     residency stays O(dirs + partitions + delta); stale rows drop by
-    *     a semi-join, the pass writes from executors, and removals
-    *     re-summarize the settled table.
+    *     a semi-join, and removals re-summarize the settled table.
+    *
+    * Both tiers, and create, index the added files one way (`indexDelta`):
+    * one stats pass over them (footers, sketches and the min/max fallback
+    * from one read of each file) writes their files-table rows and their
+    * sketches to the staging dirs and returns their summary.
     *
     * Partition dirs keep their original indexes (the metadata partition
     * list is append-only), so kept rows stay valid.
@@ -472,7 +428,7 @@ object IndexedDataSource {
     * Write, then swap. Under the index's sibling maintenance lock, every
     * write goes to staging dirs first: `files_tmp` holds the whole new
     * files table when files were removed (sorted by partitionIdx, path),
-    * else the delta's part file; `sketches_tmp` holds the delta's
+    * else the delta's part files; `sketches_tmp` holds the delta's
     * sketches, plus the live old rows (the distributed tier, removals
     * only) or the filtered copies of part files mixing live and removed
     * paths (the driver tier). Only then is `_SUCCESS` removed, the staged
@@ -521,17 +477,6 @@ object IndexedDataSource {
     graft.ops.MaintenanceLock.withSiblingLock(fs, indexDir) {
     // staging of a run that died before its own cleanup
     Seq(dirs.filesTmp, dirs.sketchTmp).foreach(d => if (fs.exists(d)) fs.delete(d, true))
-
-    // Stable partition indexing: existing entries keep their position,
-    // newly appeared partition dirs append. Entries whose partition
-    // vanished stay (no file row references them — harmless).
-    val partValues = scala.collection.mutable.ArrayBuffer(meta.partitionValues: _*)
-    val idxByValues = scala.collection.mutable.HashMap(
-      meta.partitionValues.zipWithIndex: _*)
-    val numParts =
-      if (conf.numPartitions > 0) conf.numPartitions
-      else math.min(spark.sparkContext.defaultParallelism * 3,
-        spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
     val metaRoots = meta.rootPathStrings.map(new Path(_))
 
     try underJobTag(spark) {
@@ -539,48 +484,29 @@ object IndexedDataSource {
         if (meta.fileCount < conf.distributedPruningThreshold) {
           // the driver tier does not maintain the dir manifest — drop any
           // stale one so a later distributed refresh can't trust it
-          val dropManifest: () => Unit = () => {
-            try {
-              val dp = new Path(indexDir, Metastore.DirsDir)
-              if (fs.exists(dp)) { fs.delete(dp, true); () }
-            } catch { case _: Exception => () }
-          }
-          (stageOnDriver(spark, conf, meta, metaRoots, dirs, partValues, idxByValues, numParts),
-            dropManifest)
+          (stageOnDriver(spark, conf, meta, dirs, SparkInternals.discoverTable(spark, metaRoots)),
+            () => writeManifest(spark, indexDir, Nil, metaRoots.size))
         } else {
           val oldKeys = spark.read.schema(IndexFilesTable.Schema).parquet(dirs.files.toString)
             .select("path", "size", "modificationTime")
-          val (currentKeys, addedRefs, removedCount, writeManifest) = distributedListingDiff(
-            spark, metaRoots, meta, oldKeys, RefreshKey, dirs.listingTmp, partValues,
-            idxByValues, indexDir, conf)
+          val (currentKeys, addedRefs, removedCount, partValues, manifestWriter) =
+            distributedListingDiff(spark, metaRoots, meta, oldKeys, RefreshKey, dirs.listingTmp,
+              indexDir, conf)
           (stageDistributed(spark, conf, meta, dirs, currentKeys, addedRefs, removedCount,
-            numParts), writeManifest)
+            partValues), manifestWriter)
         }
 
-      staged match {
-        // nothing to mutate: still persist the refreshed manifest so dirs
-        // captured inside the mtime-slack window stop re-listing forever
-        case None =>
-          commitManifest()
-          RefreshStats(0L, 0L)
-        case Some(st) =>
-          // the swap: the only window in which the index is unloadable
-          Metastore.cacheInvalidate(indexDir.toString)
-          SketchStore.invalidate(dirs.sketches)
-          IndexFilesTable.invalidate(dirs.files)
-          fs.delete(new Path(indexDir, Metastore.SuccessFile), false)
-          install(fs, dirs.filesTmp, dirs.files, st.replace)
-          install(fs, dirs.sketchTmp, dirs.sketches, st.replace && st.sketchDrop.isEmpty,
-            st.sketchDrop.getOrElse(Nil))
-          metastore.writeMetadata(indexDir, meta.copy(
-            dataSchema = st.dataSchema,
-            partitionValues = partValues.toSeq,
-            fileCount = st.fileCount,
-            totalBytes = st.totalBytes))
-          commitManifest()
-          fs.create(new Path(indexDir, Metastore.SuccessFile), true).close()
-          RefreshStats(st.added, st.removed)
+      // nothing to mutate: still persist the refreshed manifest so dirs
+      // captured inside the mtime-slack window stop re-listing forever
+      if (staged.added == 0 && staged.removed == 0) commitManifest()
+      else {
+        // the swap: the only window in which the index is unloadable
+        fs.delete(new Path(indexDir, Metastore.SuccessFile), false)
+        commit(metastore, dirs, meta, staged)
+        commitManifest()
+        fs.create(new Path(indexDir, Metastore.SuccessFile), true).close()
       }
+      RefreshStats(staged.added, staged.removed)
     } finally {
       // staging left by a failure before the swap, and the distributed
       // listing's scratch table (read lazily until the staged writes end)
@@ -609,31 +535,34 @@ object IndexedDataSource {
     * staged ones join the rest. */
   private case class Staged(added: Long, removed: Long, replace: Boolean,
       fileCount: Long, totalBytes: Long, dataSchema: StructType,
-      sketchDrop: Option[Seq[String]] = None)
+      partitionValues: Seq[Seq[Option[String]]], sketchDrop: Option[Seq[String]] = None)
 
-  /** Driver tier of [[refreshIndex]]: listing, diff and summary on the
-    * driver, then the pass over the added files and the write of their
-    * sketches, on whichever runner the pass picks. None = nothing
-    * changed. */
+  /** Driver tier of [[refreshIndex]], over the table's `listing`
+    * (partition schema and files per partition dir): diff and summary on
+    * the driver, and the added files indexed by [[indexDelta]]. The
+    * metadata's partition list is append-only: existing entries keep
+    * their position, so kept rows stay valid, and newly listed partition
+    * dirs append, also those holding only empty files. Entries whose
+    * partition vanished stay (no file row references them — harmless). */
   private def stageOnDriver(
       spark: SparkSession,
       conf: IndexConf,
       meta: IndexMetadata,
-      roots: Seq[Path],
       dirs: RefreshDirs,
-      partValues: scala.collection.mutable.ArrayBuffer[Seq[Option[String]]],
-      idxByValues: scala.collection.mutable.HashMap[Seq[Option[String]], Int],
-      numParts: Int): Option[Staged] = {
+      listing: (StructType, Seq[(InternalRow, Seq[FileStatus])])): Staged = {
     val hconf = spark.sparkContext.hadoopConfiguration
-    val (partitionSchema, partDirs) = SparkInternals.discoverTable(spark, roots)
-    // a table whose files are all gone lists no partitions to infer from
-    val emptied = partDirs.forall(_._2.isEmpty)
-    require(emptied || org.apache.spark.sql.types.DataType.equalsIgnoreNullability(
-        partitionSchema, meta.partitionSchema),
+    val (partitionSchema, partDirs) = listing
+    // a table whose files are all gone lists no partitions to infer its
+    // layout from; partition dirs of empty files are still listed
+    val sameLayout = org.apache.spark.sql.types.DataType.equalsIgnoreNullability(
+      partitionSchema, meta.partitionSchema)
+    require(sameLayout || partDirs.forall(_._2.isEmpty),
       s"partition schema changed (${meta.partitionSchema.simpleString} -> " +
         s"${partitionSchema.simpleString}); rebuild the index with create.mode(\"overwrite\")")
+    val partValues = scala.collection.mutable.ArrayBuffer(meta.partitionValues: _*)
+    val idxByValues = scala.collection.mutable.HashMap(meta.partitionValues.zipWithIndex: _*)
     val current: Seq[(Int, StatisticsBuilder.FileRef)] =
-      if (emptied) Nil
+      if (!sameLayout) Nil
       else partDirs.flatMap { case (values, files) =>
         val vStr: Seq[Option[String]] = partitionSchema.fields.zipWithIndex.toSeq.map {
           case (f, i) => IndexMetadata.castToString(f.dataType, values.get(i, f.dataType))
@@ -649,36 +578,37 @@ object IndexedDataSource {
         }
       }
     val old = IndexFilesTable.readUncached(dirs.files, hconf)
-    val liveKeys = current.iterator.map { case (_, r) => (r.path, r.size, r.modificationTime) }.toSet
+    // lazy: a create has no old rows to test, so it never builds the set
+    lazy val liveKeys =
+      current.iterator.map { case (_, r) => (r.path, r.size, r.modificationTime) }.toSet
     val oldKeys = old.iterator.map(r => (r.path, r.size, r.modificationTime)).toSet
     val (kept, removed) = old.partition(r => liveKeys((r.path, r.size, r.modificationTime)))
     val added = current.filterNot { case (_, r) => oldKeys((r.path, r.size, r.modificationTime)) }
-    if (added.isEmpty && removed.isEmpty) return None
+    if (added.isEmpty && removed.isEmpty) {
+      return Staged(0L, 0L, replace = false, meta.fileCount, meta.totalBytes, meta.dataSchema,
+        partValues.toSeq)
+    }
 
-    val delta =
-      if (added.isEmpty) Nil
-      else StatisticsBuilder.withPass(spark, added, meta.indexSchema, meta.dataSchema,
-          meta.sketchKind, conf.minMaxFallback, numParts, meta.source) { pass =>
-        if (meta.sketchKind.isDefined) pass.writeSketches(dirs.sketchTmp, 1)
-        pass.rows
-      }
+    // with removals the files table is staged whole: the pass writes the
+    // kept rows with its own (one part when it runs on the driver)
+    val replace = removed.nonEmpty
+    val delta = indexDelta(spark, conf, meta, dirs, added, if (replace) kept else Nil)
+    if (replace && added.isEmpty) {
+      IndexFilesTable.write(dirs.filesTmp, kept.sortWith(StatisticsBuilder.filesOrder), hconf)
+    }
     // a path rewritten in place is in `removed` too, so its old sketch
     // rows go with the part files they sit in
     val sketchDrop = StatisticsBuilder.stageSketchRemovals(dirs.sketches,
       removed.iterator.map(r => SketchStore.normalizePath(r.path)).toSet, dirs.sketchTmp, hconf)
-    val rows = kept ++ delta
-    val summary = StatisticsBuilder.summarizeRows(rows)
-
-    val replace = removed.nonEmpty
-    IndexFilesTable.write(dirs.filesTmp,
-      (if (replace) rows else delta).sortWith(StatisticsBuilder.filesOrder), hconf)
-    Some(Staged(added.size.toLong, removed.size.toLong, replace, summary.fileCount,
-      summary.totalBytes, summary.dataSchema.getOrElse(meta.dataSchema), Some(sketchDrop)))
+    val summary = StatisticsBuilder.summarizeRows(kept).merge(delta)
+    Staged(added.size.toLong, removed.size.toLong, replace, summary.fileCount,
+      summary.totalBytes, summary.dataSchema.getOrElse(meta.dataSchema), partValues.toSeq,
+      Some(sketchDrop))
   }
 
   /** Distributed tier of [[refreshIndex]], after the distributed diff: the
-    * stale-row semi-joins, the pass and the summaries run as Spark jobs
-    * over the index tables. None = nothing changed. */
+    * stale-row semi-joins, the added files indexed by [[indexDelta]] and
+    * the summaries run as Spark jobs over the index tables. */
   private def stageDistributed(
       spark: SparkSession,
       conf: IndexConf,
@@ -687,9 +617,8 @@ object IndexedDataSource {
       currentKeys: DataFrame,
       addedRefs: Seq[(Int, StatisticsBuilder.FileRef)],
       removedCount: Long,
-      numParts: Int): Option[Staged] = {
+      partitionValues: Seq[Seq[Option[String]]]): Staged = {
     import org.apache.spark.sql.functions.col
-    if (addedRefs.isEmpty && removedCount == 0) return None
     val replace = removedCount > 0
     val fs = dirs.sketches.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -712,17 +641,7 @@ object IndexedDataSource {
       }
     }
     // 2. The pass over the added files, appended beside them.
-    val delta =
-      if (addedRefs.isEmpty) StatisticsBuilder.FileStatsSummary(None, 0L, 0L)
-      else StatisticsBuilder.withPass(spark, addedRefs, meta.indexSchema, meta.dataSchema,
-          meta.sketchKind, conf.minMaxFallback, numParts, meta.source) { pass =>
-        pass.writeFileStats(dirs.filesTmp, "append")
-        val (summary, sketchBytes) = pass.summarize
-        if (meta.sketchKind.isDefined) {
-          pass.writeSketches(dirs.sketchTmp, StatisticsBuilder.sketchParts(spark, sketchBytes))
-        }
-        summary
-      }
+    val delta = indexDelta(spark, conf, meta, dirs, addedRefs, Nil)
     // 3. Metadata. Append-only refreshes compose it incrementally (schema
     //    only ever widens — exact, since nothing was removed; a 1-file
     //    append must never re-aggregate the whole 10^6-row files table).
@@ -738,8 +657,52 @@ object IndexedDataSource {
           delta.dataSchema.map(SparkInternals.mergeSchemas(meta.dataSchema, _))
             .getOrElse(meta.dataSchema))
       }
-    Some(Staged(addedRefs.map(_._2.path).distinct.size.toLong, removedCount, replace,
-      fileCount, totalBytes, dataSchema))
+    Staged(addedRefs.map(_._2.path).distinct.size.toLong, removedCount, replace,
+      fileCount, totalBytes, dataSchema, partitionValues)
+  }
+
+  /** Indexes `added` (create's files, or a refresh's delta) into the
+    * staging dirs: one stats pass writes their files-table rows, with the
+    * `kept` rows the caller stages beside them, to `files_tmp` and their
+    * sketches to `sketches_tmp`, in as many part files as their bytes
+    * call for, and returns their summary. */
+  private def indexDelta(spark: SparkSession, conf: IndexConf, meta: IndexMetadata,
+      dirs: RefreshDirs, added: Seq[(Int, StatisticsBuilder.FileRef)], kept: Seq[FileStatsRow])
+      : StatisticsBuilder.FileStatsSummary =
+    if (added.isEmpty) StatisticsBuilder.FileStatsSummary.Empty
+    else {
+      val numParts =
+        if (conf.numPartitions > 0) conf.numPartitions
+        else math.min(spark.sparkContext.defaultParallelism * 3,
+          spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
+      StatisticsBuilder.withPass(spark, added, meta.indexSchema, meta.dataSchema,
+          meta.sketchKind, conf.minMaxFallback, numParts, meta.source) { pass =>
+        pass.writeFileStats(dirs.filesTmp, kept)
+        val summary = pass.summarize
+        if (meta.sketchKind.isDefined) {
+          pass.writeSketches(dirs.sketchTmp,
+            StatisticsBuilder.sketchParts(spark, summary.sketchBytes))
+        }
+        summary
+      }
+    }
+
+  /** Moves the staged tables into place and writes the metadata they
+    * describe: a refresh's swap, with `_SUCCESS` absent, and the end of
+    * create. */
+  private def commit(metastore: Metastore, dirs: RefreshDirs, meta: IndexMetadata,
+      st: Staged): Unit = {
+    Metastore.cacheInvalidate(dirs.indexDir.toString)
+    SketchStore.invalidate(dirs.sketches)
+    IndexFilesTable.invalidate(dirs.files)
+    install(metastore.fs, dirs.filesTmp, dirs.files, st.replace)
+    install(metastore.fs, dirs.sketchTmp, dirs.sketches, st.replace && st.sketchDrop.isEmpty,
+      st.sketchDrop.getOrElse(Nil))
+    metastore.writeMetadata(dirs.indexDir, meta.copy(
+      dataSchema = st.dataSchema,
+      partitionValues = st.partitionValues,
+      fileCount = st.fileCount,
+      totalBytes = st.totalBytes))
   }
 
   /** Move a staged table into place: the whole dir when `replace` (or
@@ -762,6 +725,28 @@ object IndexedDataSource {
         fs.delete(staged, true)
       }
     }
+
+  /** Persists the dir-mtime manifest `rows` of (dir, mtime, capturedAt)
+    * for the next distributed refresh: written to `dirs_tmp`, then renamed
+    * into place. A manifest of no dir beyond the `roots` can never skip
+    * one, so any stored manifest is dropped instead. Best effort: the
+    * manifest is a cache, and without one a refresh walks every dir. */
+  private def writeManifest(spark: SparkSession, indexDir: Path,
+      rows: Seq[(String, Long, Long)], roots: Int): Unit = {
+    val dirsPath = new Path(indexDir, Metastore.DirsDir)
+    try {
+      val fs = indexDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (rows.size > roots) {
+        import spark.implicits._
+        val tmp = new Path(indexDir, Metastore.DirsDir + "_tmp")
+        rows.sortBy(_._1).toDF("dir", "mtime", "capturedAt")
+          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        if (fs.exists(dirsPath)) fs.delete(dirsPath, true)
+        fs.rename(tmp, dirsPath)
+      } else if (fs.exists(dirsPath)) fs.delete(dirsPath, true)
+      ()
+    } catch { case _: Exception => () }
+  }
 
   /** Runs `body` with its Spark jobs under a job tag of their own (a tag
     * leaves any job group of the caller in place). If `body` throws, the
@@ -801,8 +786,9 @@ object IndexedDataSource {
     * block-location hints are not fetched for added files (one extra RPC
     * per file — the footer job re-derives locality from the read itself).
     * Returns (currentKeys frame backed by the scratch table, added refs,
-    * removed count, manifest writer); the caller drops the scratch table
-    * after the staged writes. */
+    * removed count, the metadata's partition list with the added files'
+    * new partitions appended, manifest writer); the caller drops the
+    * scratch table after the staged writes. */
   private def distributedListingDiff(
       spark: SparkSession,
       roots: Seq[Path],
@@ -810,12 +796,10 @@ object IndexedDataSource {
       oldKeys: org.apache.spark.sql.DataFrame,
       keyCols: Seq[String],
       listingTmp: Path,
-      partValues: scala.collection.mutable.ArrayBuffer[Seq[Option[String]]],
-      idxByValues: scala.collection.mutable.HashMap[Seq[Option[String]], Int],
       indexDir: Path,
       conf: IndexConf)
       : (org.apache.spark.sql.DataFrame, Seq[(Int, StatisticsBuilder.FileRef)],
-         Long, () => Unit) = {
+         Long, Seq[Seq[Option[String]]], () => Unit) = {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val hconf = spark.sparkContext.hadoopConfiguration
@@ -1076,6 +1060,8 @@ object IndexedDataSource {
     // the ADDED rows only: existing partitions are already in the
     // metadata, and a new partition dir implies at least one added file,
     // so the full-listing distinct the old shape ran is pure overhead
+    val partValues = scala.collection.mutable.ArrayBuffer(meta.partitionValues: _*)
+    val idxByValues = scala.collection.mutable.HashMap(meta.partitionValues.zipWithIndex: _*)
     val tuples: Seq[Seq[Option[String]]] = addedRows.toSeq
       .map(_.getAs[scala.collection.Seq[String]]("partVals").toSeq.map(Option(_)))
       .distinct
@@ -1096,31 +1082,16 @@ object IndexedDataSource {
     // NEXT refresh. The caller invokes this only once the mutation has
     // committed (or when there was nothing to mutate) — writing earlier
     // would let an aborted refresh mark unindexed files as captured.
-    val manifestWriter: () => Unit = () => {
-      // nothing beyond the roots -> persisting buys nothing (see
-      // manifestActive); drop any stale manifest instead
-      if (useManifest && newManifest.size <= rootStrs.size) {
-        try { if (ifs.exists(dirsPath)) { ifs.delete(dirsPath, true); () } }
-        catch { case _: Exception => () }
-      } else if (useManifest) {
-        try {
-          val rows = newManifest.toSeq.sortBy(_._1)
-            .map { case (d, (m, c)) => (d, m, c) }
-          val tmp = new Path(indexDir, Metastore.DirsDir + "_tmp")
-          val out = if (rows.isEmpty) Seq(("", 0L, 0L)).take(0) else rows
-          spark.createDataFrame(out).toDF("dir", "mtime", "capturedAt")
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          if (ifs.exists(dirsPath)) ifs.delete(dirsPath, true)
-          ifs.rename(tmp, dirsPath)
-          ()
-        } catch { case _: Exception => () } // best-effort cache
+    val manifestWriter: () => Unit = () =>
+      if (useManifest) {
+        writeManifest(spark, indexDir,
+          newManifest.toSeq.map { case (d, (m, c)) => (d, m, c) }, rootStrs.size)
       }
-    }
     val currentKeys = unchangedKeys match {
       case Some(uk) => uk.unionAll(listing.select(keyCols.map(col): _*))
       case None => listing.select(keyCols.map(col): _*)
     }
-    (currentKeys, addedRefs, removedCount, manifestWriter)
+    (currentKeys, addedRefs, removedCount, partValues.toSeq, manifestWriter)
   }
 
   def existsIndex(spark: SparkSession, path: String, dataspace: String): Boolean =

@@ -42,9 +42,9 @@ import org.apache.spark.util.SerializableConfiguration
   *      holes with the file's own data bounds.
   * The slices run on the driver when the files fit one scan task, else
   * as a Spark job (see [[withPass]]). The pass's output serves one index
-  * operation: create and the distributed refresh write the files table
-  * from it, the driver-tier refresh takes its file rows, and the sketch
-  * rows are written from the same output, with no shuffle.
+  * operation, create or refresh: its files-table rows and its sketch rows
+  * are written from it, with no shuffle, and its summary goes to the
+  * metadata.
   */
 object StatisticsBuilder {
 
@@ -99,8 +99,25 @@ object StatisticsBuilder {
   }
 
   /** Driver-side summary of indexed files: everything metadata.json needs
-    * beyond the files table. */
-  case class FileStatsSummary(dataSchema: Option[StructType], fileCount: Long, totalBytes: Long)
+    * beyond the files table, plus the bytes of their sketches and the
+    * first path (Spark's string order) of each distinct file schema.
+    * Summaries of disjoint file sets merge into the summary of their
+    * union. */
+  case class FileStatsSummary(fileCount: Long, totalBytes: Long, sketchBytes: Long,
+      firstPath: Map[String, String]) {
+    def merge(o: FileStatsSummary): FileStatsSummary = FileStatsSummary(
+      fileCount + o.fileCount, totalBytes + o.totalBytes, sketchBytes + o.sketchBytes,
+      o.firstPath.foldLeft(firstPath) { case (m, (s, p)) =>
+        if (m.get(s).forall(Canon.compare(p, _) < 0)) m.updated(s, p) else m
+      })
+    /** The distinct schemas merged in the order of their first path. */
+    def dataSchema: Option[StructType] =
+      mergeSchemaJsons(firstPath.toSeq.sortWith((a, b) => Canon.compare(a._2, b._2) < 0).map(_._1))
+  }
+
+  object FileStatsSummary {
+    val Empty: FileStatsSummary = FileStatsSummary(0L, 0L, 0L, Map.empty)
+  }
 
   /** One row of the sketch table: (normalized file, column, kind, data). */
   type SketchRow = (String, String, String, Array[Byte])
@@ -109,16 +126,15 @@ object StatisticsBuilder {
     * patched, and its sketch rows. */
   type PassRow = (FileStatsRow, Array[SketchRow])
 
-  /** The pass's output for one index operation, wherever it ran: what
-    * create and both refresh tiers take from it. */
+  /** The pass's output for one index operation, wherever it ran. */
   sealed trait Pass {
-    /** The files-table rows, in slice order. */
-    def rows: Seq[FileStatsRow]
-    /** The summary of the files and their sketch bytes. */
-    def summarize: (FileStatsSummary, Long)
-    /** Writes the files-table rows to `dir` ("overwrite" or "append"),
-      * one part per slice, each sorted by (partitionIdx, path). */
-    def writeFileStats(dir: Path, mode: String): Unit
+    /** The summary of the files and their sketches. */
+    def summarize: FileStatsSummary
+    /** Appends the files-table rows, with `kept` (rows of other files
+      * that the caller holds), to the table in `dir`, each part sorted by
+      * (partitionIdx, path): one part on the driver; in a Spark job, one
+      * per slice and one for `kept`. */
+    def writeFileStats(dir: Path, kept: Seq[FileStatsRow]): Unit
     /** Appends the sketch rows to the sketch table in `dir` as `parts`
       * part files, each sorted by (file, column) — the order the
       * query-time `file IN` pushdown skips row groups by. The pass emits
@@ -141,9 +157,10 @@ object StatisticsBuilder {
     * `spark.sql.files.openCostInBytes`, a task takes up to
     * `spark.sql.files.maxPartitionBytes`: at most 31 files at the
     * defaults) the slices run on the driver, on at most as many threads
-    * as it has cores, and the rows stay there, so the operation starts no
-    * Spark job; otherwise the pass is a Spark job, persisted while `body`
-    * runs. Either way each file goes through the same [[PerFile]]. */
+    * as it has cores, and their output is written from there, so the
+    * operation starts no Spark job; otherwise the pass is a Spark job,
+    * persisted while `body` runs. Either way each file goes through the
+    * same [[PerFile]]. */
   def withPass[T](
       spark: SparkSession,
       refs: Seq[(Int, FileRef)],
@@ -322,21 +339,10 @@ object StatisticsBuilder {
   /** A pass run on the driver: its rows per slice, and the conf it
     * writes with. */
   private final class DriverPass(slices: Seq[Seq[PassRow]], conf: Configuration) extends Pass {
-    def rows: Seq[FileStatsRow] = slices.flatten.map(_._1)
+    def summarize: FileStatsSummary = summaryOf(slices.iterator.flatten)
 
-    def summarize: (FileStatsSummary, Long) = {
-      val p = partial(slices.iterator.flatten)
-      (p.summary, p.sketchBytes)
-    }
-
-    def writeFileStats(dir: Path, mode: String): Unit = {
-      require(mode == "overwrite" || mode == "append", s"unknown write mode $mode")
-      val fs = dir.getFileSystem(conf)
-      if (mode == "overwrite" && fs.exists(dir)) fs.delete(dir, true)
-      slices.filter(_.nonEmpty).foreach { s =>
-        IndexFilesTable.write(dir, s.map(_._1).sortWith(filesOrder), conf)
-      }
-    }
+    def writeFileStats(dir: Path, kept: Seq[FileStatsRow]): Unit =
+      IndexFilesTable.write(dir, (kept ++ slices.flatten.map(_._1)).sortWith(filesOrder), conf)
 
     def writeSketches(dir: Path, parts: Int): Unit = {
       val run = java.util.UUID.randomUUID().toString
@@ -354,16 +360,16 @@ object StatisticsBuilder {
   private final class SparkPass(spark: SparkSession, pass: RDD[PassRow],
       confBc: Broadcast[SerializableConfiguration]) extends Pass {
 
-    def rows: Seq[FileStatsRow] = pass.map(_._1).collect().toSeq
+    def summarize: FileStatsSummary =
+      pass.mapPartitions(it => Iterator.single(summaryOf(it))).collect().reduce(_ merge _)
 
-    def summarize: (FileStatsSummary, Long) = {
-      val p = pass.mapPartitions(it => Iterator.single(partial(it))).collect().reduce(_ merge _)
-      (p.summary, p.sketchBytes)
-    }
-
-    def writeFileStats(dir: Path, mode: String): Unit =
+    def writeFileStats(dir: Path, kept: Seq[FileStatsRow]): Unit = {
+      if (kept.nonEmpty) {
+        IndexFilesTable.write(dir, kept.sortWith(filesOrder), spark.sparkContext.hadoopConfiguration)
+      }
       spark.createDataFrame(pass.map(_._1)).sortWithinPartitions("partitionIdx", "path")
-        .write.mode(mode).parquet(dir.toString)
+        .write.mode("append").parquet(dir.toString)
+    }
 
     def writeSketches(dir: Path, parts: Int): Unit = {
       val (bc, target, run) = (confBc, dir, java.util.UUID.randomUUID().toString)
@@ -547,39 +553,22 @@ object StatisticsBuilder {
   def summarizeFilesTable(spark: SparkSession, filesDir: Path): FileStatsSummary = {
     val back = spark.read.schema(IndexFilesTable.Schema).parquet(filesDir.toString)
     val agg = back.agg(count(lit(1)), sum(col("size"))).head
-    val schemaJsons = back.groupBy(col("schemaJson"))
-      .agg(min(col("path")).as("firstPath"))
-      .orderBy(col("firstPath"))
-      .collect().map(_.getString(0))
+    val firstPath = back.groupBy(col("schemaJson")).agg(min(col("path")))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     // sum is NULL over an empty table (all files removed) — degrade to 0
-    FileStatsSummary(mergeSchemaJsons(schemaJsons.toSeq), agg.getLong(0),
-      if (agg.isNullAt(1)) 0L else agg.getLong(1))
+    FileStatsSummary(agg.getLong(0), if (agg.isNullAt(1)) 0L else agg.getLong(1), 0L, firstPath)
   }
 
-  /** Counts, bytes, sketch bytes and the first path of each distinct
-    * schema over some file rows: folded per slice, then merged. */
-  private case class Partial(files: Long, bytes: Long, sketchBytes: Long,
-      firstPath: Map[String, String]) {
-    def merge(o: Partial): Partial = Partial(files + o.files, bytes + o.bytes,
-      sketchBytes + o.sketchBytes, o.firstPath.foldLeft(firstPath) { case (m, (s, p)) =>
-        if (m.get(s).forall(Canon.compare(p, _) < 0)) m.updated(s, p) else m
-      })
-    /** The distinct schemas merge in the order of their first path
-      * (Spark's string order), as in [[summarizeFilesTable]]. */
-    def summary: FileStatsSummary = FileStatsSummary(
-      mergeSchemaJsons(firstPath.toSeq.sortWith((a, b) => Canon.compare(a._2, b._2) < 0).map(_._1)),
-      files, bytes)
-  }
-
-  private def partial(rows: Iterator[PassRow]): Partial =
-    rows.foldLeft(Partial(0L, 0L, 0L, Map.empty)) { case (acc, (r, sketches)) =>
-      acc.merge(Partial(1L, r.size, sketches.iterator.map(_._4.length.toLong).sum,
+  /** The summary of some pass rows, sketch bytes included. */
+  private def summaryOf(rows: Iterator[PassRow]): FileStatsSummary =
+    rows.foldLeft(FileStatsSummary.Empty) { case (acc, (r, sketches)) =>
+      acc.merge(FileStatsSummary(1L, r.size, sketches.iterator.map(_._4.length.toLong).sum,
         Map(r.schemaJson -> r.path)))
     }
 
-  /** The same summary over rows the driver holds. */
+  /** The same summary over files-table rows the driver holds. */
   def summarizeRows(rows: Seq[FileStatsRow]): FileStatsSummary =
-    partial(rows.iterator.map(_ -> Array.empty[SketchRow])).summary
+    summaryOf(rows.iterator.map(_ -> Array.empty[SketchRow]))
 
   private def mergeSchemaJsons(jsons: Seq[String]): Option[StructType] =
     jsons.map(j => DataType.fromJson(j).asInstanceOf[StructType])

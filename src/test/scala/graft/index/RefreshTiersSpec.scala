@@ -28,9 +28,12 @@ import graft.index.implicits._
   *   - a refresh that fails before its swap leaves the index loadable and
   *     unchanged, leaves no staging behind, and a rerun converges, with
   *     the stats pass on either of its runners ([[PassRunners]]);
+  *   - a create failing in its pass leaves no index dir, and a create
+  *     over partitions holding only empty files records them;
   *   - a small create and the driver tier's small refreshes start no Spark
-  *     job, a delta past one scan task does, and its part-level sketch
-  *     removals stay pinned. */
+  *     job and write the files table as one part, a delta or create past
+  *     one scan task runs pinned jobs, and part-level sketch removals
+  *     stay pinned. */
 class RefreshTiersSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val work = Files.createTempDirectory("graft-refresh-tiers").toString
@@ -261,6 +264,59 @@ class RefreshTiersSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  for (runner <- PassRunners.All) {
+    test(PassRunners.named("a create failing in its pass leaves no index behind", runner)) {
+      PassRunners.on(spark, runner) {
+        val t = s"$work/failing_create_$runner"
+        (0 until 4).foreach(i => writeFile(s"$t/p=0", i * 100L, 100))
+        val good = dataFiles(s"$t/p=0").last
+        val bad = new java.io.File(s"$t/p=0", "part-truncated.parquet")
+        val bytes = Files.readAllBytes(good.toPath)
+        Files.write(bad.toPath, java.util.Arrays.copyOf(bytes, bytes.length / 2))
+        intercept[Exception](create(Metastore.Dataspace, t))
+        // no task of the aborted jobs outlives the cleanup
+        TestListenerBus.drain(spark.sparkContext)
+        val dir = new java.io.File(indexDir(Metastore.Dataspace, t).toUri.getPath)
+        assert(!spark.index.exists.parquet(t))
+        assert(!dir.exists(), "the failed create left its index dir")
+        assert(!Option(dir.getParentFile.listFiles()).toSeq.flatten
+          .exists(_.getName.contains("_tmp")), "the failed create left staging behind")
+
+        remove(bad)
+        create(Metastore.Dataspace, t)
+        sameRows(spark.index.parquet(t), spark.read.parquet(t))
+        sameRows(spark.index.parquet(t).where(col("k") === 150L || col("s") === "s3"),
+          spark.read.parquet(t).where(col("k") === 150L || col("s") === "s3"))
+      }
+    }
+  }
+
+  test("create records partitions holding only empty files, and an append refresh indexes") {
+    val t = s"$work/empty_files"
+    Seq(0, 1).foreach { p =>
+      assert(new java.io.File(s"$t/p=$p").mkdirs())
+      assert(new java.io.File(s"$t/p=$p/part-empty.parquet").createNewFile())
+    }
+    IndexedDataSource.createIndex(spark, Seq(t), Metastore.Dataspace, SaveMode.Overwrite,
+      Nil, indexAll = true, Map.empty, Sources.Parquet)
+    val roots = IndexedDataSource.resolveTableRoots(spark, Seq(t))
+    val (_, created) = Metastore(spark).load(Metastore.Dataspace, roots)
+    assert(created.partitionValues.sortBy(_.toString) == Seq(Seq(Some("0")), Seq(Some("1"))))
+    assert((created.fileCount, created.totalBytes) == (0L, 0L))
+
+    writeFile(s"$t/p=1", 0, 100)
+    writeFile(s"$t/p=2", 100, 100)
+    assert(refresh(t, Map.empty) == IndexedDataSource.RefreshStats(2L, 0L))
+    val snap = snapshot(Metastore.Dataspace, t)
+    assert(snap.files.map { case (pv, r) => (pv, new Path(r.path).getParent.getName) } ==
+      Seq(Seq(Some("1")) -> "p=1", Seq(Some("2")) -> "p=2"))
+    assert(snap.fileCount == 2L)
+    // Spark's schema inference would read an empty file's footer
+    val plain = spark.read.schema(spark.index.parquet(t).schema).parquet(t)
+    sameRows(spark.index.parquet(t), plain)
+    sameRows(spark.index.parquet(t).where(col("k") === 150L), plain.where(col("k") === 150L))
+  }
+
   /** Spark jobs started, and Spark writes into a `files*` dir, by `body`. */
   private def counted(body: => Unit): (Int, Int) = {
     val jobs = new AtomicInteger(0)
@@ -299,6 +355,7 @@ class RefreshTiersSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(createJobs == 0, s"create ran $createJobs Spark jobs")
     val filesDir = new java.io.File(indexDir(Metastore.Dataspace, t).toUri.getPath, Metastore.FilesDir)
     def parts = dataFiles(filesDir.getPath).size
+    assert(parts == 1, "a small create writes the files table as one part file")
 
     // 4 files land in a new partition, the 4 of the first one go
     (0 until 4).foreach(i => writeFile(s"$t/p=2", 1000 + i * 100L, 100))
@@ -342,8 +399,23 @@ class RefreshTiersSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(past > 0, "a 32-file delta ran no Spark job")
     assertMatchesCreate(t, "driver", "past one scan task")
+    // with a removal, the kept rows are staged beside the Spark pass's parts
+    remove(dataFiles(s"$t/p=0").head)
+    writeFile(s"$t/p=3", 3000, 640, files = 32)
+    assert(refresh(t, Map.empty) == IndexedDataSource.RefreshStats(32L, 1L))
+    assertMatchesCreate(t, "driver", "a removal beside a delta past one scan task")
     sameRows(spark.index.parquet(t).where(col("k") === 2100L),
       spark.read.parquet(t).where(col("k") === 2100L))
+  }
+
+  test("a create past one scan task runs its pinned Spark job count") {
+    val t = s"$work/create_jobs"
+    writeFile(s"$t/p=0", 0, 640, files = 32)
+    // the pass with the files-table write, its summary, the sketch write
+    val (jobs, _) = counted(create(Metastore.Dataspace, t))
+    assert(jobs == 3, s"a 32-file create ran $jobs Spark jobs")
+    sameRows(spark.index.parquet(t).where(col("k") === 100L),
+      spark.read.parquet(t).where(col("k") === 100L))
   }
 
   test("driver tier: removals drop dead sketch parts and keep untouched ones") {
