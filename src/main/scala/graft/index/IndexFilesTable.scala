@@ -55,9 +55,12 @@ object IndexFilesTable {
       |}""".stripMargin)
 
   /** Bounded dir→rows cache (same cap as the metastore catalog cache);
-    * only small-table reads go through it. */
+    * only small-table reads go through it. Each entry is tagged with the
+    * metadata instance it was read for, and serves only that instance:
+    * a reader whose metadata was reloaded (an external refresh, a TTL of
+    * 0) reads the rows that go with it. */
   private val MaxCached = 16
-  private val cache = new TrieMap[String, Seq[FileStatsRow]]()
+  private val cache = new TrieMap[String, (IndexMetadata, Seq[FileStatsRow])]()
 
   private def scan[A](dir: Path, conf: Configuration)(row: FileStatsRow => A): Seq[A] = {
     val out = Seq.newBuilder[A]
@@ -101,11 +104,28 @@ object IndexFilesTable {
     }
   }
 
-  def readAll(dir: Path, conf: Configuration): Seq[FileStatsRow] =
-    cache.getOrElseUpdate(dir.toString, {
-      if (cache.size >= MaxCached) cache.headOption.foreach(e => cache.remove(e._1))
-      scan(dir, conf)(identity)
-    })
+  def readAll(dir: Path, meta: IndexMetadata, conf: Configuration): Seq[FileStatsRow] =
+    cache.get(dir.toString) match {
+      case Some((m, rows)) if m eq meta => rows
+      case _ =>
+        val rows = scan(dir, conf)(identity)
+        handOver(dir, meta, rows)
+        rows
+    }
+
+  /** Installs `rows` as the table in `dir` for `meta`: a commit hands
+    * over the rows it just wrote. */
+  private[index] def handOver(dir: Path, meta: IndexMetadata, rows: Seq[FileStatsRow]): Unit = {
+    if (!cache.contains(dir.toString) && cache.size >= MaxCached) {
+      cache.headOption.foreach(e => cache.remove(e._1))
+    }
+    cache.put(dir.toString, (meta, rows))
+    ()
+  }
+
+  /** The rows cached for `meta`, if any. */
+  private[index] def cached(dir: Path, meta: IndexMetadata): Option[Seq[FileStatsRow]] =
+    cache.get(dir.toString).collect { case (m, rows) if m eq meta => rows }
 
   /** Every row, read past the cache: a refresh diffs against the table
     * on disk, never against what some reader cached earlier. */
@@ -114,8 +134,8 @@ object IndexFilesTable {
 
   /** Streaming path-only read — never cached (safe for huge tables, e.g.
     * FileIndex.inputFiles above the distributed-pruning threshold). */
-  def readPaths(dir: Path, conf: Configuration): Seq[String] =
-    cache.get(dir.toString) match {
+  def readPaths(dir: Path, meta: IndexMetadata, conf: Configuration): Seq[String] =
+    cached(dir, meta) match {
       case Some(rows) => rows.map(_.path)
       case None => scan(dir, conf)(_.path)
     }

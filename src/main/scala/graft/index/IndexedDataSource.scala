@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graft.{GraftFileIndex, SparkInternals}
 import org.apache.spark.sql.types.{StructField, StructType}
 
+import graft.ops.Parallel
+
 /** Index lifecycle: create / exists / delete / load for a Parquet table
   * path or catalog table. The reference's IndexedDataSource.scala +
   * ParquetMetastoreSupport.scala re-expressed Spark-first:
@@ -194,8 +196,10 @@ object IndexedDataSource {
         metastore.fs, metastore.location(dataspace, roots)) {
     metastore.create(dataspace, roots, mode) { indexDir => underJobTag(spark) {
       val dirs = RefreshDirs(indexDir)
-      commit(metastore, dirs, empty, stageOnDriver(spark, conf, empty, dirs, listing))
-      seedManifest(spark, conf, indexDir, roots, allFiles, seedCaptureMs)
+      dirs.clearStaging(metastore.fs)
+      commit(metastore, dirs, stageOnDriver(spark, conf, metastore, empty,
+        passReader(spark, conf, empty), dirs, listing, Nil))
+      seedManifest(spark, conf, dirs, roots, allFiles, seedCaptureMs)
     } }
     } // withSiblingLock
   }
@@ -206,7 +210,7 @@ object IndexedDataSource {
     * BEFORE the listing started (see [[createIndex]]), so any dir written
     * during the whole listing-to-probe window fails the refresh skip
     * proof and re-lists. */
-  private def seedManifest(spark: SparkSession, conf: IndexConf, indexDir: Path,
+  private def seedManifest(spark: SparkSession, conf: IndexConf, dirs: RefreshDirs,
       roots: Seq[Path], files: Seq[FileStatus], capturedAt: Long): Unit = {
     val rootStrs = roots.map(_.toString)
     if (manifestEnabled(conf, rootStrs) && files.size >= conf.distributedPruningThreshold) {
@@ -233,7 +237,8 @@ object IndexedDataSource {
             Iterator.single((d, st.getModificationTime, capturedAt))
           } catch { case _: java.io.IOException => Iterator.empty }
         }.collect() // O(dirs) — same class as the refresh walk's frontier
-        writeManifest(spark, indexDir, probed.toSeq, rootStrs.size)
+        stageManifest(spark, dirs, probed.toSeq, rootStrs.size)
+        installManifest(dirs.indexDir.getFileSystem(spark.sparkContext.hadoopConfiguration), dirs)
       }
     }
   }
@@ -399,23 +404,37 @@ object IndexedDataSource {
     * rewritten file (same path, new size/mtime) counts as removed +
     * added. Two tiers, split at the pruning threshold
     * (`spark.sql.index.pruning.distributedThreshold`) on the indexed
-    * file count:
+    * file count of the cached metadata:
     *
     *   - below it, everything the refresh decides runs on the driver,
-    *     over rows that are driver-sized anyway: Spark's InMemoryFileIndex
-    *     lists the table, the old rows are read once (parquet-mr, past
-    *     the reader cache) and diffed in a hash set, and the new metadata
-    *     is summarized from the kept rows and the pass's summary. Removed
-    *     paths leave the sketch table by whole part files (see
-    *     [[StatisticsBuilder.stageSketchRemovals]]), and the files table
-    *     is rewritten as one part. A delta that fits one scan task (see
-    *     [[StatisticsBuilder.withPass]]) has its pass run on the driver
-    *     too, so such a refresh starts no Spark job. [[createIndex]] is
-    *     this tier run against an empty index;
+    *     over rows that are driver-sized anyway, in four step groups whose
+    *     steps run concurrently ([[graft.ops.Parallel.inParallel]]):
+    *     1. Spark's InMemoryFileIndex lists the table, the old rows are
+    *        read (parquet-mr, past the reader cache) and the metadata is
+    *        re-read past the metastore cache; the pass's reader, which
+    *        needs only the index's schemas, is built from the cached
+    *        metadata beside the lock and this group;
+    *     2. the diff in hash sets picks the added files, whose stats pass
+    *        runs beside [[StatisticsBuilder.stageSketchRemovals]] (removed
+    *        paths leave the sketch table by whole part files);
+    *     3. the files table's part (rewritten whole when files were
+    *        removed), the delta's sketch part and the two commit files
+    *        (`metadata.json`, summarized from the kept rows and the pass's
+    *        summary, and `_SUCCESS`, both under hidden names) are written,
+    *        still beside the removals;
+    *     4. the swap, only deletes and renames.
+    *     A delta that fits one scan task (see [[StatisticsBuilder.withPass]])
+    *     has its pass run on the driver too, so such a refresh starts no
+    *     Spark job. The commit then hands the snapshot it holds to the
+    *     read caches instead of leaving them cold: the metadata as parsed
+    *     from the file just written, the files-table rows just written and
+    *     the sketch store patched with the delta's sketches.
+    *     [[createIndex]] is this tier run against an empty index;
     *   - at/above it, the listing is a distributed level-walk and the diff
     *     a full-outer join that collects only the added refs, so driver
     *     residency stays O(dirs + partitions + delta); stale rows drop by
-    *     a semi-join, and removals re-summarize the settled table.
+    *     a semi-join, and removals re-summarize the settled table. Its rows
+    *     never reach the driver, so its commit drops the read caches.
     *
     * Both tiers, and create, index the added files one way (`indexDelta`):
     * one stats pass over them (footers, sketches and the min/max fallback
@@ -423,23 +442,25 @@ object IndexedDataSource {
     * sketches to the staging dirs and returns their summary.
     *
     * Partition dirs keep their original indexes (the metadata partition
-    * list is append-only), so kept rows stay valid.
+    * list is append-only), so kept rows stay valid; newly listed ones
+    * append in the order of their value strings.
     *
     * Write, then swap. Under the index's sibling maintenance lock, every
-    * write goes to staging dirs first: `files_tmp` holds the whole new
-    * files table when files were removed (sorted by partitionIdx, path),
-    * else the delta's part files; `sketches_tmp` holds the delta's
-    * sketches, plus the live old rows (the distributed tier, removals
-    * only) or the filtered copies of part files mixing live and removed
-    * paths (the driver tier). Only then is `_SUCCESS` removed, the staged
-    * tables moved into place (a delete + rename, or a part-file move that
-    * first deletes the replaced parts), the metadata written and
-    * `_SUCCESS` restored. A refresh that fails before the swap — an
-    * unreadable added file failing the pass, say — cancels its Spark
-    * jobs, waits for their tasks to end, deletes the staging and leaves
-    * the index loadable and unchanged; a rerun converges. A
-    * crash inside the swap window fails subsequent loads ("create it
-    * first") instead of serving a torn index; re-create to recover.
+    * write goes to staging first: `files_tmp` holds the whole new files
+    * table when files were removed (sorted by partitionIdx, path), else
+    * the delta's part files; `sketches_tmp` holds the delta's sketches,
+    * plus the live old rows (the distributed tier, removals only) or the
+    * filtered copies of part files mixing live and removed paths (the
+    * driver tier); `.metadata.json.tmp` and `._SUCCESS.tmp` hold the
+    * commit files. Only then is `_SUCCESS` removed, the staged tables
+    * moved into place (a delete + rename, or a part-file move that first
+    * deletes the replaced parts) and the commit files renamed in. A
+    * refresh that fails before the swap — an unreadable added file
+    * failing the pass, say — cancels its Spark jobs, waits for their
+    * tasks to end, deletes the staging and leaves the index loadable and
+    * unchanged; a rerun converges. A crash inside the swap window fails
+    * subsequent loads ("create it first") instead of serving a torn
+    * index; re-create to recover.
     *
     * Limitation (shared with Spark's own file-listing caches): a file
     * rewritten IN PLACE with both size and mtime preserved (`cp -p` over
@@ -465,9 +486,21 @@ object IndexedDataSource {
     val conf = IndexConf(spark, options)
     val metastore = new Metastore(spark, conf)
     val roots = resolveTableRoots(spark, paths)
-    val (indexDir, meta) = metastore.load(dataspace, roots)
+    // the cached metadata only picks the tier (and fails a missing
+    // index early); what the refresh writes builds on the metadata
+    // re-read under the lock, so another writer's commit is never lost
+    val (indexDir, cached) = metastore.load(dataspace, roots)
     val fs = metastore.fs
+    val hconf = spark.sparkContext.hadoopConfiguration
     val dirs = RefreshDirs(indexDir)
+
+    // the pass's reader needs only the index's schemas: on the driver
+    // tier it is built from the cached metadata while the lock is taken
+    // and the table listed (it starts no Spark job), and rebuilt if the
+    // re-read metadata changed them (or building it failed)
+    val driverTier = cached.fileCount < conf.distributedPruningThreshold
+    Parallel.beside(Option.when(driverTier)(scala.util.Try(passReader(spark, conf, cached)))) {
+        cachedReader =>
 
     // Single-writer enforcement: the diff, the staged writes and the swap
     // run under the index's SIBLING maintenance lock (shared with
@@ -476,80 +509,118 @@ object IndexedDataSource {
     // run's lock lease-expires.
     graft.ops.MaintenanceLock.withSiblingLock(fs, indexDir) {
     // staging of a run that died before its own cleanup
-    Seq(dirs.filesTmp, dirs.sketchTmp).foreach(d => if (fs.exists(d)) fs.delete(d, true))
-    val metaRoots = meta.rootPathStrings.map(new Path(_))
+    dirs.clearStaging(fs)
 
     try underJobTag(spark) {
-      val (staged, commitManifest) =
-        if (meta.fileCount < conf.distributedPruningThreshold) {
-          // the driver tier does not maintain the dir manifest — drop any
-          // stale one so a later distributed refresh can't trust it
-          (stageOnDriver(spark, conf, meta, dirs, SparkInternals.discoverTable(spark, metaRoots)),
-            () => writeManifest(spark, indexDir, Nil, metaRoots.size))
+      val staged =
+        if (driverTier) {
+          val ((listed, old), meta) = Parallel.inParallel(
+            Parallel.inParallel(SparkInternals.discoverTable(spark, roots),
+              IndexFilesTable.readUncached(dirs.files, hconf)),
+            metastore.loadUncached(indexDir, roots.head))
+          val metaRoots = meta.rootPathStrings.map(new Path(_))
+          val listing =
+            if (metaRoots == roots) listed else SparkInternals.discoverTable(spark, metaRoots)
+          val schemas = (m: IndexMetadata) => (m.indexSchema, m.dataSchema, m.sketchKind, m.source)
+          val reader = cachedReader().filter(_ => schemas(meta) == schemas(cached))
+            .flatMap(_.toOption).getOrElse(passReader(spark, conf, meta))
+          stageOnDriver(spark, conf, metastore, meta, reader, dirs, listing, old)
         } else {
+          val meta = metastore.loadUncached(indexDir, roots.head)
           val oldKeys = spark.read.schema(IndexFilesTable.Schema).parquet(dirs.files.toString)
             .select("path", "size", "modificationTime")
-          val (currentKeys, addedRefs, removedCount, partValues, manifestWriter) =
-            distributedListingDiff(spark, metaRoots, meta, oldKeys, RefreshKey, dirs.listingTmp,
-              indexDir, conf)
-          (stageDistributed(spark, conf, meta, dirs, currentKeys, addedRefs, removedCount,
-            partValues), manifestWriter)
+          val (currentKeys, addedRefs, removedCount, partValues, manifest) =
+            distributedListingDiff(spark, meta.rootPathStrings.map(new Path(_)), meta, oldKeys,
+              RefreshKey, dirs.listingTmp, indexDir, conf)
+          manifest.foreach(stageManifest(spark, dirs, _, meta.rootPathStrings.size))
+          stageDistributed(spark, conf, metastore, meta, dirs, currentKeys, addedRefs,
+            removedCount, partValues, manifest.isDefined)
         }
 
       // nothing to mutate: still persist the refreshed manifest so dirs
       // captured inside the mtime-slack window stop re-listing forever
-      if (staged.added == 0 && staged.removed == 0) commitManifest()
+      if (staged.noop) { if (staged.manifest) installManifest(fs, dirs) }
       else {
         // the swap: the only window in which the index is unloadable
         fs.delete(new Path(indexDir, Metastore.SuccessFile), false)
-        commit(metastore, dirs, meta, staged)
-        commitManifest()
-        fs.create(new Path(indexDir, Metastore.SuccessFile), true).close()
+        commit(metastore, dirs, staged)
       }
       RefreshStats(staged.added, staged.removed)
     } finally {
       // staging left by a failure before the swap, and the distributed
       // listing's scratch table (read lazily until the staged writes end)
-      Seq(dirs.filesTmp, dirs.sketchTmp, dirs.listingTmp)
-        .foreach(d => if (fs.exists(d)) fs.delete(d, true))
+      dirs.clearStaging(fs)
     }
     } // MaintenanceLock.withSiblingLock
+    } // Parallel.beside
   }
 
   /** The diff key of a file: a rewrite changes size or mtime. */
   private val RefreshKey = Seq("path", "size", "modificationTime")
 
-  /** The tables a refresh touches and the staging dirs it writes first. */
+  /** The order newly listed partitions append to the metadata's list in:
+    * by their value strings, null first, whatever order the listing
+    * returned them in. */
+  private val NewPartitionOrder: Ordering[Seq[Option[String]]] =
+    Ordering.Implicits.seqOrdering(Ordering.Option(Ordering.String))
+
+  /** The tables a refresh touches and what it stages before its swap. */
   private case class RefreshDirs(indexDir: Path) {
     val files = new Path(indexDir, Metastore.FilesDir)
     val sketches = new Path(indexDir, Metastore.SketchDir)
+    val manifest = new Path(indexDir, Metastore.DirsDir)
     val filesTmp = new Path(indexDir, Metastore.FilesDir + "_tmp")
     val sketchTmp = new Path(indexDir, Metastore.SketchDir + "_tmp")
     val listingTmp = new Path(indexDir, Metastore.FilesDir + "_listing_tmp")
+    val manifestTmp = new Path(indexDir, Metastore.DirsDir + "_tmp")
+    val metadataTmp = Metastore.staged(indexDir, Metastore.MetadataFile)
+    val successTmp = Metastore.staged(indexDir, Metastore.SuccessFile)
+
+    def clearStaging(fs: org.apache.hadoop.fs.FileSystem): Unit =
+      Seq(filesTmp, sketchTmp, listingTmp, manifestTmp, metadataTmp, successTmp)
+        .foreach(fs.delete(_, true))
   }
 
-  /** A refresh written to the staging dirs, with the metadata it commits.
-    * `replace`: the staged tables are whole (files were removed); else
-    * they hold only the delta's part files. `sketchDrop`: the sketch
-    * table is staged by part files instead — these live parts go, the
-    * staged ones join the rest. */
-  private case class Staged(added: Long, removed: Long, replace: Boolean,
-      fileCount: Long, totalBytes: Long, dataSchema: StructType,
-      partitionValues: Seq[Seq[Option[String]]], sketchDrop: Option[Seq[String]] = None)
+  /** A refresh written to staging: the counts it reports and the
+    * metadata its commit files hold, as a load will parse them (`noop`:
+    * nothing changed, nothing was staged). `replace`: the staged tables
+    * are whole (files were removed); else they hold only the delta's part
+    * files. `sketchDrop`: the sketch table is staged by part files
+    * instead — these live parts go, the staged ones join the rest.
+    * `manifest`: the swap replaces the stored dir manifest with the staged
+    * one, or drops it when none was staged. `handOver`: what the commit
+    * installs in the read caches beside `meta`. */
+  private case class Staged(added: Long, removed: Long, noop: Boolean, meta: IndexMetadata,
+      replace: Boolean, sketchDrop: Option[Seq[String]], manifest: Boolean,
+      handOver: Option[HandOver])
+
+  /** The committed snapshot the driver tier holds: the files-table rows
+    * when the pass ran on the driver (kept plus delta rows, as written),
+    * the removed and the delta's normalized paths, the delta's sketch rows
+    * when the pass ran on the driver, and the sketch store they patch,
+    * when the cached one describes the index on disk. */
+  private case class HandOver(rows: Option[Seq[FileStatsRow]], removed: Set[String],
+      delta: Set[String], sketches: Option[Seq[StatisticsBuilder.SketchRow]],
+      prior: Option[SketchStore])
 
   /** Driver tier of [[refreshIndex]], over the table's `listing`
-    * (partition schema and files per partition dir): diff and summary on
-    * the driver, and the added files indexed by [[indexDelta]]. The
-    * metadata's partition list is append-only: existing entries keep
-    * their position, so kept rows stay valid, and newly listed partition
-    * dirs append, also those holding only empty files. Entries whose
-    * partition vanished stay (no file row references them — harmless). */
+    * (partition schema and files per partition dir) and the `old`
+    * files-table rows: the diff on the driver, then the added files
+    * indexed by [[indexDelta]] beside the sketch removals, the commit
+    * files written beside the pass's. The metadata's partition list is
+    * append-only: existing entries keep their position, so kept rows stay
+    * valid, and newly listed partition dirs append, also those holding
+    * only empty files. Entries whose partition vanished stay (no file row
+    * references them — harmless). */
   private def stageOnDriver(
       spark: SparkSession,
       conf: IndexConf,
+      metastore: Metastore,
       meta: IndexMetadata,
+      reader: StatisticsBuilder.Reader,
       dirs: RefreshDirs,
-      listing: (StructType, Seq[(InternalRow, Seq[FileStatus])])): Staged = {
+      listing: (StructType, Seq[(InternalRow, Seq[FileStatus])]),
+      old: Seq[FileStatsRow]): Staged = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val (partitionSchema, partDirs) = listing
     // a table whose files are all gone lists no partitions to infer its
@@ -559,67 +630,91 @@ object IndexedDataSource {
     require(sameLayout || partDirs.forall(_._2.isEmpty),
       s"partition schema changed (${meta.partitionSchema.simpleString} -> " +
         s"${partitionSchema.simpleString}); rebuild the index with create.mode(\"overwrite\")")
-    val partValues = scala.collection.mutable.ArrayBuffer(meta.partitionValues: _*)
-    val idxByValues = scala.collection.mutable.HashMap(meta.partitionValues.zipWithIndex: _*)
-    val current: Seq[(Int, StatisticsBuilder.FileRef)] =
+    val listed: Seq[(Seq[Option[String]], Seq[FileStatus])] =
       if (!sameLayout) Nil
-      else partDirs.flatMap { case (values, files) =>
-        val vStr: Seq[Option[String]] = partitionSchema.fields.zipWithIndex.toSeq.map {
-          case (f, i) => IndexMetadata.castToString(f.dataType, values.get(i, f.dataType))
-        }
-        val idx = idxByValues.getOrElseUpdate(vStr, { partValues += vStr; partValues.size - 1 })
-        files.filter(_.getLen > 0).map { f =>
-          val locs = SparkInternals.blockLocations(f)
-          idx -> StatisticsBuilder.FileRef(
-            f.getPath.toString, f.getLen, f.getModificationTime,
-            blockSize = if (f.getBlockSize > 0) f.getBlockSize else FileEntry.DefaultBlockSize,
-            locationsJson = IndexMetadata.locationsToJsonString(locs),
-            hosts = locs.flatMap(_.hosts).distinct)
-        }
+      else partDirs.map { case (values, files) =>
+        partitionSchema.fields.zipWithIndex.toSeq.map { case (f, i) =>
+          IndexMetadata.castToString(f.dataType, values.get(i, f.dataType))
+        } -> files
       }
-    val old = IndexFilesTable.readUncached(dirs.files, hconf)
+    val idxByValues = scala.collection.mutable.HashMap(meta.partitionValues.zipWithIndex: _*)
+    val newPartitions = listed.map(_._1).filterNot(idxByValues.contains).distinct
+      .sorted(NewPartitionOrder)
+    newPartitions.foreach(v => idxByValues(v) = idxByValues.size)
+    val current: Seq[(Int, StatisticsBuilder.FileRef)] = listed.flatMap { case (v, files) =>
+      files.filter(_.getLen > 0).map { f =>
+        val locs = SparkInternals.blockLocations(f)
+        idxByValues(v) -> StatisticsBuilder.FileRef(
+          f.getPath.toString, f.getLen, f.getModificationTime,
+          blockSize = if (f.getBlockSize > 0) f.getBlockSize else FileEntry.DefaultBlockSize,
+          locationsJson = IndexMetadata.locationsToJsonString(locs),
+          hosts = locs.flatMap(_.hosts).distinct)
+      }
+    }
     // lazy: a create has no old rows to test, so it never builds the set
     lazy val liveKeys =
       current.iterator.map { case (_, r) => (r.path, r.size, r.modificationTime) }.toSet
     val oldKeys = old.iterator.map(r => (r.path, r.size, r.modificationTime)).toSet
     val (kept, removed) = old.partition(r => liveKeys((r.path, r.size, r.modificationTime)))
     val added = current.filterNot { case (_, r) => oldKeys((r.path, r.size, r.modificationTime)) }
-    if (added.isEmpty && removed.isEmpty) {
-      return Staged(0L, 0L, replace = false, meta.fileCount, meta.totalBytes, meta.dataSchema,
-        partValues.toSeq)
+    if (added.isEmpty && removed.isEmpty && newPartitions.isEmpty) {
+      return Staged(0L, 0L, noop = true, meta, replace = false, None, manifest = true, None)
     }
 
+    // the sketch store cached for the metadata on disk patches into the
+    // committed one when it was loaded from the files on disk: the
+    // cached rows of the same metadata have the old rows' keys
+    val prior = for {
+      m <- Metastore.cached(dirs.indexDir.toString) if m == meta
+      rows <- IndexFilesTable.cached(dirs.files, m)
+      if rows.size == old.size && rows.forall(r => oldKeys((r.path, r.size, r.modificationTime)))
+      store <- SketchStore.cached(dirs.sketches, m)
+    } yield store
     // with removals the files table is staged whole: the pass writes the
-    // kept rows with its own (one part when it runs on the driver)
+    // kept rows with its own (one part when it runs on the driver). A
+    // path rewritten in place is in `removed` too, so its old sketch
+    // rows go with the part files they sit in.
     val replace = removed.nonEmpty
-    val delta = indexDelta(spark, conf, meta, dirs, added, if (replace) kept else Nil)
-    if (replace && added.isEmpty) {
-      IndexFilesTable.write(dirs.filesTmp, kept.sortWith(StatisticsBuilder.filesOrder), hconf)
-    }
-    // a path rewritten in place is in `removed` too, so its old sketch
-    // rows go with the part files they sit in
-    val sketchDrop = StatisticsBuilder.stageSketchRemovals(dirs.sketches,
-      removed.iterator.map(r => SketchStore.normalizePath(r.path)).toSet, dirs.sketchTmp, hconf)
-    val summary = StatisticsBuilder.summarizeRows(kept).merge(delta)
-    Staged(added.size.toLong, removed.size.toLong, replace, summary.fileCount,
-      summary.totalBytes, summary.dataSchema.getOrElse(meta.dataSchema), partValues.toSeq,
-      Some(sketchDrop))
+    val removedPaths = removed.iterator.map(r => SketchStore.normalizePath(r.path)).toSet
+    val wholeKept = if (replace) Some(kept) else None
+    val ((deltaRows, committed), sketchDrop) = Parallel.inParallel(
+      indexDelta(spark, conf, meta, reader, dirs, added, wholeKept) { delta =>
+        val summary = StatisticsBuilder.summarizeRows(kept).merge(delta)
+        stageCommitFiles(metastore, dirs, meta.copy(
+          dataSchema = summary.dataSchema.getOrElse(meta.dataSchema),
+          partitionValues = meta.partitionValues ++ newPartitions,
+          fileCount = summary.fileCount,
+          totalBytes = summary.totalBytes))
+      },
+      StatisticsBuilder.stageSketchRemovals(dirs.sketches, removedPaths, dirs.sketchTmp, hconf))
+    Staged(added.size.toLong, removed.size.toLong, noop = false, committed, replace,
+      Some(sketchDrop), manifest = true, Some(HandOver(
+        deltaRows.map(d => kept ++ d.map(_._1)), removedPaths,
+        added.iterator.map { case (_, r) => SketchStore.normalizePath(r.path) }.toSet,
+        deltaRows.map(_.flatMap(_._2)), prior)))
   }
 
   /** Distributed tier of [[refreshIndex]], after the distributed diff: the
     * stale-row semi-joins, the added files indexed by [[indexDelta]] and
-    * the summaries run as Spark jobs over the index tables. */
+    * the summaries run as Spark jobs over the index tables; the commit
+    * files are staged last, from the settled summary. */
   private def stageDistributed(
       spark: SparkSession,
       conf: IndexConf,
+      metastore: Metastore,
       meta: IndexMetadata,
       dirs: RefreshDirs,
       currentKeys: DataFrame,
       addedRefs: Seq[(Int, StatisticsBuilder.FileRef)],
       removedCount: Long,
-      partitionValues: Seq[Seq[Option[String]]]): Staged = {
+      partitionValues: Seq[Seq[Option[String]]],
+      manifest: Boolean): Staged = {
     import org.apache.spark.sql.functions.col
     val replace = removedCount > 0
+    val added = addedRefs.map(_._2.path).distinct.size.toLong
+    if (added == 0 && !replace) {
+      return Staged(0L, 0L, noop = true, meta, replace, None, manifest, None)
+    }
     val fs = dirs.sketches.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
     // 1. Kept rows (semi-join against the live listing keys), then their
@@ -641,7 +736,8 @@ object IndexedDataSource {
       }
     }
     // 2. The pass over the added files, appended beside them.
-    val delta = indexDelta(spark, conf, meta, dirs, addedRefs, Nil)
+    val (_, delta) =
+      indexDelta(spark, conf, meta, passReader(spark, conf, meta), dirs, addedRefs, None)(identity)
     // 3. Metadata. Append-only refreshes compose it incrementally (schema
     //    only ever widens — exact, since nothing was removed; a 1-file
     //    append must never re-aggregate the whole 10^6-row files table).
@@ -657,53 +753,95 @@ object IndexedDataSource {
           delta.dataSchema.map(SparkInternals.mergeSchemas(meta.dataSchema, _))
             .getOrElse(meta.dataSchema))
       }
-    Staged(addedRefs.map(_._2.path).distinct.size.toLong, removedCount, replace,
-      fileCount, totalBytes, dataSchema, partitionValues)
+    val committed = stageCommitFiles(metastore, dirs, meta.copy(dataSchema = dataSchema,
+      partitionValues = partitionValues, fileCount = fileCount, totalBytes = totalBytes))
+    Staged(added, removedCount, noop = false, committed, replace, None, manifest, None)
   }
 
   /** Indexes `added` (create's files, or a refresh's delta) into the
-    * staging dirs: one stats pass writes their files-table rows, with the
-    * `kept` rows the caller stages beside them, to `files_tmp` and their
-    * sketches to `sketches_tmp`, in as many part files as their bytes
-    * call for, and returns their summary. */
-  private def indexDelta(spark: SparkSession, conf: IndexConf, meta: IndexMetadata,
-      dirs: RefreshDirs, added: Seq[(Int, StatisticsBuilder.FileRef)], kept: Seq[FileStatsRow])
-      : StatisticsBuilder.FileStatsSummary =
-    if (added.isEmpty) StatisticsBuilder.FileStatsSummary.Empty
-    else {
+    * staging dirs: one stats pass, whose files-table rows (after `kept`,
+    * the rows the caller stages beside them when the table is staged
+    * whole) go to `files_tmp` and whose sketches go to `sketches_tmp`, in
+    * as many part files as their bytes call for. `alongside` runs with
+    * the pass's summary beside those writes. Returns the pass's rows when
+    * it ran on the driver, and what `alongside` returned. */
+  private def indexDelta[A](spark: SparkSession, conf: IndexConf, meta: IndexMetadata,
+      reader: StatisticsBuilder.Reader, dirs: RefreshDirs,
+      added: Seq[(Int, StatisticsBuilder.FileRef)], kept: Option[Seq[FileStatsRow]])(
+      alongside: StatisticsBuilder.FileStatsSummary => A)
+      : (Option[Seq[StatisticsBuilder.PassRow]], A) =
+    if (added.isEmpty) {
+      val hconf = spark.sparkContext.hadoopConfiguration
+      val (_, a) = Parallel.inParallel(
+        kept.foreach(k =>
+          IndexFilesTable.write(dirs.filesTmp, k.sortWith(StatisticsBuilder.filesOrder), hconf)),
+        alongside(StatisticsBuilder.FileStatsSummary.Empty))
+      (Some(Nil), a)
+    } else {
       val numParts =
         if (conf.numPartitions > 0) conf.numPartitions
         else math.min(spark.sparkContext.defaultParallelism * 3,
           spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
-      StatisticsBuilder.withPass(spark, added, meta.indexSchema, meta.dataSchema,
-          meta.sketchKind, conf.minMaxFallback, numParts, meta.source) { pass =>
-        pass.writeFileStats(dirs.filesTmp, kept)
+      StatisticsBuilder.withPass(spark, added, reader, numParts) { pass =>
+        // first: a Spark pass materializes its rows here, and the
+        // sketches' part count and the commit files need the summary
         val summary = pass.summarize
-        if (meta.sketchKind.isDefined) {
-          pass.writeSketches(dirs.sketchTmp,
-            StatisticsBuilder.sketchParts(spark, summary.sketchBytes))
-        }
-        summary
+        val (_, (_, a)) = Parallel.inParallel(
+          pass.writeFileStats(dirs.filesTmp, kept.getOrElse(Nil)),
+          Parallel.inParallel(
+            if (meta.sketchKind.isDefined) {
+              pass.writeSketches(dirs.sketchTmp,
+                StatisticsBuilder.sketchParts(spark, summary.sketchBytes))
+            },
+            alongside(summary)))
+        (pass.driverRows, a)
       }
     }
 
-  /** Moves the staged tables into place and writes the metadata they
-    * describe: a refresh's swap, with `_SUCCESS` absent, and the end of
-    * create. */
-  private def commit(metastore: Metastore, dirs: RefreshDirs, meta: IndexMetadata,
-      st: Staged): Unit = {
+  /** The stats pass's reader of the index `meta` describes. */
+  private def passReader(spark: SparkSession, conf: IndexConf,
+      meta: IndexMetadata): StatisticsBuilder.Reader =
+    StatisticsBuilder.reader(spark, meta.indexSchema, meta.dataSchema, meta.sketchKind,
+      conf.minMaxFallback, meta.source)
+
+  /** Writes the commit files a swap renames in — `meta` as
+    * `.metadata.json.tmp` and an empty `._SUCCESS.tmp` — side by side,
+    * and returns `meta` as a load will parse it. */
+  private def stageCommitFiles(metastore: Metastore, dirs: RefreshDirs,
+      meta: IndexMetadata): IndexMetadata =
+    Parallel.inParallel(metastore.stageMetadata(dirs.indexDir, meta),
+      metastore.fs.create(dirs.successTmp, true).close())._1
+
+  /** The swap (a refresh's, with `_SUCCESS` absent, and the end of
+    * create): moves the staged tables, the dir manifest and the commit
+    * files into place — deletes and renames only — then hands the
+    * committed snapshot to the read caches. */
+  private def commit(metastore: Metastore, dirs: RefreshDirs, st: Staged): Unit = {
+    val fs = metastore.fs
     Metastore.cacheInvalidate(dirs.indexDir.toString)
     SketchStore.invalidate(dirs.sketches)
     IndexFilesTable.invalidate(dirs.files)
-    install(metastore.fs, dirs.filesTmp, dirs.files, st.replace)
-    install(metastore.fs, dirs.sketchTmp, dirs.sketches, st.replace && st.sketchDrop.isEmpty,
+    install(fs, dirs.filesTmp, dirs.files, st.replace)
+    install(fs, dirs.sketchTmp, dirs.sketches, st.replace && st.sketchDrop.isEmpty,
       st.sketchDrop.getOrElse(Nil))
-    metastore.writeMetadata(dirs.indexDir, meta.copy(
-      dataSchema = st.dataSchema,
-      partitionValues = st.partitionValues,
-      fileCount = st.fileCount,
-      totalBytes = st.totalBytes))
+    if (st.manifest) installManifest(fs, dirs)
+    val metadata = new Path(dirs.indexDir, Metastore.MetadataFile)
+    fs.delete(metadata, false)
+    move(fs, dirs.metadataTmp, metadata)
+    move(fs, dirs.successTmp, new Path(dirs.indexDir, Metastore.SuccessFile))
+    st.handOver.foreach { h =>
+      Metastore.cachePut(dirs.indexDir.toString, st.meta)
+      h.rows.foreach(IndexFilesTable.handOver(dirs.files, st.meta, _))
+      if (st.meta.sketchKind.isDefined) {
+        SketchStore.handOver(dirs.sketches, st.meta,
+          h.prior.getOrElse(new SketchStore(dirs.sketches, metastore.hadoopConf))
+            .after(h.removed, h.delta, h.sketches))
+      }
+    }
   }
+
+  private def move(fs: org.apache.hadoop.fs.FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to)) throw new java.io.IOException(s"could not rename $from to $to")
 
   /** Move a staged table into place: the whole dir when `replace` (or
     * when there is no live table yet); else the live part files named in
@@ -726,27 +864,29 @@ object IndexedDataSource {
       }
     }
 
-  /** Persists the dir-mtime manifest `rows` of (dir, mtime, capturedAt)
-    * for the next distributed refresh: written to `dirs_tmp`, then renamed
-    * into place. A manifest of no dir beyond the `roots` can never skip
-    * one, so any stored manifest is dropped instead. Best effort: the
+  /** Stages the dir-mtime manifest `rows` of (dir, mtime, capturedAt) for
+    * the next distributed refresh in `dirs_tmp`, which
+    * [[installManifest]] moves into place. A manifest of no dir beyond
+    * the `roots` can never skip one, so none is staged. Best effort: the
     * manifest is a cache, and without one a refresh walks every dir. */
-  private def writeManifest(spark: SparkSession, indexDir: Path,
-      rows: Seq[(String, Long, Long)], roots: Int): Unit = {
-    val dirsPath = new Path(indexDir, Metastore.DirsDir)
-    try {
-      val fs = indexDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (rows.size > roots) {
+  private def stageManifest(spark: SparkSession, dirs: RefreshDirs,
+      rows: Seq[(String, Long, Long)], roots: Int): Unit =
+    if (rows.size > roots) {
+      try {
         import spark.implicits._
-        val tmp = new Path(indexDir, Metastore.DirsDir + "_tmp")
         rows.sortBy(_._1).toDF("dir", "mtime", "capturedAt")
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        if (fs.exists(dirsPath)) fs.delete(dirsPath, true)
-        fs.rename(tmp, dirsPath)
-      } else if (fs.exists(dirsPath)) fs.delete(dirsPath, true)
+          .coalesce(1).write.mode("overwrite").parquet(dirs.manifestTmp.toString)
+      } catch { case _: Exception => () }
+    }
+
+  /** Replaces the stored dir manifest with the staged one, or drops it
+    * when none was staged. Best effort, as [[stageManifest]]. */
+  private def installManifest(fs: org.apache.hadoop.fs.FileSystem, dirs: RefreshDirs): Unit =
+    try {
+      fs.delete(dirs.manifest, true)
+      if (fs.exists(dirs.manifestTmp)) fs.rename(dirs.manifestTmp, dirs.manifest)
       ()
     } catch { case _: Exception => () }
-  }
 
   /** Runs `body` with its Spark jobs under a job tag of their own (a tag
     * leaves any job group of the caller in place). If `body` throws, the
@@ -787,8 +927,9 @@ object IndexedDataSource {
     * per file — the footer job re-derives locality from the read itself).
     * Returns (currentKeys frame backed by the scratch table, added refs,
     * removed count, the metadata's partition list with the added files'
-    * new partitions appended, manifest writer); the caller drops the
-    * scratch table after the staged writes. */
+    * new partitions appended, and the refreshed dir manifest when the
+    * manifest tier is on); the caller drops the scratch table after the
+    * staged writes. */
   private def distributedListingDiff(
       spark: SparkSession,
       roots: Seq[Path],
@@ -799,7 +940,7 @@ object IndexedDataSource {
       indexDir: Path,
       conf: IndexConf)
       : (org.apache.spark.sql.DataFrame, Seq[(Int, StatisticsBuilder.FileRef)],
-         Long, Seq[Seq[Option[String]]], () => Unit) = {
+         Long, Seq[Seq[Option[String]]], Option[Seq[(String, Long, Long)]]) = {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val hconf = spark.sparkContext.hadoopConfiguration
@@ -1056,7 +1197,7 @@ object IndexedDataSource {
     val removedCount = Option(metrics.getOrElse("rc", null))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
 
-    // new partition dirs append (sorted for determinism) — derived from
+    // new partition dirs append (in NewPartitionOrder) — derived from
     // the ADDED rows only: existing partitions are already in the
     // metadata, and a new partition dir implies at least one added file,
     // so the full-listing distinct the old shape ran is pure overhead
@@ -1065,7 +1206,7 @@ object IndexedDataSource {
     val tuples: Seq[Seq[Option[String]]] = addedRows.toSeq
       .map(_.getAs[scala.collection.Seq[String]]("partVals").toSeq.map(Option(_)))
       .distinct
-      .sortBy(_.map(_.getOrElse("")).mkString("\u0000"))
+      .sorted(NewPartitionOrder)
     tuples.foreach { t =>
       idxByValues.getOrElseUpdate(t, { partValues += t; partValues.size - 1 })
     }
@@ -1078,20 +1219,17 @@ object IndexedDataSource {
         r.getAs[Long]("modificationTime"), r.getAs[Long]("blockSize"))
     }
     lastListingResidency = Some((maxDirRows, tuples.size.toLong, addedRefs.size.toLong))
-    // persist the refreshed (dir, mtime, capturedAt) manifest for the
-    // NEXT refresh. The caller invokes this only once the mutation has
-    // committed (or when there was nothing to mutate) — writing earlier
-    // would let an aborted refresh mark unindexed files as captured.
-    val manifestWriter: () => Unit = () =>
-      if (useManifest) {
-        writeManifest(spark, indexDir,
-          newManifest.toSeq.map { case (d, (m, c)) => (d, m, c) }, rootStrs.size)
-      }
+    // the refreshed (dir, mtime, capturedAt) manifest for the NEXT
+    // refresh. The caller installs it only in the swap (or when there is
+    // nothing to mutate) — earlier would let an aborted refresh mark
+    // unindexed files as captured.
+    val refreshedManifest =
+      if (useManifest) Some(newManifest.toSeq.map { case (d, (m, c)) => (d, m, c) }) else None
     val currentKeys = unchangedKeys match {
       case Some(uk) => uk.unionAll(listing.select(keyCols.map(col): _*))
       case None => listing.select(keyCols.map(col): _*)
     }
-    (currentKeys, addedRefs, removedCount, partValues.toSeq, manifestWriter)
+    (currentKeys, addedRefs, removedCount, partValues.toSeq, refreshedManifest)
   }
 
   def existsIndex(spark: SparkSession, path: String, dataspace: String): Boolean =
@@ -1156,7 +1294,7 @@ object IndexedDataSource {
     }
     val fileIndex = new GraftFileIndex(spark, indexDir, meta, conf)
     if (conf.eagerLoading && meta.sketchKind.isDefined) {
-      SketchStore.forDir(new Path(indexDir, Metastore.SketchDir),
+      SketchStore.forDir(new Path(indexDir, Metastore.SketchDir), meta,
         spark.sparkContext.hadoopConfiguration).preload()
     }
     val relationOptions = options.filterNot(_._1.startsWith("spark.sql.index."))

@@ -242,10 +242,13 @@ class Metastore(spark: SparkSession, conf: IndexConf) {
     fs.mkdirs(dir)
     try {
       body(dir)
-      val out = fs.create(new Path(dir, Metastore.SuccessFile), true)
-      out.close()
+      // a body that commits as refresh does renames its own marker in
+      val success = new Path(dir, Metastore.SuccessFile)
+      if (!fs.exists(success)) fs.create(success, true).close()
     } catch {
       case e: Throwable =>
+        // the body may have handed its index to the cache
+        Metastore.cacheInvalidate(dir.toString)
         try fs.delete(dir, true) catch { case _: Exception => }
         throw e
     }
@@ -271,29 +274,38 @@ class Metastore(spark: SparkSession, conf: IndexConf) {
 
   def load(dataspace: String, roots: Seq[Path]): (Path, IndexMetadata) = {
     val dir = location(dataspace, roots)
-    val tablePath = roots.head
     val meta = Metastore.cacheGet(dir.toString,
-        ttlMillis = conf.metastoreCacheTtlSeconds * 1000L) {
-      if (!fs.exists(new Path(dir, Metastore.SuccessFile))) {
-        throw new IllegalStateException(
-          s"Index for $tablePath does not exist or is corrupt (no _SUCCESS in $dir). " +
-            "Create it with spark.index.create first.")
-      }
-      val in = fs.open(new Path(dir, Metastore.MetadataFile))
-      val bytes = try {
-        val bos = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 65536, false)
-        bos.toByteArray
-      } finally in.close()
-      IndexMetadata.fromJsonString(new String(bytes, StandardCharsets.UTF_8))
-    }
+      ttlMillis = conf.metastoreCacheTtlSeconds * 1000L)(loadUncached(dir, roots.head))
     (dir, meta)
   }
 
-  def writeMetadata(dir: Path, meta: IndexMetadata): Unit = {
-    val out = fs.create(new Path(dir, Metastore.MetadataFile), true)
-    try out.write(IndexMetadata.toJsonString(meta).getBytes(StandardCharsets.UTF_8))
+  /** The committed metadata of the index in `dir`, read past the cache
+    * and `_SUCCESS`-gated as [[load]] reads it cold: a refresh builds on
+    * what is on disk under its lock, never on what this process cached. */
+  private[index] def loadUncached(dir: Path, tablePath: Path): IndexMetadata = {
+    if (!fs.exists(new Path(dir, Metastore.SuccessFile))) {
+      throw new IllegalStateException(
+        s"Index for $tablePath does not exist or is corrupt (no _SUCCESS in $dir). " +
+          "Create it with spark.index.create first.")
+    }
+    val in = fs.open(new Path(dir, Metastore.MetadataFile))
+    val bytes = try {
+      val bos = new java.io.ByteArrayOutputStream()
+      org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 65536, false)
+      bos.toByteArray
+    } finally in.close()
+    IndexMetadata.fromJsonString(new String(bytes, StandardCharsets.UTF_8))
+  }
+
+  /** Writes `meta` as the hidden `.metadata.json.tmp` of `dir`, which a
+    * commit renames into place, and returns it as a cold [[load]] would
+    * parse the file. */
+  private[index] def stageMetadata(dir: Path, meta: IndexMetadata): IndexMetadata = {
+    val json = IndexMetadata.toJsonString(meta)
+    val out = fs.create(Metastore.staged(dir, Metastore.MetadataFile), true)
+    try out.write(json.getBytes(StandardCharsets.UTF_8))
     finally out.close()
+    IndexMetadata.fromJsonString(json)
   }
 }
 
@@ -304,6 +316,10 @@ object Metastore {
   val FilesDir = "files"
   /** Directory-mtime manifest for incremental refresh listing. */
   val DirsDir = "dirs"
+
+  /** The hidden name a commit file (`metadata.json`, `_SUCCESS`) is
+    * written under before a commit renames it into `dir`. */
+  def staged(dir: Path, name: String): Path = new Path(dir, s".$name.tmp")
 
   val Dataspace = "source"
   val CatalogDataspace = "catalog"
@@ -347,6 +363,20 @@ object Metastore {
 
   private[index] def cacheInvalidate(key: String): Unit =
     cache.synchronized { cache.remove(key); () }
+
+  /** Installs `meta`, just committed to the index in `key`, as if a load
+    * had read it now. */
+  private[index] def cachePut(key: String, meta: IndexMetadata): Unit =
+    cache.synchronized {
+      cache.remove(key)
+      if (cache.size >= MaxCached) cache.remove(cache.head._1)
+      cache.put(key, (meta, System.currentTimeMillis()))
+      ()
+    }
+
+  /** The cached metadata of the index in `key`, expired or not. */
+  private[index] def cached(key: String): Option[IndexMetadata] =
+    cache.synchronized(cache.get(key).map(_._1))
 
   def apply(spark: SparkSession): Metastore = new Metastore(spark, IndexConf(spark))
 }

@@ -89,6 +89,27 @@ class SketchStore(dir: Path, conf: Configuration) {
       })
   }
 
+  /** The store of this table after a commit that dropped the sketches
+    * of `removed` and added those of `delta` (normalized paths): what
+    * this store loaded, less both sets, plus `rows`, the delta's sketch
+    * rows, when the commit holds them (else the delta loads from disk on
+    * demand). A path rewritten in place is in both sets: its old rows
+    * go, the new ones come. */
+  private[index] def after(removed: Set[String], delta: Set[String],
+      rows: Option[Seq[StatisticsBuilder.SketchRow]]): SketchStore = this.synchronized {
+    val next = new SketchStore(dir, conf)
+    val live = (f: String) => !removed(f) && !delta(f)
+    bytesByKey.foreach { case (k, v) => if (live(k._1)) next.bytesByKey.put(k, v) }
+    deserialized.foreach { case (k, v) => if (live(k._1)) next.deserialized.put(k, v) }
+    loadedFiles.keys.foreach(f => if (live(f)) next.loadedFiles.put(f, true))
+    rows.foreach { rs =>
+      rs.foreach { case (f, c, k, d) => next.bytesByKey.put((f, c), (k, d)) }
+      delta.foreach(next.loadedFiles.put(_, true))
+    }
+    next.allLoaded = allLoaded && (rows.isDefined || delta.isEmpty)
+    next
+  }
+
   /** Eager full load (spark.sql.index.parquet.filter.eagerLoading). */
   def preload(): Unit = {
     readRows(None)
@@ -138,14 +159,29 @@ object SketchStore {
     n
   }
 
-  private val cache = new TrieMap[String, SketchStore]()
+  /** dir → store, tagged with the metadata instance it serves (see
+    * [[IndexFilesTable]]'s cache). */
+  private val cache = new TrieMap[String, (IndexMetadata, SketchStore)]()
 
   /** input_file_name() yields `file:///x` while FileStatus paths render as
     * `file:/x`; key sketches by the bare URI path so both agree. */
   def normalizePath(s: String): String = new Path(s).toUri.getPath
 
-  def forDir(dir: Path, conf: Configuration): SketchStore =
-    cache.getOrElseUpdate(dir.toString, new SketchStore(dir, conf))
+  def forDir(dir: Path, meta: IndexMetadata, conf: Configuration): SketchStore =
+    cached(dir, meta).getOrElse {
+      val store = new SketchStore(dir, conf)
+      handOver(dir, meta, store)
+      store
+    }
+
+  /** The store cached for `meta`, if any. */
+  private[index] def cached(dir: Path, meta: IndexMetadata): Option[SketchStore] =
+    cache.get(dir.toString).collect { case (m, store) if m eq meta => store }
+
+  /** Installs `store` as the sketch table in `dir` for `meta`. */
+  private[index] def handOver(dir: Path, meta: IndexMetadata, store: SketchStore): Unit = {
+    cache.put(dir.toString, (meta, store)); ()
+  }
 
   def invalidate(dir: Path): Unit = { cache.remove(dir.toString); () }
 }

@@ -142,15 +142,42 @@ object StatisticsBuilder {
       * so neighbouring slices merge without a shuffle or a sort, as RDD
       * `coalesce` groups them. */
     def writeSketches(dir: Path, parts: Int): Unit
+    /** The rows the writes write, when the pass ran on the driver: a
+      * commit hands them to the read caches. A Spark job's rows stay on
+      * its executors. */
+    def driverRows: Option[Seq[PassRow]]
   }
 
-  /** Runs `body` over the pass for `refs` (nonempty). `schema` is the
-    * table's merged schema as the caller knows it (the index metadata's,
-    * or at create the schema the index columns were resolved against); if
-    * an indexed column the pass reads does not resolve in it, the files'
-    * own merged schema is inferred instead (on the driver when they fit
-    * one scan task). `sketchKind` None builds no sketches; `fallback`
-    * patches footer holes from the data.
+  /** How a pass reads each file ([[PerFile]]), built on the driver
+    * before the files are known: building it (Spark's file reader
+    * broadcasts the Hadoop conf) needs only the index metadata, so a
+    * refresh builds it beside its listing. */
+  final class Reader private[StatisticsBuilder] (perFile: Seq[(Int, FileRef)] => PerFile) {
+    private[StatisticsBuilder] def apply(refs: Seq[(Int, FileRef)]): PerFile = perFile(refs)
+  }
+
+  /** The [[Reader]] of the indexed columns `indexSchema` of `source`
+    * files. `schema` is the table's merged schema as the caller knows it
+    * (the index metadata's, or at create the schema the index columns
+    * were resolved against); if an indexed column the pass reads does not
+    * resolve in it, the reader is built at the pass, over the files' own
+    * merged schema (inferred on the driver when they fit one scan task).
+    * `sketchKind` None builds no sketches; `fallback` patches footer holes
+    * from the data. */
+  def reader(spark: SparkSession, indexSchema: StructType, schema: StructType,
+      sketchKind: Option[String], fallback: Boolean, source: String): Reader = {
+    val src = Sources.normalize(source)
+    PerFile(spark, indexSchema, schema, sketchKind, fallback, src, requireAll = true) match {
+      case Some(perFile) => new Reader(_ => perFile)
+      case None => new Reader(refs => PerFile(spark, indexSchema,
+        SparkInternals.filesSchema(spark, src, refs.map { case (_, r) =>
+          new FileStatus(r.size, false, 1, r.blockSize, r.modificationTime, new Path(r.path))
+        }), sketchKind, fallback, src, requireAll = false).get)
+    }
+  }
+
+  /** Runs `body` over the pass for `refs` (nonempty), each file read by
+    * `reader`.
     *
     * The runner is chosen here, by Spark's own scan-packing rule: when
     * the files fit one scan task (each costs its size plus
@@ -164,14 +191,9 @@ object StatisticsBuilder {
   def withPass[T](
       spark: SparkSession,
       refs: Seq[(Int, FileRef)],
-      indexSchema: StructType,
-      schema: StructType,
-      sketchKind: Option[String],
-      fallback: Boolean,
-      numPartitions: Int,
-      source: String)(body: Pass => T): T = {
-    val perFile = PerFile(spark, refs, indexSchema, schema, sketchKind, fallback,
-      Sources.normalize(source))
+      reader: Reader,
+      numPartitions: Int)(body: Pass => T): T = {
+    val perFile = reader(refs)
     val slices = slice(refs, numPartitions)
     if (SparkInternals.fitsOneScanTask(spark, refs.map(_._2.size))) {
       val conf = spark.sparkContext.hadoopConfiguration
@@ -288,15 +310,16 @@ object StatisticsBuilder {
       * element), a map (its keys) or `map_values` of a map; a column the
       * schema lacks reads as null, so its sketch is empty. One reader is
       * built, over the sketch columns and every fallback column: with
-      * sketches on, the fallback columns are among the sketch columns. */
+      * sketches on, the fallback columns are among the sketch columns.
+      * None when `requireAll` and a column does not resolve in `schema`. */
     def apply(
         spark: SparkSession,
-        refs: Seq[(Int, FileRef)],
         indexSchema: StructType,
-        known: StructType,
+        schema: StructType,
         sketchKind: Option[String],
         fallback: Boolean,
-        src: String): PerFile = {
+        src: String,
+        requireAll: Boolean): Option[PerFile] = {
       // by name, so each file's sketch rows come out in (file, column) order
       val sketchFields =
         if (sketchKind.isEmpty) Nil
@@ -309,17 +332,9 @@ object StatisticsBuilder {
         if (fallback) indexSchema.fields.toSeq.filterNot(IndexMetadata.isElementDomain) else Nil
       val column = (f: StructField) =>
         if (IndexMetadata.isMapValue(f)) IndexMetadata.mapValueBase(f.name) else f.name
-      val (schema, frame) = {
-        val knownFrame = SparkInternals.emptyFrame(spark, known)
-        if ((sketchFields ++ fallbackFields).forall(f => hasColumn(knownFrame, column(f)))) {
-          (known, knownFrame)
-        } else {
-          val inferred = SparkInternals.filesSchema(spark, src, refs.map { case (_, r) =>
-            new FileStatus(r.size, false, 1, r.blockSize, r.modificationTime, new Path(r.path))
-          })
-          (inferred, SparkInternals.emptyFrame(spark, inferred))
-        }
-      }
+      val frame = SparkInternals.emptyFrame(spark, schema)
+      val resolves = (sketchFields ++ fallbackFields).forall(f => hasColumn(frame, column(f)))
+      if (requireAll && !resolves) return None
       val input = (f: StructField) =>
         if (!hasColumn(frame, column(f))) {
           lit(null).cast(if (IndexMetadata.isMapValue(f)) ArrayType(f.dataType) else f.dataType)
@@ -330,9 +345,9 @@ object StatisticsBuilder {
           SparkInternals.bindColumns(frame, (sketchFields ++ fallbackFields).map(input))
         Some((SparkInternals.fileReader(spark, src, schema, required), exprs.toArray))
       }
-      new PerFile(src, indexSchema.fields.map(domainSpec),
+      Some(new PerFile(src, indexSchema.fields.map(domainSpec),
         sketchFields.map(f => f.name -> Sketch.resolveKind(sketchKind.get, f.dataType)).toArray,
-        fallbackFields.map(f => f.name -> f.dataType).toArray, read)
+        fallbackFields.map(f => f.name -> f.dataType).toArray, read))
     }
   }
 
@@ -340,6 +355,8 @@ object StatisticsBuilder {
     * writes with. */
   private final class DriverPass(slices: Seq[Seq[PassRow]], conf: Configuration) extends Pass {
     def summarize: FileStatsSummary = summaryOf(slices.iterator.flatten)
+
+    def driverRows: Option[Seq[PassRow]] = Some(slices.flatten)
 
     def writeFileStats(dir: Path, kept: Seq[FileStatsRow]): Unit =
       IndexFilesTable.write(dir, (kept ++ slices.flatten.map(_._1)).sortWith(filesOrder), conf)
@@ -362,6 +379,8 @@ object StatisticsBuilder {
 
     def summarize: FileStatsSummary =
       pass.mapPartitions(it => Iterator.single(summaryOf(it))).collect().reduce(_ merge _)
+
+    def driverRows: Option[Seq[PassRow]] = None
 
     def writeFileStats(dir: Path, kept: Seq[FileStatsRow]): Unit = {
       if (kept.nonEmpty) {

@@ -36,22 +36,46 @@ object Parallel {
   def cpuBound(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
-  /** Run two INDEPENDENT driver actions concurrently (guide §2.6:
-    * actions are only sequential because driver code calls them
-    * sequentially — overlapping lets the second job's tasks back-fill
-    * executors freed by the first job's tail). Only for actions with no
-    * ordering dependency (e.g. a batch's kept-rows write and its index
-    * segment's data writes — visibility is gated by the segment commit
-    * marker, which the caller still writes after BOTH land). If either
-    * side fails the caller sees the failure only after the other side
+  /** Run two INDEPENDENT driver steps concurrently and return both
+    * results (guide §2.6: actions are only sequential because driver code
+    * calls them sequentially — overlapping lets the second job's tasks
+    * back-fill executors freed by the first job's tail, and lets driver
+    * I/O waits overlap). Only for steps with no ordering dependency (e.g.
+    * a batch's kept-rows write and its index segment's data writes —
+    * visibility is gated by the segment commit marker, which the caller
+    * still writes after BOTH land). Nest calls for more branches; see
+    * [[beside]] for how `b` runs and fails. */
+  def inParallel[A, B](a: => A, b: => B): (A, B) = beside(b)(join => (a, join()))
+
+  /** Runs `b` beside `a`, which gets a function that waits for `b`'s
+    * result: `a` can go on with work that does not need it and take it
+    * when it does. `b` runs on the global execution context under the
+    * caller's Spark job properties (job group, job tags, scheduler pool)
+    * and active session, so its jobs are cancelled, pooled and attributed
+    * as the caller's are. This returns only after both ended: if either
+    * fails the caller sees the failure only after the other side
     * finished, so a retry never overlaps a still-running half. */
-  def inParallel(a: => Unit, b: => Unit): Unit = {
-    import scala.concurrent.{Await, Future}
+  def beside[A, B](b: => B)(a: (() => B) => A): A = {
+    import scala.concurrent.{Await, Promise, blocking}
     import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fb = Future(b)
-    try a finally Await.ready(fb, Duration.Inf)
-    fb.value.get.get
+    val carry = org.apache.spark.sql.graft.SparkInternals.callerJobProperties()
+    val pb = Promise[B]()
+    scala.concurrent.ExecutionContext.global.execute { () =>
+      try pb.success(blocking(carry(b)))
+      catch { case e: Throwable => pb.failure(e) }
+      ()
+    }
+    val join = () => Await.result(pb.future, Duration.Inf)
+    val ra =
+      try a(join)
+      catch {
+        case e: Throwable =>
+          Await.ready(pb.future, Duration.Inf)
+          pb.future.value.get.failed.foreach(f => if (f ne e) e.addSuppressed(f))
+          throw e
+      }
+    join()
+    ra
   }
 
   /** Unconditional spread for an IDS-ONLY frame feeding a CPU-heavy

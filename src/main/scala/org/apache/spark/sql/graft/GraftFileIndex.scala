@@ -101,7 +101,7 @@ class GraftFileIndex(
     rowsByPartitionCache match {
       case (ep, c) if ep == e && c != null => c
       case _ =>
-        val c = IndexFilesTable.readAll(filesDir, hadoopConf)
+        val c = IndexFilesTable.readAll(filesDir, meta, hadoopConf)
           .groupBy(_.partitionIdx).view.mapValues(_.map(FileRow(_))).toMap
         // epoch-tagged install, same contract as memoized(): a stale
         // assignment that lands after refresh()'s clear carries an old
@@ -112,7 +112,7 @@ class GraftFileIndex(
   }
 
   private def sketchStore: SketchStore =
-    SketchStore.forDir(new Path(indexDir, graft.index.Metastore.SketchDir), hadoopConf)
+    SketchStore.forDir(new Path(indexDir, graft.index.Metastore.SketchDir), meta, hadoopConf)
 
   /** files-scanned telemetry for the last listFiles call (read by tests
     * and the bench harness). */
@@ -860,7 +860,7 @@ class GraftFileIndex(
   }
 
   override def inputFiles: Array[String] =
-    IndexFilesTable.readPaths(filesDir, hadoopConf).toArray
+    IndexFilesTable.readPaths(filesDir, meta, hadoopConf).toArray
 
   /** Drop EVERY snapshot-derived memo along with the shared files-table
     * cache: an instance held across an index refresh must re-prove

@@ -197,6 +197,37 @@ object SparkInternals {
     sizes.iterator.map(_ + conf.filesOpenCostInBytes).sum <= conf.filesMaxPartitionBytes
   }
 
+  /** The calling thread's Spark job properties (job group, job tags,
+    * scheduler pool, SQL execution scope) and active session, to run work
+    * on another thread under, as Spark's own helper threads do. Spark
+    * hands its properties to threads only when a thread is created, so a
+    * pooled thread would otherwise run the jobs it starts outside the
+    * caller's group and tags, beyond the reach of their cancellation. */
+  final class JobProperties private[SparkInternals] (
+      sc: Option[org.apache.spark.SparkContext], props: java.util.Properties,
+      session: Option[SparkSession]) {
+    /** Runs `body` with these properties and session, then restores the
+      * thread's own. */
+    def apply[T](body: => T): T = {
+      val ownSession = SparkSession.getActiveSession
+      val ownProps = sc.map(_.getLocalProperties)
+      sc.foreach(_.setLocalProperties(org.apache.spark.util.Utils.cloneProperties(props)))
+      session.foreach(SparkSession.setActiveSession)
+      try body
+      finally {
+        ownSession.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+        for (c <- sc; p <- ownProps) c.setLocalProperties(p)
+      }
+    }
+  }
+
+  def callerJobProperties(): JobProperties = {
+    val sc = org.apache.spark.SparkContext.getActive
+    new JobProperties(sc,
+      sc.map(c => org.apache.spark.util.Utils.cloneProperties(c.getLocalProperties)).orNull,
+      SparkSession.getActiveSession)
+  }
+
   /** Runs `body` on this thread as a task runs it: under a TaskContext of
     * its own, completed when `body` ends. Spark's file readers close
     * their files from completion listeners, so a reader left open by a

@@ -1463,7 +1463,8 @@ class IndexEndToEndSpec extends AnyFunSuite with BeforeAndAfterAll {
     val filesDir = new org.apache.hadoop.fs.Path(
       ms.location(Metastore.Dataspace, IndexedDataSource.resolveTablePath(spark, p)),
       Metastore.FilesDir)
-    val rows = IndexFilesTable.readAll(filesDir, spark.sparkContext.hadoopConfiguration)
+    val meta = ms.load(Metastore.Dataspace, IndexedDataSource.resolveTablePath(spark, p))._2
+    val rows = IndexFilesTable.readAll(filesDir, meta, spark.sparkContext.hadoopConfiguration)
     assert(rows.exists(r => IndexMetadata.blocksFromJsonString(r.blocksJson).size > 1),
       "fixture must produce multi-row-group files")
     // bloom covers the whole file: an absent key prunes everything, a
@@ -1489,7 +1490,8 @@ class IndexEndToEndSpec extends AnyFunSuite with BeforeAndAfterAll {
       ms.location(Metastore.Dataspace, IndexedDataSource.resolveTablePath(spark, p)),
       Metastore.SketchDir)
     SketchStore.invalidate(sketchDir) // fresh store → zeroed telemetry
-    val store = SketchStore.forDir(sketchDir, spark.sparkContext.hadoopConfiguration)
+    val meta = ms.load(Metastore.Dataspace, IndexedDataSource.resolveTablePath(spark, p))._2
+    val store = SketchStore.forDir(sketchDir, meta, spark.sparkContext.hadoopConfiguration)
 
     val key = spark.read.parquet(p).select("l_orderkey").head.getLong(0)
     checkSame(

@@ -182,6 +182,11 @@ class MockFsRefreshSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val o3 = Map(IndexConf.MetastoreLocation -> s"mockfs://$work/metastore3")
     spark.index.create.mode("overwrite").options(o3).indexBy("k").parquet(t3)
+    // a reader without the sketches create handed to this process's
+    // cache (another process, say) reads them from the table
+    SketchStore.invalidate(new org.apache.hadoop.fs.Path(new Metastore(spark, IndexConf(spark, o3))
+      .location(Metastore.Dataspace, IndexedDataSource.resolveTableRoots(spark, Seq(t3))),
+      Metastore.SketchDir))
     val lookup = spark.index.options(o3).parquet(t3).filter(col("k") === 150L)
     CountingMockFileSystem.reset()
     assert(lookup.count() == 1L)

@@ -147,9 +147,55 @@ class RefreshTiersSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(got.dataSchema.fields.sortBy(_.name).toSeq == want.dataSchema.fields.sortBy(_.name).toSeq,
         s"$tier/$step: data schema differs")
     }
-    assert(!Files.list(java.nio.file.Paths.get(indexDir(Metastore.Dataspace, table).toUri))
-      .anyMatch(_.getFileName.toString.endsWith("_tmp")), s"$tier/$step: staging left behind")
+    assert(staging(table).isEmpty, s"$tier/$step: staging left behind")
     got
+  }
+
+  /** Staging dirs and commit temp files in the index dir of `table`. */
+  private def staging(table: String): Seq[String] =
+    Option(new java.io.File(indexDir(Metastore.Dataspace, table).toUri.getPath).listFiles())
+      .toSeq.flatten.map(_.getName).filter(n => n.endsWith("_tmp") || n.endsWith(".tmp"))
+
+  /** Predicates whose per-file pruning verdicts the caches must agree on:
+    * min/max and sketch probes, a range and a miss. */
+  private val Probes = Seq(col("k") === 150L, col("s") === "s3", col("x") > 2000L,
+    col("k") === -1L)
+
+  /** What the read caches serve for the index of `table` — on the driver
+    * tier the snapshot its last commit handed over — equals what a
+    * reader gets after every cache is dropped: the metadata, the
+    * files-table rows and each file's pruning verdict for each probe. */
+  private def assertCachesMatchCold(table: String, tier: String, step: String): Unit = {
+    val roots = IndexedDataSource.resolveTableRoots(spark, Seq(table))
+    val dir = indexDir(Metastore.Dataspace, table)
+    val (filesDir, sketchDir) = (new Path(dir, Metastore.FilesDir), new Path(dir, Metastore.SketchDir))
+    val hconf = spark.sparkContext.hadoopConfiguration
+    def view(): (IndexMetadata, Seq[FileStatsRow], Seq[Set[String]]) = {
+      val (_, meta) = Metastore(spark).load(Metastore.Dataspace, roots)
+      val rows = IndexFilesTable.readAll(filesDir, meta, hconf).sortBy(_.path)
+      val index = new org.apache.spark.sql.graft.GraftFileIndex(spark, dir, meta)
+      val relation = spark.index.parquet(table)
+      val verdicts = Probes.map { p =>
+        val cond = relation.where(p).queryExecution.analyzed.collectFirst {
+          case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+        }.get
+        index.listFiles(Nil, Seq(cond)).flatMap(_.files.map(_.getPath.toString)).toSet
+      }
+      (meta, rows, verdicts)
+    }
+    if (tier == "driver") {
+      val (_, meta) = Metastore(spark).load(Metastore.Dataspace, roots)
+      assert(IndexFilesTable.cached(filesDir, meta).isDefined &&
+        SketchStore.cached(sketchDir, meta).isDefined, s"$tier/$step: nothing was handed over")
+    }
+    val warm = view()
+    Metastore.cacheInvalidate(dir.toString)
+    IndexFilesTable.invalidate(filesDir)
+    SketchStore.invalidate(sketchDir)
+    val cold = view()
+    assert(warm._1 == cold._1, s"$tier/$step: handed-over metadata differs")
+    assert(warm._2 == cold._2, s"$tier/$step: handed-over files-table rows differ")
+    assert(warm._3 == cold._3, s"$tier/$step: handed-over pruning verdicts differ")
   }
 
   private def sameRows(indexed: DataFrame, plain: DataFrame): Unit = {
@@ -169,6 +215,7 @@ class RefreshTiersSpec extends AnyFunSuite with BeforeAndAfterAll {
       def step(name: String, added: Long, removed: Long): Snapshot = {
         val st = refresh(t, opts)
         assert(st == IndexedDataSource.RefreshStats(added, removed), s"$tier/$name: $st")
+        assertCachesMatchCold(t, tier, name)
         val snap = assertMatchesCreate(t, tier, name)
         sameRows(spark.index.parquet(t),
           spark.read.option("mergeSchema", "true").parquet(t))
@@ -469,6 +516,185 @@ class RefreshTiersSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.map(_._1).toSet == allDataFiles(t).map(norm).toSet)
     assert(!rows.exists(_._1 == norm(gone)))
     assertMatchesCreate(t, "driver", "part-level removal")
+  }
+
+  test("two creates of the same table record the same partition numbering") {
+    val t = s"$work/numbering"
+    (0 until 12).foreach(p => writeFile(s"$t/p=$p", p * 100L, 100))
+    create(Metastore.Dataspace, t)
+    create(Fresh, t)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val (a, b) = (indexDir(Metastore.Dataspace, t), indexDir(Fresh, t))
+    val json = (d: Path) =>
+      Files.readAllBytes(java.nio.file.Paths.get(new Path(d, Metastore.MetadataFile).toUri.getPath)).toSeq
+    assert(json(a) == json(b), "metadata.json differs between two creates")
+    assert(IndexFilesTable.readUncached(new Path(a, Metastore.FilesDir), hconf) ==
+      IndexFilesTable.readUncached(new Path(b, Metastore.FilesDir), hconf))
+    val (_, meta) = Metastore(spark).load(Metastore.Dataspace,
+      IndexedDataSource.resolveTableRoots(spark, Seq(t)))
+    assert(meta.partitionValues == (0 until 12).map(p => Seq(Some(p.toString))).sortBy(_.head.get))
+  }
+
+  /** Copies the index dir `from` over the index dir `to` on disk. */
+  private def copyIndex(from: Path, to: Path): Unit = {
+    val (src, dst) = (java.nio.file.Paths.get(from.toUri.getPath), java.nio.file.Paths.get(to.toUri.getPath))
+    org.apache.commons.io.FileUtils.deleteDirectory(dst.toFile)
+    org.apache.commons.io.FileUtils.copyDirectory(src.toFile, dst.toFile)
+  }
+
+  test("refresh and readers build on the index on disk, not on what this process cached") {
+    val t = s"$work/external"
+    val day = (d: Int) => s"$t/d=2024-01-0$d"
+    writeFile(day(2), 0, 100)
+    writeFile(day(3), 100, 100)
+    create(Metastore.Dataspace, t)
+    // every cache of the index is warm
+    sameRows(spark.index.parquet(t).where(col("k") === 150L),
+      spark.read.parquet(t).where(col("k") === 150L))
+
+    // an external writer: the same table's index, built under a second
+    // metastore and refreshed there after a later day landed, replaces
+    // this index on disk
+    val other = Map(IndexConf.MetastoreLocation -> s"$work/metastore_external")
+    IndexedDataSource.createIndex(spark, Seq(t), Metastore.Dataspace, SaveMode.Overwrite,
+      IndexCols, indexAll = false, other, Sources.Parquet)
+    writeFile(day(4), 200, 100)
+    assert(IndexedDataSource.refreshIndex(spark, Seq(t), Metastore.Dataspace, other) ==
+      IndexedDataSource.RefreshStats(1L, 0L))
+    val roots = IndexedDataSource.resolveTableRoots(spark, Seq(t))
+    copyIndex(new Metastore(spark, IndexConf(spark, other)).location(Metastore.Dataspace, roots),
+      indexDir(Metastore.Dataspace, t))
+
+    // a reader that reloads the metadata reads the rows that go with it
+    val noCache = spark.index.option(IndexConf.MetastoreCacheTtl, "0")
+    sameRows(noCache.parquet(t).where(col("k") === 250L),
+      spark.read.parquet(t).where(col("k") === 250L))
+    assert(noCache.parquet(t).where(col("k") === 250L).count() == 1L)
+
+    // a refresh through this process's warm cache builds on the disk
+    writeFile(day(1), 300, 100)
+    assert(refresh(t, Map.empty) == IndexedDataSource.RefreshStats(1L, 0L))
+    assertMatchesCreate(t, "driver", "after an external refresh")
+    sameRows(spark.index.parquet(t).where(col("k") === 250L || col("k") === 350L),
+      spark.read.parquet(t).where(col("k") === 250L || col("k") === 350L))
+  }
+
+  /** Runs `body` with the index metastore on the `faultfs:` scheme. */
+  private def onFaultFs[T](body: => T): T = {
+    spark.sparkContext.hadoopConfiguration.set("fs.faultfs.impl",
+      classOf[FaultInjectingFileSystem].getName)
+    spark.conf.set(IndexConf.MetastoreLocation, s"faultfs://$work/metastore_fault")
+    try body
+    finally {
+      FaultInjectingFileSystem.failOn = (_, _) => false
+      spark.conf.set(IndexConf.MetastoreLocation, s"$work/metastore")
+    }
+  }
+
+  /** Every overlapped step of a driver-tier refresh, and the call that
+    * fails it. */
+  private val Branches: Seq[(String, (String, String) => Boolean)] = Seq(
+    "listing" -> ((op, p) => op == "list" && p.contains("/branch_") && !p.contains("metastore")),
+    "old-rows read" -> ((op, p) => op == "open" && p.contains("/files/")),
+    "metadata re-read" -> ((op, p) => op == "open" && p.endsWith("/" + Metastore.MetadataFile)),
+    "pass" -> ((op, p) => op == "open" && p.endsWith("part-late.parquet")),
+    "sketch removals" -> ((op, p) => op == "open" && p.contains("/sketches/part-")),
+    "files part" -> ((op, p) => op == "create" && p.contains("/files_tmp/")),
+    "sketch part" -> ((op, p) => op == "create" && p.contains("/sketches_tmp/.part-")),
+    "metadata temp file" -> ((op, p) => op == "create" && p.endsWith(".metadata.json.tmp")),
+    "_SUCCESS temp file" -> ((op, p) => op == "create" && p.endsWith("._SUCCESS.tmp")))
+
+  /** Runs `body`, a refresh, and checks that every Spark job it started,
+    * from whichever of its threads, ran under one job tag: the refresh's,
+    * which its cancellation reaches. */
+  private def underOneTag[T](what: String)(body: => T): T = {
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        tags.add(Option(e.properties).map(_.getProperty("spark.job.tags", "")).getOrElse(""))
+        ()
+      }
+    }
+    TestListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val out =
+      try scala.util.Try(body)
+      finally {
+        TestListenerBus.drain(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    // Spark adds tags of its own to a SQL execution's jobs
+    val seen = tags.toArray.map(_.toString.split(",").filter(_.startsWith("graft-index-")).toSeq)
+    assert(seen.forall(_.size == 1) && seen.flatten.distinct.size <= 1,
+      s"$what: jobs ran under tags ${seen.mkString(", ")}")
+    out.get
+  }
+
+  for (runner <- PassRunners.All) {
+    test(PassRunners.named(
+        "driver tier: a failure in any overlapped step leaves the index as it was", runner)) {
+      onFaultFs {
+        PassRunners.on(spark, runner) {
+          for (((branch, fails), i) <- Branches.zipWithIndex) {
+            val local = s"$work/branch_${runner}_$i"
+            val t = s"faultfs://$local"
+            (0 until 4).foreach(j => writeFile(s"$local/p=0", j * 100L, 100))
+            create(Metastore.Dataspace, t)
+            val before = snapshot(Metastore.Dataspace, t)
+
+            // one file lands, one goes: the refresh runs every step
+            val indexed = dataFiles(s"$local/p=0").toSet
+            writeFile(s"$local/p=0", 1000, 100)
+            val late = (dataFiles(s"$local/p=0").toSet -- indexed).head
+            assert(late.renameTo(new java.io.File(late.getParent, "part-late.parquet")))
+            new java.io.File(late.getParent, s".${late.getName}.crc").delete()
+            remove(dataFiles(s"$local/p=0").head)
+            FaultInjectingFileSystem.failOn = fails
+            try {
+              val e = intercept[Exception](underOneTag(branch)(refresh(t, Map.empty)))
+              assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+                .exists(c => Option(c.getMessage).exists(_.contains("injected"))),
+                s"$branch: the refresh failed otherwise: $e")
+            } finally FaultInjectingFileSystem.failOn = (_, _) => false
+
+            val dir = indexDir(Metastore.Dataspace, t)
+            assert(staging(t).isEmpty, s"$branch: staging left behind: ${staging(t)}")
+            assert(!new java.io.File(new java.io.File(dir.toUri.getPath).getParentFile,
+              s"_${dir.getName}.lock").exists(), s"$branch: the lock was not released")
+            // loadable and unchanged (a query would read the removed file)
+            assert(spark.index.exists.parquet(t))
+            assert(snapshot(Metastore.Dataspace, t) == before, s"$branch: the failed refresh changed the index")
+
+            assert(underOneTag(s"rerun after $branch")(refresh(t, Map.empty)) ==
+              IndexedDataSource.RefreshStats(1L, 1L), branch)
+            assertMatchesCreate(t, "driver", s"rerun after a failed $branch")
+            val q = (df: DataFrame) => df.where(col("k") === 1050L || col("s") === "s3")
+            sameRows(q(spark.index.parquet(t)), q(spark.read.parquet(local)))
+          }
+        }
+      }
+    }
+  }
+
+  test("driver tier: the swap only deletes and renames") {
+    onFaultFs {
+      val local = s"$work/swap_calls"
+      val t = s"faultfs://$local"
+      (0 until 8).foreach(i => writeFile(s"$local/p=${i / 4}", i * 100L, 100))
+      create(Metastore.Dataspace, t)
+      (0 until 4).foreach(i => writeFile(s"$local/p=2", 1000 + i * 100L, 100))
+      dataFiles(s"$local/p=0").foreach(remove)
+      FaultInjectingFileSystem.drain()
+      assert(refresh(t, Map.empty) == IndexedDataSource.RefreshStats(4L, 4L))
+      val calls = FaultInjectingFileSystem.drain()
+      val dir = indexDir(Metastore.Dataspace, t).toString
+      val swap = calls.dropWhile(_ != ("delete" -> new Path(dir, Metastore.SuccessFile).toString))
+      assert(swap.nonEmpty, s"no _SUCCESS delete among $calls")
+      assert(swap.forall(c => c._1 == "delete" || c._1 == "rename"),
+        s"the swap made other calls: ${swap.filterNot(c => c._1 == "delete" || c._1 == "rename")}")
+      assert(swap.contains("rename" -> Metastore.staged(new Path(dir), Metastore.SuccessFile).toString))
+      assertMatchesCreate(t, "driver", "swap calls")
+    }
   }
 
   override def afterAll(): Unit = {

@@ -246,8 +246,9 @@ class StatsPassSpec extends AnyFunSuite with BeforeAndAfterAll {
         val (_, meta) = indexOf("fresh", t)
         val rawDir = new Path(s"$work/raw_${tier}_$runner")
         StatisticsBuilder.withPass(spark, dataFiles(t).map(p => 0 -> StatisticsBuilder.FileRef(
-            p, new java.io.File(new Path(p).toUri.getPath).length(), 0L)), meta.indexSchema,
-            meta.dataSchema, None, fallback = false, 1, Sources.Parquet)(_.writeFileStats(rawDir, Nil))
+            p, new java.io.File(new Path(p).toUri.getPath).length(), 0L)),
+            StatisticsBuilder.reader(spark, meta.indexSchema, meta.dataSchema, None,
+              fallback = false, Sources.Parquet), 1)(_.writeFileStats(rawDir, Nil))
         val raw = IndexFilesTable.readUncached(rawDir, spark.sparkContext.hadoopConfiguration)
         assert(raw.count(r => IndexMetadata.blocksFromJsonString(r.blocksJson)
           .exists(_.columns.get("ts").exists(_.min.isEmpty))) == 2, s"$tier: INT96 holes")
