@@ -17,10 +17,13 @@ import graft.functions.{DotProduct, Md5Bucket, Md5Lower64, MinHashSignature, Nor
   *          graft_minhash_signature(shingles, 64)
   * }}}
   *
-  * The index engine itself needs no planner/analyzer rules (pruning lives
-  * in the FileIndex — SURVEY.md §7.1 delta #1); the injection surface is
-  * these functions plus the [[graft.index.GraftSqlParser]] DDL parser
-  * (CREATE/DROP/REFRESH/SHOW INDEX — see its scaladoc for the grammar).
+  * Pruning itself needs no planner/analyzer rules (it lives in the
+  * FileIndex — SURVEY.md §7.1 delta #1). Beside these functions and the
+  * [[graft.index.GraftSqlParser]] DDL parser (CREATE/DROP/REFRESH/SHOW
+  * INDEX — see its scaladoc for the grammar), the extension injects the
+  * index's optimizer rules and the planner strategy that binds an
+  * indexed scan's filter literals as parameters
+  * ([[org.apache.spark.sql.graft.IndexedScanStrategy]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -34,11 +37,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectParser((_, delegate) => new graft.index.GraftSqlParser(delegate))
     // metadata-only aggregates + (opt-in) transparent index substitution
     // for pure-SQL sessions; API users get the same rules lazily on first
-    // `spark.index` touch (GraftRules.ensure — both paths idempotent)
+    // `spark.index` touch (GraftRules.ensure, which registers nothing a
+    // session built with these extensions already runs)
     ext.injectOptimizerRule(s => new org.apache.spark.sql.graft.MetadataAggregateRule(s))
     ext.injectOptimizerRule(s => new org.apache.spark.sql.graft.AutoIndexSubstitutionRule(s))
     ext.injectOptimizerRule(s => new org.apache.spark.sql.graft.TopKRewriteRule(s))
     ext.injectOptimizerRule(s => new org.apache.spark.sql.graft.JoinPruneRule(s))
+    ext.injectPlannerStrategy(_ => org.apache.spark.sql.graft.IndexedScanStrategy)
 
     def register(name: String, usage: String)(builder: Seq[Expression] => Expression): Unit =
       ext.injectFunction((

@@ -58,9 +58,28 @@ object IndexFilesTable {
     * only small-table reads go through it. Each entry is tagged with the
     * metadata instance it was read for, and serves only that instance:
     * a reader whose metadata was reloaded (an external refresh, a TTL of
-    * 0) reads the rows that go with it. */
+    * 0) reads the rows that go with it. An entry also holds the rows as
+    * [[FileRow]]s grouped by partitionIdx, parsed on first use, so every
+    * GraftFileIndex over the same committed index (one per
+    * `spark.index.parquet`) shares one parse of the block stats; a
+    * commit's hand-over installs a fresh entry, whose rows parse once
+    * for the new metadata.
+    *
+    * An entry is also tagged with its dir's [[invalidate]] count when
+    * its rows were read, and serves only while that count holds: rows
+    * a scan read before an invalidation (a commit's swap, a
+    * GraftFileIndex refresh) and installed after it are never served,
+    * as a GraftFileIndex's memos are epoch-guarded. */
   private val MaxCached = 16
-  private val cache = new TrieMap[String, (IndexMetadata, Seq[FileStatsRow])]()
+  private final class Entry(val meta: IndexMetadata, val rows: Seq[FileStatsRow],
+      val generation: Long) {
+    lazy val byPartition: Map[Int, Seq[FileRow]] =
+      rows.groupBy(_.partitionIdx).view.mapValues(_.map(FileRow(_))).toMap
+  }
+  private val cache = new TrieMap[String, Entry]()
+  /** dir → its [[invalidate]] count (one counter per dir ever invalidated). */
+  private val invalidations = new TrieMap[String, java.util.concurrent.atomic.AtomicLong]()
+  private def generation(dir: String): Long = invalidations.get(dir).fold(0L)(_.get)
 
   private def scan[A](dir: Path, conf: Configuration)(row: FileStatsRow => A): Seq[A] = {
     val out = Seq.newBuilder[A]
@@ -104,28 +123,43 @@ object IndexFilesTable {
     }
   }
 
-  def readAll(dir: Path, meta: IndexMetadata, conf: Configuration): Seq[FileStatsRow] =
+  private def entry(dir: Path, meta: IndexMetadata, conf: Configuration): Entry = {
+    val gen = generation(dir.toString)
     cache.get(dir.toString) match {
-      case Some((m, rows)) if m eq meta => rows
-      case _ =>
-        val rows = scan(dir, conf)(identity)
-        handOver(dir, meta, rows)
-        rows
+      case Some(e) if (e.meta eq meta) && e.generation == gen => e
+      case _ => install(dir, new Entry(meta, scan(dir, conf)(identity), gen))
     }
+  }
+
+  def readAll(dir: Path, meta: IndexMetadata, conf: Configuration): Seq[FileStatsRow] =
+    entry(dir, meta, conf).rows
+
+  /** The rows of [[readAll]] as [[FileRow]]s grouped by partitionIdx,
+    * parsed once per cache entry. */
+  def rowsByPartition(dir: Path, meta: IndexMetadata,
+      conf: Configuration): Map[Int, Seq[FileRow]] =
+    entry(dir, meta, conf).byPartition
 
   /** Installs `rows` as the table in `dir` for `meta`: a commit hands
     * over the rows it just wrote. */
   private[index] def handOver(dir: Path, meta: IndexMetadata, rows: Seq[FileStatsRow]): Unit = {
+    install(dir, new Entry(meta, rows, generation(dir.toString)))
+    ()
+  }
+
+  private def install(dir: Path, e: Entry): Entry = {
     if (!cache.contains(dir.toString) && cache.size >= MaxCached) {
       cache.headOption.foreach(e => cache.remove(e._1))
     }
-    cache.put(dir.toString, (meta, rows))
-    ()
+    cache.put(dir.toString, e)
+    e
   }
 
   /** The rows cached for `meta`, if any. */
   private[index] def cached(dir: Path, meta: IndexMetadata): Option[Seq[FileStatsRow]] =
-    cache.get(dir.toString).collect { case (m, rows) if m eq meta => rows }
+    cache.get(dir.toString).collect {
+      case e if (e.meta eq meta) && e.generation == generation(dir.toString) => e.rows
+    }
 
   /** Every row, read past the cache: a refresh diffs against the table
     * on disk, never against what some reader cached earlier. */
@@ -187,5 +221,12 @@ object IndexFilesTable {
       }
   }
 
-  def invalidate(dir: Path): Unit = { cache.remove(dir.toString); () }
+  /** Drops `dir`'s entry, and any a scan begun before this call installs. */
+  def invalidate(dir: Path): Unit = {
+    // count first: an install that lands after the remove carries the old count
+    invalidations.getOrElseUpdate(dir.toString, new java.util.concurrent.atomic.AtomicLong)
+      .incrementAndGet()
+    cache.remove(dir.toString)
+    ()
+  }
 }

@@ -128,7 +128,7 @@ object SketchStore {
 
   /** The parquet schema Spark's writer gives the stats pass's sketch rows
     * (`file` is never null), and the Spark schema its footer records. */
-  private lazy val partSchema = MessageTypeParser.parseMessageType(
+  private[index] lazy val partSchema = MessageTypeParser.parseMessageType(
     """message spark_schema {
       |  required binary file (STRING);
       |  optional binary column (STRING);

@@ -414,11 +414,82 @@ object StatisticsBuilder {
     val tmp = new Path(dir, s".$name.$attempt")
     val fs = tmp.getFileSystem(conf)
     try {
-      val n = SketchStore.writePart(tmp, conf)(rows.foreach)
-      val bytes = fs.getFileStatus(tmp).getLen
+      val (n, bytes) = writeKnownPart(tmp, name, conf)(rows.foreach)
       if (!fs.rename(tmp, new Path(dir, name))) fs.delete(tmp, false)
       (bytes, n)
     } catch { case e: Throwable => fs.delete(tmp, false); throw e }
+  }
+
+  /** What a sketch part's footer tells [[stageSketchRemovals]]: the
+    * (min, max) of the `file` column per row group with rows (None where
+    * a group records none), and the parquet read schema of that column
+    * alone. */
+  private final case class PartFiles(bounds: Seq[Option[(String, String)]], fileSchema: String)
+
+  /** [[PartFiles]] of the sketch parts this process wrote or read, by
+    * (name, length, mtime). A part is immutable and its name holds a
+    * write's UUID; it keeps name and mtime when the swap renames it from
+    * staging into place, and a mixed part rewritten under its own name
+    * has another length and mtime. So every driver-tier refresh with
+    * removals, which tests every live part, reads each part's footer at
+    * most once per process, and none of a part written here. Bounded:
+    * an evicted part's footer is read again. */
+  private val knownParts = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[(String, Long, Long), PartFiles](64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, Long, Long), PartFiles]): Boolean = size > 4096
+    })
+
+  /** Forgets every known part (as a process that never saw them). */
+  private[index] def forgetKnownParts(): Unit = knownParts.clear()
+
+  /** The read schema of the `file` column alone of a part of `schema`. */
+  private def fileOnly(schema: MessageType): String =
+    new MessageType(schema.getName, java.util.List.of(schema.getType(schema.getFieldIndex("file"))))
+      .toString
+
+  /** [[fileOnly]] of the parts [[SketchStore.writePart]] writes. */
+  private lazy val writtenFileSchema = fileOnly(SketchStore.partSchema)
+
+  /** [[SketchStore.writePart]] of `rows` to `file`, whose part is named
+    * `name` once in place, remembering its `file` bounds. Returns its
+    * rows and bytes. */
+  private def writeKnownPart(file: Path, name: String, conf: Configuration)(
+      rows: (SketchRow => Unit) => Unit): (Long, Long) = {
+    var (lo, hi) = (null: String, null: String)
+    val n = SketchStore.writePart(file, conf) { put =>
+      rows { r =>
+        if (lo == null || Canon.compare(r._1, lo) < 0) lo = r._1
+        if (hi == null || Canon.compare(r._1, hi) > 0) hi = r._1
+        put(r)
+      }
+    }
+    val st = file.getFileSystem(conf).getFileStatus(file)
+    knownParts.put((name, st.getLen, st.getModificationTime),
+      PartFiles(if (n == 0) Nil else Seq(Some(lo -> hi)), writtenFileSchema))
+    (n, st.getLen)
+  }
+
+  /** The [[PartFiles]] of the part `st`, from its footer unless known. */
+  private def partFiles(st: FileStatus, conf: Configuration): PartFiles = {
+    val key = (st.getPath.getName, st.getLen, st.getModificationTime)
+    Option(knownParts.get(key)).getOrElse {
+      val footer = {
+        val r = openParquet(st.getPath, conf)
+        try r.getFooter finally r.close()
+      }
+      val bounds = footer.getBlocks.asScala.toSeq.flatMap { b =>
+        b.getColumns.asScala.find(_.getPath.toDotString == "file").map(_.getStatistics) match {
+          case Some(stats) if stats != null && stats.hasNonNullValue =>
+            Some(Some(stats.genericGetMin.asInstanceOf[Binary].toStringUsingUTF8 ->
+              stats.genericGetMax.asInstanceOf[Binary].toStringUsingUTF8))
+          case _ => if (b.getRowCount > 0) Some(None) else None
+        }
+      }
+      val known = PartFiles(bounds, fileOnly(footer.getFileMetaData.getSchema))
+      knownParts.put(key, known)
+      known
+    }
   }
 
   /** The files table's order within a part: (partitionIdx, path). */
@@ -499,8 +570,9 @@ object StatisticsBuilder {
     * them stays untouched; a part holding only removed paths is dead; a
     * mixed part is streamed through a filter into `stage`, under its own
     * name. A part whose row groups' `file` bounds hold no removed path is
-    * untouched from its footer alone; any other part has its `file`
-    * column read to decide. Returns the names of the parts the swap
+    * untouched from its footer alone (read once per process, see
+    * [[knownParts]]); any other part has its `file` column read to
+    * decide. Returns the names of the parts the swap
     * deletes (dead and mixed). */
   def stageSketchRemovals(dir: Path, removed: Set[String], stage: Path, conf: Configuration): Seq[String] = {
     val fs = dir.getFileSystem(conf)
@@ -515,33 +587,21 @@ object StatisticsBuilder {
       }
       a < sorted.length && Canon.compare(sorted(a), hi) <= 0
     }
-    fs.listStatus(dir).toSeq.map(_.getPath)
-      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
-      .sortBy(_.getName)
-      .filter { part =>
-        val footer = {
-          val r = openParquet(part, conf)
-          try r.getFooter finally r.close()
-        }
-        val mayHold = footer.getBlocks.asScala.exists { b =>
-          b.getColumns.asScala.find(_.getPath.toDotString == "file").map(_.getStatistics) match {
-            case Some(st) if st != null && st.hasNonNullValue =>
-              within(st.genericGetMin.asInstanceOf[Binary].toStringUsingUTF8,
-                st.genericGetMax.asInstanceOf[Binary].toStringUsingUTF8)
-            case _ => b.getRowCount > 0
-          }
-        }
+    fs.listStatus(dir).toSeq
+      .filter(st => !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName)
+      .filter { st =>
+        val part = st.getPath
+        val known = partFiles(st, conf)
         val files = scala.collection.mutable.HashSet.empty[String]
-        if (mayHold) {
-          val schema = footer.getFileMetaData.getSchema
+        if (known.bounds.exists(_.forall { case (lo, hi) => within(lo, hi) })) {
           val fileOnly = new Configuration(conf)
-          fileOnly.set(ReadSupport.PARQUET_READ_SCHEMA, new MessageType(schema.getName,
-            java.util.List.of(schema.getType(schema.getFieldIndex("file")))).toString)
+          fileOnly.set(ReadSupport.PARQUET_READ_SCHEMA, known.fileSchema)
           IndexFilesTable.readGroups(part, fileOnly)(g => files += g.getString("file", 0))
         }
         val hit = files.count(removed)
         if (hit > 0 && hit < files.size) {
-          SketchStore.writePart(new Path(stage, part.getName), conf) { put =>
+          writeKnownPart(new Path(stage, part.getName), part.getName, conf) { put =>
             IndexFilesTable.readGroups(part, conf) { g =>
               val file = g.getString("file", 0)
               if (!removed(file)) put((file, g.getString("column", 0), g.getString("kind", 0),
@@ -551,7 +611,7 @@ object StatisticsBuilder {
         }
         hit > 0
       }
-      .map(_.getName)
+      .map(_.getPath.getName)
   }
 
   /** A parquet-mr reader of `path` under `conf`. (The one-argument

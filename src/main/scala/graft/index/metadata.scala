@@ -67,6 +67,27 @@ case class FileStatsRow(
     blocksJson: String,
     rowCount: Long)
 
+/** One indexed file as every metadata computation reads it: its
+  * partition and parsed row-group stats and, where the listing columns
+  * were read, its path and `entry`, the listing entry a kept file's
+  * FileStatus is built from (both null otherwise). `listing` is
+  * evaluated on the first read of `entry`. */
+final class FileRow(
+    val partitionIdx: Int, val blocks: Seq[BlockStats], val path: String,
+    listing: => FileEntry) {
+  lazy val entry: FileEntry = listing
+}
+
+object FileRow {
+  /** A cached driver row over a row of the shared files-table cache: the
+    * listing entry is parsed on first use, after which the row holds the
+    * entry alone (scalac drops a field read only by a lazy initializer). */
+  def apply(r: FileStatsRow): FileRow =
+    new FileRow(r.partitionIdx, IndexMetadata.blocksFromJsonString(r.blocksJson), r.path,
+      FileEntry(r.path, r.size, r.modificationTime, Nil, r.blockSize,
+        IndexMetadata.locationsFromJsonString(r.locationsJson)))
+}
+
 object IndexMetadata {
 
   /** StructField-metadata marker for ELEMENT-DOMAIN index fields: the

@@ -14,7 +14,7 @@ import org.apache.spark.sql.sources.{And => SAnd, Filter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.index.{BlockStats, FileEntry, FileStatsRow, FilterFold, IndexConf, IndexFilesTable, IndexMetadata, SketchStore}
+import graft.index.{BlockStats, FileEntry, FileRow, FilterFold, IndexConf, IndexFilesTable, IndexMetadata, SketchStore}
 
 /** The product: a Spark [[FileIndex]] that serves the file listing from the
   * persisted index metadata and prunes partitions AND files inside
@@ -25,7 +25,9 @@ import graft.index.{BlockStats, FileEntry, FileStatsRow, FilterFold, IndexConf, 
   * mutable setIndexFilters side channel (the reference's
   * MetastoreIndex.scala:80-84 hack) are needed — stock FileSourceStrategy
   * drives the index, and the full predicate is still applied after the scan,
-  * keeping pruning purely an optimization.
+  * keeping pruning purely an optimization. (The one graft strategy over
+  * this index, [[IndexedScanStrategy]], only binds that post-scan
+  * predicate's literals as parameters.)
   *
   * Scale design: metadata.json is an O(partitions) summary; per-file stats
   * live in the `files` parquet table. Tables below
@@ -54,11 +56,6 @@ class GraftFileIndex(
         IndexMetadata.castFromString(f.dataType, s)
       })
     }
-
-  /** Driver-runner file rows grouped by partitionIdx (cached per
-    * instance, dropped by [[refresh]]; only read below the
-    * distributed-pruning threshold). */
-  @volatile private var rowsByPartitionCache: (Long, Map[Int, Seq[FileRow]]) = _
 
   /** Snapshot epoch for every memo derived from the files table, bumped
     * by [[refresh]]. Guards the check-then-act race between a memo
@@ -93,21 +90,6 @@ class GraftFileIndex(
           case None => cache.putIfAbsent(key, (e, v))
         }
         v
-    }
-  }
-
-  private def rowsByPartition: Map[Int, Seq[FileRow]] = {
-    val e = snapshotEpoch.get()
-    rowsByPartitionCache match {
-      case (ep, c) if ep == e && c != null => c
-      case _ =>
-        val c = IndexFilesTable.readAll(filesDir, meta, hadoopConf)
-          .groupBy(_.partitionIdx).view.mapValues(_.map(FileRow(_))).toMap
-        // epoch-tagged install, same contract as memoized(): a stale
-        // assignment that lands after refresh()'s clear carries an old
-        // tag and is never served to later callers
-        if (snapshotEpoch.get() == e) rowsByPartitionCache = (e, c)
-        c
     }
   }
 
@@ -535,7 +517,8 @@ class GraftFileIndex(
       onDriver: Map[Int, Seq[FileRow]] => A)(
       onTable: org.apache.spark.sql.classic.DataFrame => A): A =
     if (meta.fileCount < conf.distributedPruningThreshold) {
-      val all = rowsByPartition
+      // parsed once per committed index, shared by every instance over it
+      val all = IndexFilesTable.rowsByPartition(filesDir, meta, hadoopConf)
       onDriver(partitions.fold(all)(ps => ps.flatMap(i => all.get(i).map(i -> _)).toMap))
     } else {
       val table = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
@@ -877,7 +860,6 @@ class GraftFileIndex(
     // skips installing a fresh value — never installs a stale one.
     IndexFilesTable.invalidate(filesDir)
     snapshotEpoch.incrementAndGet()
-    rowsByPartitionCache = null
     metaAggByPartCache.clear()
     metaDistinctCache.clear()
     topKBoundCache.clear()
@@ -1016,28 +998,6 @@ object GraftFileIndex {
     if (bounds.isEmpty || bounds.exists(_.isEmpty)) None
     else Some(bounds.flatten.max(bestFirst(largest)))
 }
-
-/** One indexed file as every metadata computation reads it: its
-  * partition and parsed row-group stats and, where the listing columns
-  * were read, its path and `entry`, the listing entry a kept file's
-  * FileStatus is built from (both null otherwise). `listing` is
-  * evaluated on the first read of `entry`. */
-private[graft] final class FileRow(
-    val partitionIdx: Int, val blocks: Seq[BlockStats], val path: String,
-    listing: => FileEntry) {
-  lazy val entry: FileEntry = listing
-}
-
-private[graft] object FileRow {
-  /** A cached driver row over a row of the shared files-table cache: the
-    * listing entry is parsed on first use, after which the row holds the
-    * entry alone (scalac drops a field read only by a lazy initializer). */
-  def apply(r: FileStatsRow): FileRow =
-    new FileRow(r.partitionIdx, IndexMetadata.blocksFromJsonString(r.blocksJson), r.path,
-      FileEntry(r.path, r.size, r.modificationTime, Nil, r.blockSize,
-        IndexMetadata.locationsFromJsonString(r.locationsJson)))
-}
-
 
 /** A [[FileStatus]] that DEFERS Path construction: at 10^6 files the
   * eager Path (and its internal URI — several string copies of the full

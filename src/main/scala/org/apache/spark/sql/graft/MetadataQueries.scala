@@ -597,17 +597,30 @@ class AutoIndexSubstitutionRule(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 }
 
-/** Idempotent registration of the metadata rules on sessions that don't
-  * run [[graft.GraftExtensions]] — mirrors the reference's lazy strategy
-  * registration on first `spark.index` touch (package.scala:28-31). */
+/** Registration of the graft optimizer rules and [[IndexedScanStrategy]]
+  * on sessions that don't run [[graft.GraftExtensions]] — mirrors the
+  * reference's lazy strategy registration on first `spark.index` touch
+  * (package.scala:28-31). Each is registered only where the session does
+  * not already run it: a session built with the extensions has the rules
+  * in its optimizer batches and the strategy among its planner's, and a
+  * second registration would run every rule again in the "User Provided
+  * Optimizers" batch. */
 object GraftRules {
   def ensure(spark: SparkSession): Unit = {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val cur = classic.experimental.extraOptimizations
-    if (!cur.exists(_.isInstanceOf[MetadataAggregateRule])) {
-      classic.experimental.extraOptimizations =
-        cur :+ new MetadataAggregateRule(spark) :+ new AutoIndexSubstitutionRule(spark) :+
+    val experimental = classic.experimental
+    val state = classic.sessionState
+    // both paths register the strategy last, so a session whose planner
+    // has it runs the rules too: every later touch ends here, unlocked
+    if (!state.planner.strategies.contains(IndexedScanStrategy)) experimental.synchronized {
+      if (!state.optimizer.batches.exists(_.rules.exists(_.isInstanceOf[MetadataAggregateRule]))) {
+        experimental.extraOptimizations = experimental.extraOptimizations :+
+          new MetadataAggregateRule(spark) :+ new AutoIndexSubstitutionRule(spark) :+
           new TopKRewriteRule(spark) :+ new JoinPruneRule(spark)
+      }
+      if (!state.planner.strategies.contains(IndexedScanStrategy)) {
+        experimental.extraStrategies = experimental.extraStrategies :+ IndexedScanStrategy
+      }
     }
   }
 }

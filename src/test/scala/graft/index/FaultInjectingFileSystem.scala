@@ -9,9 +9,10 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
 /** A `faultfs:` scheme over the local disk that records every call that
-  * mutates the store (create, mkdirs, delete, rename) and fails the calls
-  * a test names (those, plus open and listStatus): a stand-in for a store
-  * whose calls can fail one at a time. */
+  * mutates the store (create, mkdirs, delete, rename) and, apart, every
+  * open, and fails the calls a test names (those, plus open and
+  * listStatus): a stand-in for a store whose calls can fail one at a
+  * time. */
 class FaultInjectingFileSystem extends RawLocalFileSystem {
   import FaultInjectingFileSystem._
 
@@ -19,7 +20,8 @@ class FaultInjectingFileSystem extends RawLocalFileSystem {
   override def getUri: URI = URI.create("faultfs:///")
 
   private def call(op: String, p: Path): Unit = {
-    if (op != "open" && op != "list") calls.add(op -> p.toString)
+    if (op == "open") opened.add(p.toString)
+    else if (op != "list") calls.add(op -> p.toString)
     if (failOn(op, p.toString)) throw new IOException(s"injected $op failure on $p")
   }
 
@@ -68,11 +70,17 @@ object FaultInjectingFileSystem {
   @volatile var failOn: (String, String) => Boolean = (_, _) => false
   /** The mutating calls made so far, in order: (op, path). */
   val calls = new ConcurrentLinkedQueue[(String, String)]()
+  /** The paths opened so far, in order. */
+  val opened = new ConcurrentLinkedQueue[String]()
 
-  def drain(): Seq[(String, String)] = {
-    val b = Seq.newBuilder[(String, String)]
-    var c = calls.poll()
-    while (c != null) { b += c; c = calls.poll() }
+  def drain(): Seq[(String, String)] = drain(calls)
+
+  def drainOpened(): Seq[String] = drain(opened)
+
+  private def drain[A](q: ConcurrentLinkedQueue[A]): Seq[A] = {
+    val b = Seq.newBuilder[A]
+    var c = q.poll()
+    while (c != null) { b += c; c = q.poll() }
     b.result()
   }
 }

@@ -697,6 +697,48 @@ class RefreshTiersSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("driver tier: a sketch part's footer is read once per process") {
+    onFaultFs {
+      val local = s"$work/sketch_footers"
+      val t = s"faultfs://$local"
+      (0 until 4).foreach(i => writeFile(s"$local/p=0", i * 100L, 100))
+      create(Metastore.Dataspace, t)
+      val sketches =
+        new Path(indexDir(Metastore.Dataspace, t), Metastore.SketchDir).toUri.getPath
+      def parts: Set[String] = Option(new java.io.File(sketches).list()).toSeq.flatten
+        .filter(_.startsWith("part-")).toSet
+      // each step adds a file to partition `p` and removes one of p=0's,
+      // which sort before every other partition: only the part of p=0's
+      // files can hold a removed path. Returns the live parts it opened.
+      def step(p: Int): Map[String, Int] = {
+        writeFile(s"$local/p=$p", p * 1000L, 100)
+        if (p > 2) remove(dataFiles(s"$local/p=0").head)
+        FaultInjectingFileSystem.drainOpened()
+        assert(refresh(t, Map.empty) == IndexedDataSource.RefreshStats(1L, if (p > 2) 1L else 0L))
+        FaultInjectingFileSystem.drainOpened().map(new Path(_).toUri.getPath)
+          .filter(_.startsWith(sketches + "/part-"))
+          .groupMapReduce(new Path(_).getName)(_ => 1)(_ + _)
+      }
+      step(1)
+      step(2)
+      val written = parts
+      // parts written here: only the part holding p=0's files is opened
+      val own = step(3)
+      assert(own.size == 1 && own.keySet.subsetOf(written), s"opened: $own")
+      val p0 = own.keys.head
+      // parts written elsewhere (as this process had never seen them):
+      // every footer is read once, then never again
+      StatisticsBuilder.forgetKnownParts()
+      val before = parts
+      val first = step(4)
+      assert((before -- first.keySet).isEmpty, s"unread parts: ${before -- first.keySet}")
+      assert((first - p0).values.forall(_ == 1), s"opened: $first")
+      val again = step(5)
+      assert(again.keySet == Set(p0), s"opened: $again")
+      assertMatchesCreate(t, "driver", "after footer reads")
+    }
+  }
+
   override def afterAll(): Unit = {
     spark.stop()
     super.afterAll()
